@@ -131,6 +131,13 @@ object GraftConf {
       "spark.ui.enabled" -> "false") ++
       localMeaningful.map(k => k -> clusterDefaults(k))
 
+  /** Cores for the harness mains: `SPARK_GRAFT_CPUS` when set, else
+    * the processors this JVM sees, so every tool fits the host it runs
+    * on.
+    */
+  def hostCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** The harness session: local[cpus] + [[localConfigs]]. Verify and
     * Bench both build here, so the correctness gate and the bench run
     * the same optimizer configuration.

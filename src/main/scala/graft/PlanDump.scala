@@ -21,8 +21,7 @@ object PlanDump {
       "usage: graft.PlanDump <sfDir> <outDir> <suffix> <queryName>...")
     val Array(sfDir, outDir, suffix) = args.take(3)
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftConf.localSession(cpus)
+    val spark = GraftConf.localSession(GraftConf.hostCpus)
     spark.sparkContext.setLogLevel("ERROR")
     val unknown = names.toSet.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty,

@@ -1,20 +1,23 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import graft.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, explode}
 import graft.operators._
+import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The engine's query contract: every entry in [[queries]] is a named
+  * operator demonstration over the test data (TESTDATA.md), and
+  * [[oracleSql]] carries the DuckDB twin its output hash is compared
+  * against. Column names and row order are aligned on both sides;
+  * double aggregates go through the decimal-exact
+  * [[graft.functions.dsum]] pattern so the hashes are reproducible
+  * across engines. Event timestamps are µs-truncated identically on
+  * both sides (see [[Tables.events]]).
   *
-  * Every entry in [[queries]] is a named operator demonstration over the
-  * driver testdata (TESTDATA.md); [[oracleSql]] carries the DuckDB twin
-  * the driver hash-compares against at sf0.01. Column names and row order
-  * are aligned on both sides; double aggregates go through the
-  * decimal-exact [[graft.functions.dsum]] pattern so the hashes are
-  * reproducible across engines. Event timestamps are µs-truncated
-  * identically on both sides (see [[Tables.events]]).
+  * Both maps are views of one [[registry]]: each [[Query]] record keeps
+  * a build function next to its twin, in the per-family objects under
+  * `graft/queries/`. This object keeps the views and the build-once
+  * session seams those build functions share.
   */
 object SparkEntry {
 
@@ -22,61 +25,30 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
 
-  /** events in the telemetry long/narrow shape the query planner takes:
-    * (ts, stream_id, tags: map, value) — SURVEY.md §1.1.4.
-    */
-  private def eventsPoints(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir).select(
-      col("ts"),
-      col("ts_ns"), // raw long survives → time-range predicates push to the scan
-      col("user_id").as("stream_id"),
-      map(
-        lit("event_type"), col("event_type"),
-        lit("k"), get_json_object(col("props"), "$.k")).as("tags"),
-      col("value"))
+  /** Every query, each name exactly once (see [[Query.registry]]). */
+  private[graft] val registry: Seq[Query] = Query.registry(
+    TelemetryQueries.all ++ EventAnalyticsQueries.all ++ TpchQueries.all ++
+      DedupQueries.all ++ SimilarityQueries.all ++ CurationQueries.all ++
+      TextAnalysisQueries.all)
 
-  // DECIMAL(30,6)-exact sum / mean fragments for the DuckDB twins
-  /** tmp roots for the layout round-trip queries (q55/q64), deleted on
-    * JVM exit: the returned DataFrame reads the directory lazily, so
-    * in-query deletion would break materialization — but without any
-    * cleanup every Verify/Bench process (pid-namespaced on purpose, so
-    * concurrent harnesses cannot race mid-compact) leaves a fresh tree
-    * in java.io.tmpdir forever.
-    */
-  private val tmpRoots = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tmpRoots.forEach { r =>
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-          f.delete(); ()
-        }
-        rm(new java.io.File(r))
-      }))
-  }
-  private def tmpRootCleanedOnExit(prefix: String, dir: String): String = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/${prefix}_" +
-      Integer.toHexString(dir.hashCode) + "_" + ProcessHandle.current().pid()
-    tmpRoots.add(root)
-    root
-  }
+  /** Query name → build function over (session, table dir). */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
 
-  /** Session-scoped trained-BPE-vocabulary share (VERDICT r9 item 5):
-    * the CONSUMER queries (q103 fertility, q106 encode, q107 dataset
-    * card, q136 integrity) all audit the SAME 6-merge tokenizer over
-    * the same corpus, so the trainer runs once per (session, corpus)
-    * and every report reuses the result — the train-once-per-corpus
-    * shape a real pipeline has. q101/q102 stay live trainer runs on
-    * purpose: they GATE the trainer itself (pair stats + the unrolled
-    * 6-round twin), so their benchmark must keep paying training cost.
-    *
-    * The cached frame is pinned via [[pinSeam]]: Bench clears the
-    * CacheManager between queries (a persist would silently fall back
-    * to retraining), while checkpoint blocks live until the memo
-    * entry is dropped at context stop (see [[perSessionMemo]] for the
-    * lifetime contract). The table is distinct-word-sized (not
-    * corpus-sized), so pinning it for the session is cheap at any SF.
+  /** Query name → equivalent ANSI SQL runnable by DuckDB on the same
+    * parquet tables. Three kinds of entry: full recomputation twins
+    * (most), recursive-CTE twins (q36/q38), and constant-row
+    * self-oracles for the measured recall gates (q24/q25/q37 — the
+    * real check is computed in-engine against the exact answer; the
+    * constant row just pins schema and "gate passed"). q40 gates the
+    * prefix-df-cap dial against the EXACT pair twin: the capped
+    * algorithm can only miss pairs (never invent them), and on this
+    * corpus it misses none — the hash gate pins that recall=1.0
+    * property per run, and DedupSpec pins capped ⊆ exact in general.
     */
+  val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracleSql).toMap
+
   /** Exactly-once holder for a seam build: racing first callers may
     * both allocate a box, but only the TrieMap winner's `lazy val` is
     * ever forced, and lazy-val initialization is itself synchronized —
@@ -87,46 +59,70 @@ object SparkEntry {
     lazy val df: DataFrame = build0
   }
 
-  /** One-per-(session, key) memo shared by ALL the build-once seams
-    * below: session-keyed, TrieMap-keyed within a session, with each
-    * value a [[SeamBox]] so concurrent first access builds EXACTLY
-    * once (VERDICT r12 item 2 — the old getOrElseUpdate-of-DataFrame
-    * could double-build and leak the loser's pinned blocks).
+  /** A build-once session seam: an intermediate several queries read,
+    * built once per (session, table dir), pinned via [[pinSeam]] and
+    * memoized in [[perSessionMemo]]. The seam instance itself is the
+    * memo key, so two seams never share an entry.
+    *
+    * Pinned, not persisted: Bench clears the CacheManager between
+    * queries (a persist would silently fall back to rebuilding), while
+    * checkpoint blocks live until the memo entry is dropped at context
+    * stop.
+    */
+  private[graft] final class Seam(build: (SparkSession, String) => DataFrame) {
+    def apply(s: SparkSession, dir: String): DataFrame =
+      perSessionMemo(s, this, dir)(pinSeam(s, build(s, dir)))
+  }
+
+  private val seamMemo = new java.util.WeakHashMap[SparkSession,
+    scala.collection.concurrent.TrieMap[(Seam, String), SeamBox]]()
+
+  /** The one memo behind every [[Seam]]: session-keyed, TrieMap-keyed
+    * by (seam, dir) within a session, with each value a [[SeamBox]] so
+    * concurrent first access builds EXACTLY once (VERDICT r12 item 2 —
+    * the old getOrElseUpdate-of-DataFrame could double-build and leak
+    * the loser's pinned blocks).
     *
     * Entry lifetime (ADVICE r12): a seam DataFrame strongly references
     * its SparkSession, so the WeakHashMap key alone can never be
     * collected while its entry lives — the weak map only bounds the
     * damage if the listener registration itself fails. Lifetime is
-    * therefore managed explicitly: the first touch of a (cache,
-    * session) pair registers an application-end listener that drops
-    * the entry when the SparkContext stops — the same moment the
-    * pinned blocks die — so a JVM cycling many sessions does not
-    * accumulate dead entries.
+    * therefore managed explicitly: the first touch of a session
+    * registers an application-end listener that drops the session's
+    * entries when the SparkContext stops — the same moment the pinned
+    * blocks die — so a JVM cycling many sessions does not accumulate
+    * dead entries.
     *
     * Fault tolerance of the pins themselves lives in [[pinSeam]]
     * (localCheckpoint locally, reliable checkpoint under the knob).
     */
-  private[graft] def perSessionMemo[K](
-      cache: java.util.WeakHashMap[SparkSession,
-        scala.collection.concurrent.TrieMap[K, SeamBox]],
-      s: SparkSession, key: K)(build: => DataFrame): DataFrame = {
-    val perSession = cache.synchronized {
-      var m = cache.get(s)
+  private[graft] def perSessionMemo(s: SparkSession, seam: Seam,
+      dir: String)(build: => DataFrame): DataFrame = {
+    val perSession = seamMemo.synchronized {
+      var m = seamMemo.get(s)
       if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[K, SeamBox]
-        cache.put(s, m)
+        m = scala.collection.concurrent.TrieMap.empty[(Seam, String), SeamBox]
+        seamMemo.put(s, m)
         s.sparkContext.addSparkListener(
           new org.apache.spark.scheduler.SparkListener {
             override def onApplicationEnd(
                 e: org.apache.spark.scheduler.SparkListenerApplicationEnd)
                 : Unit =
-              cache.synchronized { cache.remove(s); () }
+              seamMemo.synchronized { seamMemo.remove(s); () }
           })
       }
       m
     }
-    perSession.getOrElseUpdate(key, new SeamBox(build)).df
+    perSession.getOrElseUpdate((seam, dir), new SeamBox(build)).df
   }
+
+  /** Row floor per pinned-seam partition: below this average, the pin
+    * is re-cut to size-proportional partitions. 250k narrow rows ≈ a
+    * dozen MB — small enough that one downstream task chews it
+    * instantly, large enough that a billion-pair graph still pins
+    * thousands of partitions.
+    */
+  private val SeamRowsPerPartition = 250000L
 
   /** Pin a seam intermediate for the session, then release the source
     * frame's own persistence (a no-op when the builder never
@@ -142,14 +138,6 @@ object SparkEntry {
     * its seams: the checkpoint lives in shared storage and a lost
     * executor's partitions are re-read, not recomputed-from-nothing.
     */
-  /** Row floor per pinned-seam partition: below this average, the pin
-    * is re-cut to size-proportional partitions. 250k narrow rows ≈ a
-    * dozen MB — small enough that one downstream task chews it
-    * instantly, large enough that a billion-pair graph still pins
-    * thousands of partitions.
-    */
-  private val SeamRowsPerPartition = 250000L
-
   private[graft] def pinSeam(s: SparkSession, df: DataFrame): DataFrame = {
     def pin(d: DataFrame): DataFrame =
       s.conf.get("spark.graft.seam.checkpoint", "local") match {
@@ -212,8562 +200,140 @@ object SparkEntry {
     }
   }
 
-  private val bpeVocabCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, Int), SeamBox]]()
-  private def sharedBpeVocab(s: SparkSession, dir: String,
-      numMerges: Int = 6): DataFrame =
-    perSessionMemo(bpeVocabCache, s, (dir, numMerges)) {
-      pinSeam(s, TextAnalysis.bpeTrainedVocab(
-        Tables.documents(s, dir), "text", numMerges))
-    }
-
-  /** Session-scoped exact-Jaccard dup-pair graph share (VERDICT r10
-    * item 2 — the [[sharedBpeVocab]] train-once discipline applied to
-    * the pair graph): the five graph/linkage AUDIT queries (q171
-    * triangles, q173 blocking audit, q180 local clustering, q181
-    * linkage agreement, q190 assortativity) all read the SAME exact
-    * pair graph of the same corpus at (n=3, t=0.5), so the
-    * CBO-prefix-filtered similarity join runs once per (session,
-    * corpus) and every audit reuses the result — exactly how a 100 TB
-    * pipeline works: build the dup-pair graph once, run every census
-    * against it. q11 stays a live run on purpose: it GATES
-    * `jaccardSimilarityJoin` itself (and q40 gates the capped dial),
-    * so their benchmarks keep paying the join cost.
-    *
-    * Pinned via [[pinSeam]] for the same reason as the
-    * BPE vocab: Bench clears the CacheManager between queries (a
-    * persist would silently fall back to rebuilding the graph), while
-    * checkpoint blocks survive until this weakly-session-keyed strong
-    * reference drops. The pair table is dup-pair-sized (orders of
-    * magnitude below the corpus), so pinning it is cheap at any SF.
+  /** Trained-BPE-vocabulary share (VERDICT r9 item 5): the CONSUMER
+    * queries (q103 fertility, q106 encode, q107 dataset card, q136
+    * integrity) all audit the SAME 6-merge tokenizer over the same
+    * corpus, so the trainer runs once per (session, corpus) and every
+    * report reuses the result — the train-once-per-corpus shape a real
+    * pipeline has. q101/q102 stay live trainer runs on purpose: they
+    * GATE the trainer itself (pair stats + the unrolled 6-round twin),
+    * so their benchmark must keep paying training cost. The table is
+    * distinct-word-sized (not corpus-sized), so pinning it for the
+    * session is cheap at any SF.
     */
-  private val dupPairsCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, Int, Int), SeamBox]]()
-  private def sharedDupPairs(s: SparkSession, dir: String,
-      n: Int = 3, tPct: Int = 50): DataFrame =
-    // lifetime/fault-tolerance contract: see perSessionMemo / pinSeam
-    perSessionMemo(dupPairsCache, s, (dir, n, tPct)) {
-      pinSeam(s, Dedup.jaccardSimilarityJoin(Tables.documents(s, dir),
-        "doc_id", "text", n = n, t = tPct / 100.0))
-    }
+  private[graft] val sharedBpeVocab = new Seam((s, dir) =>
+    TextAnalysis.bpeTrainedVocab(Tables.documents(s, dir), "text", 6))
 
-  /** Session-scoped MinHash-LSH near-dup pair graph share — the
-    * [[sharedDupPairs]] build-once discipline applied to the BANDED
-    * pair graph: q38 (components), q91 (quality canonicalize), q93
-    * (cross-source matrix) and q98 (split leakage) all consume the
-    * same LSH pair set of the same corpus at (n=3, t=0.5, 72×2), so
-    * the banded join runs once per (session, corpus, dial) and every
-    * downstream census/labeling reuses it — the 100 TB operating
-    * shape (one near-dup graph build feeds dedup, provenance and
-    * leakage reports alike). q12 stays a live run on purpose: it
-    * GATES `minhashLsh` itself (at the 32×2 dial), so its benchmark
-    * keeps paying the banded-join cost. Pinned via
-    * [[pinSeam]] for the same reasons as the other two
-    * seams (Bench clears the CacheManager between queries; the pair
-    * table is orders of magnitude below the corpus, so pinning is
-    * cheap at any SF), and carries the same memo/pin-lifetime
-    * contract documented at [[perSessionMemo]]/[[pinSeam]].
+  /** Exact-Jaccard dup-pair graph share (VERDICT r10 item 2 — the
+    * [[sharedBpeVocab]] train-once discipline applied to the pair
+    * graph): the five graph/linkage AUDIT queries (q171 triangles, q173
+    * blocking audit, q180 local clustering, q181 linkage agreement,
+    * q190 assortativity) all read the SAME exact pair graph of the same
+    * corpus at (n=3, t=0.5), so the CBO-prefix-filtered similarity join
+    * runs once per (session, corpus) and every audit reuses the result —
+    * exactly how a 100 TB pipeline works: build the dup-pair graph once,
+    * run every census against it. q11 stays a live run on purpose: it
+    * GATES `jaccardSimilarityJoin` itself (and q40 gates the capped
+    * dial), so their benchmarks keep paying the join cost. The pair
+    * table is dup-pair-sized (orders of magnitude below the corpus), so
+    * pinning it is cheap at any SF.
     */
-  private val lshPairsCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, Int, Int, Int, Int), SeamBox]]()
-  private def sharedLshPairs(s: SparkSession, dir: String, n: Int = 3,
-      tPct: Int = 50, bands: Int = 72, rows: Int = 2): DataFrame =
-    perSessionMemo(lshPairsCache, s, (dir, n, tPct, bands, rows)) {
-      pinSeam(s, Dedup.minhashLsh(Tables.documents(s, dir), "doc_id",
-        "text", n = n, t = tPct / 100.0, bands = bands, rows = rows))
-    }
+  private[graft] val sharedDupPairs = new Seam((s, dir) =>
+    Dedup.jaccardSimilarityJoin(Tables.documents(s, dir),
+      "doc_id", "text", n = 3, t = 0.5))
 
-  /** Session-scoped SEMANTIC near-dup pair graph share — the third
-    * seam of the build-once family: q81 (semantic clusters) and q84
-    * (semantic canonicalize) both consume the same
+  /** MinHash-LSH near-dup pair graph share — the [[sharedDupPairs]]
+    * build-once discipline applied to the BANDED pair graph: q38
+    * (components), q91 (quality canonicalize), q93 (cross-source matrix)
+    * and q98 (split leakage) all consume the same LSH pair set of the
+    * same corpus at (n=3, t=0.5, 72×2), so the banded join runs once per
+    * (session, corpus) and every downstream census/labeling reuses it —
+    * the 100 TB operating shape (one near-dup graph build feeds dedup,
+    * provenance and leakage reports alike). q12 stays a live run on
+    * purpose: it GATES `minhashLsh` itself (at the 32×2 dial), so its
+    * benchmark keeps paying the banded-join cost.
+    */
+  private[graft] val sharedLshPairs = new Seam((s, dir) =>
+    Dedup.minhashLsh(Tables.documents(s, dir), "doc_id", "text",
+      n = 3, t = 0.5, bands = 72, rows = 2))
+
+  /** SEMANTIC near-dup pair graph share: q81 (semantic clusters) and
+    * q84 (semantic canonicalize) both consume the same
     * `semDedupPairs(emb, cents = vec_id<32, t=0.4)` graph, so the
-    * clustered cosine join runs once per (session, corpus, threshold)
-    * and each query keeps its own distinctive computation (CC,
-    * canonical join) live. q74 stays a live run on purpose: it GATES
-    * the semDedup operator end-to-end (assignment → pairs → drop
-    * manifest), so its benchmark keeps paying the cosine-join cost.
-    * Same [[pinSeam]] pinning and [[perSessionMemo]] lifetime contract.
+    * clustered cosine join runs once per (session, corpus) and each
+    * query keeps its own distinctive computation (CC, canonical join)
+    * live. q74 stays a live run on purpose: it GATES the semDedup
+    * operator end-to-end (assignment → pairs → drop manifest), so its
+    * benchmark keeps paying the cosine-join cost.
     */
-  private val semPairsCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, Int), SeamBox]]()
-  private def sharedSemPairs(s: SparkSession, dir: String,
-      tPct: Int = 40): DataFrame =
-    perSessionMemo(semPairsCache, s, (dir, tPct)) {
-      val emb = Tables.embeddings(s, dir)
-      val cents = emb.filter(col("vec_id") < 32)
-      pinSeam(s, operators.Similarity.semDedupPairs(
-        emb, "vec_id", "embedding", cents, "vec_id", "embedding",
-        t = tPct / 100.0))
-    }
+  private[graft] val sharedSemPairs = new Seam((s, dir) => {
+    val emb = Tables.embeddings(s, dir)
+    val cents = emb.filter(col("vec_id") < 32)
+    Similarity.semDedupPairs(
+      emb, "vec_id", "embedding", cents, "vec_id", "embedding", t = 0.4)
+  })
 
-  /** Session-scoped DSIR importance-weight table share — the
-    * [[sharedBpeVocab]] train-once discipline applied to the hashed
-    * n-gram importance model: q73 (deterministic top-k selection) and
-    * q79 (Gumbel-top-k resampling) are the two DSIR sampler halves
-    * over the SAME weight table (target = src0, 1024 buckets), so the
-    * two-LM weight estimation runs once per (session, corpus) and
-    * each sampler keeps its own ranking/drawing computation live —
-    * exactly how the published pipeline runs: estimate importance
-    * weights once, then draw whatever samples you need. The weight
-    * table is corpus-rowed but 3 narrow columns (id, nfeat,
-    * log_weight); at 100 TB a pipeline materializes it to storage
-    * once for the same reason this seam pins it.
+  /** DSIR importance-weight table share — the [[sharedBpeVocab]]
+    * train-once discipline applied to the hashed n-gram importance
+    * model: q73 (deterministic top-k selection) and q79 (Gumbel-top-k
+    * resampling) are the two DSIR sampler halves over the SAME weight
+    * table (target = src0, 1024 buckets), so the two-LM weight
+    * estimation runs once per (session, corpus) and each sampler keeps
+    * its own ranking/drawing computation live — exactly how the
+    * published pipeline runs: estimate importance weights once, then
+    * draw whatever samples you need. The weight table is corpus-rowed
+    * but 3 narrow columns (id, nfeat, log_weight); at 100 TB a pipeline
+    * materializes it to storage once for the same reason this seam
+    * pins it.
     */
-  private val dsirWeightsCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, Int), SeamBox]]()
-  private def sharedDsirWeights(s: SparkSession, dir: String,
-      buckets: Int = 1024): DataFrame =
-    perSessionMemo(dsirWeightsCache, s, (dir, buckets)) {
-      pinSeam(s, operators.Curation.importanceWeights(
-        Tables.documents(s, dir), "doc_id", "text",
-        col("source") === "src0", buckets = buckets))
-    }
+  private[graft] val sharedDsirWeights = new Seam((s, dir) =>
+    Curation.importanceWeights(Tables.documents(s, dir), "doc_id", "text",
+      col("source") === "src0", buckets = 1024))
 
-  /** Session-scoped linear-quality score share — the train-once seam
-    * for the fastText-style gate: q87 (per-doc keep flags) and q92
-    * (calibration deciles) read the SAME classifier (trained on the
-    * doc_id%7 slice against src0, 512 buckets) applied to the SAME
-    * corpus, so train+score runs once per (session, corpus) and each
-    * report keeps its own projection/rollup live. Scoring once and
-    * publishing the score column is precisely the 100 TB operating
-    * shape (CCNet/RefinedWeb materialize quality scores as a corpus
-    * column; every downstream gate reads it). The pinned table is
-    * corpus-rowed but 3 narrow columns (id, nfeat, score).
+  /** Linear-quality score share — the train-once seam for the
+    * fastText-style gate: q87 (per-doc keep flags) and q92 (calibration
+    * deciles) read the SAME classifier (trained on the doc_id%7 slice
+    * against src0, 512 buckets) applied to the SAME corpus, so
+    * train+score runs once per (session, corpus) and each report keeps
+    * its own projection/rollup live. Scoring once and publishing the
+    * score column is precisely the 100 TB operating shape
+    * (CCNet/RefinedWeb materialize quality scores as a corpus column;
+    * every downstream gate reads it). The pinned table is corpus-rowed
+    * but 3 narrow columns (id, nfeat, score).
     */
-  private val qualityScoreCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, Int), SeamBox]]()
-  private def sharedQualityScores(s: SparkSession, dir: String,
-      buckets: Int = 512): DataFrame =
-    perSessionMemo(qualityScoreCache, s, (dir, buckets)) {
-      val docs = Tables.documents(s, dir)
-      val model = TextAnalysis.trainLinearQuality(
-        docs.filter(col("doc_id") % 7 === 0), "doc_id", "text",
-        isPositive = col("source") === "src0", buckets = buckets)
-      pinSeam(s, TextAnalysis.scoreLinearQuality(
-        docs, "doc_id", "text", model, buckets = buckets))
-    }
+  private[graft] val sharedQualityScores = new Seam((s, dir) => {
+    val docs = Tables.documents(s, dir)
+    val model = TextAnalysis.trainLinearQuality(
+      docs.filter(col("doc_id") % 7 === 0), "doc_id", "text",
+      isPositive = col("source") === "src0", buckets = 512)
+    TextAnalysis.scoreLinearQuality(
+      docs, "doc_id", "text", model, buckets = 512)
+  })
 
-  /** Session-scoped corpus-LM score share — the score-once seam for
-    * the unigram LM: q88 (CCNet perplexity buckets), q90 (corpus
-    * manifest) and q107 (dataset card) all score the SAME corpus with
-    * the SAME corpus-trained unigram LM ([[TextAnalysis.unigramLogProb]]),
-    * so train+score runs once per (session, corpus) and each report
-    * keeps its own distinctive computation live (the tercile split +
-    * md5-coin sampling, the keyed manifest rollup, the card joins).
+  /** Corpus-LM score share — the score-once seam for the unigram LM:
+    * q88 (CCNet perplexity buckets), q90 (corpus manifest) and q107
+    * (dataset card) all score the SAME corpus with the SAME
+    * corpus-trained unigram LM ([[TextAnalysis.unigramLogProb]]), so
+    * train+score runs once per (session, corpus) and each report keeps
+    * its own distinctive computation live (the tercile split + md5-coin
+    * sampling, the keyed manifest rollup, the card joins).
     * Materializing the LM score as a corpus column is the published
-    * CCNet operating shape — the Wenzek et al. pipeline scores once
-    * and every downstream split reads the score. q66 stays a live run
-    * on purpose: it GATES `unigramLogProb` itself, so its benchmark
-    * keeps paying the LM cost. The pinned table is corpus-rowed but 4
-    * narrow columns (id, ntok, logprob_sum, nll_mean_nano); same
-    * [[pinSeam]] pinning and [[perSessionMemo]] lifetime contract.
+    * CCNet operating shape — the Wenzek et al. pipeline scores once and
+    * every downstream split reads the score. q66 stays a live run on
+    * purpose: it GATES `unigramLogProb` itself, so its benchmark keeps
+    * paying the LM cost. The pinned table is corpus-rowed but 4 narrow
+    * columns (id, ntok, logprob_sum, nll_mean_nano).
     */
-  private val lmScoresCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, SeamBox]]()
-  private def sharedLmScores(s: SparkSession, dir: String): DataFrame =
-    perSessionMemo(lmScoresCache, s, dir) {
-      pinSeam(s, TextAnalysis.unigramLogProb(
-        Tables.documents(s, dir), "doc_id", "text"))
-    }
+  private[graft] val sharedLmScores = new Seam((s, dir) =>
+    TextAnalysis.unigramLogProb(Tables.documents(s, dir), "doc_id", "text"))
 
-  /** Session-scoped per-source VOCABULARY share — the distinct
-    * (source, token) table both cross-source vocabulary audits read:
-    * q69 (HLL set-algebra overlap vs the exact join) and q200 (exact
-    * vocab Jaccard) each rebuilt the corpus-scale tokenize + distinct
-    * shuffle to get the identical table. A 100 TB pipeline
-    * materializes the per-source dictionary once (it is the
-    * distinct-word table, orders of magnitude below the corpus) and
-    * runs every vocabulary report against it. HLL registers built
-    * over the DISTINCT table are identical to registers over the raw
-    * token stream — max(rho) per bucket is insensitive to duplicate
-    * values — so q69's sketch side consumes the seam unchanged (its
-    * hash gate pins that equivalence). Tokenization itself stays live
-    * all over the bench (q65/q85/q86/q146 tokenize the corpus
-    * in-query); same [[pinSeam]] pinning and memo lifetime contract.
+  /** Per-source VOCABULARY share — the distinct (source, token) table
+    * both cross-source vocabulary audits read: q69 (HLL set-algebra
+    * overlap vs the exact join) and q200 (exact vocab Jaccard) each
+    * rebuilt the corpus-scale tokenize + distinct shuffle to get the
+    * identical table. A 100 TB pipeline materializes the per-source
+    * dictionary once (it is the distinct-word table, orders of
+    * magnitude below the corpus) and runs every vocabulary report
+    * against it. HLL registers built over the DISTINCT table are
+    * identical to registers over the raw token stream — max(rho) per
+    * bucket is insensitive to duplicate values — so q69's sketch side
+    * consumes the seam unchanged (its hash gate pins that equivalence).
+    * Tokenization itself stays live all over the bench
+    * (q65/q85/q86/q146 tokenize the corpus in-query).
     */
-  private val sourceVocabCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, SeamBox]]()
-  private def sharedSourceVocab(s: SparkSession, dir: String): DataFrame =
-    perSessionMemo(sourceVocabCache, s, dir) {
-      pinSeam(s, Tables.documents(s, dir)
-        .select(col("source"),
-          explode(graft.functions.tokens(col("text"))).as("tok"))
-        .distinct())
-    }
-
-  private def DSUM(x: String) = s"CAST(SUM(CAST(($x) AS DECIMAL(30,6))) AS DOUBLE)"
-  private def DAVG(x: String) = s"${DSUM(x)} / COUNT($x)"
-
-  // Shared query/twin thresholds (ADVICE r9): defined ONCE and
-  // interpolated into both the Spark-side call and the DuckDB twin —
-  // the q135 rateThresholdHex pattern — so editing a parameter on one
-  // side cannot silently desynchronize the hash gate.
-  /** q124/q128 sessionization gap (q60's 30-minute product default). */
-  private val SessionGapMinutes = 30L
-  private val SessionGapMicros = SessionGapMinutes * 60L * 1000000L
-  /** q129 bot-cadence flags: ≥ this many events AND median gap ≤ this. */
-  private val BotMinEvents = 50
-  private val BotMaxMedianGapS = 3600.0
-  /** q130 funnel step deadline, seconds (1 day). */
-  private val FunnelDeadlineS = 86400L
-  /** q145 per-entity event cap — BELOW the ~66-event median activity
-    * on this corpus, so the truncation path is exercised on most
-    * entities, not just a hypothetical bot. */
-  private val FunnelEntityCap = 40
-  /** q146 heavy-hitter threshold: items with count > n/k. 40 sits just
-    * above this corpus's 31-token uniform vocabulary (each ≈ n/31), so
-    * the exact filter binds — the rarest token falls out. */
-  private val HeavyHitterK = 40
-  /** q147 sorted-neighborhood parameters: window of 3 sorted records,
-    * block on the first 8 normalized chars, sort key 24 chars, keep
-    * pairs at ≥ 80% distinct-token Jaccard (integer-compared). */
-  private val SnmWindow = 3
-  private val SnmPrefixLen = 8
-  private val SnmKeyLen = 24
-  private val SnmMinJaccardPct = 80
-  /** q150 PageRank: 5 power iterations, damping 85/100 (the twin
-    * unrolls the same rounds — the BPE q102 unrolled-twin pattern). */
-  private val PageRankIters = 5
-  private val PageRankDampingPct = 85
-  /** q151 signed random projection: 64-dim embeddings → 16 components,
-    * md5-derived ±1 matrix regenerated symbolically by the twin. */
-  private val SrpOutDims = 16
-  private val EmbeddingDims = 64
-  /** q152 context-window packing: bin capacity in whitespace tokens
-    * (≈5 docs/bin on this corpus's ~54-token documents). */
-  private val PackBinTokens = 256L
-  /** q157 histogram-quantile audit: 8-token bins; p50/p90/p99 read
-    * from cumulative bin counts (±binWidth precision). */
-  private val TokQuantileBinTokens = 8L
-  private val TokQuantilePcts = Seq(50, 90, 99)
-  /** q158 language-ID stopword profiles (q20's two plus a perf third);
-    * the twin regenerates the same integer-count argmax, so the word
-    * lists are interpolated from HERE into both sides. */
-  private val LangIdProfiles = Seq(
-    "query" -> Seq("join", "filter", "group", "order", "sort", "query", "window"),
-    "data" -> Seq("data", "row", "column", "table", "value", "batch", "stream"),
-    "perf" -> Seq("fast", "slow", "big", "small", "hash", "merge", "vector"))
-  /** q160 rolling-active-HLL gate: 2^12 registers; ceiling on the worst
-    * per-day relative error vs the exact q110 answer (theoretical
-    * 1.04/√4096 ≈ 1.6%, and this corpus's per-window cardinalities sit
-    * in the near-exact linear-counting regime; the boolean gate ran
-    * green at sf0.001/0.01/0.1). */
-  private val WauHllP = 12
-  private val WauHllMaxRelErr = 0.05
-  /** q161/q162 revenue window — Q1 1998 (inside this corpus's
-    * 1995–2001 shipdate range), interpolated into query AND twin. */
-  private val TpchQtrFrom = "1998-01-01 00:00:00"
-  private val TpchQtrTo = "1998-04-01 00:00:00"
-  /** q164 large-order total-quantity threshold: ~p99 of per-order
-    * quantity sums on this corpus (median ≈ 96, p99 ≈ 262), so the
-    * HAVING binds hard — 874 of ~30k orders survive at sf0.01. */
-  private val LargeOrderMinQty = 200
-  /** q165 disjunctive predicate bands (the TPC-H Q19 shape):
-    * (brand, sizeLo, sizeHi, qtyLo, qtyHi), OR-of-ANDs on both sides. */
-  private val DisjBands = Seq(
-    ("Brand#12", 1, 5, 1, 11),
-    ("Brand#23", 1, 10, 10, 20),
-    ("Brand#34", 1, 15, 20, 30))
-  /** q166 dormancy cutoff: customers with NO order on/after this date
-    * (orderdate runs to 2001-08 here, so ≈2.5 y of silence). */
-  private val DormantCutoff = "1999-01-01 00:00:00"
-  /** q167 late-shipment gap: an order is "late" when any line ships
-    * more than this many days after the order date. */
-  private val LateShipDays = 60
-  /** q169 correlation audit columns (lineitem numeric measures). */
-  private val CorrCols = Seq("l_quantity", "l_extendedprice",
-    "l_discount", "l_tax")
-  /** q170 bigram-PMI support floor: ~27 occurrences/bigram expected on
-    * this corpus's ~31-token uniform vocabulary, so 10 keeps the bulk
-    * while still cutting the rare-pair tail PMI is degenerate on. */
-  private val BigramPmiMinCount = 10L
-  /** q177 MAD multiplier: |x − median| > k·MAD flags the outlier
-    * (k=3 ≈ the robust analogue of a 2σ cut on normal data). */
-  private val MadK = 3.0
-  /** q179 trigram support floor: 5 event types → ≤125 patterns,
-    * ~80 expected occurrences each at sf0.01; 20 keeps the bulk and
-    * prunes only the genuinely rare tail. */
-  private val TrigramMinSupport = 20L
-  /** q178 systematic-sampling stride (chars of cumulative weight per
-    * pick): ~20 picks at sf0.01's ~500k total chars, ~200 at sf0.1. */
-  private val SampleStrideChars = 25000L
-  /** q176 rolling-correlation window (observed days) and value
-    * fixed-point unit (milli-units — int64-exact through the window
-    * sums at this corpus's daily value mass, see operator scaladoc). */
-  private val RollCorrDays = 7
-  private val RollCorrQuant = 1000L
-  /** q181 length-band width for the linkage agreement pattern:
-    * docs within the same 200-char band "agree" on length. */
-  private val LinkLenBandChars = 200L
-  /** q183 max autocorrelation lag (days): one week, so the weekly
-    * cycle lands exactly on the last lag. */
-  private val AcfMaxLag = 7
-  /** q186 market-share slice: customer region × part type, shared by
-    * the Spark call and the generated twin. */
-  private val MarketShareRegion = "ASIA"
-  private val MarketSharePartType = "PROMO"
-  /** q194 BFS rounds: 6 reaches every node of the sf0.01/sf0.1
-    * blocking graph's hub component (diameter check in DedupSpec);
-    * the twin unrolls the SAME count. */
-  private val BfsMaxDepth = 6
-  /** q199 exact domain-compressed quantiles, shared by the Spark call
-    * and the generated twin's column list. */
-  private val DomainQuantilePcts = Seq(25, 50, 75, 90)
-  /** q204 (TPC-H Q13 shape) excluded order class — stands in for
-    * Q13's `o_comment NOT LIKE '%special%requests%'` (this corpus has
-    * no comment column): the outer join keeps every customer and the
-    * predicate lives ON the join, so zero-order customers land in the
-    * c_count = 0 bucket instead of vanishing. */
-  private val Q13ExcludedPriority = "1-URGENT"
-  /** q205 (TPC-H Q20 shape) parameters: the part-name prefix cut, the
-    * one-year shipment window the "excess capacity" test reads, and
-    * the capacity multiple — a (supplier, part) qualifies when its
-    * all-time shipped quantity exceeds `Q20CapacityMult` × its
-    * in-window quantity (the availqty > ½·yearqty analogue with
-    * capacity DERIVED from lineitem history; no partsupp table here).
-    * Shared by the Spark call and the twin. */
-  /** Shared FY-1998 window for the year-scoped TPC-H shapes
-    * (q205/q207/q208/q211) — inside this corpus's 1995–2001 range. */
-  private val TpchYearFrom = "1998-01-01 00:00:00"
-  private val TpchYearTo = "1999-01-01 00:00:00"
-  private val Q20PartPrefix = "small"
-  private val Q20YearFrom = TpchYearFrom
-  private val Q20YearTo = TpchYearTo
-  private val Q20CapacityMult = 2
-  /** q207 (TPC-H Q6 shape) forecast-revenue band: discounts in
-    * [0.05, 0.07] and quantity below 24, FY1998. The discount bounds
-    * compare the SAME parquet doubles against the same literals in
-    * both engines — no arithmetic before the compare, so no float
-    * divergence surface. */
-  private val Q6DiscLo = 0.05
-  private val Q6DiscHi = 0.07
-  private val Q6MaxQty = 24
-  /** q208 (TPC-H Q9 shape): the part-name substring cut and the
-    * retail-cost factor standing in for ps_supplycost (no partsupp
-    * table — cost is derived from the part dim, q163/q205 precedent). */
-  private val Q9NamePattern = "red"
-  /** q210 (TPC-H Q11 shape) importance floor: parts holding more than
-    * 1/Q11FracDen of the nation's total shipped quantity. Filter is
-    * the division-free exact-decimal compare qv·den > total (q166). */
-  private val Q11Nation = "NATION_7"
-  private val Q11FracDen = 1000
-  /** q211 (TPC-H Q12 shape) lag banding: ship−order day lag, 30-day
-    * integer bands (intDiv — exact in both engines). */
-  private val Q12BandDays = 30
-  /** q212 (TPC-H Q2 shape) part cut: small PROMO parts; the
-    * min-acctbal supplier stands in for min supplycost. */
-  private val Q2PartType = "PROMO"
-  private val Q2MaxSize = 5
-  /** q216 supplier-SLA report: only suppliers with at least this many
-    * shipped lines are rated (a rate over a handful of lines is
-    * noise, not an SLA signal). Shares q167's LateShipDays. */
-  private val SlaMinLines = 20L
-  /** q206 sampled-recall audit (VERDICT r10 item 4): the md5-coin
-    * (salt, 8-hex-digit threshold) selecting ~1/8 of rows as recall
-    * probes — 63 of 500 at sf0.01, 255 of 2000 at sf0.1. Shared by
-    * the Spark probe filters AND the twin's n_probes count, so the
-    * coin semantics themselves are hash-gated cross-engine. */
-  private val KnnSampleSalt = "knnrecall"
-  private val KnnSampleHex = "20000000"
-  /** q149 foreign-key edges, shared by the Spark call AND the
-    * generated DuckDB twin: (edge label, child, fk, parent, pk). */
-  private val RefAuditEdges: Seq[(String, String, String, String, String)] =
-    Seq(
-      ("customer->nation", "customer", "c_nationkey", "nation", "n_nationkey"),
-      ("lineitem->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-      ("lineitem->part", "lineitem", "l_partkey", "part", "p_partkey"),
-      ("lineitem->supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey"),
-      ("nation->region", "nation", "n_regionkey", "region", "r_regionkey"),
-      ("orders->customer", "orders", "o_custkey", "customer", "c_custkey"),
-      ("supplier->nation", "supplier", "s_nationkey", "nation", "n_nationkey"))
-  /** normalized text + distinct word 3-gram shingles, DuckDB side */
-  private val SHINGLES_CTE =
-    """tok AS (SELECT doc_id,
-      |  string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-      |  FROM documents),
-      |sh AS (SELECT doc_id,
-      |  list_distinct(list_transform(range(len(toks)-2),
-      |    i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS s
-      |  FROM tok WHERE len(toks) >= 3),
-      |shz AS (SELECT doc_id, s, len(s) AS sz FROM sh)""".stripMargin
-
-  /** Blocked exact-Jaccard pair CTEs, DuckDB side (VERDICT r11 item 2
-    * — the gate's multi-kilosecond tail was the O(n²) all-pairs twin
-    * scan, not the Spark side): candidate generation via the shingle
-    * POSTING-LIST join, the same blocking idea the engine's
-    * CBO-prefix join uses, formulated independently in SQL.
-    * Correctness is containment, not heuristics: a pair with
-    * Jaccard ≥ 0.5 > 0 shares at least one shingle, so the posting
-    * join's candidate set is a superset of every qualifying pair; and
-    * because `s` is list_distinct, the per-pair join-match COUNT *is*
-    * |A∩B| exactly — identical pair SET and identical intersection
-    * sizes to the all-pairs formulation (hash-verified unchanged when
-    * this replaced it, r12), at Σ_g df(g)² cost instead of n²·|s|.
-    * The twin stays an independent FORMULATION check — DuckDB plans
-    * its own hash join over its own list semantics; only the
-    * quadratic scan is gone. Yields `pairs(id_a, id_b, inter,
-    * union_sz)` with id_a < id_b at the corpus-wide operator
-    * threshold t = 0.5.
-    */
-  private val BLOCKED_PAIRS_CTE =
-    s"""$SHINGLES_CTE,
-       |jp_ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-       |jp_cand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    COUNT(*) AS inter
-       |  FROM jp_ex a JOIN jp_ex b ON a.g = b.g AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |pairs AS (SELECT id_a, id_b, inter,
-       |    sa.sz + sb.sz - inter AS union_sz
-       |  FROM jp_cand
-       |  JOIN shz sa ON sa.doc_id = jp_cand.id_a
-       |  JOIN shz sb ON sb.doc_id = jp_cand.id_b
-       |  WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) >= 0.5)""".stripMargin
-
-  /** BPE twins, DuckDB side: frequency-weighted word vocabulary (wc)
-    * and its char+</w> symbol sequences (v0). */
-  private val BPE_VOCAB_CTE =
-    """wc AS (SELECT w, COUNT(*) AS c FROM (
-      |  SELECT unnest(string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS w
-      |  FROM documents) WHERE w <> '' GROUP BY w),
-      |v0 AS (SELECT w, list_append(list_transform(range(length(w)), i -> w[i+1]), '</w>') AS s, c
-      |  FROM wc)""".stripMargin
-
-  /** The unrolled BPE trainer, DuckDB side (q102/q103 twins) — round r
-    * counts adjacent pairs over vocab v{r-1}, takes the
-    * (count DESC, a, b) argmax b$r, and rebuilds v$r via the SAME
-    * left-to-right non-overlapping fold the engine uses (list_reduce
-    * over a space-joined accumulator; symbols never contain spaces, so
-    * the split/join round-trip is lossless). Yields CTEs
-    * b1..b$numMerges (the merges) and v$numMerges (the final
-    * vocabulary, with the word column carried through). */
-  private def bpeRoundsCte(numMerges: Int): String =
-    BPE_VOCAB_CTE + ",\n" + (1 to numMerges).map { r =>
-      s"""p$r AS (SELECT u.a AS a, u.b AS b, CAST(SUM(c) AS BIGINT) AS pc
-         |  FROM v${r - 1} CROSS JOIN unnest(list_transform(range(len(s)-1),
-         |    i -> {'a': s[i+1], 'b': s[i+2]})) AS t(u)
-         |  GROUP BY 1, 2),
-         |b$r AS (SELECT a, b, pc FROM p$r ORDER BY pc DESC, a, b LIMIT 1),
-         |v$r AS (SELECT w, string_split(list_reduce(s, (acc, x) ->
-         |    CASE WHEN (acc = m.a OR right(acc, length(m.a)+1) = ' ' || m.a) AND x = m.b
-         |      THEN left(acc, length(acc)-length(m.a)) || m.a || m.b
-         |      ELSE acc || ' ' || x END), ' ') AS s, c
-         |  FROM v${r - 1} LEFT JOIN b$r m ON TRUE)""".stripMargin
-    // ^ LEFT JOIN ON TRUE, not CROSS JOIN: when training exhausts early
-    // (b$r empty) the vocabulary must pass through UNCHANGED — the
-    // NULL merge pair makes every fold comparison false, rebuilding s
-    // verbatim — matching the engine's early-exit, instead of
-    // collapsing v$r (and every downstream fertility/encode twin) to
-    // zero rows
-    }.mkString(",\n")
-
-  private def bpeTrainOracle(numMerges: Int): String = {
-    val sel = (1 to numMerges).map(r =>
-      s"SELECT CAST($r AS INTEGER) AS merge_rank, a, b, pc AS pair_count FROM b$r")
-      .mkString("\nUNION ALL\n")
-    s"WITH ${bpeRoundsCte(numMerges)}\n$sel\nORDER BY merge_rank"
-  }
-
-  /** q103's twin: per-source word counts joined against the trained
-    * vocabulary's symbol counts — encoding as a dictionary join. */
-  private def bpeFertilityOracle(numMerges: Int): String =
-    s"""WITH ${bpeRoundsCte(numMerges)},
-      |ws AS (SELECT source, w, COUNT(*) AS c FROM (
-      |  SELECT source, unnest(string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ')) AS w
-      |  FROM documents) WHERE w <> '' GROUP BY 1, 2)
-      |SELECT source, CAST(SUM(ws.c) AS BIGINT) AS n_words,
-      |  CAST(SUM(ws.c * len(v.s)) AS BIGINT) AS n_subwords,
-      |  round(CAST(SUM(ws.c * len(v.s)) AS DOUBLE) / CAST(SUM(ws.c) AS DOUBLE), 9) AS fertility
-      |FROM ws JOIN v$numMerges v USING (w)
-      |GROUP BY source
-      |ORDER BY source""".stripMargin
-  /** q87/q92 shared scoring chain: the linear quality classifier's
-    * twin — seed split (every 7th doc, positive = src0), closed-form
-    * naive-Bayes weights over 512 hashed uni+bigram buckets (DECIMAL
-    * round-9), mean-pooled sigmoid — ending in
-    * scored(doc_id, nfeat, score). */
-  private val Q87_SCORE_CTE =
-    """dtok AS (SELECT doc_id, source,
-      |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-      |  FROM documents),
-      |sfeat AS (SELECT doc_id, source = 'src0' AS pos,
-      |    unnest(list_concat(toks,
-      |      list_transform(range(len(toks)-1),
-      |        i -> toks[i+1] || ' ' || toks[i+2]))) AS f
-      |  FROM dtok WHERE doc_id % 7 = 0),
-      |sfb AS (SELECT doc_id, pos,
-      |    CAST(('0x' || substr(md5(f), 1, 8)) AS BIGINT) % 512 AS b
-      |  FROM sfeat),
-      |cnt AS (SELECT b, COUNT(*) AS cr,
-      |    COUNT(*) FILTER (WHERE pos) AS cp
-      |  FROM sfb GROUP BY 1),
-      |dom AS (SELECT range AS b FROM range(512)),
-      |fullb AS (SELECT dom.b, COALESCE(cnt.cr, 0) AS cr,
-      |    COALESCE(cnt.cp, 0) AS cp
-      |  FROM dom LEFT JOIN cnt USING (b)),
-      |tots AS (SELECT SUM(cp) AS tp, SUM(cr) - SUM(cp) AS tn FROM fullb),
-      |model AS (SELECT b,
-      |    CAST(round(ln(CAST(cp + 1 AS DOUBLE) /
-      |      CAST(tp + 512 AS DOUBLE)), 9) AS DECIMAL(30,9)) -
-      |    CAST(round(ln(CAST(cr - cp + 1 AS DOUBLE) /
-      |      CAST(tn + 512 AS DOUBLE)), 9) AS DECIMAL(30,9)) AS w
-      |  FROM fullb CROSS JOIN tots),
-      |feat AS (SELECT doc_id,
-      |    unnest(list_concat(toks,
-      |      list_transform(range(len(toks)-1),
-      |        i -> toks[i+1] || ' ' || toks[i+2]))) AS f
-      |  FROM dtok),
-      |fb AS (SELECT doc_id,
-      |    CAST(('0x' || substr(md5(f), 1, 8)) AS BIGINT) % 512 AS b
-      |  FROM feat),
-      |pooled AS (SELECT fb.doc_id, COUNT(*) AS nfeat, SUM(model.w) AS s
-      |  FROM fb JOIN model USING (b) GROUP BY 1),
-      |scored AS (SELECT d.doc_id,
-      |    COALESCE(p.nfeat, 0) AS nfeat,
-      |    round(1.0 / (1.0 + exp(-(0.0 +
-      |      COALESCE(CAST(p.s AS DOUBLE) / CAST(p.nfeat AS DOUBLE),
-      |        0.0)))), 9) + 0.0 AS score
-      |  FROM documents d LEFT JOIN pooled p USING (doc_id))""".stripMargin
-
-  /** DSIR weight table (q73/q79 shared prefix): hashed unigram+bigram
-    * bucket models, add-one smoothing, round-9 DECIMAL log-ratio sum;
-    * ends in w(doc_id, nfeat, log_weight) over NON-target docs. */
-  private val DSIR_W_CTE =
-    """dtok AS (SELECT doc_id, source,
-      |  string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-      |  FROM documents),
-      |feat AS (SELECT doc_id, source = 'src0' AS tgt,
-      |    unnest(list_concat(toks,
-      |      list_transform(range(len(toks)-1),
-      |        i -> toks[i+1] || ' ' || toks[i+2]))) AS f
-      |  FROM dtok),
-      |fb AS (SELECT doc_id, tgt,
-      |    CAST(('0x' || substr(md5(f), 1, 8)) AS BIGINT) % 1024 AS b
-      |  FROM feat),
-      |cr AS (SELECT b, COUNT(*) AS cr FROM fb GROUP BY 1),
-      |ct AS (SELECT b, COUNT(*) AS ct FROM fb WHERE tgt GROUP BY 1),
-      |tr AS (SELECT SUM(cr) AS tr FROM cr),
-      |tt AS (SELECT COALESCE(SUM(ct), 0) AS tt FROM ct),
-      |lp AS (SELECT fb.doc_id, fb.tgt,
-      |    CAST(round(ln(CAST(COALESCE(ct.ct, 0) + 1 AS DOUBLE) /
-      |      CAST(tt.tt + 1024 AS DOUBLE)), 9) AS DECIMAL(30,9)) -
-      |    CAST(round(ln(CAST(cr.cr + 1 AS DOUBLE) /
-      |      CAST(tr.tr + 1024 AS DOUBLE)), 9) AS DECIMAL(30,9)) AS lp
-      |  FROM fb JOIN cr USING (b) LEFT JOIN ct USING (b)
-      |  CROSS JOIN tr CROSS JOIN tt),
-      |w AS (SELECT doc_id, COUNT(*) AS nfeat,
-      |    CAST(SUM(lp) AS DOUBLE) AS log_weight
-      |  FROM lp WHERE NOT tgt GROUP BY 1)""".stripMargin
-  private val JACCARD_PAIRS_SQL =
-    s"""WITH $BLOCKED_PAIRS_CTE
-       |SELECT id_a, id_b, inter, union_sz,
-       |  CAST(inter AS DOUBLE) / CAST(union_sz AS DOUBLE) AS jaccard
-       |FROM pairs
-       |ORDER BY id_a, id_b""".stripMargin
-
-  /** DuckDB twin of [[graft.operators.Dedup.simhashPortable64]] +
-    * [[graft.operators.Dedup.hammingPairs]]: the fingerprint is
-    * recomputed bit-for-bit (md5 hex is identical in both engines) and
-    * the pair set is brute-forced — which is exactly what the pigeonhole
-    * banding provably equals. Generated: 64 majority-vote bit sums.
-    */
-  private val SIMHASH_SQL: String = {
-    val bits = (0 until 32).map { i =>
-      s"CASE WHEN sum(CASE WHEN substring(h1, ${i + 1}, 1) >= '8' THEN 1 ELSE -1 END) > 0 THEN CAST(${1L << i} AS BIGINT) ELSE 0 END"
-    } ++ (0 until 32).map { i =>
-      s"CASE WHEN sum(CASE WHEN substring(h2, ${i + 1}, 1) >= '8' THEN 1 ELSE -1 END) > 0 THEN CAST(${1L << (i + 32)} AS BIGINT) ELSE 0 END"
-    }
-    s"""WITH tok AS (SELECT doc_id,
-       |  string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS toks
-       |  FROM documents),
-       |ex AS (SELECT doc_id, unnest(toks) AS tk FROM tok WHERE len(toks) > 0),
-       |h AS (SELECT doc_id, md5(tk) AS h1, md5('x' || tk) AS h2 FROM ex),
-       |fp AS (SELECT doc_id, ${bits.mkString(" + ")} AS f FROM h GROUP BY doc_id)
-       |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |  CAST(bit_count(xor(a.f, b.f)) AS BIGINT) AS hamming
-       |FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.f, b.f)) <= 3
-       |ORDER BY 1, 2""".stripMargin
-  }
-
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // A2/A3/A4 — grouped aggregation menu over the fact table (the
-    // reference's conditional-sum reducer generalized; ref
-    // option_trade_aggs/main.py:85-140).
-    "q01_pricing_summary" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val discPrice = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-      li.groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_base_price"),
-          dsum(discPrice).as("sum_disc_price"),
-          dsum(discPrice * (lit(1.0) + col("l_tax"))).as("sum_charge"),
-          davg(col("l_quantity")).as("avg_qty"),
-          davg(col("l_extendedprice")).as("avg_price"),
-          davg(col("l_discount")).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    // A1+A2+A3 — the reference's defining computation: keyed tumbling
-    // 1-minute window with conditional-sum buckets (whale split analog;
-    // ref option_trade_aggs/main.py:85-140,221-225). Batch twin of
-    // streaming.StreamingOps.windowedAgg.
-    "q02_windowed_buckets" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val big = col("value") > 75.0
-      val purchase = col("event_type") === "purchase"
-      ev.groupBy(window(col("ts"), "1 minute"), col("user_id"))
-        .agg(
-          sumWhen(big && purchase, col("value")).as("vol_big_purchase"),
-          sumWhen(big && !purchase, col("value")).as("vol_big_other"),
-          sumWhen(!big && purchase, col("value")).as("vol_small_purchase"),
-          sumWhen(!big && !purchase, col("value")).as("vol_small_other"),
-          countWhen(col("event_type") === "error").as("n_error"),
-          count(lit(1)).as("n_events"))
-        .select(col("window.start").as("minute_ts"), col("user_id"),
-          col("vol_big_purchase"), col("vol_big_other"),
-          col("vol_small_purchase"), col("vol_small_other"),
-          col("n_error"), col("n_events"))
-        .orderBy(col("minute_ts"), col("user_id"))
-    }),
-
-    // A4+A7 — telemetry planner: time-bucket down-sampling with the
-    // full numeric aggregation menu (ref numericAggregationType.ts:16,
-    // groupByTimeSettings.ts:17-23).
-    "q03_bucketed_agg_menu" -> ((s, dir) => {
-      import Telemetry._
-      plan(eventsPoints(s, dir), Request(
-        bucketNs = Some(3600L * 1000 * 1000 * 1000), // 1 hour in ns
-        aggs = Seq(
-          NumericAgg("value", AggMean, "mean_value"),
-          NumericAgg("value", AggMax, "max_value"),
-          NumericAgg("value", AggMin, "min_value"),
-          NumericAgg("value", AggFirst, "first_value"),
-          NumericAgg("value", AggLast, "last_value"),
-          NumericAgg("value", AggSum, "sum_value"),
-          NumericAgg("value", AggCount, "count_value"),
-          NumericAgg("value", AggMedian, "median_value"),
-          NumericAgg("value", AggSpread, "spread_value")),
-        orderBy = Seq(Ordering("bucket_ts"))))
-    }),
-
-    // F4+F5+A9 — telemetry planner: time-range + stream-id IN + tag
-    // Equal(list)/NotLike filters, tag group-by (ref
-    // getDataRequestBase.ts:14-33, tagFilter.ts:17-27).
-    "q04_tag_filter_groupby" -> ((s, dir) => {
-      import Telemetry._
-      plan(eventsPoints(s, dir), Request(
-        from = Some("2024-01-05 00:00:00"),
-        to = Some("2024-01-20 00:00:00"),
-        streamIds = Seq(0L, 1L, 2L, 3L, 4L, 5L, 6L, 7L),
-        tagFilters = Seq(
-          TagFilter("event_type", TagEqual, Seq("purchase", "click", "view")),
-          TagFilter("event_type", TagNotLike, Seq("err%"))),
-        groupByTags = Seq("event_type"),
-        aggs = Seq(
-          NumericAgg("value", AggSum, "sum_value"),
-          NumericAgg("value", AggCount, "count_value")),
-        orderBy = Seq(Ordering("event_type"))))
-    }),
-
-    // O1+O2 — raw-point fetch with multi-column ordering and paging
-    // (ref ordering.ts:17-23, paging.ts:13-22).
-    "q05_order_page" -> ((s, dir) => {
-      import Telemetry._
-      plan(eventsPoints(s, dir), Request(
-        aggs = Seq(NumericAgg("value", AggNone, "value")),
-        orderBy = Seq(Ordering("value", descending = true), Ordering("ts")),
-        paging = Some(Paging(2, 50))))
-    }),
-
-    // A7+A8 — gap-fill, interpolation=Previous over the densified daily
-    // spine (ref interpolationType.ts:16). Spine generated per-key on
-    // executors (GapFill.densify).
-    "q06_gapfill_prev" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).filter(col("event_type") === "signup")
-      val daily = ev.groupBy(col("user_id"), date_trunc("DAY", col("ts")).as("day_ts"))
-        .agg(davg(col("value")).as("avg_value"))
-      val dense = GapFill.densify(daily, "user_id", "day_ts", "INTERVAL 1 DAY")
-      GapFill.fillPrevious(dense, "user_id", "day_ts", "avg_value", "filled_value")
-        .orderBy(col("user_id"), col("day_ts"))
-    }),
-
-    // A8 — interpolation=Linear between surrounding non-null points
-    // (ref interpolationType.ts:16).
-    "q07_gapfill_linear" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).filter(col("event_type") === "signup")
-      val daily = ev.groupBy(col("user_id"), date_trunc("DAY", col("ts")).as("day_ts"))
-        .agg(davg(col("value")).as("avg_value"))
-      val dense = GapFill.densify(daily, "user_id", "day_ts", "INTERVAL 1 DAY")
-      GapFill.fillLinear(dense, "user_id", "day_ts", "avg_value", "filled_value")
-        .orderBy(col("user_id"), col("day_ts"))
-    }),
-
-    // P3-P8+P11+P13+P14 — the enrichment projection chain
-    // (ref option_trades/utils.py:81-145, darkpool_trades/main.py:88-120).
-    "q08_enrich" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val baseTags = array(col("event_type"))
-      val valueTags = Enrich.premiumTags(col("value"), 75.0, 100.0, 250.0, 250.0)
-      val sideTags =
-        when(col("event_type").isin("purchase", "signup"), array(lit("ask_side")))
-          .when(col("event_type") === "error", array(lit("bid_side")))
-          .otherwise(array(lit("no_side")))
-      val dtx = datediff(lit("2024-02-01").cast("date"), to_date(col("ts")))
-      ev.select(
-          col("event_id"),
-          col("user_id"),
-          Enrich.epochMillis(col("ts")).as("ts_ms"),
-          dtx.cast("long").as("days_to_expiry"),
-          concat_ws(",", Enrich.expiryTags(lit(31) - dtx)).as("expiry_tags"),
-          Enrich.sideFromTags(sideTags).as("side"),
-          Enrich.positionType(sideTags, col("event_type")).as("position_type"),
-          concat_ws(",", Enrich.mergeTags(baseTags, valueTags)).as("tags"),
-          Enrich.sentimentTag(
-            signedSigmoid((col("value") - lit(50.0)) / lit(50.0))).as("sentiment"),
-          Enrich.surrogateKey(col("event_id"), col("user_id"),
-            Enrich.epochMillis(col("ts"))).as("row_key"))
-        .orderBy(col("event_id"))
-    }),
-
-    // W1+W2 — per-key lag analytics: percent value gap vs previous and
-    // inter-arrival staleness (ref darkpool_trades/metrics.py:105-123).
-    "q09_lag_metrics" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"), col("value"))
-      val ord = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_us"), col("event_id"))
-      ev.withColumn("prev_value", lag(col("value"), 1).over(ord))
-        .withColumn("pct_gap",
-          Enrich.pctGap(col("value"), col("prev_value")))
-        .withColumn("staleness_us",
-          col("ts_us") - lag(col("ts_us"), 1).over(ord))
-        .orderBy(col("user_id"), col("ts_us"), col("event_id"))
-    }),
-
-    // LLM dedup 1 — exact content-hash dedup over documents.
-    "q10_dedup_exact" -> ((s, dir) => {
-      Dedup.exact(Tables.documents(s, dir), "doc_id", "text")
-        .orderBy(col("content_hash"))
-    }),
-
-    // LLM dedup 2 — exact n-gram Jaccard similarity self-join with
-    // prefix filtering (no crossJoin; inverted index over rare-shingle
-    // prefixes). UNCAPPED here: this query is checked against an exact
-    // DuckDB Jaccard oracle, and the prefixDfCap dial's exactness is a
-    // corpus property (a qualifying pair could in principle overlap
-    // only on hot shingles), so the oracle-hash-gated query keeps the
-    // unconditional algorithm. The capped variant is gated separately
-    // as q40_jaccard_capped (same exact twin — the dial is measured
-    // lossless on this corpus, and the gate keeps it that way).
-    "q11_jaccard_pairs" -> ((s, dir) => {
-      Dedup.jaccardSimilarityJoin(Tables.documents(s, dir), "doc_id", "text",
-          n = 3, t = 0.5)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // LLM dedup 3 — MinHash-LSH banded near-dup with exact verification;
-    // same output contract as q11. Bands×rows = 32×2: per-pair miss
-    // probability (1 - J²)³² ≤ 1e-4 at J = 0.5 (< 1e-9 at J ≥ 0.7), so
-    // the exact-Jaccard oracle is hash-safe; verified identical to q11's
-    // exact pair set at sf0.01 AND sf0.1 (deterministic: xxhash64).
-    "q12_minhash_lsh" -> ((s, dir) => {
-      Dedup.minhashLsh(Tables.documents(s, dir), "doc_id", "text",
-          n = 3, t = 0.5, bands = 32, rows = 2)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // LLM similarity — brute-force cosine top-k baseline over the
-    // embeddings table (broadcast query set, one corpus pass).
-    "q13_topk_sim" -> ((s, dir) => {
-      Similarity.bruteForceTopK(Tables.embeddings(s, dir), "vec_id", "embedding",
-          queryIds = (0L until 10L), k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // J1 — star-schema join: fact × orders × customer × nation, small
-    // dim broadcast; revenue rollup by segment and nation.
-    // BENCH_r03's 5.1 s (vs r2's 1.8 s) investigated with unchanged
-    // code: three isolated runs at sf0.1 measured 2.9/2.7/3.4 s, and
-    // the AQE executed plan is already the intended shape — ALL of
-    // orders/customer/nation arrive as BroadcastHashJoin builds at this
-    // sf (customer ~15k rows ≈ 3 MB), lineitem streams through a
-    // 3-column pruned scan into a partial+final hash aggregate. The
-    // in-suite 5.1 s is suite-context noise (GC pressure from the
-    // preceding dedup self-joins), not a plan regression. At 100 TB
-    // only nation stays pinned-broadcast; AQE decides the rest per
-    // actual size, which is the shape that survives the scale-up.
-    "q14_star_join" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val ord = Tables.orders(s, dir)
-      val cust = Tables.customer(s, dir)
-      val nat = broadcast(Tables.nation(s, dir))
-      val revenue = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(cust, col("o_custkey") === col("c_custkey"))
-        .join(nat, col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_mktsegment"), col("n_name"))
-        .agg(dsum(revenue).as("revenue"), count(lit(1)).as("n_items"))
-        .orderBy(col("c_mktsegment"), col("n_name"))
-    }),
-
-    // J1b — as-of join: each purchase enriched with the latest
-    // preceding click of the same user (union + running last — one
-    // shuffle, no range explosion).
-    "q15_asof_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-      AsOfJoin.asOf(purchases, clicks, "user_id", "ts",
-          payloadCols = Seq("event_id", "value"))
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"), col("value"),
-          col("asof_event_id"), col("asof_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // F7 — catalog search: smart-case Contains, case-insensitive
-    // StartsWith, Include/Exclude lists, full-text Search
-    // (ref getAllStreamsRequest.ts:20-69).
-    "q16_catalog_search" -> ((s, dir) => {
-      Catalog.search(Tables.part(s, dir), Seq(
-          Catalog.Contains("p_name", "red"),
-          Catalog.Include("p_type", Seq("ECONOMY", "SMALL", "STANDARD")),
-          Catalog.Exclude("p_brand", Seq("Brand#13")),
-          Catalog.Search(Seq("p_name", "p_type"), "e")))
-        .orderBy(col("p_partkey"))
-    }),
-
-    // A5+A10 — string aggregation menu (First/Last/Count) + distinct
-    // tag values per stream (ref aggregationType.ts:16,
-    // getTagValuesRequest.ts:14-31).
-    "q17_string_agg_menu" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      ev.groupBy(col("user_id"))
-        .agg(
-          count(col("event_type")).as("n_events"),
-          firstByTime(col("event_type"), col("ts")).as("first_type"),
-          lastByTime(col("event_type"), col("ts")).as("last_type"),
-          count_distinct(col("event_type")).as("n_types"),
-          array_join(array_sort(collect_set(col("event_type"))), ",").as("types_str"))
-        .orderBy(col("user_id"))
-    }),
-
-    // A11 — max-by pagination cursor: newest row per key
-    // (ref darkpool_trades/main.py:178).
-    "q18_maxby_cursor" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      ev.groupBy(col("user_id"))
-        .agg(
-          max(unix_micros(col("ts"))).as("last_seen_us"),
-          max_by(col("event_id"), unix_micros(col("ts"))).as("last_event_id"),
-          count(lit(1)).as("n_events"))
-        .orderBy(col("user_id"))
-    }),
-
-    // A12+W1+W2 — rolling data-quality stats over the trailing 100 rows
-    // per key (ref darkpool_trades/metrics.py:59-183).
-    "q19_rolling_quality" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"), col("value"))
-      Quality.rollingStats(ev, "user_id", "ts_us", "value", 100,
-          tieCol = Some("event_id"))
-        .orderBy(col("user_id"), col("ts_us"), col("event_id"))
-    }),
-
-    // LLM text analysis — token stats, quality score, language-ID
-    // heuristic, canonical fingerprint.
-    "q20_text_stats" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val stats = TextAnalysis.tokenStats(col("text"))
-      val profiles = Seq(
-        "query" -> Seq("join", "filter", "group", "order", "sort", "query", "window"),
-        "data" -> Seq("data", "row", "column", "table", "value", "batch", "stream"))
-      docs.select(
-          col("doc_id"),
-          stats.getField("n_tokens").cast("long").as("n_tokens"),
-          stats.getField("n_distinct").cast("long").as("n_distinct"),
-          stats.getField("type_token_ratio").as("type_token_ratio"),
-          stats.getField("mean_token_len").as("mean_token_len"),
-          TextAnalysis.langIdPredict(col("text"), profiles).as("lang_pred"),
-          TextAnalysis.fingerprint(col("text")).as("fingerprint"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // LLM dedup 4 — SimHash near-dup (pigeonhole banding + exact
-    // hamming), on the PORTABLE md5-derived 64-bit fingerprint so the
-    // DuckDB oracle can recompute the exact pair set bit-for-bit
-    // (was rows-only in r2; the pigeonhole candidate set is provably
-    // complete, so this is a full hash check now).
-    "q21_simhash" -> ((s, dir) => {
-      Dedup.hammingPairs(
-          Dedup.simhashPortable64(Tables.documents(s, dir), "doc_id", "text"),
-          bits = 64, maxHamming = 3)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // J2 — multi-stream fan-in via unionByName with missing-column
-    // alignment (SURVEY.md §2.8).
-    "q22_union_fanin" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val a = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("value"), lit("purchases").as("src"))
-      val b = ev.filter(col("event_type") === "error")
-        .select(col("event_id"), col("value"), col("user_id"), lit("errors").as("src"))
-      a.unionByName(b, allowMissingColumns = true)
-        .groupBy(col("src"))
-        .agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("sum_value"),
-          count(col("user_id")).as("n_with_user"))
-        .orderBy(col("src"))
-    }),
-
-    // Multimodal — binary payload column + typed metadata extraction
-    // (deterministic stub decode; real Spark plumbing).
-    "q23_multimodal_meta" -> ((s, dir) => {
-      Multimodal.withMedia(Tables.documents(s, dir), "text")
-        .select(
-          col("doc_id"),
-          col("media_meta.n_bytes").cast("long").as("n_bytes"),
-          col("media_meta.format_id").cast("long").as("format_id"),
-          col("media_meta.width").cast("long").as("width"),
-          col("media_meta.height").cast("long").as("height"),
-          col("media_meta.content_md5").as("content_md5"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // LLM similarity 2 — LSH-bucketed ANN top-k (the 100 TB path:
-    // candidates only within shared hyperplane buckets, exact re-rank)
-    // CHECKED against the exact brute-force top-5 (was rows-only in
-    // r2): recall over 10 queries must clear a floor. The testdata
-    // embeddings are soft-clustered noise (exact top-5 cosines are only
-    // ~0.3-0.5, no pair reaches 0.8) — plain bucketing measured
-    // 0.54/0.58 recall at sf0.01/sf0.1 with 16 tables. Query-side
-    // MULTIPROBE (each query also probes every Hamming-1 bucket — the
-    // corpus index is untouched, the right asymmetry at scale) lifts
-    // that to 0.98/1.00 at no measurable cost. Floor 0.8 (r6, was
-    // 0.4): one variance band below the 0.98 measurement over the
-    // 50-trial gate (10 queries × top-5; a binomial dip bottoms out
-    // ~0.9), and comfortably ABOVE the 0.54-0.58 plain-bucketing
-    // recall — so silently losing the multiprobe machinery now fails
-    // the gate instead of passing an operator-class floor.
-    "q24_ann_recall" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val qids = (0L until 10L)
-      val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", qids, 5)
-      val approx = Similarity.lshTopK(emb, "vec_id", "embedding", qids, 5,
-        tables = 16, multiProbe = true)
-      exact.select(col("query_id"), col("nbr_id"))
-        .join(approx.select(col("query_id"), col("nbr_id"), lit(1).as("hit")),
-          Seq("query_id", "nbr_id"), "left")
-        .agg(
-          count_distinct(col("query_id")).as("n_queries"),
-          (count(col("hit")).cast("double") / count(lit(1)) >= 0.8).as("recall_ok"))
-    }),
-
-    // LLM similarity 3 — IVF ANN (fixed-C coarse quantizer + 2 Lloyd
-    // refinement rounds, nearest-cell assignment, nProbe probed cells,
-    // exact re-rank), same recall-floor check vs brute force. C is a
-    // FIXED count (bounded n×C assignment — a corpus-fraction sample
-    // made assignment quadratic); the deterministic decimal-mean
-    // k-means rounds lift measured recall 0.56/0.60 → 0.84/0.72 at
-    // sf0.01/sf0.1 (C=64, probe=16) for ~1 s of training. Floor 0.55
-    // (r6, was 0.3): one variance band below the weaker 0.72
-    // measurement (sf0.1) — the data is soft-clustered noise, so the
-    // band is wider than q24's. The pre-Lloyd 0.56/0.60 sits just
-    // above the line (refinement is belt-and-braces here), but the
-    // r4-era corpus-fraction quantizer's 0.50/0.32 — and anything
-    // that breaks assignment or probing — now fails the gate.
-    "q25_ivf_recall" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val qids = (0L until 10L)
-      val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", qids, 5)
-      val approx = Similarity.ivfTopK(emb, "vec_id", "embedding", qids, 5,
-        centroids = 64, nProbe = 16, refineIters = 2)
-      exact.select(col("query_id"), col("nbr_id"))
-        .join(approx.select(col("query_id"), col("nbr_id"), lit(1).as("hit")),
-          Seq("query_id", "nbr_id"), "left")
-        .agg(
-          count_distinct(col("query_id")).as("n_queries"),
-          (count(col("hit")).cast("double") / count(lit(1)) >= 0.55).as("recall_ok"))
-    }),
-
-    // P1/F3/S6 — the ingestion layer end-to-end: events serialized to
-    // JSON (the Kafka value shape), parsed back via from_json with a
-    // DECLARED schema in PERMISSIVE mode, corrupt payloads quarantined
-    // (one poison record injected), missing fields null-defaulted the
-    // map_fields way (ref option_trades/utils.py:111-145,
-    // option_trade_aggs/main.py:203-208).
-    "q26_json_ingest" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val ev = Tables.events(s, dir)
-      val json = ev.select(to_json(struct(
-        col("event_id"), col("user_id"), col("event_type"), col("value"))).as("raw"))
-      val poisoned = json.unionByName(
-        s.createDataFrame(
-          java.util.List.of(org.apache.spark.sql.Row("{not json")),
-          StructType(Seq(StructField("raw", StringType)))))
-      val schema = StructType(Seq(
-        StructField("event_id", LongType),
-        StructField("user_id", LongType),
-        StructField("event_type", StringType),
-        StructField("value", DoubleType),
-        StructField("channel", StringType))) // absent in the data
-      // Materialize the parsed (bronze→silver) table before the
-      // quarantine filter + sort: without the cut, PushDownPredicates
-      // inlines the WHOLE from_json into the corrupt-record Filter
-      // (one extra parse per row) and the range-sort's sampling pass
-      // re-parses everything again — measured 2.8 s → 1.1 s at sf0.1.
-      // At scale this cut is the ingestion layer's real parsed-table
-      // write; see Ingest.parseJson's scaladoc.
-      val parsed = sources.Ingest.parseJson(poisoned, "raw", schema)
-        .localCheckpoint()
-      sources.Ingest.valid(parsed)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"),
-          coalesce(col("channel"), lit("unknown")).as("channel"))
-        .orderBy(col("event_id"))
-    }),
-
-    // P9+P10+P12 — darkpool quote-side enrichment: nearest-quote side
-    // rule, sigmoid side-confidence, tz conversion
-    // (ref darkpool_trades/main.py:45,71-96). The confidence is rounded
-    // to 9 dp AND sign-normalized via hashSafeRound: ~1/3 of rows have
-    // price == value exactly, making the sigmoid argument ±tiny; the
-    // round collapses it to zero, and Spark (BigDecimal round, no −0)
-    // emits +0.0 where DuckDB (C++ round) keeps −0.0 — a value-equal
-    // but hash-different result without the +0.0 normalization.
-    "q27_quote_side" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val bid = col("value") * lit(0.99)
-      val ask = col("value") * lit(1.01)
-      val price = col("value") * (lit(1.0) + (col("event_id") % 3 - lit(1)) * lit(0.004))
-      ev.select(
-          col("event_id"),
-          Enrich.nearestQuoteSide(price, bid, ask).as("side"),
-          graft.functions.hashSafeRound(Enrich.sideConfidence(price, bid, ask), 9).as("confidence"),
-          date_format(Enrich.toEastern(col("ts")), "yyyy-MM-dd HH:mm:ss").as("ts_et"))
-        .orderBy(col("event_id"))
-    }),
-
-    // A10 — distinct tag values for a key (ref getTagValuesRequest.ts:14-31).
-    "q28_tag_values" -> ((s, dir) => {
-      Telemetry.tagValues(eventsPoints(s, dir), "k").orderBy(col("value"))
-    }),
-
-    // A5+A6+F6 — event-flavor aggregation through the planner: metadata
-    // equals-filter, daily interval, First/Last/Count of a string tag
-    // (ref getEventDataRequest.ts:18-43, metadataFilter.ts:16-25,
-    // eventDataAggregation.ts:18-25). First/Last tie-break on the value
-    // itself so timestamp collisions can never diverge between engines.
-    "q29_event_planner" -> ((s, dir) => {
-      import Telemetry._
-      plan(eventsPoints(s, dir), Request(
-        metadataFilters = Seq(MetadataFilter("event_type", "purchase")),
-        bucketNs = Some(24L * 3600 * 1000 * 1000 * 1000),
-        stringAggs = Seq(
-          StringAgg("k", StrFirst, "first_k"),
-          StringAgg("k", StrLast, "last_k"),
-          StringAgg("k", StrCount, "n_k")),
-        orderBy = Seq(Ordering("bucket_ts"))))
-    }),
-
-    // A8 — interpolation=Null: the densified spine with missing
-    // buckets left null (the fourth interpolation mode; q06/q07 cover
-    // Previous/Linear, ref interpolationType.ts:16).
-    "q33_gapfill_null" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).filter(col("event_type") === "signup")
-      val daily = ev.groupBy(col("user_id"), date_trunc("DAY", col("ts")).as("day_ts"))
-        .agg(davg(col("value")).as("avg_value"))
-      GapFill.densify(daily, "user_id", "day_ts", "INTERVAL 1 DAY")
-        .orderBy(col("user_id"), col("day_ts"))
-    }),
-
-    // A12 alerting — consecutive-breach rule: alert when the last 3
-    // checks for a key all breached (ref darkpool_trades/
-    // metrics.py:46-49: ">= 3 consecutive failures").
-    "q34_breach_alerts" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"), col("value"))
-      Quality.consecutiveBreaches(ev, "user_id", "ts_us",
-          breach = col("value") < 20.0, n = 3)
-        .orderBy(col("user_id"), col("ts_us"))
-    }),
-
-    // Hard part 5 — Decimal-as-string round trip with EXACT decimal
-    // arithmetic (ref darkpool_trades/main.py:97-99): vendor string
-    // prices → DECIMAL(18,4), nearest-quote side + value = price×qty
-    // computed in decimal, SHA-256 surrogate key over the string forms,
-    // strings again at the boundary. The whole darkpool transform
-    // (Ingest.darkpoolTransform) against a synthesized vendor feed.
-    "q31_darkpool_decimal" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val raw = ev.select(
-        unix_millis(col("ts")).as("ts"),
-        col("event_type").as("symbol"),
-        (col("value") * lit(0.99)).cast("decimal(18,4)").cast("string").as("bid"),
-        (col("value") * lit(1.01)).cast("decimal(18,4)").cast("string").as("ask"),
-        col("value").cast("decimal(18,4)").cast("string").as("price"),
-        (col("event_id") % 50 + 1).cast("int").as("qty"),
-        lit("DP1").as("venue"))
-      sources.Ingest.darkpoolTransform(raw)
-        .orderBy(col("ts"), col("row_key"))
-    }),
-
-    // Nested-JSON ingestion (ref news/main.py:56-79): a nested payload
-    // (publisher struct + tickers array) parsed with the DECLARED
-    // newsArticle schema, nested struct access, header derivation.
-    "q32_news_nested" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val json = ev.select(to_json(struct(
-        col("event_id").cast("string").as("id"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("published_utc"),
-        struct(col("event_type").as("name"),
-          lit("https://example.com").as("homepage_url")).as("publisher"),
-        array(upper(col("event_type")), lit("SPY")).as("tickers"),
-        concat(lit("title-"), col("event_id")).as("title"),
-        lit("u").as("article_url"),
-        lit("d").as("description"))).as("raw"))
-      // same bronze→silver cut as q26: stop the corrupt-record filter
-      // and the sort-sampling pass from re-running the nested parse
-      val parsed = sources.Ingest.valid(
-        sources.Ingest.parseJson(json, "raw", sources.Schemas.newsArticle)
-          .localCheckpoint())
-      sources.Ingest.newsTransform(parsed)
-        .select(col("id"), col("published_at"), col("publisher_name"),
-          concat_ws(",", col("tickers")).as("tickers_str"), col("title"),
-          element_at(col("headers"), "published_date").as("published_date"),
-          element_at(col("headers"), "tickers").as("header_tickers"))
-        .orderBy(col("id"))
-    }),
-
-    // §2.11 — the generic user-supplied reducer (initializer/reducer
-    // dict-fold, ref option_trade_aggs/main.py:85-188) registered via
-    // udaf and run inside the keyed 1-minute window: same results as
-    // q02's built-in conditional sums, through the custom-Aggregator
-    // path. Decimal-buffered so the fold is reassociation-proof.
-    "q30_udaf_buckets" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val f = udaf(Reduce.eventBucketReducer)
-      val m = col("m")
-      ev.groupBy(window(col("ts"), "1 minute"), col("user_id"))
-        .agg(f(col("value"), col("event_type")).as("m"))
-        .select(col("window.start").as("minute_ts"), col("user_id"),
-          coalesce(element_at(m, "vol_big_purchase"), lit(0.0)).as("vol_big_purchase"),
-          coalesce(element_at(m, "vol_big_other"), lit(0.0)).as("vol_big_other"),
-          coalesce(element_at(m, "vol_small_purchase"), lit(0.0)).as("vol_small_purchase"),
-          coalesce(element_at(m, "vol_small_other"), lit(0.0)).as("vol_small_other"),
-          coalesce(element_at(m, "n_error"), lit(0.0)).cast("long").as("n_error"),
-          element_at(m, "n_events").cast("long").as("n_events"))
-        .orderBy(col("minute_ts"), col("user_id"))
-    }),
-
-    // Binary-parameter aggregation path (ref parameterAggregation.ts:
-    // 17-23, parameterData.ts:25-28): a BinaryType value column driven
-    // through the planner's First/Last/Count string-agg menu. First/
-    // Last tie-break on the value bytes themselves (struct(ts, bin) —
-    // mirrored in SQL by padded-epoch || hex, which orders identically
-    // to the raw bytes since hex is monotone in them). The aggregation
-    // runs on raw BinaryType end-to-end; only the final projection
-    // hex-encodes the two payload columns because the driver's compare
-    // hashes column values and raw bytes aren't hashable there.
-    "q35_binary_params" -> ((s, dir) => {
-      import Telemetry._
-      val ev = Tables.events(s, dir).withColumn("payload",
-        unhex(md5(concat_ws(":", col("event_id"), col("event_type")))))
-      plan(ev, Request(
-        bucketNs = Some(24L * 3600 * 1000 * 1000 * 1000),
-        stringAggs = Seq(
-          StringAgg("payload", StrFirst, "first_payload"),
-          StringAgg("payload", StrLast, "last_payload"),
-          StringAgg("payload", StrCount, "n_payload"))))
-        .select(col("bucket_ts"),
-          lower(hex(col("first_payload"))).as("first_payload"),
-          lower(hex(col("last_payload"))).as("last_payload"),
-          col("n_payload"))
-        .orderBy(col("bucket_ts"))
-    }),
-
-    // Stream lineage parents-closure (ref stream.ts:49-52) against a
-    // DuckDB RECURSIVE CTE oracle — an exact cross-engine check of the
-    // BFS expansion. The dimension is synthesized from the user ids
-    // with parents = [id / 2] (a binary tree, so every (id, ancestor)
-    // pair has a unique depth and shallowest-depth semantics are
-    // unambiguous).
-    "q36_lineage" -> ((s, dir) => {
-      val dim = Tables.events(s, dir).select(col("user_id")).distinct()
-        .select(col("user_id").as("streamId"),
-          when(col("user_id") > 1,
-            array(floor(col("user_id") / 2).cast("long")))
-            .otherwise(array().cast("array<long>")).as("parents"))
-      // maxDepth 64 ≥ log2 of any i64 id: the binary-tree lineage is
-      // ~log2(max user_id) deep, so depth 20 would overflow (and now
-      // throw) once max user_id ≥ 2^20 at larger scale factors. The
-      // loop still stops as soon as the frontier empties, so the
-      // higher cap costs nothing at small sf.
-      Catalog.ancestors(dim, "streamId", "parents", maxDepth = 64)
-        .orderBy(col("id"), col("ancestor_id"), col("depth"))
-    }),
-
-    // LLM dedup 5 — embedding-cosine near-dup as a measured recall
-    // gate vs the exact all-pairs answer. Plain bucketing measured
-    // 0.71/0.72 recall at sf0.01/sf0.1 (t=0.4, 16 tables) on these
-    // soft-clustered embeddings; Hamming-1 MULTIPROBE (pairs qualify
-    // when their buckets differ by ≤1 sign bit in some table) lifts
-    // that to 1.00/0.998 for ~2× the candidate-stage cost — here the
-    // fan-out is corpus-sized, a real dial, unlike q24's free
-    // query-side probing. Floor 0.9 (r6, was 0.5): one band below the
-    // 1.00/0.998 measurement — and plain bucketing's 0.71/0.72 FAILS
-    // the gate: silently dropping the multiprobe candidates cannot
-    // pass. no_false_pos must ALWAYS hold: the operator exact-verifies
-    // every candidate, and the gate independently re-derives each
-    // reported pair's cosine from the base table. Since r7 the recall
-    // baseline is a FIXED-SIZE sampled-query exact join (~1000 ids ×
-    // corpus), not the full n² self-join, so the whole query is O(n).
-    "q37_cosine_neardup" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val t = 0.4
-      val e = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      // Recall gate on a FIXED-SIZE deterministic query set: stride =
-      // ceil(n/1000) caps the sample at ~1000 ids spread across the id
-      // space, so the gate costs |Q|×n ≈ 1000×n — O(n) at ANY corpus
-      // size. (r6 used id % 10 — a proportional sample, still
-      // Θ(n²/10): a 10× constant on the old n², not a change of class;
-      // the judge flagged that at 100× corpus the gate would again
-      // dominate.) The count() is a one-scalar driver read, the same
-      // shape as the CBO strategy routers.
-      // A pair counts as a trial when at least one endpoint is sampled;
-      // both-sampled pairs dedup via least/greatest + distinct.
-      val stride = math.max(1L, (e.count() + 999L) / 1000L)
-      val q = e.filter(col("id") % stride === 0)
-      val exactSampled = q.as("a").join(e.as("b"), col("a.id") =!= col("b.id"))
-        .filter(graft.functions.cosineSim(col("a.vec"), col("b.vec")) >= t)
-        .select(least(col("a.id"), col("b.id")).as("id_a"),
-          greatest(col("a.id"), col("b.id")).as("id_b"))
-        .distinct().persist()
-      // tables is the recall/cost dial: candidate volume (and the
-      // approx stage's wall) is linear in tables × (planes+1) probe
-      // rows. r16 re-ran the recall evidence across the grid
-      // (ProbeQ37, all 3 SFs): tables=12 keeps recall 1.0 / 1.0 /
-      // 0.9818 (sf0.001/0.01/0.1) against the sampled exact baseline —
-      // ≥ 8 points above the 0.9 gate everywhere — at ~0.7× the
-      // 16-table stage cost; tables=8 still passes but with a 0.038
-      // worst-case margin, too thin for a gated dial.
-      val approx = Similarity.cosineNearDup(emb, "vec_id", "embedding", t,
-          tables = 12, multiProbe = true)
-        .select(col("id_a"), col("id_b")).persist()
-      // vacuous truths both ways: zero sampled exact pairs -> recall is
-      // 0/0, which must read as "nothing to find" (coalesce true), and
-      // an empty approx output has no false positives by definition —
-      // neither gate may conflate "found nothing" with "failed"
-      val recallDf = exactSampled
-        .join(approx.withColumn("hit", lit(1)), Seq("id_a", "id_b"), "left")
-        .agg(coalesce(
-          count(col("hit")).cast("double") / count(lit(1)) >= 0.9,
-          lit(true)).as("recall_ok"))
-      // False positives are checked over the FULL approx output (not
-      // the sample): re-derive each reported pair's cosine from the
-      // base table and require >= t — linear in |pairs|.
-      val fpDf = approx
-        .join(e.select(col("id").as("id_a"), col("vec").as("vec_a")), "id_a")
-        .join(e.select(col("id").as("id_b"), col("vec").as("vec_b")), "id_b")
-        .agg((count(when(
-          graft.functions.cosineSim(col("vec_a"), col("vec_b")) < t, 1)) === 0)
-          .as("no_false_pos"))
-      // gate persists released on return (the repo rule: no bare
-      // .persist() in SparkEntry without a paired release — a Verify
-      // session has no per-query cache clear)
-      Dedup.materializeAndRelease(recallDf.crossJoin(fpDf),
-        exactSampled, approx)
-    }),
-
-    // Text quality + token budgeting + portable fingerprint chain:
-    // qualityScore (length/stopword/diversity blend — the SQL mirrors
-    // the exact operation order so IEEE doubles are bit-identical),
-    // BPE-ish subword counting for corpus budgeting, and the portable
-    // md5-chain rolling hash (order-SENSITIVE, engine-reproducible).
-    "q39_text_quality" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val stop = Seq("the", "a", "of", "to", "and", "in", "is", "for")
-      val counts = TextAnalysis.tokenCounts(col("text"))
-      docs.select(
-          col("doc_id"),
-          TextAnalysis.qualityScore(col("text"), stop).as("quality"),
-          counts.getField("n_whitespace").cast("long").as("n_whitespace"),
-          counts.getField("n_bpeish").cast("long").as("n_bpeish"),
-          counts.getField("n_chars_div4").cast("long").as("n_chars_div4"),
-          TextAnalysis.rollingHashPortable(col("text")).as("roll_hash"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // LLM dedup 6 — duplicate-cluster canonicalization: connected
-    // components over the t=0.5 Jaccard pair graph (component = min
-    // reachable doc id), checked against a DuckDB RECURSIVE reachability
-    // oracle — an exact cross-engine gate for the label-propagation loop.
-    //
-    // The pair graph comes from minhashLsh, NOT the uncapped exact
-    // prefix join (r5's shape, 10.2 s driver — the round's slowest
-    // query): LSH verification is the same exact Jaccard, so the output
-    // has zero false positives, and the band dial is sized so the pair
-    // sets are equal in practice — 72 bands × 2 rows gives per-pair miss
-    // (1 - J²)^72 ≤ 0.75^72 ≈ 1.0e-9 at the J = 0.5 threshold (smaller
-    // still for higher J). Deterministic (xxhash64), and the pair set is
-    // pinned IDENTICAL to the exact join's at sf0.01 and sf0.1
-    // (DedupSpec + local verify r6); the recursive oracle is unchanged.
-    "q38_dup_components" -> ((s, dir) => {
-      // consumes the session-shared LSH pair graph (sharedLshPairs —
-      // built once per corpus/dial); q12 gates the banded join live
-      Dedup.connectedComponents(sharedLshPairs(s, dir))
-        .orderBy(col("id"))
-    }),
-
-    // Per-message data-quality metric vector + the monitor's summary
-    // rollup (ref darkpool_trades/metrics.py:16-26, 90-183): latency,
-    // missing required fields, zero price, previous-price gap,
-    // inter-arrival staleness, and the _should_alert disjunction —
-    // aggregated per key like get_metrics_summary. Processing time is
-    // synthesized deterministically (ts + (event_id % 5) seconds) so
-    // the latency check is driven without a wall clock.
-    "q41_message_quality" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("proc_ts",
-          timestamp_micros(unix_micros(col("ts")) + (col("event_id") % 5) * 1000000L))
-        .withColumn("props_k", get_json_object(col("props"), "$.k"))
-      val q = Quality.messageQuality(ev, "user_id",
-        orderCols = Seq("ts", "event_id"),
-        tsCol = "ts", procTsCol = "proc_ts", priceCol = "value",
-        requiredCols = Seq("event_type", "props_k"),
-        maxLatencyUs = 3000000L, maxGapPct = 50.0)
-      Quality.metricsSummary(q, "user_id")
-        .orderBy(col("user_id"))
-    }),
-
-    // LLM curation — benchmark DECONTAMINATION: drop corpus docs whose
-    // 3-gram Jaccard to ANY doc of a (small) benchmark set reaches 0.5
-    // (eval material must not leak into training data; shingle overlap
-    // catches light paraphrase that exact matching misses). The
-    // benchmark set is synthesized as every 97th doc, so each matches
-    // itself at J=1 and the near-dups of those docs surface below it.
-    // The result is the dropped-manifest (who leaked what, at what
-    // similarity) — the kept corpus is its anti-join complement.
-    "q42_decontaminate" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val contam = docs.filter(col("doc_id") % 97 === 0)
-      val (_, dropped) = Curation.decontaminate(docs, "doc_id", "text",
-        contam, "doc_id", "text", n = 3, t = 0.5)
-      dropped.orderBy(col("id"))
-    }),
-
-    // LLM curation — domain balancing: keep the top-10 longest docs
-    // per source (the standard "best N per domain" mixing step),
-    // deterministic under ties via the doc_id tie-breaker.
-    "q43_domain_quota" -> ((s, dir) => {
-      Curation.capPerGroup(Tables.documents(s, dir), Seq("source"),
-          Seq(col("n_chars").desc, col("doc_id").asc), quota = 10)
-        .select(col("source"), col("doc_id"), col("n_chars"))
-        .orderBy(col("source"), col("n_chars").desc, col("doc_id"))
-    }),
-
-    // LLM curation capstone — the full pipeline COMPOSED end-to-end:
-    // exact dedup (keep min-id per normalized text — capPerGroup with
-    // quota 1 over the norm key), benchmark decontamination, a quality
-    // floor (n_chars), then the per-source quota. Each stage is the
-    // already-gated operator; this query gates their composition.
-    "q44_curation_pipeline" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // group by the sha2 of the normalized text, not the text itself:
-      // the dedup window's shuffle then carries a 64-char digest per
-      // row instead of whole documents (same grouping modulo sha2
-      // collisions — the standard content-hash dedup key, as in
-      // Dedup.exact)
-      val canon = Curation.canonicalizeBy(
-          docs.withColumn("__nt",
-            sha2(graft.functions.normText(col("text")), 256)),
-          Seq("__nt"), col("doc_id"))
-        .drop("__nt")
-      val contam = docs.filter(col("doc_id") % 97 === 0)
-      val (clean, _) = Curation.decontaminate(canon, "doc_id", "text",
-        contam, "doc_id", "text", n = 3, t = 0.5)
-      Curation.capPerGroup(clean.filter(col("n_chars") >= 500),
-          Seq("source"), Seq(col("n_chars").desc, col("doc_id").asc),
-          quota = 10)
-        .select(col("source"), col("doc_id"), col("n_chars"))
-        .orderBy(col("source"), col("n_chars").desc, col("doc_id"))
-    }),
-
-    // The CAPSTONE v2 — the full curation chain with every family this
-    // round added, composed from individually-gated operators and gated
-    // AGAIN as a composition against one DuckDB CTE chain: exact
-    // content dedup (digest-keyed) → containment drop (excerpts of
-    // surviving docs) → benchmark decontamination → repetition gate
-    // (top-token share ≤ 0.12 — the discriminating signal on this
-    // corpus; dup-ngram rate is ~0 on near-random synthetic text) →
-    // deterministic stratified mixture → per-source quota.
-    "q50_curation_v2" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // canon feeds THREE consumers (the containment join's shingle +
-      // text sides and the anti-join) — persisted, or every consumer
-      // re-executes the whole upstream dedup window (the unpersisted
-      // plan carried 235 Exchange nodes; persisted, 8.4 s → 5.6 s at
-      // sf0.1). The rest of the chain is linear — no other stage has a
-      // second consumer, so nothing else caches — and the final
-      // materializeAndRelease frees canon before returning (Verify
-      // runs all queries in one session with no per-query cache clear).
-      val canon = Curation.canonicalizeBy(
-          docs.withColumn("__nt",
-            sha2(graft.functions.normText(col("text")), 256)),
-          Seq("__nt"), col("doc_id"))
-        .drop("__nt").persist()
-      // ONE corpus tokenize+shingle pass (guide §2.4: remove whole
-      // passes): r15's shape built the hashed-shingle table twice —
-      // containmentJoin over canon, then decontaminate re-shingled
-      // noExcerpts ⊆ canon (~2.5 s of the query's 3.7 s, and a doubled
-      // full-corpus pass at production scale). canon's shingles are
-      // built once here; noExcerpts' rows are derived by id anti-join
-      // (shingling is per-row, so the derived table is row-identical
-      // to re-shingling — ShingleSeamSpec pins both operator parities).
-      val canonSh = Dedup.hashedShingles(canon, "doc_id", "text", n = 3,
-        materialize = false)
-      // contained feeds TWO consumers (the anti-join on canon and the
-      // shingle-side anti-join) — materialized small id list
-      val contained = Dedup.materializeAndRelease(
-        Dedup.containmentJoinPreShingled(canonSh, canon, "doc_id", "text")
-          .select(col("id_a").as("doc_id")).distinct())
-      val noExcerpts = canon.join(contained, Seq("doc_id"), "left_anti")
-      val noExSh = canonSh.join(
-        contained.select(col("doc_id").as("id")), Seq("id"), "left_anti")
-      val contam = docs.filter(col("doc_id") % 97 === 0)
-      val (clean, _) = Curation.decontaminatePreShingled(noExSh, noExcerpts,
-        "doc_id", contam, "doc_id", "text", n = 3, t = 0.5)
-      val gated = TextAnalysis.withRepetitionStats(clean, "text", n = 3)
-        .filter(col("top_token_ratio") <= 0.12)
-        .drop("ntok", "dup_ngram_rate", "top_token_ratio")
-      val mixed = Curation.sampleStratified(gated, "doc_id", "source",
-        Map("src0" -> 0.5, "src1" -> 0.25, "src2" -> 0.0), defaultRate = 0.5)
-      val out = Curation.capPerGroup(mixed, Seq("source"),
-          Seq(col("n_chars").desc, col("doc_id").asc), quota = 10)
-        .select(col("source"), col("doc_id"), col("n_chars"))
-        .orderBy(col("source"), col("n_chars").desc, col("doc_id"))
-      Dedup.materializeAndRelease(out, canon, canonSh, contained)
-    }),
-
-    // Dial evidence for the prefix df-cap (the q11 algorithm with
-    // prefixDfCap=100: shingles appearing in >100 docs are dropped
-    // from the INDEX only; every emitted pair is still exact-verified,
-    // so the dial can only MISS pairs, never invent them). HASH-GATED
-    // against the exact-Jaccard twin (r10; was rows-only): the dial's
-    // completeness is a corpus property, and on this corpus the capped
-    // pair set measured identical to the exact set at sf0.01 and sf0.1
-    // — the oracle turns that measurement into a standing recall=1.0
-    // gate (a corpus change that makes the cap lose a pair FAILS the
-    // gate loudly, which is exactly what dial evidence should do;
-    // DedupSpec independently pins capped ⊆ exact on hostile corpora).
-    "q40_jaccard_capped" -> ((s, dir) => {
-      Dedup.jaccardSimilarityJoin(Tables.documents(s, dir), "doc_id", "text",
-          n = 3, t = 0.5, prefixDfCap = Some(100L))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // A8 through the PLANNER — interpolationType is a groupByTimeSettings
-    // knob (ref groupByTimeSettings.ts:17-23, interpolationType.ts:16),
-    // so one Request carries bucket + Linear interpolation: daily mean
-    // per tag `k`, densified to each k's day range and linearly filled,
-    // all inside Telemetry.plan(). q06/q07/q33 gate the composable
-    // GapFill pieces; this gates the Request wiring.
-    "q45_planner_interpolation" -> ((s, dir) => {
-      import Telemetry._
-      plan(eventsPoints(s, dir), Request(
-        tagFilters = Seq(TagFilter("event_type", TagEqual, Seq("signup"))),
-        bucketNs = Some(86400L * 1000 * 1000 * 1000), // 1 day in ns
-        groupByTags = Seq("k"),
-        aggs = Seq(NumericAgg("value", AggMean, "mean_value")),
-        interpolation = Some(GapFill.FillLinear),
-        orderBy = Seq(Ordering("k"), Ordering("bucket_ts"))))
-    }),
-
-    // LLM curation 3 — deterministic stratified mixture sampling:
-    // downsample hot sources, drop one outright, default-rate the rest.
-    // The md5-prefix coin makes the kept ROW SET (not just the counts)
-    // engine-reproducible, so the DuckDB twin checks it exactly; a pure
-    // per-row predicate — no shuffle, partition-layout independent.
-    "q46_stratified_sample" -> ((s, dir) => {
-      Curation.sampleStratified(Tables.documents(s, dir), "doc_id", "source",
-          Map("src0" -> 0.5, "src1" -> 0.25, "src2" -> 0.0),
-          defaultRate = 0.125)
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // LLM dedup 7 — exact containment: docs whose normalized token
-    // sequence is a word-boundary substring of another doc (quotes,
-    // excerpts, partial re-posts — what exact-hash dedup misses; equal
-    // texts orient by id). Candidates come from ONE rarest-shingle
-    // index entry per doc against the full posting list; verify is an
-    // exact sentinel-padded contains. DuckDB twin recomputes the whole
-    // relation with position().
-    "q48_containment" -> ((s, dir) => {
-      Dedup.containmentJoin(Tables.documents(s, dir), "doc_id", "text", n = 3)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // LLM text-quality 2 — intra-document repetition signals
-    // (Gopher/RefinedWeb-class): duplicate n-gram rate and top-token
-    // share catch boilerplate loops and keyword stuffing that length
-    // heuristics miss. Pure per-row HOF expressions; exact-arithmetic
-    // DuckDB twin.
-    "q49_repetition_stats" -> ((s, dir) => {
-      // withRepetitionStats materializes the token array as a column
-      // before the per-element lambdas read it — building the stats
-      // directly over `tokens(text)` re-ran the regex tokenizer per
-      // ARRAY ELEMENT inside the lambdas (measured 18.6 s vs 1.4 s at
-      // sf0.1; fourth sighting of the no-CSE-inside-lambdas trap)
-      TextAnalysis.withRepetitionStats(
-          Tables.documents(s, dir).select("doc_id", "text"), "text", n = 3)
-        .select("doc_id", "ntok", "dup_ngram_rate", "top_token_ratio")
-        .orderBy(col("doc_id"))
-    }),
-
-    // LLM text-quality 3 — corpus-statistical token rarity (the
-    // exact-arithmetic cousin of unigram-LM scoring): docs scored by
-    // the global document frequency of their tokens. Integer sums +
-    // one final division = bit-reproducible across engines, unlike a
-    // log-prob sum (order-of-summation sensitive).
-    "q51_token_rarity" -> ((s, dir) => {
-      TextAnalysis.tokenRarity(Tables.documents(s, dir), "doc_id", "text")
-        .select(col("id").as("doc_id"), col("n_tok"), col("sum_tok_df"),
-          col("min_tok_df"), col("avg_tok_df"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // LLM curation 5 — SEMANTIC decontamination: embedding-cosine
-    // against a small benchmark set catches the paraphrase that n-gram
-    // q42 misses. Broadcast threshold join (one corpus pass × small
-    // contam side); manifest = each dropped row's best contaminant.
-    // Self-matches (a contam vector against itself) are the expected
-    // cosine-1.0 drops; the oracle recomputes the whole relation.
-    "q53_semantic_decontam" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val contam = emb.filter(col("vec_id") % 97 === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val (kept, dropped) = Curation.decontaminateSemantic(
-        emb, "vec_id", "embedding", contam, "cid", "cvec", t = 0.6)
-      // gate BOTH halves in one result: the dropped manifest with
-      // scores, plus the kept count as a one-row summary join key
-      dropped
-        .withColumn("n_kept", lit(null).cast("long"))
-        .unionByName(kept.agg(count(lit(1)).as("n_kept"))
-          .withColumn("id", lit(-1L))
-          .withColumn("contaminant_id", lit(-1L))
-          .withColumn("contaminant_cosine", lit(-1.0))
-          .select("id", "contaminant_id", "contaminant_cosine", "n_kept"))
-        .orderBy(col("id"), col("contaminant_id"))
-    }),
-
-    // F7+ — the LAST catalog request type: parameter/event GROUP search
-    // (ref getAllParameterGroupsRequest.ts:16-52) + the response
-    // model's childrenCount (parameterGroup.ts:37-44). The group
-    // catalog derives deterministically from `part`: p_type / p_brand
-    // span a 2-level location tree, the part name is the leaf group;
-    // interior brand nodes are groups too, so deep search returns
-    // MIXED levels and childrenCount is non-zero on the interior rows
-    // — the tree helper is load-bearing in the oracle, not decoration.
-    // Filters: deep location subtree under /ECONOMY + smart-case name
-    // Contains "an" (lowercase → CI: matches every interior
-    // "Brand#N" and leaves like "orange gear").
-    "q54_group_search" -> ((s, dir) => {
-      val p = Tables.part(s, dir)
-      val leaves = p.select(
-        concat(lit("/"), col("p_type"), lit("/"), col("p_brand"),
-          lit("/"), col("p_name")).as("path"),
-        concat(lit("/"), col("p_type"), lit("/"), col("p_brand"))
-          .as("location"),
-        col("p_name").as("name"))
-      val mids = p.select(
-        concat(lit("/"), col("p_type"), lit("/"), col("p_brand")).as("path"),
-        concat(lit("/"), col("p_type")).as("location"),
-        col("p_brand").as("name")).distinct()
-      val groups = leaves.unionByName(mids)
-      Catalog.search(Catalog.withChildrenCount(groups, "path"),
-          Catalog.groupFilters(
-            location = Some("/ECONOMY"),
-            name = Some("an")))
-        .select(col("path"), col("name"), col("location"),
-          col("childrenCount").as("children_count"))
-        .orderBy(col("path"), col("name"))
-    }),
-
-    // Scale family oracle gate — layout round-trip: write the events
-    // fact through writeTimePartitioned (dt hive layout, range
-    // partitioning, in-file sort), compact the directory (the
-    // crash-safe rename rewrite must preserve the dt dirs), then
-    // answer a planner Request FROM THE LAYOUT and hash-match the
-    // DuckDB twin computed over the FLAT table — proving storage
-    // layout never changes answers while the planner's derived
-    // dt-pruning predicates ride the partition directories. ScaleSpec
-    // pins the PLAN shapes (PartitionFilters, PushedFilters, both
-    // compaction crash paths); this gates the VALUES.
-    "q55_layout_roundtrip" -> ((s, dir) => {
-      import Telemetry._
-      // namespaced by sf-dir AND pid: two harness processes on one
-      // host (Bench alongside Verify) must not race on the same root
-      // mid-compact; within one process the overwrite per call is the
-      // point (each run rebuilds the layout it then reads); the tree
-      // is deleted on JVM exit
-      val root = tmpRootCleanedOnExit("graft_q55_layout", dir)
-      Scale.writeTimePartitioned(eventsPoints(s, dir), "ts", root,
-        sortCols = Seq("stream_id"))
-      Scale.compact(s, root, targetFileBytes = 8L * 1024 * 1024,
-        sortCols = Seq("stream_id"))
-      plan(s.read.parquet(root), Request(
-        from = Some("2024-01-03 00:00:00"),
-        to = Some("2024-01-17 00:00:00"),
-        streamIds = (0L to 15L),
-        tagFilters = Seq(TagFilter("event_type", TagEqual, Seq("click", "view"))),
-        bucketNs = Some(86400L * 1000 * 1000 * 1000), // 1 day in ns
-        groupByTags = Seq("event_type"),
-        aggs = Seq(
-          NumericAgg("value", AggSum, "sum_value"),
-          NumericAgg("value", AggMean, "mean_value"),
-          NumericAgg("value", AggCount, "count_value")),
-        orderBy = Seq(Ordering("event_type"), Ordering("bucket_ts"))))
-    }),
-
-    // LLM dedup 8 — LINE-level dedup (RefinedWeb/Dolma-class): the
-    // boilerplate that document-level dedup cannot touch. The
-    // synthetic docs are single-line, so the query builds multi-line
-    // docs deterministically in both engines: a cookie banner on every
-    // doc, a subscribe prompt on every 5th, a unique footer. At
-    // maxDocFreq=10 the banner and the prompt are dropped corpus-wide,
-    // the body and footer survive, order is preserved.
-    "q58_line_dedup" -> ((s, dir) => {
-      val aug = Tables.documents(s, dir).select(col("doc_id"),
-        concat(lit("COOKIE BANNER\n"), col("text"),
-          when(col("doc_id") % 5 === 0, lit("\nSUBSCRIBE NOW"))
-            .otherwise(lit("")),
-          lit("\nfooter "), col("doc_id").cast("string")).as("text"))
-      Dedup.dedupLines(aug, "doc_id", "text", maxDocFreq = 10L)
-        .orderBy(col("doc_id"))
-    }),
-
-    // LLM curation 6 — PII redaction (C4/Dolma-class scrub): emails,
-    // IPv4, internationally-prefixed phones → typed placeholders, with
-    // per-row raw-text match counts as the audit trail. The synthetic
-    // corpus carries no PII, so the query INJECTS deterministic
-    // doc_id-derived PII in both engines first — the redaction then
-    // has real work and the twin checks text AND counts hash-exactly.
-    "q57_pii_redaction" -> ((s, dir) => {
-      val aug = Tables.documents(s, dir).select(col("doc_id"),
-        concat(col("text"),
-          lit(" contact user"), col("doc_id").cast("string"),
-          lit("@example.com via 10."),
-          (col("doc_id") % 256).cast("string"), lit("."),
-          (col("doc_id") % 100).cast("string"), lit(".7 or +1-555-"),
-          lpad((col("doc_id") % 10000).cast("string"), 4, "0")).as("text"))
-      Curation.redactPii(aug, "text")
-        .select(col("doc_id"), col("text"),
-          col("n_emails").cast("long").as("n_emails"),
-          col("n_ipv4").cast("long").as("n_ipv4"),
-          col("n_phones").cast("long").as("n_phones"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Scale primitive — bloom-pruned semi-join: keep lineitem rows
-    // whose order is URGENT, with the shuffle fed only by bloom
-    // survivors (no false negatives, so the exact semi-join on the
-    // survivors gives the EXACT answer — the DuckDB twin is a plain
-    // IN-subquery). The operator is what Spark's runtime row-filter
-    // does when it fires, as an explicit dial; q56 gates that the
-    // pruning is answer-invariant on real data.
-    "q56_bloom_semijoin" -> ((s, dir) => {
-      val urgent = Tables.orders(s, dir)
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderkey"))
-      Scale.bloomPrunedSemiJoin(
-          Tables.lineitem(s, dir), "l_orderkey",
-          urgent, "o_orderkey", expectedKeys = 10000L)
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("l_quantity").cast("decimal(30,6)")).cast("double")
-            .as("sum_qty"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // J1c — point-in-interval join: which post-signup attribution
-    // window was each event inside? Spark plans the raw range predicate
-    // as a nested loop; IntervalJoin makes it a bucketed EQUI-join
-    // (15-min buckets vs 1-h windows → fan-out ≤ 5, each point owns one
-    // bucket so pair multiplicity is exact with no dedup). The DuckDB
-    // twin is the naive range join — the bucketing must be
-    // answer-invariant.
-    "q59_interval_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val windows = ev.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts").as("w_start"),
-          (col("ts") + expr("INTERVAL 1 HOUR")).as("w_end"))
-      val points = ev.filter(col("event_type") =!= "signup")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("event_type"), col("value"))
-      IntervalJoin.pointInInterval(points, "ts",
-          windows, "w_start", "w_end", Seq("user_id"),
-          widthMicros = 15L * 60 * 1000000)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_pairs"),
-          countDistinct(col("event_id")).as("n_attributed"),
-          dsum(col("value")).as("sum_value"))
-        .orderBy(col("event_type"))
-    }),
-
-    // A13 — gap-based sessionization (batch twin of the streaming
-    // session window): 30-min inactivity splits a user's events into
-    // sessions; output is the per-session summary. One shuffle on
-    // user_id + two in-partition window passes; the DuckDB twin is the
-    // same lag/running-sum construction.
-    "q60_sessionize" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-      Sessionize.assign(ev, Seq("user_id"), "ts", Seq("event_id"),
-          gapMicros = 30L * 60 * 1000000)
-        .groupBy(col("user_id"), col("session_seq"))
-        .agg(min(col("ts")).as("session_start"),
-          max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"),
-          dsum(col("value")).as("sum_value"))
-        .orderBy(col("user_id"), col("session_seq"))
-    }),
-
-    // A14 — multi-level aggregate in ONE pass (ROLLUP grouping sets):
-    // detail + per-flag subtotal + grand total without re-scanning —
-    // at 100 TB re-aggregating for each level would triple the scan,
-    // rollup shares it. Subtotal rows surface as NULL group values;
-    // the level indicator is derived from null-ness identically in
-    // both engines (the data has no null flags).
-    "q61_rollup_agg" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n_rows"),
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_price"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("linestatus"),
-          (when(col("l_returnflag").isNull, 2).otherwise(0) +
-           when(col("l_linestatus").isNull, 1).otherwise(0)).as("lvl"),
-          col("n_rows"), col("sum_qty"), col("sum_price"))
-        .orderBy(col("lvl"), col("returnflag"), col("linestatus"))
-    }),
-
-    // Source format — WARC (ISO 28500, the Common Crawl container):
-    // documents serialized into 16 WARC file streams (one per bucket,
-    // the segment-sharding shape) and parsed back by the distributed
-    // flatMap. The gate is ROUND-TRIP IDENTITY: parse(write(docs))
-    // must reproduce the table, so the DuckDB twin is the flat table.
-    "q72_warc_roundtrip" -> ((s, dir) => {
-      import s.implicits._
-      val files = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .groupByKey { case (id, _) => id % 16 }
-        .mapGroups { (bucket, rows) =>
-          val recs = rows.toSeq.sortBy(_._1).map { case (id, text) =>
-            ("conversion", s"urn:doc:$id", s"<urn:uuid:$id>",
-              Option(text).getOrElse("").getBytes("UTF-8"))
-          }
-          (bucket, sources.Warc.writeRecords(recs))
-        }
-        .toDF("file_id", "payload")
-      sources.Warc.records(files, "file_id", "payload")
-        .map { case (_, r) =>
-          (r.target_uri.stripPrefix("urn:doc:").toLong,
-            new String(r.body, "UTF-8"), r.content_length)
-        }
-        .toDF("doc_id", "text", "content_length")
-        .orderBy(col("doc_id"))
-    }),
-
-    // DSIR-style importance selection: hashed unigram+bigram bucket
-    // models (target = src0's docs, raw = the whole corpus), add-one
-    // smoothing, per-feature round-9 DECIMAL log-ratio sum — then the
-    // selection policy: top-100 NON-target docs by weight. The rank
-    // window runs over the already-limited 100-row set (orderBy+limit
-    // plans as TakeOrderedAndProject — the scale path; the global
-    // window is only ever applied to k rows).
-    "q73_dsir_select" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // session-shared DSIR weight table (estimate once, sample many)
-      val w = sharedDsirWeights(s, dir)
-      val raw = w.join(docs.select(col("doc_id").as("id"), col("source")), "id")
-        .filter(col("source") =!= "src0")
-      val top = raw
-        .orderBy(col("log_weight").desc, col("id").asc)
-        .limit(100)
-      top
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("log_weight").desc, col("id").asc)))
-        .select(col("id").as("doc_id"), col("nfeat"),
-          col("log_weight"), col("rk"))
-        .orderBy(col("rk"))
-    }),
-
-    // SemDeDup: semantic dedup by clustered cosine pruning. The
-    // quantizer here is the SQL-reproducible id-slice (vec_id < 32) so
-    // the WHOLE pipeline — assignment, within-cluster pairs, drop
-    // manifest — hash-matches the twin; production callers pass
-    // ivfCentroids/ivfCentroidsRefined instead (same operator).
-    "q74_semdedup" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val cents = emb.filter(col("vec_id") < 32)
-      val (_, dropped) = operators.Similarity.semDedup(
-        emb, "vec_id", "embedding", cents, "vec_id", "embedding", t = 0.4)
-      dropped.orderBy(col("vec_id"))
-    }),
-
-    // Capstone v4 — the WEB pipeline end-to-end, from container bytes
-    // to curated corpus: WARC serialize+parse (the q72 identity, now
-    // with real URLs) → host extraction from the URI → row-local
-    // quality gates (n_tokens ≥ 20, type-token ratio ≥ 0.4) → exact
-    // dedup (canonical min-id per normalized content hash) → benchmark
-    // decontamination (3-shingle Jaccard ≥ 0.5 vs the id%97 contam
-    // set) → per-host quota (top-10 longest). Stage order: cheap
-    // per-row gates first, dedup before the expensive shingle join,
-    // quota last — the order a 100 TB run wants.
-    "q75_web_pipeline" -> ((s, dir) => {
-      import s.implicits._
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val files = docs.as[(Long, String)]
-        .groupByKey { case (id, _) => id % 16 }
-        .mapGroups { (bucket, rows) =>
-          val recs = rows.toSeq.sortBy(_._1).map { case (id, text) =>
-            ("conversion", s"https://d${id % 37}.example.com/doc/$id",
-              s"<urn:uuid:$id>",
-              Option(text).getOrElse("").getBytes("UTF-8"))
-          }
-          (bucket, sources.Warc.writeRecords(recs))
-        }
-        .toDF("file_id", "payload")
-      val parsed = sources.Warc.records(files, "file_id", "payload")
-        .map { case (_, r) => (r.target_uri, new String(r.body, "UTF-8")) }
-        .toDF("uri", "text")
-        .select(
-          element_at(split(col("uri"), "/"), 5).cast("long").as("doc_id"),
-          element_at(split(col("uri"), "/"), 3).as("host"),
-          col("text"))
-      val st = operators.TextAnalysis.tokenStats(col("text"))
-      // gated feeds THREE consumers (the dedup scan, the canonical
-      // semi-join, and decontaminate's kept-side anti-join) — without
-      // the persist each one re-runs the WARC serialize+parse
-      // mapGroups, the most expensive stage of the pipeline (measured
-      // 4.7 s → ~3 s at sf0.1); materializeAndRelease frees it before
-      // returning, per the repo's persist/release rule
-      val gated = parsed
-        .withColumn("n_tokens", st.getField("n_tokens").cast("long"))
-        .withColumn("__ttr", st.getField("type_token_ratio"))
-        .filter(col("n_tokens") >= 20 && col("__ttr") >= 0.4)
-        .drop("__ttr")
-        .persist()
-      val canon = operators.Dedup.exact(gated, "doc_id", "text")
-        .select(col("canonical_id").as("doc_id"))
-      val unique = gated.join(canon, Seq("doc_id")) // semi on canonicals
-      val contam = Tables.documents(s, dir).filter(col("doc_id") % 97 === 0)
-      val (clean, _) = operators.Curation.decontaminate(unique,
-        "doc_id", "text", contam, "doc_id", "text", n = 3, t = 0.5)
-      val out = operators.Curation.capPerGroup(clean, Seq("host"),
-          Seq(length(col("text")).desc, col("doc_id").asc), quota = 10)
-        .select(col("doc_id"), col("host"), col("n_tokens"))
-        .orderBy(col("doc_id"))
-      operators.Dedup.materializeAndRelease(out, gated)
-    }),
-
-    // First-occurrence novelty: what fraction of each doc's 3-shingles
-    // has no earlier (lower-id) owner — the corpus-redundancy
-    // diagnostic; narrow hash-keyed joins only
-    "q76_novelty" -> ((s, dir) => {
-      operators.TextAnalysis.noveltyScores(
-          Tables.documents(s, dir), "doc_id", "text", n = 3)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy(col("doc_id"))
-    }),
-
-    // HTML → text extraction (the WET step): boilerplate blocks
-    // dropped whole, tags stripped, entities decoded — pure per-row
-    // codegen'd regexp, RE2-portable patterns. The wrap synthesizes
-    // the markup (title with the doc id, style+script in head, nav,
-    // entity in body, footer) so every extraction rule is exercised
-    // and the body must round-trip to `text || ' & more'`.
-    "q77_html_extract" -> ((s, dir) => {
-      val html = concat(
-        lit("<html><head><title>Doc "), col("doc_id").cast("string"),
-        lit(" | d"), (col("doc_id") % 37).cast("string"),
-        lit("</title><style>p{margin:0}</style>" +
-          "<script>var x = 1 < 2;</script></head>" +
-          "<body><nav>home | about</nav><p>"),
-        col("text"),
-        lit(" &amp; more</p><footer>(c) 2026 example</footer>" +
-          "</body></html>"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          operators.TextAnalysis.htmlTitle(html).as("title"),
-          operators.TextAnalysis.htmlBodyText(html).as("body"))
-        .withColumn("n_chars", length(col("body")).cast("long"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // int8 quantization: codes are engine-exact (identical IEEE
-    // chain), fingerprinted through md5 of the comma-joined ints; the
-    // error column is the order-independent max bound
-    "q78_quantize_int8" -> ((s, dir) => {
-      operators.Similarity.quantizeInt8(
-          Tables.embeddings(s, dir), "vec_id", "embedding")
-        .select(col("vec_id"), col("scale"),
-          md5(array_join(col("codes").cast("array<string>"), ","))
-            .as("code_md5"),
-          col("max_abs_err"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // DSIR complete: the q73 weights fed through the Gumbel-top-k
-    // resampler (a softmax-weighted 100-sample without replacement,
-    // drawn by the md5 coin — engine-exact). The rank window again
-    // runs over the already-limited 100 rows.
-    "q79_dsir_gumbel" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // session-shared DSIR weight table (estimate once, sample many)
-      val w = sharedDsirWeights(s, dir)
-      val raw = w.join(docs.select(col("doc_id").as("id"), col("source")), "id")
-        .filter(col("source") =!= "src0")
-      operators.Curation.gumbelTopK(raw, "id", "log_weight",
-          k = 100, salt = "dsir-r7")
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("gumbel_score").desc, col("id").asc)))
-        .select(col("id").as("doc_id"), col("log_weight"),
-          col("gumbel"), col("gumbel_score"), col("rk"))
-        .orderBy(col("rk"))
-    }),
-
-    // Quantized retrieval quality, measured relationally: top-10 by
-    // cosine over DEQUANTIZED int8 vectors vs over the exact floats,
-    // per-query overlap/recall. Unlike the LSH/IVF recall gates this
-    // has no randomness — both rankings are deterministic, so the
-    // recall TABLE itself is the hash-gated result (a fully-exact
-    // oracle for an ANN-quality question).
-    "q80_quantized_recall" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val qz = operators.Similarity.quantizeInt8(emb, "vec_id", "embedding")
-        // codes/scale materialized behind the barrier before the
-        // dequant lambda multiplies through them (re-inlining trap)
-        .filter(coalesce(size(col("codes")) >= -1, lit(true)))
-      val deq = qz.select(col("vec_id"),
-        transform(col("codes"), c => c * col("scale")).as("embedding"))
-      val qids = (0L until 10L).toSeq
-      val exact = operators.Similarity.bruteForceTopK(
-          emb, "vec_id", "embedding", qids, k = 10)
-        .select(col("query_id"), col("nbr_id"))
-      val approx = operators.Similarity.bruteForceTopK(
-          deq, "vec_id", "embedding", qids, k = 10)
-        .select(col("query_id"), col("nbr_id"))
-      val overlap = exact.join(approx, Seq("query_id", "nbr_id"))
-        .groupBy("query_id").agg(count(lit(1)).as("n_overlap"))
-      exact.select("query_id").distinct()
-        .join(overlap, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-          (coalesce(col("n_overlap"), lit(0L)).cast("double") / 10.0)
-            .as("recall"))
-        .orderBy(col("query_id"))
-    }),
-
-    // Semantic duplicate CLUSTERS: the q74 pair graph fed through the
-    // q38 connected-components operator — "these k docs are all the
-    // same content" rather than pairwise drops.
-    "q81_semantic_clusters" -> ((s, dir) => {
-      // session-shared semantic pair graph (q74 gates semDedup live)
-      operators.Dedup.connectedComponents(sharedSemPairs(s, dir))
-        .orderBy(col("id"))
-    }),
-
-    // Stupid-Backoff bigram LM (Brants et al. 2007) on the
-    // incremental split: even-id docs are the model, odd-id docs the
-    // scored batch — so seen bigrams, backoffs, and OOV tokens all
-    // occur for real
-    "q82_stupid_backoff" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      operators.TextAnalysis.stupidBackoffScore(
-          docs.filter(col("doc_id") % 2 === 1),
-          docs.filter(col("doc_id") % 2 === 0),
-          "doc_id", "text")
-        .withColumnRenamed("id", "doc_id")
-        .orderBy(col("doc_id"))
-    }),
-
-    // Repeated-SPAN removal (exact-substring dedup at window
-    // granularity): a 16-token boilerplate banner is injected into
-    // every third doc (the q58 aug idiom), so window 0 of those docs
-    // is corpus-hot and gets cut while each doc's own windows stay
-    // aligned and survive
-    "q83_span_dedup" -> ((s, dir) => {
-      val banner = "terms of service apply to this mirror copy of " +
-        "the page please do not redistribute ever"
-      val docs = Tables.documents(s, dir).select(col("doc_id"),
-        when(col("doc_id") % 3 === 0,
-          concat(lit(banner + " "), col("text")))
-          .otherwise(col("text")).as("text"))
-      operators.Dedup.dedupSpans(docs, "doc_id", "text",
-          windowTokens = 16, maxDocFreq = 1L)
-        .orderBy(col("doc_id"))
-    }),
-
-    // The semantic-dedup END PRODUCT: every corpus row tagged with its
-    // duplicate-cluster canonical id and keep flag (q81's components
-    // through Dedup.canonicalize — one left join of the corpus against
-    // the small component table)
-    "q84_semantic_canonicalize" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      // session-shared semantic pair graph (q74 gates semDedup live)
-      val cc = operators.Dedup.connectedComponents(sharedSemPairs(s, dir))
-      operators.Dedup.canonicalize(
-          emb.select(col("vec_id"), col("label")), "vec_id", cc)
-        .orderBy(col("vec_id"))
-    }),
-
-    // Zipf curve: top-1000 vocabulary with exact (rank, freq) and
-    // round-9 log coordinates — the curve itself is the hash-gated
-    // artifact; slope fitting is trivially downstream
-    "q85_zipf_curve" -> ((s, dir) => {
-      operators.TextAnalysis.zipfCurve(Tables.documents(s, dir),
-          "text", k = 1000)
-        .orderBy(col("rank"))
-    }),
-
-    // Heaps vocabulary growth over 10 id-prefix slices — one corpus
-    // pass via min-first-bucket, no per-prefix rescans
-    "q86_heaps_growth" -> ((s, dir) => {
-      operators.TextAnalysis.heapsGrowth(Tables.documents(s, dir),
-        "doc_id", "text", buckets = 10)
-    }),
-
-    // LLM quality 4 — the LINEAR quality classifier (fastText/CCNet
-    // class), both halves: closed-form naive-Bayes log-odds weights
-    // over 512 hashed unigram+bigram buckets, trained on a
-    // deterministic labeled seed (every 7th doc; "positive" = src0),
-    // then EVERY document scored by the broadcast-model mean-pooled
-    // dot product + sigmoid and gated at 0.5 — the standard learned
-    // quality gate web pipelines run after the heuristic one (q39).
-    // The q73 hashed-feature machinery, shared code path.
-    "q87_linear_quality" -> ((s, dir) => {
-      // session-shared classifier scores (train+score once per corpus)
-      sharedQualityScores(s, dir)
-        .select(col("id").as("doc_id"), col("nfeat"), col("score"),
-          (col("score") >= 0.5).as("kept"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // LLM quality 5 — CCNet perplexity bucketing (Wenzek et al. 2020):
-    // corpus-LM score → head/middle/tail by exact tercile order
-    // statistics over a fixed-size id-stride sample (never a global
-    // sort) → per-bucket md5-coin sampling (head kept, middle 1/2,
-    // tail 1/10). The step between language ID and the training mix in
-    // every public web-corpus pipeline.
-    "q88_perplexity_buckets" -> ((s, dir) => {
-      // session-shared LM scores (q66 gates unigramLogProb live)
-      Curation.perplexityBucketsWith(sharedLmScores(s, dir),
-          sampleCap = 1000L,
-          rates = Map("head" -> 1.0, "middle" -> 0.5, "tail" -> 0.1))
-        .select(col("id").as("doc_id"), col("bucket"),
-          col("nll_mean_nano"), col("ntok"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // LLM curation 10 — URL canonicalization + host blocklist (the
-    // C4/RefinedWeb front gate): messy synthetic URLs (mixed case,
-    // www, explicit :443, tracking params, fragments) derived
-    // deterministically from the documents table, normalized by the
-    // RE2-portable regex chain, then the src2 host family dropped by
-    // the IN-list gate. Both engines run the identical regexes.
-    "q89_url_blocklist" -> ((s, dir) => {
-      val withUrl = Tables.documents(s, dir)
-        .withColumn("url", concat(
-          lit("HTTPS://WWW."), col("source"), lit("-"),
-          (col("doc_id") % 5).cast("string"),
-          lit(".Example.COM:443/Docs/"), col("doc_id").cast("string"),
-          lit("/?utm_source=feed&id="), (col("doc_id") % 7).cast("string"),
-          lit("&ref=tracker#sec-"), col("lang")))
-      Curation.filterBlockedHosts(withUrl, "url",
-          blocked = (0 until 5).map(k => s"src2-$k.example.com"))
-        .select(col("doc_id"), col("canonical_url"), col("host"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // LLM reporting — the corpus MANIFEST (dataset-card aggregate)
-    // every corpus release publishes: per (source, lang) doc counts,
-    // token totals, exact-duplicate rate (distinct normalized-text
-    // digests vs docs), and mean LM NLL — one keyed group-by over the
-    // LM-scored corpus, all arithmetic cross-engine exact (DECIMAL
-    // sums, IntegralDivide mean).
-    "q90_corpus_manifest" -> ((s, dir) =>
-      // session-shared LM scores (q66 gates unigramLogProb live)
-      operators.TextAnalysis.corpusManifestWith(Tables.documents(s, dir),
-        "doc_id", "text", groupCols = Seq("source", "lang"),
-        scored = sharedLmScores(s, dir))),
-
-    // LLM dedup 7 — QUALITY-AWARE canonical selection: the near-dup
-    // clusters of q38, but the kept representative per cluster is the
-    // HIGHEST-QUALITY copy (q39's heuristic score; min doc_id breaks
-    // exact score ties) instead of the lowest id — the policy real
-    // pipelines want, since near-dups differ in boilerplate/truncation
-    // and "first crawled" is not "best copy". One keyed argmax over the
-    // tagged corpus (max_by on a (quality, -id) struct — no window, no
-    // extra shuffle beyond the group-by); singletons are their own
-    // representative via the left join's coalesce.
-    "q91_quality_canonicalize" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val stop = Seq("the", "a", "of", "to", "and", "in", "is", "for")
-      // session-shared LSH pair graph (q12 gates the banded join live)
-      val cc = Dedup.connectedComponents(sharedLshPairs(s, dir))
-      Dedup.canonicalizeByPreference(
-          docs.select(col("doc_id"),
-            TextAnalysis.qualityScore(col("text"), stop).as("quality")),
-          "doc_id", cc, struct(col("quality"), -col("doc_id")))
-        .select(col("doc_id"), col("comp"), col("quality"), col("rep_id"),
-          col("is_rep"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // LLM evaluation — CALIBRATION of the learned quality gate: the
-    // q87 classifier's scores bucketed into deciles, each with the
-    // ACTUAL positive rate (label agreement) and exact-decimal mean
-    // score — the reliability diagram that tells a pipeline whether
-    // the 0.5 gate threshold means anything. One keyed aggregate over
-    // the scored corpus; the model rides the same broadcast as q87.
-    "q92_quality_calibration" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // session-shared classifier scores (train+score once per corpus)
-      sharedQualityScores(s, dir)
-        .select(col("id").as("doc_id"), col("score"))
-        .join(docs.select(col("doc_id"), col("source")), "doc_id")
-        .groupBy(least(floor(col("score") * 10).cast("long"), lit(9L))
-          .as("decile"))
-        .agg(count(lit(1)).as("n_docs"),
-          count(when(col("source") === "src0", 1)).as("n_pos"),
-          (count(when(col("source") === "src0", 1)).cast("double") /
-            count(lit(1))).as("pos_rate"),
-          graft.functions.davg(col("score")).as("mean_score"))
-        .orderBy(col("decile"))
-    }),
-
-    // LLM dedup diagnostics — the CROSS-SOURCE duplication matrix:
-    // q38's near-dup pairs labeled with both members' sources,
-    // normalized to an unordered (src_a ≤ src_b) cell, counted — the
-    // report that tells a corpus team WHERE duplication comes from
-    // (within one crawl vs leaking across crawls). Pair volume is the
-    // LSH output (keyed, output-scaled); the two label joins are plain
-    // keyed equi-joins against the narrow (doc_id, source) projection.
-    "q93_crossdup_matrix" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // session-shared LSH pair graph (q12 gates the banded join live);
-      // the seam stays pinned for later consumers, so no release here
-      val pairs = sharedLshPairs(s, dir)
-      val src = docs.select(col("doc_id"), col("source"))
-      val labeled = pairs
-        .join(src.select(col("doc_id").as("id_a"),
-          col("source").as("src_of_a")), "id_a")
-        .join(src.select(col("doc_id").as("id_b"),
-          col("source").as("src_of_b")), "id_b")
-      labeled.groupBy(
-          least(col("src_of_a"), col("src_of_b")).as("src_a"),
-          greatest(col("src_of_a"), col("src_of_b")).as("src_b"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .orderBy(col("src_a"), col("src_b"))
-    }),
-
-    // LLM curation 11 — the WORDLIST gate (C4's badwords filter, the
-    // other half of the C4 front gate next to q89's URL blocklist):
-    // count each document's tokens that hit a blockword list, keep
-    // docs with zero hits, report the count either way. Pure per-row
-    // array filter over the shared tokenizer — codegen'd, no shuffle,
-    // composes anywhere. The list here is a neutral stand-in (real
-    // deployments plug in the published lists); token-exact matching,
-    // not substring, is the deliberate policy (no scunthorpe effect).
-    "q94_wordlist_gate" -> ((s, dir) => {
-      val blocked = Seq("slow", "broken", "panic")
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          size(filter(graft.functions.tokens(col("text")),
-            t => t.isin(blocked: _*))).cast("long").as("n_flagged"))
-        .withColumn("kept", col("n_flagged") === 0L)
-        .orderBy(col("doc_id"))
-    }),
-
-    // Capstone v3 — the SESSION family end-to-end: incremental dedup
-    // (bloom anti-join vs the even-id history) → context-window
-    // chunking (64/48) → unigram-LM gate (keep chunks better than the
-    // integer-mean NLL — all-integer threshold, adapts to sf) →
-    // temperature mix (alpha=0.5, half budget, md5 coin on the chunk
-    // key) → token-budget shard packing per source. One DuckDB
-    // CTE-chain twin stitched from the q68/q63/q66/q70/q47 fragments;
-    // every stage is individually gated, this pins the COMPOSITION.
-    "q71_training_capstone" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val h = sha2(graft.functions.normText(col("text")), 256)
-      val hist = docs.filter(col("doc_id") % 2 === 0).select(h.as("h"))
-      // persisted: chunking AND the source join both read the batch
-      val batch = Scale.bloomPrunedAntiJoin(
-          docs.filter(col("doc_id") % 2 === 1)
-            .select(col("doc_id"), col("source"), col("text"), h.as("h")),
-          "h", hist, "h", expectedKeys = 10000L)
-        .drop("h").persist()
-      // the LM build and the gate join both read the chunks — but only
-      // the LM needs chunk_text, so the persist is the NARROW
-      // projection (ckey, source, n_chunk_tok) and the LM streams the
-      // text once straight off the cached batch instead: chunk text is
-      // corpus-sized and has no business in the cache (r7 carried it
-      // through the source join; recompute-narrow beats cache-wide).
-      // ckey packs chunk_idx into 3 decimal digits — guarded, because
-      // a ≥1000-chunk document (~48k tokens at 64/48 chunking) would
-      // silently collide into the next doc_id's key space, and both
-      // engines would compute the same wrong answer (the oracle twin
-      // mirrors the packing, so the gate could never catch it).
-      // chunkDocsToks + the pre-tokenized LM variant: the LM is the
-      // only chunk-payload consumer and immediately re-tokenized the
-      // space-joined chunk_text, so q71 paid array_join + normText +
-      // split over the whole chunk stream for nothing — the slice IS
-      // the token array (tokens is a fixed point on its own output;
-      // UnigramSeamSpec pins row-identity of the pair against the
-      // chunk_text formulation).
-      // The source join exists ONLY for the narrow chunks projection;
-      // the LM path used to execute it too (and with chunk_toks would
-      // carry the token array across it). ckey needs just doc_id +
-      // chunk_idx, and batch.doc_id is unique (a filtered primary
-      // key), so the join is cardinality-neutral: score the LM off
-      // the pre-join chunk stream and join source in only where it is
-      // consumed.
-      val chunked = Curation.chunkDocsToks(batch, "doc_id", "text",
-          chunkTokens = 64, strideTokens = 48)
-        .withColumn("ckey",
-          when(assert_true(col("chunk_idx") < 1000,
-              lit("q71 ckey packing assumes < 1000 chunks per doc")).isNull,
-            col("doc_id") * 1000 + col("chunk_idx")))
-      val chunks = chunked
-        .join(batch.select(col("doc_id"), col("source")), "doc_id")
-        .select(col("ckey"), col("source"), col("n_chunk_tok")).persist()
-      val lm = TextAnalysis.unigramLogProbPreTokenized(chunked, "ckey",
-        "chunk_toks")
-      val thr = lm.agg(
-        org.apache.spark.sql.GraftColumnBridge.column(
-          org.apache.spark.sql.catalyst.expressions.IntegralDivide(
-            org.apache.spark.sql.GraftColumnBridge.expression(
-              sum(col("nll_mean_nano"))),
-            org.apache.spark.sql.GraftColumnBridge.expression(
-              count(lit(1))))).as("__t"))
-      val keptKeys = lm.crossJoin(broadcast(thr))
-        .filter(col("nll_mean_nano") < col("__t"))
-        .select(col("id").as("ckey"))
-      val gated = chunks.join(keptKeys, "ckey")
-      val mixed = Curation.sampleTemperature(gated, "ckey", "source",
-        alpha = 0.5, budgetFraction = 0.5)
-      Dedup.materializeAndRelease(
-        Curation.packShards(mixed, "source", "ckey", "n_chunk_tok",
-            budget = 2000L)
-          .select(col("source"), col("ckey"), col("n_chunk_tok"),
-            col("shard"))
-          .orderBy(col("source"), col("ckey")),
-        batch, chunks)
-    }),
-
-    // LLM curation 9 — temperature-flattened source mixing (mT5/LLaMA
-    // α-exponent convention): per-source keep-rates DERIVED FROM THE
-    // DATA (α=0.5 flattens, budget = half the corpus), realized by the
-    // same pure md5 coin as q46 — the kept ROW SET hash-matches.
-    "q70_temperature_mix" -> ((s, dir) => {
-      Curation.sampleTemperature(Tables.documents(s, dir), "doc_id",
-          "source", alpha = 0.5, budgetFraction = 0.5)
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Scale primitive — sketch SET-ALGEBRA: cross-source vocabulary
-    // overlap by inclusion-exclusion over per-source HLL registers
-    // (union registers = elementwise max — ONE corpus pass builds all
-    // per-source sketches, pair unions merge register tables, never
-    // re-scan). est_overlap rides next to the exact join for the
-    // error-band exhibit; everything hash-gated.
-    "q69_vocab_overlap" -> ((s, dir) => {
-      // session-shared distinct (source, tok) vocabulary — HLL
-      // registers over the distinct table equal registers over the
-      // raw token stream (max_rho is duplicate-insensitive), so BOTH
-      // halves of this audit read the seam
-      val dtok = sharedSourceVocab(s, dir)
-      val srcRegs = Sketch.hllRegistersBy(dtok, "tok", Seq("source"), p = 8)
-        .persist()
-      val srcEst = Sketch.hllEstimateBy(srcRegs, Seq("source"), p = 8)
-        .select(col("source"), col("estimate"))
-      val srcs = srcRegs.select("source").distinct()
-      val pairs = broadcast(srcs.toDF("source_a"))
-        .crossJoin(broadcast(srcs.toDF("source_b")))
-        .filter(col("source_a") < col("source_b"))
-      val members = pairs.select(col("source_a"), col("source_b"),
-        explode(array(col("source_a"), col("source_b"))).as("source"))
-      val merged = members.join(srcRegs, "source")
-        .groupBy(col("source_a"), col("source_b"), col("bucket"))
-        .agg(max(col("max_rho")).as("max_rho"))
-      val unionEst = Sketch.hllEstimateBy(merged,
-          Seq("source_a", "source_b"), p = 8)
-        .select(col("source_a"), col("source_b"),
-          col("estimate").as("est_union"))
-      val exact = dtok.toDF("source_a", "tok")
-        .join(dtok.toDF("source_b", "tok"), "tok")
-        .filter(col("source_a") < col("source_b"))
-        .groupBy(col("source_a"), col("source_b"))
-        .agg(count(lit(1)).as("exact_overlap"))
-      val out = pairs
-        .join(srcEst.toDF("source_a", "est_a"), "source_a")
-        .join(srcEst.toDF("source_b", "est_b"), "source_b")
-        .join(unionEst, Seq("source_a", "source_b"))
-        .join(exact, Seq("source_a", "source_b"), "left")
-        .select(col("source_a"), col("source_b"), col("est_a"),
-          col("est_b"), col("est_union"),
-          (round(col("est_a") + col("est_b") - col("est_union"), 9)
-            + lit(0.0)).as("est_overlap"),
-          coalesce(col("exact_overlap"), lit(0L)).as("exact_overlap"))
-        .orderBy(col("source_a"), col("source_b"))
-      // dtok is the pinned session seam — only the local persist is
-      // released here
-      Dedup.materializeAndRelease(out, srcRegs)
-    }),
-
-    // LLM dedup 9 — INCREMENTAL dedup (new batch vs historical content
-    // index) through the bloom-pruned ANTI-join: rows the bloom
-    // rejects are provably unseen and never enter a shuffle; only the
-    // might-contain minority pays the exact anti-join. The production
-    // shape for continuous ingestion at 100 TB — the history never
-    // streams, only its bloom does.
-    "q68_incremental_dedup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val h = sha2(graft.functions.normText(col("text")), 256)
-      val hist = docs.filter(col("doc_id") % 2 === 0).select(h.as("h"))
-      val batch = docs.filter(col("doc_id") % 2 === 1)
-        .select(col("doc_id"), col("lang"), col("source"), h.as("h"))
-      Scale.bloomPrunedAntiJoin(batch, "h", hist, "h",
-          expectedKeys = 10000L)
-        .select(col("doc_id"), col("lang"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // LLM curation 8 — deterministic negative-pair sampling
-    // (contrastive training data): md5-uniform skip-self draw over the
-    // dense id range, partner payload fetched by ONE equi-join. The
-    // approximately-random pair SET is exactly reproducible, so it
-    // hash-gates like any exact query.
-    "q67_negative_pairs" -> ((s, dir) => {
-      Curation.negativePairs(Tables.documents(s, dir), "doc_id", k = 2,
-          payloadCols = Seq("source", "lang"))
-        .orderBy(col("doc_id"), col("j"))
-    }),
-
-    // LLM text 6 — unigram LM quality score (the corpus-as-model
-    // stand-in for a KenLM perplexity gate): per-token round-9
-    // log-probs summed in DECIMAL (exact, order-independent); the
-    // per-token mean ships as an all-integer nano-scaled NLL because
-    // round(sum/n, 9) half-rounds differently per engine (observed).
-    "q66_lm_score" -> ((s, dir) => {
-      TextAnalysis.unigramLogProb(Tables.documents(s, dir), "doc_id", "text")
-        .select(col("id").as("doc_id"), col("ntok"),
-          col("logprob_sum"), col("nll_mean_nano"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Scale primitive — HyperLogLog as relational ops (the CMS
-    // sibling, closing the sketch family): vocabulary distinct-count
-    // from a 2^8-row register table built by ONE map-side-combinable
-    // groupBy. The md5/bin() construction is engine-reproducible, so
-    // the APPROXIMATE registers AND estimate get a hash-exact oracle;
-    // exact_distinct rides along to exhibit the error band.
-    "q65_hll_distinct" -> ((s, dir) => {
-      // tok is persisted: registers AND the exact count both consume
-      // it — unpersisted, the corpus would tokenize twice
-      val tok = Tables.documents(s, dir)
-        .select(explode(graft.functions.tokens(col("text"))).as("tok"))
-        .persist()
-      val regs = Sketch.hllRegisters(tok, "tok", p = 8).persist()
-      val est = Sketch.hllEstimate(regs, p = 8)
-      val exact = tok.agg(countDistinct(col("tok")).as("exact_distinct"))
-      Dedup.materializeAndRelease(
-        regs.crossJoin(broadcast(est)).crossJoin(broadcast(exact))
-          .orderBy(col("bucket")),
-        tok, regs)
-    }),
-
-    // Scale primitive — Z-ORDER layout: events clustered by the
-    // Morton value of (user_id, day index), so parquet min/max stats
-    // stay narrow on BOTH columns and a predicate on either skips
-    // files (the two-dimensional lever hive partitioning lacks;
-    // clustering quality is pinned in ScaleSpec). The gate: answering
-    // a 2-dim predicate THROUGH the layout must equal the flat table.
-    "q64_zorder_roundtrip" -> ((s, dir) => {
-      val root = tmpRootCleanedOnExit("graft_q64_zorder", dir)
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("event_type"), col("value"))
-      // order-preserving dimension indices: user_id is already small;
-      // the time axis is the UTC day offset from 2024-01-01 (= epoch
-      // day 19723), exact integral division like the dt layout
-      val dayIdx = expr("(unix_micros(ts) div 86400000000) - 19723")
-      Scale.writeZOrdered(ev, root, col("user_id"), dayIdx,
-        bits = 8, numFiles = 16)
-      s.read.parquet(root)
-        .filter(col("user_id").between(20, 40) &&
-          col("ts") >= lit("2024-01-05 00:00:00").cast("timestamp") &&
-          col("ts") < lit("2024-01-12 00:00:00").cast("timestamp"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
-        .orderBy(col("event_type"))
-    }),
-
-    // LLM curation 7 — context-window chunking: 64-token windows at
-    // stride 48 (16-token overlap), last window clips. Pure per-row
-    // explode, tokenizer materialized once per document (plan-pinned
-    // in CurationSpec); the DuckDB twin is the same range/slice
-    // construction over its own list type.
-    "q63_doc_chunks" -> ((s, dir) => {
-      Curation.chunkDocs(Tables.documents(s, dir), "doc_id", "text",
-          chunkTokens = 64, strideTokens = 48)
-        .orderBy(col("doc_id"), col("chunk_idx"))
-    }),
-
-    // LLM text 5 — TF-IDF top-k keywords per document: tf = one hash
-    // aggregate, df = the broadcast vocabulary table, N = broadcast
-    // 1-row cross join, top-k = per-document window. Score rounded to
-    // 9 dp (the q27 transcendental idiom) with the token as tie-break.
-    "q62_tfidf_topk" -> ((s, dir) => {
-      TextAnalysis.tfIdfTopK(Tables.documents(s, dir), "doc_id", "text",
-          k = 3)
-        .select(col("id").as("doc_id"), col("rank"), col("tok"),
-          col("tf"), col("df"), col("score"))
-        .orderBy(col("doc_id"), col("rank"))
-    }),
-
-    // Scale primitive — count-min sketch as relational ops: the
-    // counter table is ONE map-side-combinable groupBy producing
-    // depth×width rows (broadcastable), estimates a keyed join. The
-    // md5 bucket hash makes the sketch engine-reproducible, so even
-    // the APPROXIMATE structure gets a hash-exact oracle: the DuckDB
-    // twin rebuilds the identical counters and estimates. Output =
-    // the exact top-10 tokens with exact and sketch counts (est ≥
-    // exact by construction; equal when no bucket collision).
-    "q52_cms_heavy_hitters" -> ((s, dir) => {
-      val depth = 4; val width = 4096
-      val tok = Tables.documents(s, dir)
-        .select(explode(graft.functions.tokens(col("text"))).as("tok"))
-      val tcnt = tok.groupBy("tok").agg(count(lit(1)).as("cnt")).persist()
-      val counters = Sketch.cmsCounters(tcnt, "tok", "cnt", depth, width)
-      val top10 = tcnt.orderBy(col("cnt").desc, col("tok")).limit(10)
-      // materialize the 10-row result, then release the vocabulary-
-      // sized count table: Verify runs the whole suite in one session
-      // with no per-query cache clear, so a bare .persist() here would
-      // otherwise pin tcnt for the rest of the session (ADVICE r6)
-      Dedup.materializeAndRelease(
-        Sketch.cmsEstimate(top10, "tok", counters, depth, width)
-          .select(col("tok"), col("cnt").as("exact_cnt"), col("cms_est"))
-          .orderBy(col("exact_cnt").desc, col("tok")),
-        tcnt)
-    }),
-
-    // LLM curation 4 — token-budget shard packing: per source, docs in
-    // id order pack into ~2000-token shards by exclusive running sum
-    // (docs never split; a shard overshoots by at most its last doc).
-    // Window twin in DuckDB pins the exact shard assignment.
-    "q47_token_shards" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val withTok = docs.select(col("source"), col("doc_id"),
-        TextAnalysis.tokenCounts(col("text")).getField("n_whitespace")
-          .cast("long").as("n_tok"))
-      Curation.packShards(withTok, "source", "doc_id", "n_tok",
-          budget = 2000L)
-        .orderBy(col("source"), col("doc_id"))
-    }),
-
-    // LLM curation 15 — deterministic train/val/test hash split: every
-    // doc lands in exactly one named split by the salted md5 coin
-    // (prefix-nested boundaries, layout-independent, shuffle-free);
-    // the query audits the split as a per-(split, source) manifest —
-    // doc and token counts — which is how a pipeline proves its
-    // held-out sets are stable and its mix is as configured. The
-    // DuckDB twin recomputes the identical coin/CASE chain, so the
-    // exact ASSIGNMENT (not just the counts) is oracle-gated through
-    // the group keys.
-    "q95_hash_split" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Curation.splitByHash(docs, "doc_id",
-          Seq("train" -> 0.96, "val" -> 0.02, "test" -> 0.02))
-        .select(col("split"), col("source"),
-          TextAnalysis.tokenCounts(col("text")).getField("n_whitespace")
-            .cast("long").as("n_tok"))
-        .groupBy("split", "source")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("total_tokens"))
-        .orderBy(col("split"), col("source"))
-    }),
-
-    // LLM embeddings 9 — kNN label-agreement audit (label-noise
-    // detection): each vector's 5 cosine-nearest neighbors vote on its
-    // label; low agreement flags mislabel/outlier candidates before
-    // training on weak labels. Exact brute-force neighbors here (the
-    // corpus projection broadcasts); at scale the same vote runs over
-    // IVF/LSH candidate sets. The DuckDB twin recomputes the full
-    // all-pairs ranking, so the exact neighbor SETS are oracle-gated
-    // through the counts.
-    "q96_knn_label_audit" -> ((s, dir) => {
-      Similarity.knnLabelAgreement(Tables.embeddings(s, dir),
-          "vec_id", "embedding", "label", k = 5)
-        .orderBy(col("vec_id"))
-    }),
-
-    // LLM embeddings 10 — per-label centroid outliers: the O(n·dim)
-    // drift audit next to q96's O(n²) neighborhood vote — top-20
-    // farthest members per label by exact nano-fixed-point squared
-    // distance to the quantized label centroid. Narrow exploded rows,
-    // broadcast centroid table, map-side-combinable aggregates; the
-    // DuckDB twin recomputes the identical integer arithmetic, so the
-    // full RANKING is hash-gated.
-    "q97_centroid_outliers" -> ((s, dir) => {
-      Similarity.labelCentroidOutliers(Tables.embeddings(s, dir),
-          "vec_id", "embedding", "label", topK = 20)
-        .orderBy(col("label"), col("rank"))
-    }),
-
-    // LLM curation 16 — SPLIT LEAKAGE report: q38's near-dup pairs
-    // labeled with both members' q95 hash-split assignments, collapsed
-    // to the unordered split×split matrix with cross-split cells
-    // flagged `leaky`. THE audit run before any evaluation on held-out
-    // splits: a train↔test near-duplicate inflates eval scores even
-    // when exact dedup is clean. Same scale shape as q93 (pair volume
-    // stays LSH-output-scaled; the label join is keyed on the narrow
-    // (doc_id, split) projection — and the split labels are a pure
-    // per-row md5 coin, no extra shuffle to produce them).
-    "q98_split_leakage" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // session-shared LSH pair graph (q12 gates the banded join live);
-      // the seam stays pinned for later consumers, so no release here
-      val pairs = sharedLshPairs(s, dir)
-      val sp = Curation.splitByHash(docs.select("doc_id"), "doc_id",
-          Seq("train" -> 0.96, "val" -> 0.02, "test" -> 0.02))
-      val labeled = pairs
-        .join(sp.select(col("doc_id").as("id_a"),
-          col("split").as("split_of_a")), "id_a")
-        .join(sp.select(col("doc_id").as("id_b"),
-          col("split").as("split_of_b")), "id_b")
-      labeled.groupBy(
-          least(col("split_of_a"), col("split_of_b")).as("split_a"),
-          greatest(col("split_of_a"), col("split_of_b")).as("split_b"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .withColumn("leaky", col("split_a") =!= col("split_b"))
-        .orderBy(col("split_a"), col("split_b"))
-    }),
-
-    // LLM curation 17 — train-overlap audit of the val split: per val
-    // doc, the fraction of its distinct 3-gram shingles occurring
-    // anywhere in train (GPT-3-appendix-style overlap analysis — the
-    // aggregate containment stat that catches piecewise leakage q98's
-    // pairwise matrix misses). The small val shingle set drives a
-    // bloom that prunes the train side before the only keyed shuffle.
-    "q99_train_overlap" -> ((s, dir) => {
-      Curation.splitOverlapAudit(Tables.documents(s, dir), "doc_id", "text",
-          Seq("train" -> 0.96, "val" -> 0.02, "test" -> 0.02),
-          n = 3, trainName = "train", auditName = "val")
-        .select(col("id").as("doc_id"), col("n_grams"), col("n_in_train"),
-          col("overlap_rate"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // LLM curation 18 — the epoch/repetition PLAN (the recipe table
-    // q70's sampler executes): per-source token masses → temperature
-    // shares → target tokens under a fixed budget → epoch counts
-    // capped at 4. One map-side aggregate + a broadcast 1-row total;
-    // output is |sources| rows whatever the corpus size. Exact-decimal
-    // q70 arithmetic end to end, so the whole plan is hash-gated.
-    "q100_epoch_plan" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val withTok = docs.select(col("source"),
-        TextAnalysis.tokenCounts(col("text")).getField("n_whitespace")
-          .cast("long").as("n_tok"))
-      Curation.epochPlan(withTok, "source", "n_tok",
-          alpha = 0.5, budgetTokens = 100000L, maxEpochs = 4.0)
-        .orderBy(col("source"))
-    }),
-
-    // BPE tokenizer training, round 0: adjacent char-pair statistics
-    // over the frequency-weighted word vocabulary (chars + </w>), top
-    // 50 merge candidates. One wordcount shuffle; everything after runs
-    // on the distinct-word table.
-    "q101_bpe_pairs" -> ((s, dir) =>
-      TextAnalysis.bpePairStats(Tables.documents(s, dir), "text", topK = 50)),
-
-    // Full BPE merge training, 6 rounds: per-round argmax pair + fold
-    // merge over the vocabulary. The DuckDB twin replays all 6 rounds
-    // exactly (unrolled CTEs with the same left-to-right fold), so the
-    // whole iterative trainer is hash-gated.
-    "q102_bpe_train" -> ((s, dir) =>
-      TextAnalysis.bpeTrain(Tables.documents(s, dir), "text", numMerges = 6)),
-
-    // Tokenizer fertility audit: the shared 6-merge vocabulary
-    // (sharedBpeVocab — trained once per session/corpus), then
-    // per-source subwords-per-word via a word-keyed dictionary join —
-    // the corpus is tokenized once and never re-encoded.
-    "q103_bpe_fertility" -> ((s, dir) =>
-      TextAnalysis.bpeFertilityWith(Tables.documents(s, dir), "text",
-        groupCol = "source", vocab = sharedBpeVocab(s, dir))),
-
-    // Sequence-length distribution per source: exact interpolated
-    // percentiles (p50/p90/p99) of the whitespace token count, plus
-    // doc/token totals and max. One keyed aggregate; the percentile
-    // state is a per-group count-map over the bounded token-count
-    // domain.
-    "q104_seqlen_dist" -> ((s, dir) => {
-      val tok = Tables.documents(s, dir).select(col("source"),
-        size(graft.functions.tokens(col("text"))).cast("long").as("n_tok"))
-      tok.groupBy("source").agg(
-          count(lit(1)).as("n_docs"),
-          sum("n_tok").as("total_tokens"),
-          graft.functions.hashSafeRound(
-            percentile(col("n_tok"), lit(0.5)), 9).as("p50"),
-          graft.functions.hashSafeRound(
-            percentile(col("n_tok"), lit(0.9)), 9).as("p90"),
-          graft.functions.hashSafeRound(
-            percentile(col("n_tok"), lit(0.99)), 9).as("p99"),
-          max("n_tok").as("max_tokens"))
-        .orderBy("source")
-    }),
-
-    // Deequ-class single-pass table profile of `orders`: per column,
-    // null count, EXACT distinct count, typed min/max. One aggregate
-    // (multi-distinct Expand), reshaped wide->long on the 1-row result.
-    "q105_table_profile" -> ((s, dir) =>
-      operators.Profile.profileTable(Tables.orders(s, dir))),
-
-    // Tokenizer encode gate: every doc's subword count plus the first
-    // 20 subwords in document order under the shared trained 6-merge
-    // vocab — encoding as a dictionary join, ordered reassembly per doc.
-    "q106_bpe_encode" -> ((s, dir) =>
-      TextAnalysis.bpeEncodeWith(Tables.documents(s, dir), "doc_id", "text",
-        vocab = sharedBpeVocab(s, dir), prefixLen = 20)),
-
-    // Dataset-card capstone: the per-source release report a corpus
-    // ships with — manifest (docs/tokens/unique/LM-NLL), sequence-
-    // length distribution (exact p50/p90/p99/max), and tokenizer
-    // fertility under the trained 6-merge vocab — three independent
-    // aggregate pipelines joined on the tiny source key.
-    "q107_dataset_card" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // the card is a report: its manifest section reads the shared
-      // corpus LM scores (q66 gates the LM live), the same discipline
-      // as its fertility section below
-      val manifest = TextAnalysis.corpusManifestWith(docs, "doc_id", "text",
-        groupCols = Seq("source"), scored = sharedLmScores(s, dir))
-      val dist = docs.select(col("source"),
-          size(graft.functions.tokens(col("text"))).cast("long").as("n_tok"))
-        .groupBy("source").agg(
-          graft.functions.hashSafeRound(
-            percentile(col("n_tok"), lit(0.5)), 9).as("p50"),
-          graft.functions.hashSafeRound(
-            percentile(col("n_tok"), lit(0.9)), 9).as("p90"),
-          graft.functions.hashSafeRound(
-            percentile(col("n_tok"), lit(0.99)), 9).as("p99"),
-          max("n_tok").as("max_tokens"))
-      // the fertility section consumes the SHARED pre-trained vocab —
-      // the card is a report, and reports must not re-run the trainer
-      // (VERDICT r9 item 5: one trainer run per corpus, not per report)
-      val fert = TextAnalysis.bpeFertilityWith(docs, "text",
-        groupCol = "source", vocab = sharedBpeVocab(s, dir))
-      manifest.join(dist, "source").join(fert, "source").orderBy("source")
-    }),
-
-    // Funnel analysis, greedy earliest-completion: per user, the
-    // view -> click -> purchase state machine folded over the sorted
-    // per-user history — ONE entity-keyed shuffle, not one per step.
-    "q108_funnel" -> ((s, dir) =>
-      operators.EventAnalytics.funnel(Tables.events(s, dir),
-        "user_id", "ts", "event_type",
-        steps = Seq("view", "click", "purchase"))),
-
-    // Cohort retention: first-activity-day cohorts x day offset,
-    // distinct active users per cell; calendar-bounded output.
-    "q109_cohort_retention" -> ((s, dir) =>
-      operators.EventAnalytics.cohortRetention(Tables.events(s, dir),
-        "user_id", "ts"))
-    ,
-    // q108 under the hot-entity guard (r10): every entity's history is
-    // truncated to its EARLIEST FunnelEntityCap events through the
-    // spillable window pre-rank before the fold — the memory envelope
-    // that survives a degenerate bot key. The cap sits BELOW the
-    // median activity here, so the twin (the same row_number prefilter
-    // feeding the chained-min machine) gates the truncation semantics
-    // on most entities, not a no-op. The funnel_hot_entity stress
-    // covers the 100×-activity regime this gate can't reach at test SF.
-    "q145_funnel_capped" -> ((s, dir) =>
-      operators.EventAnalytics.funnel(Tables.events(s, dir),
-        "user_id", "ts", "event_type",
-        steps = Seq("view", "click", "purchase"),
-        maxEventsPerEntity = Some(FunnelEntityCap))),
-
-    // EXACT heavy hitters (count > n/k) by the two-pass
-    // candidates-then-recount scheme over a native mergeable
-    // Misra-Gries aggregate: neither pass shuffles the token domain —
-    // the summary is a fixed-capacity buffer, the recount groups into
-    // ≤ capacity+1 buckets. The answer is exact (candidate superset
-    // guarantee + exact integer recount filter), so the twin is the
-    // plain HAVING-threshold SQL.
-    "q146_heavy_hitters" -> ((s, dir) =>
-      operators.Sketch.heavyHittersExact(
-        Tables.documents(s, dir)
-          .select(explode(tokens(col("text"))).as("tok")),
-        "tok", k = HeavyHitterK)),
-
-    // Sorted-neighborhood near-dup blocking (the deterministic,
-    // one-shuffle alternative to q12's MinHash-LSH for prefix-sharing
-    // duplicates): block on the normalized 8-char prefix, sort by the
-    // 24-char key, compare each record to its 2 successors with exact
-    // distinct-token Jaccard, integer-threshold at 80%.
-    "q147_sorted_neighborhood" -> ((s, dir) =>
-      operators.Dedup.sortedNeighborhood(Tables.documents(s, dir),
-        "doc_id", "text", windowSize = SnmWindow, prefixLen = SnmPrefixLen,
-        keyLen = SnmKeyLen, minJaccardPct = SnmMinJaccardPct)),
-
-    // Market-basket co-occurrence over q124's 30-minute sessions:
-    // support/confidence/lift per unordered event-type pair, pairs
-    // expanded INSIDE the per-session aggregate (no self-join).
-    "q148_cooccurrence_lift" -> ((s, dir) =>
-      operators.EventAnalytics.cooccurrenceLift(Tables.events(s, dir),
-        "user_id", "ts", "event_type", "event_id", SessionGapMicros)),
-
-    // Referential-integrity audit over the star schema's seven FK
-    // edges: child rows / null FKs / orphans / distinct orphan keys,
-    // one AQE-sized left join per edge (NO broadcast hints — customer
-    // and supplier grow with the corpus; the r9 scale-killer rule).
-    "q149_referential_audit" -> ((s, dir) => {
-      val t: Map[String, DataFrame] = Map(
-        "region" -> Tables.region(s, dir), "nation" -> Tables.nation(s, dir),
-        "customer" -> Tables.customer(s, dir),
-        "supplier" -> Tables.supplier(s, dir), "part" -> Tables.part(s, dir),
-        "orders" -> Tables.orders(s, dir),
-        "lineitem" -> Tables.lineitem(s, dir))
-      operators.Profile.referentialAudit(
-        RefAuditEdges.map { case (name, child, fk, parent, pk) =>
-          (name, t(child), fk, t(parent), pk) })
-    }),
-
-    // PageRank over the q111 transition graph in exact integer fixed
-    // point (5 unrolled iterations, damping 85/100): the corpus-sized
-    // work is ONE edge-count shuffle; iterations walk the
-    // vocabulary-sized node table. Twin replays the identical rounds.
-    "q150_transition_pagerank" -> ((s, dir) =>
-      operators.EventAnalytics.transitionPageRank(Tables.events(s, dir),
-        "user_id", "ts", "event_type", "event_id",
-        iters = PageRankIters, dampingPct = PageRankDampingPct)),
-
-    // Deterministic ±1 random projection 64→16 in exact int64 fixed
-    // point: the sign matrix is an md5-derived plan literal, the
-    // projection a per-row codegen fold — zero shuffles, zero joins;
-    // the twin regenerates the same matrix symbolically in SQL.
-    "q151_random_projection" -> ((s, dir) =>
-      operators.Similarity.srpProject(Tables.embeddings(s, dir),
-        "vec_id", "embedding", outDims = SrpOutDims, dims = EmbeddingDims)),
-
-    // SRP sign-code bucket-load audit: q151's component signs packed
-    // into a 16-bit LSH code, histogrammed — the bucket-skew check a
-    // candidate join needs before it runs. Per-row code + one
-    // bounded-key aggregate.
-    "q153_srp_code_histogram" -> ((s, dir) =>
-      operators.Similarity.srpCodeHistogram(Tables.embeddings(s, dir),
-        "vec_id", "embedding", outDims = SrpOutDims, dims = EmbeddingDims)),
-
-    // Packing-efficiency audit over q152's plan: per source — bins
-    // used, tail padding, fill rate, boundary-straddling docs. The
-    // report read before choosing the context size; one per-shard
-    // aggregate over the plan's window output.
-    "q154_pack_efficiency" -> ((s, dir) => {
-      val withTok = Tables.documents(s, dir).select(col("source"),
-        col("doc_id"),
-        TextAnalysis.tokenCounts(col("text")).getField("n_whitespace")
-          .cast("long").as("n_tok"))
-      operators.Curation.packEfficiency(withTok, "source", "doc_id",
-        "n_tok", binTokens = PackBinTokens)
-    }),
-
-    // Dedup survivorship by source: per-source retention under global
-    // exact dedup PLUS the cross-source flow (docs whose canonical
-    // lives in a different source) — the mix-shift audit after q10.
-    // Corpus-linear: content-hash agg + one id-keyed join, no pairs.
-    "q155_dedup_survivorship" -> ((s, dir) =>
-      operators.Dedup.survivorship(Tables.documents(s, dir),
-        "doc_id", "text", "source")),
-
-    // Split mix-preservation audit: per (split, source), observed
-    // share within the split vs the source's corpus share, round-9
-    // absolute deviation — verifies q95's hash split kept the source
-    // mix on THIS corpus. Per-row md5 coin, one cell aggregate,
-    // broadcast totals.
-    "q156_split_balance" -> ((s, dir) =>
-      operators.Curation.splitBalance(Tables.documents(s, dir),
-        "doc_id", "source",
-        Seq("train" -> 0.96, "val" -> 0.02, "test" -> 0.02))),
-
-    // Context-window packing plan: per-source concatenation packing of
-    // documents into 256-token bins — one spillable per-shard window
-    // prefix sum, all-int64 bin arithmetic.
-    "q152_pack_plan" -> ((s, dir) => {
-      val withTok = Tables.documents(s, dir).select(col("source"),
-        col("doc_id"),
-        TextAnalysis.tokenCounts(col("text")).getField("n_whitespace")
-          .cast("long").as("n_tok"))
-      operators.Curation.packPlan(withTok, "source", "doc_id", "n_tok",
-        binTokens = PackBinTokens)
-    }),
-
-    // Histogram-quantile audit: per-source p50/p90/p99 token-count
-    // quantiles read from fixed 8-token bins — the MERGEABLE scale
-    // path for q104's exact percentile (whose agg buffer materializes
-    // every group value). Integer cross-multiply threshold, ±binWidth
-    // precision; the one shuffle moves (source, bin) counts, not rows.
-    "q157_binned_quantiles" -> ((s, dir) => {
-      val tok = Tables.documents(s, dir).select(col("source"),
-        size(tokens(col("text"))).cast("long").as("n_tok"))
-      operators.Profile.binnedQuantiles(tok, "source", "n_tok",
-        binWidth = TokQuantileBinTokens, pcts = TokQuantilePcts)
-    }),
-
-    // Language-ID audit: label × predicted confusion matrix under the
-    // stopword-profile voter (argmax of matched-token fractions, ties
-    // to profile order) plus the matched/total token mass per cell as
-    // int64 sums (one final division would be the rate — no float
-    // averaging crosses the gate). Per-row scoring, one bounded-key
-    // aggregate.
-    "q158_langid_confusion" -> ((s, dir) => {
-      val toks = tokens(col("text"))
-      val matched = LangIdProfiles.map { case (lang, words) =>
-        size(filter(toks, t => t.isin(words.map(lit): _*)))
-          .cast("long").as(s"m_$lang") }
-      val base = Tables.documents(s, dir).select(
-        col("lang") +: size(toks).cast("long").as("n_tok") +:
-          TextAnalysis.langIdPredict(col("text"), LangIdProfiles).as("pred") +:
-          matched: _*)
-      val mPred = LangIdProfiles.map { case (lang, _) =>
-        when(col("pred") === lang, col(s"m_$lang")) }.reduce(coalesce(_, _))
-      base.groupBy(col("lang"), col("pred"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(mPred).as("matched_tokens"),
-          sum(col("n_tok")).as("total_tokens"))
-        .orderBy(col("lang"), col("pred"))
-    }),
-
-    // Exact-decimal covariance matrix of the embedding dimensions
-    // (upper triangle) — PCA/whitening prep; cov(i,i) reproduces
-    // q116's variance bit-for-bit. One explode+aggregate pass,
-    // map-side combined to dims² rows per partition.
-    "q159_embedding_covariance" -> ((s, dir) =>
-      operators.Similarity.embeddingCovariance(
-        Tables.embeddings(s, dir), "embedding")),
-
-    // Rolling 7-day actives from mergeable per-day HLL registers,
-    // gated against the exact q110 answer: worst per-day relative
-    // error under WauHllMaxRelErr (the q144 boolean-floor pattern).
-    // The corpus is scanned once; fan-out/merge walks day × 2^p
-    // register rows where the exact op re-shuffles (day, user) pairs.
-    "q160_rolling_active_hll" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val exact =
-        operators.EventAnalytics.rollingActive(ev, "user_id", "ts", 7)
-      val approx = operators.EventAnalytics.rollingActiveHll(
-        ev, "user_id", "ts", 7, WauHllP)
-      exact.join(approx, Seq("day"))
-        .agg(count(lit(1)).as("n_days"),
-          max(abs(col("wau_est") - col("wau_7d").cast("double")) /
-            col("wau_7d").cast("double")).as("maxerr"))
-        .select(col("n_days"),
-          (col("maxerr") <= lit(WauHllMaxRelErr)).as("rel_err_ok"))
-    }),
-    // Rolling engagement: exact DAU + trailing-7-day WAU per day. The
-    // (day, user) distinct projection fans out over the 7 window
-    // anchors before ONE distinct-count aggregate — no per-window
-    // rescan. (The 100 TB path for sliding distincts is the mergeable
-    // HLL register family, q65/q69; this is the exact contract.)
-    "q110_rolling_active" -> ((s, dir) =>
-      operators.EventAnalytics.rollingActive(Tables.events(s, dir),
-        "user_id", "ts", windowDays = 7)),
-
-    // First-order Markov transitions between event types per user
-    // timeline: one window pass + a |types|^2 aggregate.
-    "q111_event_transitions" -> ((s, dir) =>
-      operators.EventAnalytics.transitionMatrix(Tables.events(s, dir),
-        "user_id", "ts", "event_type", tieCol = "event_id")),
-
-    // Time-to-convert distribution over the q108 funnel: completion
-    // rate + exact p50/p90/max seconds across converters.
-    "q112_conversion_stats" -> ((s, dir) =>
-      operators.EventAnalytics.conversionStats(Tables.events(s, dir),
-        "user_id", "ts", "event_type",
-        steps = Seq("view", "click", "purchase"))),
-
-    // Label confusion geometry: exact fixed-point pairwise centroid
-    // distances (q97's quantization), labels^2 output rows.
-    "q113_label_separation" -> ((s, dir) =>
-      operators.Similarity.labelCentroidSeparation(
-        Tables.embeddings(s, dir), "vec_id", "embedding", "label")),
-
-    // Embedding-health audit: per-label exact fixed-point norm^2
-    // distribution (collapsed/exploding embedding check).
-    "q114_embedding_norms" -> ((s, dir) =>
-      operators.Similarity.embeddingNormStats(
-        Tables.embeddings(s, dir), "vec_id", "embedding", "label")),
-
-    // Top ordered 3-step event paths (second-order companion to the
-    // q111 transition matrix): chained leads, one keyed shuffle.
-    "q115_top_paths" -> ((s, dir) =>
-      operators.EventAnalytics.topPaths(Tables.events(s, dir),
-        "user_id", "ts", "event_type", tieCol = "event_id", n = 3, k = 20)),
-
-    // Per-dimension embedding mean/variance in exact fixed point: the
-    // collapsed-dimension audit (columns companion to q114's rows).
-    "q116_dimension_stats" -> ((s, dir) =>
-      operators.Similarity.dimensionStats(
-        Tables.embeddings(s, dir), "embedding")),
-
-    // Pairwise per-source unigram Jensen-Shannon divergence: corpus
-    // drift between sources; closed-form unshared-mass term so the
-    // only join is the inner token join.
-    "q117_source_divergence" -> ((s, dir) =>
-      operators.TextAnalysis.sourceDivergence(
-        Tables.documents(s, dir), "text", "source")),
-
-    // Daily event-volume z-scores vs the trailing 7-calendar-day
-    // window: the ingest spike/stall audit.
-    "q118_volume_anomaly" -> ((s, dir) =>
-      operators.EventAnalytics.volumeAnomaly(
-        Tables.events(s, dir), "ts", "event_type")),
-
-    // Inter-event cadence: per-type gap distribution between
-    // consecutive same-entity events.
-    "q119_event_cadence" -> ((s, dir) =>
-      operators.EventAnalytics.interEventGaps(Tables.events(s, dir),
-        "user_id", "ts", "event_type", "event_id")),
-
-    // Activity concentration per event type: exact Gini + top-decile
-    // share (the whale audit).
-    "q120_activity_gini" -> ((s, dir) =>
-      operators.EventAnalytics.activityConcentration(
-        Tables.events(s, dir), "user_id", "event_type")),
-
-    // Distributed Lloyd k-means in exact fixed point (k=8, 3 rounds):
-    // the trainer for the IVF/SemDeDup centroid tables, bit-stable
-    // across engines (the twin replays every round).
-    "q121_kmeans" -> ((s, dir) =>
-      operators.Similarity.kmeans(
-        Tables.embeddings(s, dir), "vec_id", "embedding", k = 8, iters = 3)),
-
-    // Funnel drop-off: per-step reach + step-over-step conversion,
-    // the funnel-chart table over q108's state machine.
-    "q122_funnel_dropoff" -> ((s, dir) =>
-      operators.EventAnalytics.funnelDropoff(Tables.events(s, dir),
-        "user_id", "ts", "event_type",
-        steps = Seq("view", "click", "purchase"))),
-
-    // Lexical diversity per source: vocab/hapax/TTR — the lexical-
-    // health audit next to the Zipf/Heaps fits.
-    "q123_lexical_diversity" -> ((s, dir) =>
-      operators.TextAnalysis.lexicalDiversity(
-        Tables.documents(s, dir), "text", "source")),
-
-    // Session engagement distribution over the 30-min gap sessions:
-    // count, duration percentiles, events/session, bounce rate.
-    "q124_session_stats" -> ((s, dir) =>
-      operators.EventAnalytics.sessionStats(Tables.events(s, dir),
-        "user_id", "ts", "event_id", gapMicros = SessionGapMicros)),
-
-    // Dedup report: exact-dup cluster-size histogram with corpus
-    // shares — the summary read before choosing dedup thresholds.
-    "q125_dup_histogram" -> ((s, dir) =>
-      operators.Dedup.dupSizeHistogram(
-        Tables.documents(s, dir), "doc_id", "text")),
-
-    // Daily error budget: error counts/rate + distinct entities
-    // hitting errors per day.
-    "q126_error_rates" -> ((s, dir) =>
-      operators.EventAnalytics.errorRates(Tables.events(s, dir),
-        "ts", "event_type", "user_id")),
-
-    // PSI drift of the value column between the two halves of the
-    // time range: equal-width buckets, per-bucket PSI terms.
-    "q127_value_psi" -> ((s, dir) =>
-      operators.Profile.populationStability(
-        Tables.events(s, dir), "value", "ts")),
-
-    // Daily peak session concurrency: day-partitioned interval sweep
-    // with carry-in (the twin pins it against the global sweep).
-    "q128_peak_concurrency" -> ((s, dir) =>
-      operators.EventAnalytics.peakConcurrency(Tables.events(s, dir),
-        "user_id", "ts", "event_id", gapMicros = SessionGapMicros)),
-
-    // Bot-cadence audit: per-entity event count + min/median gap with
-    // the too-fast-too-regular flag.
-    "q129_bot_candidates" -> ((s, dir) =>
-      operators.EventAnalytics.botCandidates(Tables.events(s, dir),
-        "user_id", "ts", "event_id", minEvents = BotMinEvents,
-        maxMedianGapS = BotMaxMedianGapS)),
-
-    // Time-boxed funnel: q122's drop-off table under a 1-day step
-    // deadline (greedy machine == chained min-within-window).
-    "q130_funnel_deadline" -> ((s, dir) =>
-      operators.EventAnalytics.funnelDropoff(Tables.events(s, dir),
-        "user_id", "ts", "event_type",
-        steps = Seq("view", "click", "purchase"),
-        maxStepGapUs = Some(FunnelDeadlineS * 1000000L))),
-
-    // Last-touch attribution of purchases to the most recent preceding
-    // non-purchase event type.
-    "q131_attribution" -> ((s, dir) =>
-      operators.EventAnalytics.lastTouchAttribution(Tables.events(s, dir),
-        "user_id", "ts", "event_id", "event_type", convType = "purchase")),
-
-    // Usage heatmap: (ISO weekday, hour) volume cells with shares.
-    "q132_usage_heatmap" -> ((s, dir) =>
-      operators.EventAnalytics.usageHeatmap(Tables.events(s, dir), "ts")),
-
-    // Snapshot diff vs a deterministically derived v2 of the corpus
-    // (drop %13, rewrite %7, add %11 under shifted ids): the dataset
-    // versioning audit.
-    "q133_snapshot_diff" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      // the added-doc id shift derives from the corpus (max+1) so it
-      // can never collide with a real id at any scale factor
-      val off = d.agg(max(col("doc_id"))).head().getLong(0) + 1
-      val v2 = d.filter(col("doc_id") % 13 =!= 0)
-        .select(col("doc_id"),
-          when(col("doc_id") % 7 === 0, concat(col("text"), lit(" v2")))
-            .otherwise(col("text")).as("text"))
-        .unionByName(d.filter(col("doc_id") % 11 === 0)
-          .select((col("doc_id") + lit(off)).as("doc_id"),
-            concat(lit("new "), col("text")).as("text")))
-      operators.Curation.snapshotDiff(d, v2, "doc_id", "text")
-    }),
-
-    // Key-skew profile of the event entity key: top-20 heaviest keys
-    // with shares and skew factors (the pre-shuffle salting audit).
-    "q134_key_skew" -> ((s, dir) =>
-      operators.Profile.keySkew(Tables.events(s, dir), "user_id", topK = 20)),
-
-    // Entity-consistent split: q95's hash coin keyed on the ENTITY so
-    // every event of a user lands in one split (no cross-split
-    // leakage of a user's behavior); per-split event/user manifest.
-    "q135_entity_split" -> ((s, dir) =>
-      operators.Curation.splitByHash(Tables.events(s, dir), "user_id",
-          Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05), salt = "user")
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_events"),
-          countDistinct(col("user_id")).as("n_users"))
-        .orderBy("split")),
-
-    // Tokenizer integrity: every trained subword sequence must
-    // concatenate back to its word + '</w>' (0 violations) — a
-    // standing regression gate on the BPE merge fold, audited over the
-    // shared pre-trained vocabulary.
-    "q136_bpe_integrity" -> ((s, dir) =>
-      operators.TextAnalysis.bpeVocabIntegrityWith(sharedBpeVocab(s, dir))),
-
-    // RFM engagement segmentation: tercile cells by recency /
-    // frequency / exact-decimal monetary value.
-    "q137_rfm_segments" -> ((s, dir) =>
-      operators.EventAnalytics.rfmSegments(Tables.events(s, dir),
-        "user_id", "ts", "value")),
-
-    // TPC-H Q13-shape customer order-count distribution: left join so
-    // zero-order customers count, then the histogram of counts.
-    "q141_order_distribution" -> ((s, dir) => {
-      val c = Tables.customer(s, dir).select("c_custkey")
-      val o = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
-      c.join(o, col("c_custkey") === col("o_custkey"), "left")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy(col("c_count"))
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
-
-    // Brand revenue share over the part dimension: lineitem joined to
-    // the broadcast part dim, exact-decimal revenue, share against a
-    // 1-row total rider.
-    "q142_brand_revenue" -> ((s, dir) => {
-      val p = Tables.part(s, dir).select("p_partkey", "p_brand")
-      val lineRev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-      // per-brand sums stay DECIMAL so the grand total can roll up
-      // from the ~|brands| brand rows exactly (order-independent) —
-      // one scan/join instead of a second full aggregate, and no
-      // partition-order-dependent double summation
-      val rev = Tables.lineitem(s, dir)
-        .select("l_partkey", "l_extendedprice", "l_discount")
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(count(lit(1)).as("n_items"),
-          sum(lineRev.cast("decimal(30,6)")).as("revd"))
-      val total = rev.agg(sum(col("revd")).as("totd"))
-      rev.crossJoin(broadcast(total))
-        .select(col("p_brand"), col("n_items"),
-          col("revd").cast("double").as("revenue"),
-          (col("revd").cast("double") / col("totd").cast("double"))
-            .as("rev_share"))
-        .orderBy(col("p_brand"))
-    }),
-
-    // TPC-H Q5-shape local-supplier volume: revenue where the
-    // customer's and supplier's nation coincide, rolled up through the
-    // region dimension (6-table star). Broadcast hints go ONLY on the
-    // fixed-cardinality dims (nation x region); customer and supplier
-    // GROW LINEARLY with the corpus (~1.5 TB customer at 100 TB
-    // lineitem), and an explicit broadcast() overrides AQE's size
-    // check — so those joins are left unhinted: AQE picks BHJ at bench
-    // scale (both sides are far under autoBroadcastJoinThreshold) and
-    // degrades to SMJ at 100x instead of OOMing the executors.
-    "q143_regional_volume" -> ((s, dir) => {
-      val n = Tables.nation(s, dir)
-      val r = Tables.region(s, dir)
-      val dims = n.join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .select(col("n_nationkey"), col("n_name"), col("r_name"))
-      val cust = Tables.customer(s, dir).select("c_custkey", "c_nationkey")
-      val sup = Tables.supplier(s, dir).select("s_suppkey", "s_nationkey")
-      val o = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
-        .join(cust, col("o_custkey") === col("c_custkey"))
-      Tables.lineitem(s, dir)
-        .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
-        .join(sup, col("l_suppkey") === col("s_suppkey"))
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .filter(col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(dims), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(count(lit(1)).as("n_items"),
-          dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("revenue"))
-        .orderBy(col("r_name"), col("n_name"))
-    }),
-
-    // LLM embeddings 11 — the ANN-ROUTED label-noise audit
-    // (knnLabelAgreementApprox): q96's neighborhood vote over LSH
-    // candidate sets instead of the broadcast n² product — the route
-    // the exact audit takes past its ~2.5 GB broadcast ceiling.
-    // Gated the q24/q25 way, on BOTH layers: (1) neighbor-set recall
-    // of the approximate top-5 against the exact top-5 over ALL rows
-    // must clear the floor (16 tables + query-side Hamming-1
-    // multiprobe — the q24 geometry; measured 0.985/0.994 at
-    // sf0.01/sf0.1 on the soft-clustered-noise embeddings, floor 0.8
-    // one variance band below, far above the 0.34/0.38 default
-    // 8-table no-multiprobe recall, so losing the multiprobe/table
-    // machinery fails loudly); (2) the DOWNSTREAM vote must survive
-    // the approximation — mean |approx agree_rate − exact agree_rate|
-    // ≤ 0.1, i.e. half of one vote step at k=5 (measured
-    // 0.0036/0.0007; a drift past half a step would misorder any
-    // mislabel triage built on the rate). Every embedding row votes in
-    // both audits (n > k), so n_rows doubles as the join-completeness
-    // check. MeasureQ144 (test scope) reproduces the cited numbers.
-    "q144_knn_audit_approx" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      // each neighbor table is ranked ONCE and persisted; the recall
-      // join and both vote tables derive from the same two frames
-      // (labelVote is the audits' public vote step), so the n² exact
-      // product and the LSH bucket join each run a single time
-      val exactN = Similarity.knnNeighborsExact(emb, "vec_id", "embedding", 5)
-        .persist()
-      val approxN = Similarity.knnNeighborsApprox(emb, "vec_id", "embedding",
-        5, tables = 16, multiProbe = true).persist()
-      val recall = exactN.select(col("vec_id"), col("nbr_id"))
-        .join(approxN.select(col("vec_id"), col("nbr_id"), lit(1).as("hit")),
-          Seq("vec_id", "nbr_id"), "left")
-        .agg((count(col("hit")).cast("double") / count(lit(1))).as("recall"))
-      val exactA = Similarity.labelVote(exactN, emb, "vec_id", "label", 5)
-      val approxA = Similarity.labelVote(approxN, emb, "vec_id", "label", 5)
-      val out = exactA.select(col("vec_id"), col("agree_rate").as("er"))
-        .join(approxA.select(col("vec_id"), col("agree_rate").as("ar")),
-          "vec_id")
-        .agg(count(lit(1)).as("n_rows"),
-          avg(abs(col("ar") - col("er"))).as("mae"))
-        .crossJoin(broadcast(recall))
-        .select(col("n_rows"),
-          (col("recall") >= 0.8).as("recall_ok"),
-          (col("mae") <= 0.1).as("vote_mae_ok"))
-      Dedup.materializeAndRelease(out, exactN, approxN)
-    }),
-
-    // TPC-H Q3-shape shipping priority: segment-filtered 3-table star
-    // join, exact-decimal revenue, deterministic top-10. Customer is
-    // NOT broadcast-hinted — it grows linearly with the corpus, so the
-    // join is left to AQE (BHJ under the size threshold, SMJ past it);
-    // lineitem and orders (both fact-sized) shuffle once each.
-    "q139_shipping_priority" -> ((s, dir) => {
-      val cut = to_timestamp(lit("1998-06-01 00:00:00"))
-      val c = Tables.customer(s, dir)
-        .filter(col("c_mktsegment") === "BUILDING")
-        .select("c_custkey")
-      val o = Tables.orders(s, dir).filter(col("o_orderdate") < cut)
-        .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-      val l = Tables.lineitem(s, dir).filter(col("l_shipdate") > cut)
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"),
-          col("o_orderpriority"))
-        .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .as("revenue"))
-        .orderBy(col("revenue").desc, col("o_orderdate").asc,
-          col("l_orderkey").asc)
-        .limit(10)
-    }),
-
-    // TPC-H Q7-shape nation-to-nation trade flow: 5-table star join
-    // (supplier and customer nations), exact-decimal revenue per flow
-    // cell. Only nation (fixed cardinality) carries a broadcast hint;
-    // supplier/customer grow with the corpus, so their joins are left
-    // to AQE's size-based choice. Lineitem and orders shuffle once
-    // each.
-    "q140_nation_flow" -> ((s, dir) => {
-      val n = Tables.nation(s, dir).select("n_nationkey", "n_name")
-      val sup = Tables.supplier(s, dir)
-        .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-      val cust = Tables.customer(s, dir)
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .select(col("c_custkey"), col("n_name").as("cust_nation"))
-      val o = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
-        .join(cust, col("o_custkey") === col("c_custkey"))
-        .select(col("o_orderkey"), col("cust_nation"))
-      Tables.lineitem(s, dir)
-        .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
-        .join(sup, col("l_suppkey") === col("s_suppkey"))
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("supp_nation"), col("cust_nation"))
-        .agg(count(lit(1)).as("n_items"),
-          dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("revenue"))
-        .orderBy(col("supp_nation"), col("cust_nation"))
-    }),
-
-    // Weekly conversion trend: funnel entries cohorted by the ISO week
-    // of their first step, with per-week completion rates.
-    "q138_conversion_trend" -> ((s, dir) => {
-      val f = operators.EventAnalytics.funnel(Tables.events(s, dir),
-        "user_id", "ts", "event_type", Seq("view", "click", "purchase"))
-      f.filter(col("t1").isNotNull)
-        .groupBy(date_format(date_trunc("week", col("t1")), "yyyy-MM-dd")
-          .as("week"))
-        .agg(count(lit(1)).as("n_entered"),
-          count(col("t3")).as("n_converted"))
-        .select(col("week"), col("n_entered"), col("n_converted"),
-          (col("n_converted").cast("double") / col("n_entered").cast("double"))
-            .as("conv_rate"))
-        .orderBy("week")
-    }),
-
-    // TPC-H Q14-shape promo revenue share: one quarter of lineitem
-    // against the part dim (genuinely fixed-rate catalog → broadcast
-    // hint stays, the r9 dim/fact rule), both revenue sums
-    // DECIMAL-exact, ONE final double division for the share. The
-    // shipdate range predicate pushes to the parquet scan.
-    "q161_promo_revenue" -> ((s, dir) => {
-      val p = Tables.part(s, dir).select("p_partkey", "p_type")
-      val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= to_timestamp(lit(TpchQtrFrom)) &&
-          col("l_shipdate") < to_timestamp(lit(TpchQtrTo)))
-        .select("l_partkey", "l_extendedprice", "l_discount")
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .agg(count(lit(1)).as("n_items"),
-          dsum(when(col("p_type") === "PROMO", rev)).as("promo_revenue"),
-          dsum(rev).as("total_revenue"))
-        .select(col("n_items"), col("promo_revenue"), col("total_revenue"),
-          (lit(100.0) * col("promo_revenue") / col("total_revenue"))
-            .as("promo_share_pct"))
-    }),
-
-    // TPC-H Q15-shape top supplier: per-supplier quarter revenue kept
-    // in exact DECIMAL so the argmax equality join cannot float-drift;
-    // the 1-row max is a broadcast rider, while the supplier join is
-    // AQE-sized (supplier grows linearly with the corpus — NO hint,
-    // the r9 scale rule). Lineitem aggregates in one shuffle.
-    "q162_top_supplier" -> ((s, dir) => {
-      val rev = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= to_timestamp(lit(TpchQtrFrom)) &&
-          col("l_shipdate") < to_timestamp(lit(TpchQtrTo)))
-        .groupBy(col("l_suppkey"))
-        .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(30,6)")).as("revd"))
-      val top = rev.agg(max(col("revd")).as("maxrev"))
-      rev.join(broadcast(top), col("revd") === col("maxrev"))
-        .join(Tables.supplier(s, dir).select("s_suppkey", "s_name"),
-          col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"),
-          col("revd").cast("double").as("revenue"))
-        .orderBy("s_suppkey")
-    }),
-
-    // TPC-H Q16-shape supplier diversity per part attribute: the
-    // supplier-part relation is DERIVED from lineitem (no partsupp
-    // table here), negative-balance suppliers anti-joined out (the
-    // exclusion list is a filtered cut of the linearly-growing
-    // supplier table — AQE-sized, no hint), part broadcast as the dim.
-    // COUNT(DISTINCT) partial-aggregates before its one shuffle.
-    "q163_supplier_part_counts" -> ((s, dir) => {
-      val bad = Tables.supplier(s, dir).filter(col("s_acctbal") < 0)
-        .select("s_suppkey")
-      val p = Tables.part(s, dir).select("p_partkey", "p_brand",
-        "p_type", "p_size")
-      Tables.lineitem(s, dir).select("l_partkey", "l_suppkey")
-        .join(bad, col("l_suppkey") === col("s_suppkey"), "left_anti")
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-        .orderBy(col("p_brand"), col("p_type"), col("p_size"))
-    }),
-
-    // TPC-H Q18-shape large-volume orders: the quantity fold is ONE
-    // orderkey-keyed aggregate with an exact-decimal HAVING, and both
-    // downstream joins (orders fact, customer linear-growth) are left
-    // to AQE — the filtered big-order set is tiny at any SF, so AQE
-    // broadcasts it at runtime without an OOM-risking static hint.
-    "q164_large_orders" -> ((s, dir) => {
-      val big = Tables.lineitem(s, dir).select("l_orderkey", "l_quantity")
-        .groupBy(col("l_orderkey"))
-        .agg(sum(col("l_quantity").cast("decimal(30,6)")).as("sum_qtyd"))
-        .filter(col("sum_qtyd") > lit(LargeOrderMinQty))
-      big
-        .join(Tables.orders(s, dir)
-          .select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, dir).select("c_custkey", "c_name"),
-          col("o_custkey") === col("c_custkey"))
-        .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
-          col("o_orderdate"), col("o_totalprice"),
-          col("sum_qtyd").cast("double").as("sum_qty"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-    }),
-
-    // TPC-H Q19-shape disjunctive-predicate revenue: OR-of-ANDs over
-    // (brand, size, quantity) bands — brand/size prune inside the
-    // broadcast part dim, the quantity disjunction stays a codegen
-    // filter on the probe side; both output aggregates are
-    // decimal-exact. Bands interpolate from DisjBands into query AND
-    // twin.
-    "q165_disjunctive_revenue" -> ((s, dir) => {
-      val p = Tables.part(s, dir).select("p_partkey", "p_brand", "p_size")
-      val cond = DisjBands.map { case (brand, szLo, szHi, qLo, qHi) =>
-        col("p_brand") === brand &&
-          col("p_size").between(szLo, szHi) &&
-          col("l_quantity").between(qLo, qHi)
-      }.reduce(_ || _)
-      Tables.lineitem(s, dir)
-        .select("l_partkey", "l_quantity", "l_extendedprice", "l_discount")
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .filter(cond)
-        .agg(count(lit(1)).as("n_items"),
-          dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("revenue"))
-    }),
-
-    // TPC-H Q22-shape dormant rich customers: above-mean balance
-    // WITHOUT division — c_acctbal·n > Σbal compares exact decimals
-    // against the 1-row broadcast rider — then an anti-join against
-    // the recently-active custkey set (a filtered cut of the orders
-    // fact: AQE-sized, no hint). Per-segment rollup.
-    "q166_dormant_customers" -> ((s, dir) => {
-      val cust = Tables.customer(s, dir)
-        .select("c_custkey", "c_acctbal", "c_mktsegment")
-        .filter(col("c_acctbal") > 0)
-      val pos = cust.agg(
-        sum(col("c_acctbal").cast("decimal(30,6)")).as("sbal"),
-        count(lit(1)).as("npos"))
-      val active = Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= to_timestamp(lit(DormantCutoff)))
-        .select("o_custkey").distinct()
-      cust.crossJoin(broadcast(pos))
-        .filter(col("c_acctbal").cast("decimal(30,6)") * col("npos") >
-          col("sbal"))
-        .join(active, col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_cust"),
-          dsum(col("c_acctbal")).as("total_bal"))
-        .orderBy("c_mktsegment")
-    }),
-
-    // TPC-H Q4-shape late-shipment priority census: a LEFT SEMI join
-    // on the orderkey equi-key with the 60-day lateness residual —
-    // orders and lineitem each shuffle once on the key, no hint on
-    // either fact, and the semi form short-circuits per probe row
-    // instead of materializing matches.
-    "q167_late_shipment_priority" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-        .select("o_orderkey", "o_orderdate", "o_orderpriority")
-      val l = Tables.lineitem(s, dir).select("l_orderkey", "l_shipdate")
-      o.join(l, col("o_orderkey") === col("l_orderkey") &&
-          col("l_shipdate") >
-            col("o_orderdate") + expr(s"INTERVAL $LateShipDays DAYS"),
-          "left_semi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_late_orders"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // Chi-square independence audit of the documents lang × source
-    // contingency — full label cross including zero-observed cells,
-    // per-cell terms only (a chi² total would sum doubles in
-    // engine-dependent order; the dsum fold is the reader's one line).
-    "q168_contingency_chi2" -> ((s, dir) =>
-      operators.Profile.contingencyChi2(
-        Tables.documents(s, dir), "lang", "source")),
-
-    // Pairwise Pearson correlation over the lineitem numeric measures
-    // from ONE decimal-exact aggregate pass (Σx/Σx²/Σxy in
-    // DECIMAL(30,6), one final double formula per pair).
-    "q169_numeric_correlation" -> ((s, dir) =>
-      operators.Profile.correlationMatrix(
-        Tables.lineitem(s, dir), CorrCols)),
-
-    // Adjacent-bigram PMI collocations (Church & Hanks) — counts from
-    // two keyed one-pass aggregates, the coefficient ONE fixed double
-    // chain over exact int64 counts, support-filtered.
-    "q170_bigram_pmi" -> ((s, dir) =>
-      TextAnalysis.bigramPmi(Tables.documents(s, dir), "text",
-        minCount = BigramPmiMinCount)),
-
-    // Triangle census of the exact-Jaccard dup-pair graph
-    // (degree-ordered node-iterator, equi-joins only) — the
-    // cluster-density audit next to q38's components: triangles =
-    // tight template families, open wedges = chains the transitive
-    // closure glued.
-    "q171_dup_triangles" -> ((s, dir) =>
-      // consumes the session-shared pair graph (sharedDupPairs —
-      // built once per corpus); q11 gates the join itself live
-      Dedup.triangleCount(sharedDupPairs(s, dir), "id_a", "id_b")),
-
-    // Co-located bucketed join: both fact sides written bucketBy the
-    // join key (external tables on a pid-namespaced tmp path, bucket
-    // metadata in the session catalog), so the orderkey join runs with
-    // ZERO Exchange on either side — the pre-shuffled layout a 100 TB
-    // fact×fact pipeline amortizes across every downstream join. The
-    // write cost is paid inside the query on purpose: this is the
-    // layout path's honest end-to-end price (q55/q64 discipline).
-    // ScaleSpec pins the no-shuffle plan property.
-    "q172_bucketed_join" -> ((s, dir) => {
-      val root = tmpRootCleanedOnExit("graft_q172_bucketed", dir)
-      // catalog is session-scoped (in-memory) — only PATHS can collide
-      // across processes, and the tmp root is pid-namespaced
-      Scale.writeBucketed(Tables.lineitem(s, dir)
-        .select("l_orderkey", "l_extendedprice", "l_discount"),
-        "graft_q172_lineitem", "l_orderkey", 8, Some(s"$root/lineitem"))
-      Scale.writeBucketed(Tables.orders(s, dir)
-        .select("o_orderkey", "o_orderpriority"),
-        "graft_q172_orders", "o_orderkey", 8, Some(s"$root/orders"))
-      s.table("graft_q172_lineitem")
-        .join(s.table("graft_q172_orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_items"),
-          dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("revenue"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // Blocking-quality audit (the record-linkage pair-completeness /
-    // reduction-ratio protocol): q147's sorted-neighborhood run at
-    // threshold 0 IS the raw candidate generator, scored against the
-    // exact shingle-Jaccard truth (q11). One row: how many true pairs
-    // the blocking would catch, at what fraction of the n²/2 pair
-    // space — the report read before trusting any window/block
-    // parameter at 100×. All counts exact int64; the two rates are
-    // final double divisions.
-    "q173_blocking_audit" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val cand = Dedup.sortedNeighborhood(docs, "doc_id", "text",
-          SnmWindow, SnmPrefixLen, SnmKeyLen, minJaccardPct = 0)
-        .select(least(col("a"), col("b")).as("pa"),
-          greatest(col("a"), col("b")).as("pb"))
-        .distinct().persist()
-      val truth = sharedDupPairs(s, dir)
-        .select(col("id_a").as("pa"), col("id_b").as("pb")).persist()
-      val caught = truth.join(cand, Seq("pa", "pb"), "left_semi")
-      val out = docs.agg(count(lit(1)).as("n_docs"))
-        .crossJoin(broadcast(cand.agg(count(lit(1)).as("n_candidates"))))
-        .crossJoin(broadcast(truth.agg(count(lit(1)).as("n_true_pairs"))))
-        .crossJoin(broadcast(caught.agg(count(lit(1)).as("n_caught"))))
-        .select(col("n_docs"), col("n_candidates"), col("n_true_pairs"),
-          col("n_caught"),
-          (col("n_caught").cast("double") /
-            col("n_true_pairs").cast("double")).as("pair_completeness"),
-          (col("n_candidates").cast("double") /
-            intDiv(col("n_docs") * (col("n_docs") - 1), lit(2L))
-              .cast("double")).as("candidate_fraction"))
-      Dedup.materializeAndRelease(out, cand, truth)
-    }),
-
-    // 2-D Pareto frontier of the documents corpus on (chars, distinct
-    // tokens) — the "longest docs with the richest vocabulary" skyline,
-    // computed via per-x max + running max over the distinct-x
-    // aggregate, NOT an n² dominance join.
-    "q174_pareto_frontier" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"),
-        col("n_chars"),
-        size(array_distinct(tokens(col("text")))).cast("long")
-          .as("n_types"))
-      operators.Profile.paretoFrontier(docs, "doc_id", "n_chars",
-        "n_types")
-    }),
-
-    // CUSUM level-shift changepoint per event type: the day maximizing
-    // the |cumulative deviation from the series mean|, exact through
-    // the n_days-scaled int64 drift (one double division after the
-    // argmax). Complements q118's local spike z-scores.
-    "q175_cusum_changepoint" -> ((s, dir) =>
-      operators.EventAnalytics.cusumChangepoint(
-        Tables.events(s, dir), "ts", "event_type")),
-
-    // Median/MAD robust outlier audit of document lengths per source —
-    // exact interpolated medians (0.25-multiple rationals, no rounding
-    // needed), engine-exact k·MAD compare.
-    "q177_robust_outliers" -> ((s, dir) =>
-      operators.Profile.robustOutliers(
-        Tables.documents(s, dir), "source", "n_chars", MadK)),
-
-    // Frequent contiguous event-type trigrams with occurrence AND
-    // distinct-entity support — sequence mining one window pass deep,
-    // no per-position self-join.
-    "q179_event_trigrams" -> ((s, dir) =>
-      operators.EventAnalytics.eventTrigrams(Tables.events(s, dir),
-        "user_id", "ts", "event_type", "event_id", TrigramMinSupport)),
-
-    // Rolling 7-day volume↔value Pearson per event type — int64-gated
-    // (quantized value sums), one final double chain per window.
-    "q176_rolling_corr" -> ((s, dir) =>
-      operators.EventAnalytics.rollingCorrelation(
-        Tables.events(s, dir), "ts", "event_type", "value",
-        RollCorrDays, RollCorrQuant)),
-
-    // Deterministic weighted systematic sample of the corpus by
-    // char mass — two-phase distributed prefix sum, zero randomness,
-    // inclusion ∝ weight.
-    "q178_systematic_sample" -> ((s, dir) =>
-      operators.Curation.systematicSample(
-        Tables.documents(s, dir), "doc_id", "n_chars",
-        SampleStrideChars)),
-
-    // Per-node local clustering coefficient of the exact-Jaccard
-    // dup-pair graph — q171's census drilled to each node's
-    // neighborhood density.
-    "q180_local_clustering" -> ((s, dir) =>
-      Dedup.localClustering(sharedDupPairs(s, dir), "id_a", "id_b")),
-
-    // Record-linkage agreement-pattern audit (the Fellegi-Sunter
-    // pattern table with exact-Jaccard ground truth): SNM candidates
-    // scored by (lang, source, length-band) agreement bits; per
-    // pattern, pair count, true-dup count, and match rate — the table
-    // that says which blocking evidence actually predicts duplication.
-    "q181_linkage_agreement" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val cand = Dedup.sortedNeighborhood(docs, "doc_id", "text",
-          SnmWindow, SnmPrefixLen, SnmKeyLen, minJaccardPct = 0)
-        .select(least(col("a"), col("b")).as("pa"),
-          greatest(col("a"), col("b")).as("pb"))
-        .distinct()
-      val attrs = docs.select(col("doc_id"), col("lang"), col("source"),
-        intDiv(col("n_chars"), lit(LinkLenBandChars)).as("band"))
-      val truth = sharedDupPairs(s, dir).select(col("id_a").as("pa"),
-        col("id_b").as("pb"), lit(1L).as("is_true"))
-      val out = cand
-        .join(attrs.select(col("doc_id").as("pa"), col("lang").as("la"),
-          col("source").as("sa"), col("band").as("ba")), "pa")
-        .join(attrs.select(col("doc_id").as("pb"), col("lang").as("lb"),
-          col("source").as("sb"), col("band").as("bb")), "pb")
-        .join(truth, Seq("pa", "pb"), "left")
-        .select((when(col("la") === col("lb"), 4L).otherwise(0L) +
-            when(col("sa") === col("sb"), 2L).otherwise(0L) +
-            when(col("ba") === col("bb"), 1L).otherwise(0L))
-            .as("agreement"),
-          coalesce(col("is_true"), lit(0L)).as("is_true"))
-        .groupBy("agreement")
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(col("is_true")).as("n_true"))
-        .select(col("agreement"), col("n_pairs"), col("n_true"),
-          (col("n_true").cast("double") / col("n_pairs").cast("double"))
-            .as("match_rate"))
-        .orderBy(col("agreement").desc)
-      Dedup.materializeAndRelease(out)
-    }),
-
-    // Power-user curve: entities by distinct-active-day count, with
-    // the ≥k cumulative the power-user threshold is read off.
-    "q182_power_user_curve" -> ((s, dir) =>
-      operators.EventAnalytics.powerUserCurve(Tables.events(s, dir),
-        "user_id", "ts")),
-
-    // Lag-1..7 autocorrelation of daily volume per event type —
-    // int64-exact moments, one rounded sqrt chain per (type, lag).
-    "q183_daily_acf" -> ((s, dir) =>
-      operators.EventAnalytics.dailyAutocorrelation(
-        Tables.events(s, dir), "ts", "event_type", AcfMaxLag)),
-
-    // Funnel step-to-step latency over q108's greedy-earliest machine:
-    // converting users, min/max (exact µs) and mean gap per step pair.
-    "q184_funnel_latency" -> ((s, dir) =>
-      operators.EventAnalytics.funnelStepLatency(Tables.events(s, dir),
-        "user_id", "ts", "event_type",
-        steps = Seq("view", "click", "purchase"))),
-
-    // Session entry→exit matrix under the shared 30-min gap: the
-    // landing/bounce table, single-event diagonal broken out.
-    "q185_session_entry_exit" -> ((s, dir) =>
-      operators.EventAnalytics.sessionEntryExit(Tables.events(s, dir),
-        "user_id", "ts", "event_type", "event_id", SessionGapMicros)),
-
-    // TPC-H Q8-shape market share: per order-year, each supplier
-    // nation's share of ASIA-customer revenue in one part type.
-    // Nation/region/part are genuine fixed-cardinality dims
-    // (broadcast); supplier/customer/orders grow with the corpus — no
-    // hints, AQE sizes them (BHJ at bench SF, SMJ at 100×). Shares
-    // divide two exact decimal sums once, at |years|×|nations| rows.
-    "q186_market_share" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-        .select("l_orderkey", "l_partkey", "l_suppkey",
-          "l_extendedprice", "l_discount")
-      val p = Tables.part(s, dir)
-        .filter(col("p_type") === MarketSharePartType).select("p_partkey")
-      val sup = Tables.supplier(s, dir).select("s_suppkey", "s_nationkey")
-      val supNat = Tables.nation(s, dir)
-        .select(col("n_nationkey").as("sn_key"), col("n_name").as("nation"))
-      val cust = Tables.customer(s, dir).select("c_custkey", "c_nationkey")
-      val custNatAsia = Tables.nation(s, dir)
-        .join(broadcast(Tables.region(s, dir)
-            .filter(col("r_name") === MarketShareRegion)),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("n_nationkey").as("cn_key"))
-      val ord = Tables.orders(s, dir)
-        .select("o_orderkey", "o_custkey", "o_orderdate")
-      val rev = li
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .join(sup, col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(supNat), col("s_nationkey") === col("sn_key"))
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(cust, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(custNatAsia), col("c_nationkey") === col("cn_key"))
-        .groupBy(year(col("o_orderdate")).as("o_year"), col("nation"))
-        .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(30,6)")).as("revd"))
-      val yearTot = rev.groupBy(col("o_year").as("yt"))
-        .agg(sum(col("revd")).as("totd"))
-      rev.join(broadcast(yearTot), col("o_year") === col("yt"))
-        .select(col("o_year").cast("long").as("o_year"), col("nation"),
-          col("revd").cast("double").as("revenue"),
-          (col("revd").cast("double") / col("totd").cast("double"))
-            .as("mkt_share"))
-        .orderBy("o_year", "nation")
-    }),
-
-    // TPC-H Q21-shape "supplier who held up the order": in orders
-    // with ≥2 suppliers, the UNIQUE supplier whose latest shipment is
-    // the order's latest. Two orderkey-keyed aggregates + one keyed
-    // join — never a per-step self-join of lineitem; supplier dim
-    // joins the tiny per-winner count table (AQE, no hint: supplier
-    // grows with the corpus).
-    "q187_waiting_suppliers" -> ((s, dir) => {
-      val g1 = Tables.lineitem(s, dir)
-        .groupBy(col("l_orderkey"), col("l_suppkey"))
-        .agg(max(col("l_shipdate")).as("sm"))
-      val g2 = g1.groupBy(col("l_orderkey"))
-        .agg(count(lit(1)).as("ns"), max(col("sm")).as("om"))
-        .filter(col("ns") >= 2)
-      val winners = g1
-        .join(g2, Seq("l_orderkey"))
-        .filter(col("sm") === col("om"))
-        .groupBy(col("l_orderkey"))
-        .agg(count(lit(1)).as("n_at_max"), max(col("l_suppkey")).as("sk"))
-        .filter(col("n_at_max") === 1)
-        .groupBy(col("sk")).agg(count(lit(1)).as("n_held_orders"))
-      winners
-        .join(Tables.supplier(s, dir).select("s_suppkey", "s_name"),
-          col("sk") === col("s_suppkey"))
-        .select(col("s_name"), col("n_held_orders"))
-        .orderBy(col("n_held_orders").desc, col("s_name"))
-    }),
-
-    // TPC-H Q17-shape small-quantity revenue per brand: items under
-    // 20% of their part's average quantity, the avg compare
-    // division-free in exact int64 (5·q·n < Σq — quantities are
-    // integral, pinned by the twin's cast). Per-part stats are one
-    // partkey-keyed aggregate joined back to the fact (AQE; part dim
-    // broadcast for the brand label).
-    "q188_small_quantity_revenue" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-        .select(col("l_partkey"), col("l_quantity").cast("long").as("ql"),
-          col("l_extendedprice"))
-      val stats = li.groupBy(col("l_partkey").as("pk"))
-        .agg(count(lit(1)).as("n"), sum(col("ql")).as("sq"))
-      li.join(stats, col("l_partkey") === col("pk"))
-        .filter(lit(5L) * col("ql") * col("n") < col("sq"))
-        .join(broadcast(Tables.part(s, dir).select("p_partkey", "p_brand")),
-          col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(count(lit(1)).as("n_items"),
-          dsum(col("l_extendedprice")).as("revenue"))
-        .orderBy("p_brand")
-    }),
-
-    // Pairwise label-centroid cosine over the embedding corpus — the
-    // class-geometry audit, exact integer dot/norms, one rounded sqrt
-    // chain per label pair.
-    "q189_label_centroid_cosine" -> ((s, dir) =>
-      operators.Similarity.labelCentroidCosine(
-        Tables.embeddings(s, dir), "label", "embedding")),
-
-    // Degree assortativity of the exact-Jaccard dup-pair graph — one
-    // row; division of two exact decimal moments.
-    "q190_degree_assortativity" -> ((s, dir) =>
-      Dedup.degreeAssortativity(sharedDupPairs(s, dir), "id_a", "id_b")),
-
-    // Repeat-purchase report per market segment: customers, repeaters,
-    // orders/customer, and the mean inter-order gap in days — the gap
-    // fold is one custkey-keyed window (exact int day diffs), the two
-    // means are one IEEE divide each at |segments| rows.
-    "q191_repeat_purchase" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      val perCust = Tables.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderdate"), col("o_orderkey"))
-        .withColumn("gap_days",
-          datediff(col("o_orderdate"), lag(col("o_orderdate"), 1).over(w))
-            .cast("long"))
-        .groupBy("o_custkey")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("gap_days")).as("sum_gap"),
-          count(col("gap_days")).as("n_gaps"))
-      perCust
-        .join(Tables.customer(s, dir).select("c_custkey", "c_mktsegment"),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_customers"),
-          sum(when(col("n_orders") >= 2, 1L).otherwise(0L))
-            .as("n_repeat_customers"),
-          sum(col("n_orders")).as("n_orders"),
-          sum(col("sum_gap")).as("__sg"), sum(col("n_gaps")).as("__ng"))
-        .select(col("c_mktsegment"), col("n_customers"),
-          col("n_repeat_customers"), col("n_orders"),
-          (col("n_orders").cast("double") /
-            col("n_customers").cast("double")).as("orders_per_customer"),
-          (col("__sg").cast("double") / col("__ng").cast("double"))
-            .as("mean_gap_days"))
-        .orderBy("c_mktsegment")
-    }),
-
-    // Exact-dedup savings per source: removed docs (non-keepers of
-    // their content-hash group, keeper = min id — q10's contract) and
-    // the character mass they free, as corpus-share. Window-ranked
-    // keeper flag: one hash-keyed shuffle, no self-join.
-    "q192_exact_dedup_savings" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val h = sha2(lower(trim(regexp_replace(col("text"),
-        lit("\\s+"), lit(" ")))), 256)
-      val flagged = Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"),
-          h.as("__h"))
-        .withColumn("__keep", col("doc_id") ===
-          min(col("doc_id")).over(Window.partitionBy("__h")))
-      flagged.groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(!col("__keep"), 1L).otherwise(0L)).as("n_removed"),
-          sum(col("n_chars")).as("total_chars"),
-          sum(when(!col("__keep"), col("n_chars")).otherwise(lit(0L)))
-            .as("chars_saved"))
-        .select(col("source"), col("n_docs"), col("n_removed"),
-          col("total_chars"), col("chars_saved"),
-          (col("chars_saved").cast("double") /
-            col("total_chars").cast("double")).as("share_saved"))
-        .orderBy("source")
-    }),
-
-    // Top-3 part brands by revenue within each supplier nation —
-    // the top-k-per-group window shape: revenue is one exact-decimal
-    // aggregate at |nations|×|brands| rows, the rank a window over
-    // that TINY table with a total (revenue DESC, brand) order, so
-    // ties are deterministic. Nation/part are genuine dims
-    // (broadcast); supplier joins unhinted.
-    "q193_top_brands_per_nation" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val rev = Tables.lineitem(s, dir)
-        .select("l_suppkey", "l_partkey", "l_extendedprice", "l_discount")
-        .join(Tables.supplier(s, dir).select("s_suppkey", "s_nationkey"),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(Tables.nation(s, dir)
-          .select(col("n_nationkey"), col("n_name").as("nation"))),
-          col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.part(s, dir)
-          .select("p_partkey", "p_brand")),
-          col("l_partkey") === col("p_partkey"))
-        .groupBy(col("nation"), col("p_brand"))
-        .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(30,6)")).as("revd"))
-      val w = Window.partitionBy("nation")
-        .orderBy(col("revd").desc, col("p_brand").asc)
-      rev.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 3)
-        .select(col("nation"), col("rnk").cast("long").as("rnk"),
-          col("p_brand"), col("revd").cast("double").as("revenue"))
-        .orderBy("nation", "rnk")
-    }),
-
-    // BFS levels over the SNM blocking-candidate graph from its
-    // max-degree hub — the reachability drill-down on the graph q173
-    // audits; exact min-distance levels, fixed BfsMaxDepth rounds.
-    "q194_blocking_graph_bfs" -> ((s, dir) => {
-      val cand = Dedup.sortedNeighborhood(Tables.documents(s, dir),
-        "doc_id", "text", SnmWindow, SnmPrefixLen, SnmKeyLen,
-        minJaccardPct = 0)
-      Dedup.bfsDistances(cand, "a", "b", BfsMaxDepth)
-    }),
-
-    // Next-state Gini impurity per source event type — q111's matrix
-    // condensed to "how predictable is the next step", exact integer
-    // moments (impurity, NOT entropy: entropy would sum ln terms in
-    // engine-dependent order — the q168 lesson).
-    "q195_transition_impurity" -> ((s, dir) =>
-      operators.EventAnalytics.transitionImpurity(Tables.events(s, dir),
-        "user_id", "ts", "event_type", "event_id")),
-
-    // Spend by funnel depth: the DEADLINE funnel (q130's machine —
-    // the uncapped one saturates at depth 3 on this corpus) joined to
-    // per-user value mass (milli-quantized int64, the q176 gate) —
-    // "do users who get further spend more". Two entity-keyed
-    // aggregates, one |depths|-row fold, divides at the end.
-    "q196_depth_value" -> ((s, dir) => {
-      val f = operators.EventAnalytics.funnel(Tables.events(s, dir),
-          "user_id", "ts", "event_type",
-          steps = Seq("view", "click", "purchase"),
-          maxStepGapUs = Some(FunnelDeadlineS * 1000000L))
-        .select(col("user_id"), col("depth"))
-      val v = Tables.events(s, dir)
-        .groupBy(col("user_id").as("u"))
-        .agg(sum(floor(col("value") * lit(RollCorrQuant))).as("vq"))
-      f.join(v, col("user_id") === col("u"))
-        .groupBy(col("depth"))
-        .agg(count(lit(1)).as("n_users"), sum(col("vq")).as("__sv"))
-        .select(col("depth"), col("n_users"),
-          (col("__sv").cast("double") / lit(RollCorrQuant.toDouble))
-            .as("total_value"),
-          (col("__sv").cast("double") /
-            (col("n_users").cast("double") * lit(RollCorrQuant.toDouble)))
-            .as("mean_value_per_user"))
-        .orderBy("depth")
-    }),
-
-    // Fulfilment lead-time distribution: ship-minus-order day lag
-    // histogram per order priority — one orderkey-keyed fact×fact
-    // join (AQE, no hints), exact int day diffs, |priorities|×|lags|
-    // output.
-    "q197_shipping_lag_distribution" -> ((s, dir) =>
-      Tables.lineitem(s, dir).select("l_orderkey", "l_shipdate")
-        .join(Tables.orders(s, dir)
-          .select("o_orderkey", "o_orderdate", "o_orderpriority"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"),
-          datediff(col("l_shipdate"), col("o_orderdate")).cast("long")
-            .as("lag_days"))
-        .agg(count(lit(1)).as("n_items"))
-        .orderBy("o_orderpriority", "lag_days")),
-
-    // Discount-band economics: items, mean quantity (exact int64
-    // sums, one divide) and revenue per percent-of-discount band
-    // (round-half-up banding — the established float quant idiom, so
-    // 0.29 lands in band 29 on BOTH engines).
-    "q198_discount_bands" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .select(floor(col("l_discount") * lit(100) + lit(0.5))
-            .as("discount_pct"),
-          col("l_quantity").cast("long").as("ql"),
-          col("l_extendedprice"), col("l_discount"))
-        .groupBy("discount_pct")
-        .agg(count(lit(1)).as("n_items"),
-          (sum(col("ql")).cast("double") / count(lit(1)).cast("double"))
-            .as("mean_quantity"),
-          dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("revenue"))
-        .orderBy("discount_pct")),
-
-    // Exact document-length quantiles per language by domain
-    // compression — |distinct lengths| ≪ |docs|, so the (lang, length)
-    // dictionary aggregate + integer-threshold cumulative is exact at
-    // any scale (the third quantile leg next to q157's mergeable bins).
-    "q199_length_quantiles" -> ((s, dir) =>
-      operators.Profile.domainQuantiles(Tables.documents(s, dir),
-        "lang", "n_chars", DomainQuantilePcts)),
-
-    // Exact pairwise source vocabulary Jaccard — the corpus-mixing
-    // audit q69 estimates with HLL registers, here exact: the
-    // (source, token) distinct projection joins ITSELF on the token
-    // key (never all-pairs rows), sizes ride a broadcast-side join,
-    // one divide per source pair.
-    "q200_source_vocab_jaccard" -> ((s, dir) => {
-      // session-shared distinct (source, tok) vocabulary (built once
-      // per corpus; tokenization stays live in q65/q85/q86/q146)
-      val tok = sharedSourceVocab(s, dir)
-      val sizes = tok.groupBy(col("source")).agg(count(lit(1)).as("sz"))
-      val inter = tok.select(col("source").as("source_a"), col("tok"))
-        .join(tok.select(col("source").as("source_b"), col("tok")),
-          Seq("tok"))
-        .filter(col("source_a") < col("source_b"))
-        .groupBy("source_a", "source_b")
-        .agg(count(lit(1)).as("n_common"))
-      inter
-        .join(broadcast(sizes.select(col("source").as("source_a"),
-          col("sz").as("na"))), Seq("source_a"))
-        .join(broadcast(sizes.select(col("source").as("source_b"),
-          col("sz").as("nb"))), Seq("source_b"))
-        .select(col("source_a"), col("source_b"), col("n_common"),
-          (col("n_common").cast("double") /
-            (col("na") + col("nb") - col("n_common")).cast("double"))
-            .as("vocab_jaccard"))
-        .orderBy("source_a", "source_b")
-    }),
-
-    // Conversion by spend band: users bucketed by the BIT LENGTH of
-    // their milli-quantized value mass (log2-ish bands from pure
-    // integer string length — bin() agrees char-for-char across
-    // engines; no log() float anywhere), each band's mean deadline-
-    // funnel depth and purchase-conversion rate. "Do high spenders
-    // convert more", with every moment exact until the two divides.
-    "q201_value_band_conversion" -> ((s, dir) => {
-      val f = operators.EventAnalytics.funnel(Tables.events(s, dir),
-          "user_id", "ts", "event_type",
-          steps = Seq("view", "click", "purchase"),
-          maxStepGapUs = Some(FunnelDeadlineS * 1000000L))
-        .select(col("user_id"), col("depth"))
-      val v = Tables.events(s, dir)
-        .groupBy(col("user_id").as("u"))
-        .agg(sum(floor(col("value") * lit(RollCorrQuant))).as("vq"))
-        .select(col("u"),
-          when(col("vq") > 0, length(bin(col("vq"))).cast("long"))
-            .otherwise(0L).as("value_band"))
-      f.join(v, col("user_id") === col("u"))
-        .groupBy(col("value_band"))
-        .agg(count(lit(1)).as("n_users"),
-          sum(col("depth").cast("long")).as("__sd"),
-          sum(when(col("depth") === 3, 1L).otherwise(0L)).as("__nc"))
-        .select(col("value_band"), col("n_users"),
-          (col("__sd").cast("double") / col("n_users").cast("double"))
-            .as("mean_depth"),
-          (col("__nc").cast("double") / col("n_users").cast("double"))
-            .as("conversion_rate"))
-        .orderBy("value_band")
-    }),
-
-    // Daily new-vs-returning actives: each day's distinct users split
-    // by whether it is their first-ever day — growth accounting from
-    // two entity-keyed aggregates, exact counts, one divide.
-    "q202_new_vs_returning" -> ((s, dir) => {
-      val days = Tables.events(s, dir)
-        .select(col("user_id").as("u"), to_date(col("ts")).as("d"))
-        .distinct()
-      val first = days.groupBy("u").agg(min(col("d")).as("fd"))
-      days.join(first, Seq("u"))
-        .groupBy(col("d"))
-        .agg(count(lit(1)).as("n_active"),
-          sum(when(col("d") === col("fd"), 1L).otherwise(0L))
-            .as("n_new"))
-        .select(date_format(col("d"), "yyyy-MM-dd").as("day"),
-          col("n_active"), col("n_new"),
-          (col("n_active") - col("n_new")).as("n_returning"),
-          ((col("n_active") - col("n_new")).cast("double") /
-            col("n_active").cast("double")).as("returning_share"))
-        .orderBy("day")
-    }),
-
-    // Exact inter-order gap quantiles per market segment — q191's gap
-    // machinery through the q199 domain-compressed quantile operator
-    // (day gaps compress hard: |distinct| ≪ |orders|).
-    "q203_order_gap_quantiles" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      val gaps = Tables.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderdate"), col("o_orderkey"))
-        .withColumn("gap_days",
-          datediff(col("o_orderdate"), lag(col("o_orderdate"), 1).over(w))
-            .cast("long"))
-        .filter(col("gap_days").isNotNull)
-        .join(Tables.customer(s, dir).select("c_custkey", "c_mktsegment"),
-          col("o_custkey") === col("c_custkey"))
-      operators.Profile.domainQuantiles(gaps, "c_mktsegment", "gap_days",
-        DomainQuantilePcts)
-    }),
-
-    // TPC-H Q13-shape order-count distribution (VERDICT r10 item 6):
-    // the OUTER-join + COUNT grouping plan shape the suite lacked —
-    // every customer must survive the join so zero-order customers
-    // land in the c_count = 0 bucket, which is exactly what an inner
-    // join (or a pre-join filter on customers) silently destroys.
-    // The order-class predicate filters the ORDERS side only
-    // (equivalent to Q13's ON-clause comment filter). customer and
-    // orders both grow linearly → no broadcast hint, AQE decides;
-    // count(o_orderkey) ignores the outer join's nulls by definition.
-    "q204_order_count_distribution" -> ((s, dir) => {
-      // 100× shape note (r12): the naive Q13 form outer-joins the RAW
-      // orders fact onto customer — but AQE's OptimizeSkewedJoin can
-      // only split the PRESERVED side of an outer join, so a
-      // power-law custkey (one whale customer with millions of
-      // orders) serializes on one reducer with no runtime escape.
-      // This form pre-aggregates orders per custkey FIRST — partial
-      // (map-side) aggregation absorbs any key skew before the
-      // shuffle — and outer-joins the ≤|customers|-row count table,
-      // where both sides carry ONE row per key and skew cannot
-      // exist. Same result: count per customer, 0 for order-less
-      // customers. (custkey_skew_aqe stresses the inner sub-shape;
-      // the outer-join non-splittability is why this query does not
-      // lean on AQE.)
-      val ords = Tables.orders(s, dir)
-        .filter(col("o_orderpriority") =!= Q13ExcludedPriority)
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders"))
-      Tables.customer(s, dir).select("c_custkey")
-        .join(ords, col("c_custkey") === col("o_custkey"), "left_outer")
-        .select(coalesce(col("n_orders"), lit(0L)).as("c_count"))
-        .groupBy("c_count")
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
-
-    // TPC-H Q20-shape nested semi-join composition (VERDICT r10 item
-    // 6): suppliers whose all-time shipped quantity of name-prefix
-    // parts exceeds Q20CapacityMult × their shipments inside the
-    // target year — the availqty > ½·yearqty test with capacity
-    // DERIVED from lineitem history (no partsupp table in this
-    // corpus, the q163 precedent). Plan shape: part-prefix IN-
-    // subquery (broadcast dim semi-join) feeding a (supp, part)
-    // aggregate whose BOTH sums fold in ONE pass (conditional sum —
-    // no second scan for the window), then a supplier semi-join on
-    // the tiny qualifying-key set (AQE broadcasts it at runtime).
-    // Quantities sum in exact DECIMAL(30,6); the capacity test is an
-    // exact decimal compare — no division, no float boundary.
-    "q205_excess_capacity_suppliers" -> ((s, dir) => {
-      val pset = Tables.part(s, dir)
-        .filter(col("p_name").startsWith(Q20PartPrefix))
-        .select("p_partkey")
-      val sp = Tables.lineitem(s, dir)
-        .join(broadcast(pset), col("l_partkey") === col("p_partkey"),
-          "left_semi")
-        .groupBy(col("l_suppkey"), col("l_partkey"))
-        .agg(sum(col("l_quantity").cast("decimal(30,6)")).as("qty_all"),
-          sum(when(col("l_shipdate") >= to_timestamp(lit(Q20YearFrom)) &&
-              col("l_shipdate") < to_timestamp(lit(Q20YearTo)),
-            col("l_quantity")).otherwise(lit(0.0))
-            .cast("decimal(30,6)")).as("qty_win"))
-        .filter(col("qty_win") > 0 &&
-          col("qty_all") > col("qty_win") * lit(Q20CapacityMult))
-      Tables.supplier(s, dir)
-        .join(sp.select(col("l_suppkey")).distinct(),
-          col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .select(col("s_suppkey"), col("s_name"), col("s_acctbal"))
-        .orderBy("s_suppkey")
-    }),
-
-    // TPC-H Q6-shape forecast revenue: the pure scan-filter-aggregate
-    // plan — no join at all; the discount/quantity band and the year
-    // cut must all PUSH DOWN to the parquet scan, and the single
-    // decimal-exact sum partial-aggregates map-side to one row per
-    // partition. The simplest plan in the suite, present precisely so
-    // the gate covers the no-shuffle degenerate shape.
-    "q207_forecast_revenue" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= to_timestamp(lit(TpchYearFrom)) &&
-          col("l_shipdate") < to_timestamp(lit(TpchYearTo)) &&
-          col("l_discount") >= Q6DiscLo && col("l_discount") <= Q6DiscHi &&
-          col("l_quantity") < Q6MaxQty)
-        .agg(count(lit(1)).as("n_lines"),
-          dsum(col("l_extendedprice") * col("l_discount"))
-            .as("revenue"))),
-
-    // TPC-H Q9-shape product profit by nation and year: name-pattern
-    // part cut (broadcast dim), supplier→nation for the grouping
-    // (nation broadcast, supplier left to AQE), profit = revenue minus
-    // a retail-derived cost (no partsupp table — q205 precedent). The
-    // per-row amount is ONE fixed IEEE product chain evaluated in the
-    // same order by both engines, then decimal-exact summed.
-    "q208_product_profit" -> ((s, dir) => {
-      val p = Tables.part(s, dir)
-        .filter(col("p_name").contains(Q9NamePattern))
-        .select("p_partkey", "p_retailprice")
-      val sup = Tables.supplier(s, dir)
-        .join(broadcast(Tables.nation(s, dir)
-          .select("n_nationkey", "n_name")),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name").as("nation"))
-      Tables.lineitem(s, dir)
-        .select("l_partkey", "l_suppkey", "l_shipdate",
-          "l_extendedprice", "l_discount", "l_quantity")
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .join(sup, col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("nation"),
-          year(col("l_shipdate")).cast("long").as("o_year"))
-        .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")) -
-          col("l_quantity") * col("p_retailprice") * lit(0.1))
-          .as("sum_profit"))
-        .orderBy(col("nation"), col("o_year").desc)
-    }),
-
-    // TPC-H Q10-shape returned-item losses: customers ranked by the
-    // revenue of their 'R'-flagged lines against quarter-window
-    // orders — fact×fact join left to AQE, customer join on the
-    // SHRUNKEN aggregate side, nation broadcast. Deterministic top-20
-    // (revenue desc, then custkey).
-    "q209_returned_revenue" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= to_timestamp(lit(TpchQtrFrom)) &&
-          col("o_orderdate") < to_timestamp(lit(TpchQtrTo)))
-        .select("o_orderkey", "o_custkey")
-      val l = Tables.lineitem(s, dir)
-        .filter(col("l_returnflag") === "R")
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-      val rev = l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey"))
-        .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .as("revenue"))
-      rev.join(Tables.customer(s, dir)
-          .select("c_custkey", "c_name", "c_nationkey", "c_acctbal"),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, dir)
-          .select("n_nationkey", "n_name")),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
-          col("n_name"), col("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey").asc)
-        .limit(20)
-    }),
-
-    // TPC-H Q11-shape important inventory: per-part shipped-quantity
-    // mass from ONE nation's suppliers, kept when it exceeds
-    // 1/Q11FracDen of that nation's total — the HAVING-vs-global-
-    // scalar shape. The filter is the division-free exact-decimal
-    // compare qv·den > total against a 1-row broadcast rider (the
-    // q166 above-mean discipline); the double `value` column is
-    // display-only, AFTER the exact filter decided membership.
-    "q210_important_parts" -> ((s, dir) => {
-      val natSup = Tables.supplier(s, dir)
-        .join(broadcast(Tables.nation(s, dir)
-          .filter(col("n_name") === Q11Nation).select("n_nationkey")),
-          col("s_nationkey") === col("n_nationkey"))
-        .select("s_suppkey")
-      val qv = Tables.lineitem(s, dir).select("l_partkey", "l_suppkey",
-          "l_quantity")
-        .join(natSup, col("l_suppkey") === col("s_suppkey"), "left_semi")
-        .groupBy(col("l_partkey"))
-        .agg(sum(col("l_quantity").cast("decimal(30,6)")).as("qvd"))
-      val total = qv.agg(sum(col("qvd")).as("totald"))
-      qv.crossJoin(broadcast(total))
-        .filter(col("qvd") * lit(Q11FracDen) > col("totald"))
-        .select(col("l_partkey").as("p_partkey"),
-          col("qvd").cast("double").as("value"))
-        .orderBy(col("value").desc, col("p_partkey").asc)
-    }),
-
-    // TPC-H Q12-shape shipping-lag priority audit: per 30-day
-    // ship-after-order lag band, how many lines belong to critical
-    // (URGENT/HIGH) orders vs the rest — the conditional-count split
-    // over a fact×fact join. Lag bands are exact integer day
-    // arithmetic (datediff → intDiv); counts exact int64.
-    "q211_lag_priority" -> ((s, dir) => {
-      val o = Tables.orders(s, dir).select("o_orderkey", "o_orderdate",
-        "o_orderpriority")
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= to_timestamp(lit(TpchYearFrom)) &&
-          col("l_shipdate") < to_timestamp(lit(TpchYearTo)))
-        .select("l_orderkey", "l_shipdate")
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .select(intDiv(datediff(col("l_shipdate"), col("o_orderdate"))
-          .cast("long"), lit(Q12BandDays.toLong)).as("lag_band"),
-          col("o_orderpriority"))
-        .groupBy("lag_band")
-        .agg(sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"),
-            lit(1L)).otherwise(lit(0L))).as("high_line_count"),
-          sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"),
-            lit(0L)).otherwise(lit(1L))).as("low_line_count"))
-        .orderBy("lag_band")
-    }),
-
-    // TPC-H Q2-shape minimum-cost supplier per part: Q2's correlated
-    // MIN-subquery expressed as the SCALABLE window form — distinct
-    // (part, supplier) pairs derived from lineitem (no partsupp),
-    // supplier attributes joined once, then ONE row_number window per
-    // part keyed on (acctbal asc, suppkey asc) picks the cheapest
-    // deterministically. No correlated re-scan per part, no self-join.
-    "q212_min_cost_supplier" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val pcut = Tables.part(s, dir)
-        .filter(col("p_type") === Q2PartType && col("p_size") <= Q2MaxSize)
-        .select("p_partkey", "p_brand", "p_size")
-      val ps = Tables.lineitem(s, dir).select("l_partkey", "l_suppkey")
-        .join(broadcast(pcut), col("l_partkey") === col("p_partkey"))
-        .select("p_partkey", "p_brand", "p_size", "l_suppkey").distinct()
-      val w = Window.partitionBy("p_partkey")
-        .orderBy(col("s_acctbal").asc, col("s_suppkey").asc)
-      ps.join(Tables.supplier(s, dir)
-          .select("s_suppkey", "s_name", "s_acctbal"),
-          col("l_suppkey") === col("s_suppkey"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("p_partkey"), col("p_brand"), col("p_size"),
-          col("s_suppkey"), col("s_name"), col("s_acctbal"))
-        .orderBy(col("s_acctbal").desc, col("p_partkey").asc)
-    }),
-
-    // Two-step transition reachability: M² of the bigram counts —
-    // "what follows X two clicks later, through ANY middle step". The
-    // |types|²-row matrix self-joins on the middle type (nothing
-    // corpus-sized); path products fold in DECIMAL(38,0).
-    "q213_two_step_transitions" -> ((s, dir) =>
-      operators.EventAnalytics.twoStepTransitions(Tables.events(s, dir),
-        "user_id", "ts", "event_type", "event_id")),
-
-    // Hour-of-day activity profile per event type — the diurnal-shape
-    // audit; exact cell counts, one int64/int64 divide per share.
-    "q214_hourly_profile" -> ((s, dir) =>
-      operators.EventAnalytics.hourlyActivityProfile(Tables.events(s, dir),
-        "ts", "event_type")),
-
-    // Effective dimensionality (participation ratio over per-dim
-    // variances) of the embedding corpus — "how much of the 64-dim
-    // space is actually used"; exact milli-quantized moments, one
-    // double chain, round-9.
-    "q215_effective_dims" -> ((s, dir) =>
-      operators.Similarity.effectiveDimensionality(
-        Tables.embeddings(s, dir), "embedding")),
-
-    // Supplier delivery-SLA report: per-supplier late-line rate
-    // (ship more than LateShipDays days after order — exact integer
-    // day diff, q167's lateness definition), floored at SlaMinLines
-    // shipped lines. Fact×fact join left to AQE; the supplier name
-    // joins onto the |suppliers|-row aggregate, not the fact table.
-    "q216_supplier_sla" -> ((s, dir) => {
-      val o = Tables.orders(s, dir).select("o_orderkey", "o_orderdate")
-      val rated = Tables.lineitem(s, dir)
-        .select("l_orderkey", "l_suppkey", "l_shipdate")
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_suppkey"))
-        .agg(count(lit(1)).as("n_lines"),
-          sum(when(datediff(col("l_shipdate"), col("o_orderdate")) >
-              lit(LateShipDays),
-            lit(1L)).otherwise(lit(0L))).as("n_late"))
-        .filter(col("n_lines") >= SlaMinLines)
-      rated
-        .join(Tables.supplier(s, dir).select("s_suppkey", "s_name"),
-          col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"), col("n_lines"),
-          col("n_late"),
-          // ORDER BY a raw double ratio is EXEMPT from the repo's
-          // "never order by a raw float sum" rule here (VERDICT r11
-          // nit): late_rate is ONE IEEE divide of two exact int64
-          // operands — a single correctly-rounded operation both
-          // engines evaluate identically — unlike a float SUM, whose
-          // value depends on accumulation order. The suppkey tiebreak
-          // still pins equal-rate rows.
-          (col("n_late").cast("double") / col("n_lines").cast("double"))
-            .as("late_rate"))
-        .orderBy(col("late_rate").desc, col("s_suppkey").asc)
-    }),
-
-    // Session co-occurrence lift per event-type pair — the
-    // market-basket audit on the session dimension (which behaviors
-    // attract within one visit), exact session counts, one rounded
-    // divide per |types|² cell.
-    "q217_session_lift" -> ((s, dir) =>
-      operators.EventAnalytics.sessionCooccurrenceLift(
-        Tables.events(s, dir), "user_id", "ts", "event_type",
-        "event_id", SessionGapMicros)),
-
-    // Sampled-recall ANN audit (VERDICT r10 item 4) — the protocol
-    // that SURVIVES 100×, next to q144's full-exact gate which by
-    // design cannot: probes are a deterministic md5-coin sample
-    // (KnnSampleSalt/Hex, the q73 idiom), the exact side is
-    // sample×corpus instead of corpus² (each sampled probe still
-    // ranks against the whole corpus, so its exact neighbor rows are
-    // IDENTICAL to the full audit's rows for that probe), and the
-    // approx side probes only the sample against the full LSH index.
-    // Gates: recall floor and vote-MAE ceiling as q144, plus n_probes
-    // hash-gated against the twin's own md5 count — the coin itself
-    // is verified cross-engine, not assumed.
-    "q206_knn_recall_sampled" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val coin = Some((KnnSampleSalt, KnnSampleHex))
-      val exactN = Similarity.knnNeighborsExact(emb, "vec_id", "embedding",
-        5, probeCoin = coin).persist()
-      val approxN = Similarity.knnNeighborsApprox(emb, "vec_id", "embedding",
-        5, tables = 16, multiProbe = true, probeCoin = coin).persist()
-      val recall = exactN.select(col("vec_id"), col("nbr_id"))
-        .join(approxN.select(col("vec_id"), col("nbr_id"), lit(1).as("hit")),
-          Seq("vec_id", "nbr_id"), "left")
-        .agg((count(col("hit")).cast("double") / count(lit(1))).as("recall"))
-      val exactA = Similarity.labelVote(exactN, emb, "vec_id", "label", 5)
-      val approxA = Similarity.labelVote(approxN, emb, "vec_id", "label", 5)
-      val out = exactA.select(col("vec_id"), col("agree_rate").as("er"))
-        .join(approxA.select(col("vec_id"), col("agree_rate").as("ar")),
-          "vec_id")
-        .agg(count(lit(1)).as("n_probes"),
-          avg(abs(col("ar") - col("er"))).as("mae"))
-        .crossJoin(broadcast(recall))
-        .select(col("n_probes"),
-          (col("recall") >= 0.8).as("recall_ok"),
-          (col("mae") <= 0.1).as("vote_mae_ok"))
-      Dedup.materializeAndRelease(out, exactN, approxN)
-    })
-  )
-
-  /** DuckDB replay of [[operators.Similarity.kmeans]]: the q102
-    * (iterative-twin) discipline applied to Lloyd's algorithm — every
-    * round's assignment (exact DECIMAL distances, (d2, cluster) tie
-    * order) and integral-divide centroid update is unrolled as CTEs,
-    * so the trainer is hash-gated end to end, not rows-only. */
-  /** q147 twin, generated from the SAME SnmWindow/SnmPrefixLen/
-    * SnmKeyLen/SnmMinJaccardPct constants as the Spark call (ADVICE r9
-    * rule): lead(j) per neighbor offset inside the (block, key, id)
-    * window, exact distinct-token Jaccard, integer threshold.
-    */
-  private def snmTwin: String = {
-    val leads = (1 until SnmWindow).map(j =>
-      s"  lead(doc_id, $j) OVER w AS id$j, lead(toks, $j) OVER w AS tk$j")
-      .mkString(",\n")
-    val branches = (1 until SnmWindow).map(j =>
-      s"""  SELECT doc_id AS a, id$j AS b,
-         |    len(list_intersect(toks, tk$j)) AS inter,
-         |    len(toks) + len(tk$j) - len(list_intersect(toks, tk$j))
-         |      AS union_sz
-         |  FROM l WHERE id$j IS NOT NULL""".stripMargin)
-      .mkString("\n  UNION ALL\n")
-    s"""WITH t AS (SELECT doc_id,
-       |    lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS nt
-       |  FROM documents),
-       |k AS (SELECT doc_id, substr(nt, 1, $SnmKeyLen) AS key,
-       |    substr(nt, 1, $SnmPrefixLen) AS blk,
-       |    list_distinct(string_split(nt, ' ')) AS toks
-       |  FROM t),
-       |l AS (SELECT doc_id, toks,
-       |$leads
-       |  FROM k WINDOW w AS (PARTITION BY blk ORDER BY key, doc_id)),
-       |p AS (
-       |$branches)
-       |SELECT a, b, inter, union_sz,
-       |  round(CAST(inter AS DOUBLE) / CAST(union_sz AS DOUBLE), 9) AS sim
-       |FROM p WHERE inter * 100 >= union_sz * $SnmMinJaccardPct
-       |ORDER BY a, b""".stripMargin
-  }
-
-  /** q149 twin, generated per-edge from the SAME RefAuditEdges list as
-    * the Spark call: one LEFT JOIN against the distinct parent keys,
-    * all four audit measures in one aggregate, edges UNION ALL'd.
-    */
-  private def refAuditTwin: String = {
-    val blocks = RefAuditEdges.map { case (name, child, fk, parent, pk) =>
-      s"""SELECT '$name' AS edge, COUNT(*) AS n_child,
-         |  CAST(SUM(CASE WHEN $fk IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_null_fk,
-         |  CAST(SUM(CASE WHEN $fk IS NOT NULL AND p.__pk IS NULL
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_orphan,
-         |  COUNT(DISTINCT CASE WHEN p.__pk IS NULL THEN $fk END)
-         |    AS n_orphan_keys
-         |FROM $child LEFT JOIN
-         |  (SELECT DISTINCT $pk AS __pk FROM $parent) p ON $fk = p.__pk"""
-        .stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""SELECT * FROM (
-       |$blocks
-       |) ORDER BY edge""".stripMargin
-  }
-
-  /** q150 twin: the identical integer-fixed-point power iterations as
-    * [[graft.operators.EventAnalytics.transitionPageRank]], unrolled
-    * (the kmeansTwin/BPE pattern) — pr and edge weights never leave
-    * int64 until the final display division.
-    */
-  private def pageRankTwin(iters: Int, dampingPct: Int): String = {
-    val rounds = (1 to iters).map { r =>
-      s"""r$r AS (SELECT nd.node,
-         |    CAST(1000000000000 * ${100 - dampingPct} // (100 * nn.n)
-         |      AS BIGINT)
-         |    + CAST($dampingPct * COALESCE(m.in_mass, 0) // 100 AS BIGINT)
-         |      AS pr
-         |  FROM nd CROSS JOIN nn LEFT JOIN (
-         |    SELECT ed.dst AS node,
-         |      CAST(SUM(rp.pr * ed.w // 1000000) AS BIGINT) AS in_mass
-         |    FROM ed JOIN r${r - 1} rp ON ed.src = rp.node GROUP BY 1) m
-         |    ON m.node = nd.node)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH nx AS (SELECT event_type AS src,
-       |    lead(event_type) OVER (PARTITION BY user_id
-       |      ORDER BY ts, event_id) AS dst
-       |  FROM events),
-       |ec AS (SELECT src, dst, COUNT(*) AS cnt FROM nx
-       |  WHERE dst IS NOT NULL GROUP BY 1, 2),
-       |ot AS (SELECT src, CAST(SUM(cnt) AS BIGINT) AS "out" FROM ec
-       |  GROUP BY 1),
-       |ed AS (SELECT ec.src, ec.dst,
-       |    CAST(ec.cnt * 1000000 // ot."out" AS BIGINT) AS w
-       |  FROM ec JOIN ot ON ec.src = ot.src),
-       |nd AS (SELECT DISTINCT event_type AS node FROM events),
-       |nn AS (SELECT COUNT(*) AS n FROM nd),
-       |r0 AS (SELECT node, CAST(1000000000000 // n AS BIGINT) AS pr
-       |  FROM nd CROSS JOIN nn),
-       |$rounds
-       |SELECT node, pr AS pr_fixed,
-       |  round(CAST(pr AS DOUBLE) / 1e12, 9) AS pr
-       |FROM r$iters ORDER BY pr_fixed DESC, node""".stripMargin
-  }
-
-  private def kmeansTwin(k: Int, iters: Int): String = {
-    def assignCte(r: String, c: String): String =
-      s"""d$r AS (SELECT x.vec_id, c.cluster,
-         |    SUM(CAST(x.xi - c.ci AS DECIMAL(38,0)) * (x.xi - c.ci)) AS d2
-         |  FROM x JOIN $c c USING (dim) GROUP BY 1, 2),
-         |a$r AS (SELECT vec_id, cluster, d2 FROM (
-         |    SELECT vec_id, cluster, d2, row_number() OVER
-         |      (PARTITION BY vec_id ORDER BY d2, cluster) AS rn FROM d$r)
-         |  WHERE rn = 1)""".stripMargin
-    val rounds = (0 until iters).map { r =>
-      s"""${assignCte(r.toString, s"c$r")},
-         |u$r AS (SELECT a.cluster, x.dim,
-         |    CAST(SUM(x.xi) AS BIGINT) // COUNT(*) AS ci
-         |  FROM x JOIN a$r a USING (vec_id) GROUP BY 1, 2),
-         |c${r + 1} AS (SELECT c.cluster, c.dim, COALESCE(u.ci, c.ci) AS ci
-         |  FROM c$r c LEFT JOIN u$r u
-         |    ON u.cluster = c.cluster AND u.dim = c.dim)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH x0 AS (SELECT vec_id, unnest(range(len(embedding))) AS dim,
-       |    embedding FROM embeddings),
-       |x AS (SELECT vec_id, CAST(dim AS BIGINT) AS dim,
-       |    CAST(floor(CAST(embedding[dim + 1] AS DOUBLE) * 1e9 + 0.5)
-       |      AS BIGINT) + 2000000000 AS xi
-       |  FROM x0),
-       |seeds AS (SELECT vec_id,
-       |    CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cluster
-       |  FROM (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT $k)),
-       |c0 AS (SELECT s.cluster, x.dim, x.xi AS ci
-       |  FROM x JOIN seeds s USING (vec_id)),
-       |$rounds,
-       |${assignCte("f", s"c$iters")},
-       |s AS (SELECT cluster, COUNT(*) AS n,
-       |    CAST(CAST(CAST(SUM(d2) AS HUGEINT) // 1000000000 AS BIGINT)
-       |      AS DOUBLE) / 1e9 AS sse
-       |  FROM af GROUP BY 1)
-       |SELECT g.cluster, COALESCE(n, 0) AS n, COALESCE(sse, 0.0) AS sse
-       |FROM (SELECT DISTINCT cluster FROM c$iters) g LEFT JOIN s USING (cluster)
-       |ORDER BY cluster""".stripMargin
-  }
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Three kinds of entry: full recomputation
-    * twins (most), recursive-CTE twins (q36/q38), and constant-row
-    * self-oracles for the measured recall gates (q24/q25/q37 — the
-    * real check is computed in-engine against the exact answer; the
-    * constant row just pins schema and "gate passed"). q40 gates the
-    * prefix-df-cap dial against the EXACT pair twin: the capped
-    * algorithm can only miss pairs (never invent them), and on this
-    * corpus it misses none — the hash gate pins that recall=1.0
-    * property per run, and DedupSpec pins capped ⊆ exact in general.
-    */
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" ->
-      s"""SELECT l_returnflag, l_linestatus,
-        |  ${DSUM("l_quantity")} AS sum_qty,
-        |  ${DSUM("l_extendedprice")} AS sum_base_price,
-        |  ${DSUM("l_extendedprice * (1.0 - l_discount)")} AS sum_disc_price,
-        |  ${DSUM("l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)")} AS sum_charge,
-        |  ${DAVG("l_quantity")} AS avg_qty,
-        |  ${DAVG("l_extendedprice")} AS avg_price,
-        |  ${DAVG("l_discount")} AS avg_disc,
-        |  COUNT(*) AS count_order
-        |FROM lineitem
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q02_windowed_buckets" ->
-      s"""SELECT date_trunc('minute', ts) AS minute_ts, user_id,
-        |  ${DSUM("CASE WHEN value > 75.0 AND event_type = 'purchase' THEN value ELSE 0.0 END")} AS vol_big_purchase,
-        |  ${DSUM("CASE WHEN value > 75.0 AND event_type <> 'purchase' THEN value ELSE 0.0 END")} AS vol_big_other,
-        |  ${DSUM("CASE WHEN value <= 75.0 AND event_type = 'purchase' THEN value ELSE 0.0 END")} AS vol_small_purchase,
-        |  ${DSUM("CASE WHEN value <= 75.0 AND event_type <> 'purchase' THEN value ELSE 0.0 END")} AS vol_small_other,
-        |  COUNT(CASE WHEN event_type = 'error' THEN 1 END) AS n_error,
-        |  COUNT(*) AS n_events
-        |FROM events
-        |GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-
-    "q03_bucketed_agg_menu" ->
-      s"""SELECT date_trunc('hour', ts) AS bucket_ts,
-        |  ${DAVG("value")} AS mean_value,
-        |  max(value) AS max_value,
-        |  min(value) AS min_value,
-        |  arg_min(value, ts) AS first_value,
-        |  arg_max(value, ts) AS last_value,
-        |  ${DSUM("value")} AS sum_value,
-        |  COUNT(value) AS count_value,
-        |  median(value) AS median_value,
-        |  max(value) - min(value) AS spread_value
-        |FROM events
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-
-    "q04_tag_filter_groupby" ->
-      s"""SELECT event_type,
-        |  ${DSUM("value")} AS sum_value,
-        |  COUNT(value) AS count_value
-        |FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-05 00:00:00'
-        |  AND ts < TIMESTAMP '2024-01-20 00:00:00'
-        |  AND user_id IN (0,1,2,3,4,5,6,7)
-        |  AND event_type IN ('purchase','click','view')
-        |  AND event_type NOT LIKE 'err%'
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-
-    "q05_order_page" ->
-      """SELECT ts, user_id AS stream_id, value
-        |FROM events
-        |ORDER BY value DESC, ts
-        |LIMIT 50 OFFSET 100""".stripMargin,
-
-    "q06_gapfill_prev" ->
-      s"""WITH daily AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day_ts,
-        |    ${DAVG("value")} AS avg_value
-        |  FROM events WHERE event_type = 'signup' GROUP BY 1, 2),
-        |bounds AS (SELECT user_id, min(day_ts) AS mn, max(day_ts) AS mx FROM daily GROUP BY 1),
-        |spine AS (SELECT user_id, unnest(generate_series(mn, mx, INTERVAL 1 DAY)) AS day_ts FROM bounds),
-        |j AS (SELECT s.user_id, s.day_ts, d.avg_value
-        |      FROM spine s LEFT JOIN daily d ON s.user_id = d.user_id AND s.day_ts = d.day_ts)
-        |SELECT user_id, day_ts, avg_value,
-        |  last_value(avg_value IGNORE NULLS) OVER (
-        |    PARTITION BY user_id ORDER BY day_ts
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled_value
-        |FROM j
-        |ORDER BY user_id, day_ts""".stripMargin,
-
-    "q07_gapfill_linear" ->
-      s"""WITH daily AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day_ts,
-        |    ${DAVG("value")} AS avg_value
-        |  FROM events WHERE event_type = 'signup' GROUP BY 1, 2),
-        |bounds AS (SELECT user_id, min(day_ts) AS mn, max(day_ts) AS mx FROM daily GROUP BY 1),
-        |spine AS (SELECT user_id, unnest(generate_series(mn, mx, INTERVAL 1 DAY)) AS day_ts FROM bounds),
-        |j AS (SELECT s.user_id, s.day_ts, d.avg_value
-        |      FROM spine s LEFT JOIN daily d ON s.user_id = d.user_id AND s.day_ts = d.day_ts),
-        |k AS (SELECT user_id, day_ts, avg_value, epoch_us(day_ts) AS tu,
-        |  last_value(avg_value IGNORE NULLS) OVER wp AS pv,
-        |  last_value(CASE WHEN avg_value IS NOT NULL THEN epoch_us(day_ts) END IGNORE NULLS) OVER wp AS pt,
-        |  first_value(avg_value IGNORE NULLS) OVER wn AS nv,
-        |  first_value(CASE WHEN avg_value IS NOT NULL THEN epoch_us(day_ts) END IGNORE NULLS) OVER wn AS nt
-        |  FROM j
-        |  WINDOW wp AS (PARTITION BY user_id ORDER BY day_ts
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |         wn AS (PARTITION BY user_id ORDER BY day_ts
-        |                ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING))
-        |SELECT user_id, day_ts, avg_value,
-        |  CASE WHEN avg_value IS NOT NULL THEN avg_value
-        |       WHEN pv IS NULL THEN nv
-        |       WHEN nv IS NULL THEN pv
-        |       ELSE pv + (nv - pv) * (CAST(tu - pt AS DOUBLE) / CAST(nt - pt AS DOUBLE))
-        |  END AS filled_value
-        |FROM k
-        |ORDER BY user_id, day_ts""".stripMargin,
-
-    "q08_enrich" ->
-      """SELECT event_id, user_id,
-        |  epoch_ms(ts) AS ts_ms,
-        |  datediff('day', CAST(ts AS DATE), DATE '2024-02-01') AS days_to_expiry,
-        |  CASE WHEN 31 - datediff('day', CAST(ts AS DATE), DATE '2024-02-01') <= 0 THEN 'expires_today'
-        |       WHEN 31 - datediff('day', CAST(ts AS DATE), DATE '2024-02-01') <= 7 THEN 'expires_soon'
-        |       ELSE '' END AS expiry_tags,
-        |  CASE WHEN event_type IN ('purchase','signup') THEN 'buy'
-        |       WHEN event_type = 'error' THEN 'sell'
-        |       ELSE 'no_side' END AS side,
-        |  (CASE WHEN event_type IN ('purchase','signup') THEN 'long_'
-        |        WHEN event_type = 'error' THEN 'short_'
-        |        ELSE 'no_side_' END) || event_type AS position_type,
-        |  event_type ||
-        |    (CASE WHEN value > 75.0 THEN ',large_trade' ELSE '' END) ||
-        |    (CASE WHEN value > 100.0 AND value < 250.0 THEN ',whale' ELSE '' END) ||
-        |    (CASE WHEN value > 250.0 THEN ',millionaire' ELSE '' END) AS tags,
-        |  'sentiment:' ||
-        |    (CASE WHEN 2.0 / (1.0 + exp(-((value - 50.0) / 50.0))) - 1.0 > 0.25 THEN 'bullish'
-        |          WHEN 2.0 / (1.0 + exp(-((value - 50.0) / 50.0))) - 1.0 < -0.25 THEN 'bearish'
-        |          ELSE 'neutral' END) AS sentiment,
-        |  sha256(event_id || '|' || user_id || '|' || epoch_ms(ts)) AS row_key
-        |FROM events
-        |ORDER BY event_id""".stripMargin,
-
-    "q09_lag_metrics" ->
-      """SELECT event_id, user_id, epoch_us(ts) AS ts_us, value,
-        |  lag(value, 1) OVER w AS prev_value,
-        |  (value - lag(value, 1) OVER w) / lag(value, 1) OVER w * 100.0 AS pct_gap,
-        |  epoch_us(ts) - lag(epoch_us(ts), 1) OVER w AS staleness_us
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-        |ORDER BY user_id, ts_us, event_id""".stripMargin,
-
-    "q10_dedup_exact" ->
-      """SELECT sha256(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS content_hash,
-        |  min(doc_id) AS canonical_id,
-        |  COUNT(*) AS dup_count
-        |FROM documents
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-
-    "q11_jaccard_pairs" -> JACCARD_PAIRS_SQL,
-    "q12_minhash_lsh" -> JACCARD_PAIRS_SQL,
-    // q40 = q11 with the prefix-df-cap dial; the dial can only MISS
-    // pairs, and the exact twin gates that it misses none here
-    "q40_jaccard_capped" -> JACCARD_PAIRS_SQL,
-
-    "q13_topk_sim" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-        |           WHERE vec_id IN (0,1,2,3,4,5,6,7,8,9)),
-        |scored AS (
-        |  SELECT q.query_id, e.vec_id AS nbr_id,
-        |    list_cosine_similarity(CAST(q.qv AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])) AS cos_sim
-        |  FROM embeddings e, q WHERE e.vec_id <> q.query_id),
-        |r AS (SELECT query_id, nbr_id, cos_sim,
-        |        row_number() OVER (PARTITION BY query_id
-        |                           ORDER BY cos_sim DESC, nbr_id) AS rank
-        |      FROM scored)
-        |SELECT query_id, rank, nbr_id, cos_sim
-        |FROM r WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-
-    "q14_star_join" ->
-      s"""SELECT c_mktsegment, n_name,
-        |  ${DSUM("l_extendedprice * (1.0 - l_discount)")} AS revenue,
-        |  COUNT(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-
-    "q15_asof_join" ->
-      """SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us, p.value,
-        |  c.event_id AS asof_event_id, c.value AS asof_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.event_id""".stripMargin,
-
-    "q16_catalog_search" ->
-      """SELECT p_partkey, p_name, p_brand, p_type, p_size, p_retailprice
-        |FROM part
-        |WHERE contains(lower(p_name), 'red')
-        |  AND p_type IN ('ECONOMY', 'SMALL', 'STANDARD')
-        |  AND p_brand NOT IN ('Brand#13')
-        |  AND (contains(lower(p_name), 'e') OR contains(lower(p_type), 'e'))
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q17_string_agg_menu" ->
-      """SELECT user_id,
-        |  COUNT(event_type) AS n_events,
-        |  arg_min(event_type, ts) AS first_type,
-        |  arg_max(event_type, ts) AS last_type,
-        |  COUNT(DISTINCT event_type) AS n_types,
-        |  array_to_string(list_sort(list_distinct(list(event_type))), ',') AS types_str
-        |FROM events
-        |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-
-    "q18_maxby_cursor" ->
-      """SELECT user_id,
-        |  max(epoch_us(ts)) AS last_seen_us,
-        |  arg_max(event_id, epoch_us(ts)) AS last_event_id,
-        |  COUNT(*) AS n_events
-        |FROM events
-        |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-
-    "q19_rolling_quality" ->
-      """SELECT event_id, user_id, epoch_us(ts) AS ts_us, value,
-        |  COUNT(value) OVER frame AS rolling_count,
-        |  CAST(SUM(CAST(value AS DECIMAL(30,6))) OVER frame AS DOUBLE)
-        |    / COUNT(value) OVER frame AS rolling_mean,
-        |  min(value) OVER frame AS rolling_min,
-        |  max(value) OVER frame AS rolling_max,
-        |  (value - lag(value, 1) OVER w) / lag(value, 1) OVER w * 100.0 AS pct_gap,
-        |  epoch_us(ts) - lag(epoch_us(ts), 1) OVER w AS staleness_us
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id),
-        |       frame AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-        |                 ROWS BETWEEN 99 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, ts_us, event_id""".stripMargin,
-
-    "q20_text_stats" ->
-      """WITH tok AS (SELECT doc_id,
-        |  string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-        |  FROM documents),
-        |st AS (SELECT doc_id, toks,
-        |  len(toks) AS n_tokens,
-        |  len(list_distinct(toks)) AS n_distinct,
-        |  CAST(len(list_filter(toks, t -> t IN ('join','filter','group','order','sort','query','window'))) AS DOUBLE)
-        |    / len(toks) AS s_query,
-        |  CAST(len(list_filter(toks, t -> t IN ('data','row','column','table','value','batch','stream'))) AS DOUBLE)
-        |    / len(toks) AS s_data
-        |  FROM tok)
-        |SELECT doc_id, n_tokens, n_distinct,
-        |  CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS type_token_ratio,
-        |  CAST(list_aggregate(list_transform(toks, t -> length(t)), 'sum') AS DOUBLE)
-        |    / CAST(n_tokens AS DOUBLE) AS mean_token_len,
-        |  CASE WHEN s_data > s_query THEN 'data' ELSE 'query' END AS lang_pred,
-        |  md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS fingerprint
-        |FROM st
-        |ORDER BY doc_id""".stripMargin,
-
-    "q21_simhash" -> SIMHASH_SQL,
-
-    "q26_json_ingest" ->
-      """SELECT event_id, user_id, event_type, value, 'unknown' AS channel
-        |FROM events
-        |ORDER BY event_id""".stripMargin,
-
-    "q27_quote_side" ->
-      """WITH q AS (
-        |  SELECT event_id, ts,
-        |    value * 0.99 AS bid, value * 1.01 AS ask,
-        |    value * (1.0 + (event_id % 3 - 1) * 0.004) AS price
-        |  FROM events)
-        |SELECT event_id,
-        |  CASE WHEN abs(price - bid) < abs(price - ask) THEN 'S'
-        |       WHEN abs(price - bid) > abs(price - ask) THEN 'B'
-        |       ELSE 'N' END AS side,
-        |  round(2.0 / (1.0 + exp(-((price - (bid + ask) / 2.0) / NULLIF(ask - bid, 0.0)))) - 1.0, 9) + 0.0 AS confidence,
-        |  strftime(timezone('America/New_York', timezone('UTC', ts)), '%Y-%m-%d %H:%M:%S') AS ts_et
-        |FROM q
-        |ORDER BY event_id""".stripMargin,
-
-    "q28_tag_values" ->
-      """SELECT DISTINCT json_extract_string(props, '$.k') AS value
-        |FROM events
-        |WHERE json_extract_string(props, '$.k') IS NOT NULL
-        |ORDER BY 1""".stripMargin,
-
-    "q29_event_planner" ->
-      """WITH p AS (
-        |  SELECT date_trunc('day', ts) AS bucket_ts,
-        |    json_extract_string(props, '$.k') AS k,
-        |    printf('%020d', epoch_us(ts)) AS tk
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT bucket_ts,
-        |  arg_min(k, tk || k) AS first_k,
-        |  arg_max(k, tk || k) AS last_k,
-        |  COUNT(k) AS n_k
-        |FROM p
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-
-    "q33_gapfill_null" ->
-      s"""WITH daily AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day_ts,
-        |    ${DAVG("value")} AS avg_value
-        |  FROM events WHERE event_type = 'signup' GROUP BY 1, 2),
-        |bounds AS (SELECT user_id, min(day_ts) AS mn, max(day_ts) AS mx FROM daily GROUP BY 1),
-        |spine AS (SELECT user_id, unnest(generate_series(mn, mx, INTERVAL 1 DAY)) AS day_ts FROM bounds)
-        |SELECT s.user_id, s.day_ts, d.avg_value
-        |FROM spine s LEFT JOIN daily d ON s.user_id = d.user_id AND s.day_ts = d.day_ts
-        |ORDER BY s.user_id, s.day_ts""".stripMargin,
-
-    "q34_breach_alerts" ->
-      """SELECT event_id, user_id, epoch_us(ts) AS ts_us, value,
-        |  (SUM(CASE WHEN value < 20.0 THEN 1 ELSE 0 END) OVER w = 3
-        |   AND COUNT(*) OVER w = 3) AS alert
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |             ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, ts_us""".stripMargin,
-
-    "q35_binary_params" ->
-      """WITH p AS (
-        |  SELECT date_trunc('day', ts) AS bucket_ts,
-        |    from_hex(md5(CAST(event_id AS VARCHAR) || ':' || event_type)) AS payload,
-        |    printf('%020d', epoch_us(ts)) || md5(CAST(event_id AS VARCHAR) || ':' || event_type) AS tk
-        |  FROM events)
-        |SELECT bucket_ts,
-        |  lower(hex(arg_min(payload, tk))) AS first_payload,
-        |  lower(hex(arg_max(payload, tk))) AS last_payload,
-        |  COUNT(payload) AS n_payload
-        |FROM p
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-
-    "q37_cosine_neardup" ->
-      "SELECT CAST(TRUE AS BOOLEAN) AS recall_ok, CAST(TRUE AS BOOLEAN) AS no_false_pos",
-
-    "q44_curation_pipeline" ->
-      """WITH norm AS (
-        |  SELECT *, lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS nt
-        |  FROM documents),
-        |canon AS (
-        |  SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY nt ORDER BY doc_id) AS rk
-        |    FROM norm) WHERE rk = 1),
-        |tok AS (SELECT doc_id, string_split(nt, ' ') AS toks FROM canon),
-        |sh AS (SELECT doc_id,
-        |  list_distinct(list_transform(range(len(toks)-2),
-        |    i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS s
-        |  FROM tok WHERE len(toks) >= 3),
-        |shz AS (SELECT doc_id, s, len(s) AS sz FROM sh),
-        |ctok AS (SELECT doc_id,
-        |  string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-        |  FROM documents WHERE doc_id % 97 = 0),
-        |csh AS (SELECT doc_id AS cid,
-        |  list_distinct(list_transform(range(len(toks)-2),
-        |    i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS cs
-        |  FROM ctok WHERE len(toks) >= 3),
-        |cshz AS (SELECT cid, cs, len(cs) AS csz FROM csh),
-        |contaminated AS (
-        |  SELECT DISTINCT a.doc_id
-        |  FROM shz a, cshz c
-        |  WHERE CAST(len(list_intersect(a.s, c.cs)) AS DOUBLE) /
-        |        CAST(a.sz + c.csz - len(list_intersect(a.s, c.cs)) AS DOUBLE)
-        |        >= 0.5),
-        |clean AS (
-        |  SELECT * FROM canon
-        |  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)
-        |    AND n_chars >= 500),
-        |q AS (
-        |  SELECT source, doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY source
-        |                       ORDER BY n_chars DESC, doc_id ASC) AS rk
-        |  FROM clean)
-        |SELECT source, doc_id, n_chars
-        |FROM q WHERE rk <= 10
-        |ORDER BY source, n_chars DESC, doc_id""".stripMargin,
-
-    "q43_domain_quota" ->
-      """WITH r AS (
-        |  SELECT source, doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY source
-        |                       ORDER BY n_chars DESC, doc_id ASC) AS rk
-        |  FROM documents)
-        |SELECT source, doc_id, n_chars
-        |FROM r WHERE rk <= 10
-        |ORDER BY source, n_chars DESC, doc_id""".stripMargin,
-
-    "q42_decontaminate" ->
-      s"""WITH $SHINGLES_CTE,
-        |contam AS (SELECT doc_id AS cid, s AS cs, sz AS csz
-        |           FROM shz WHERE doc_id % 97 = 0),
-        |ov AS (
-        |  SELECT a.doc_id AS id, c.cid,
-        |    len(list_intersect(a.s, c.cs)) AS inter, a.sz, c.csz
-        |  FROM shz a, contam c),
-        |sc AS (
-        |  SELECT id, cid,
-        |    CAST(inter AS DOUBLE) / CAST(sz + csz - inter AS DOUBLE) AS j
-        |  FROM ov
-        |  WHERE CAST(inter AS DOUBLE) / CAST(sz + csz - inter AS DOUBLE) >= 0.5),
-        |r AS (SELECT id, cid, j,
-        |        row_number() OVER (PARTITION BY id ORDER BY j DESC, cid) AS rk
-        |      FROM sc)
-        |SELECT id, cid AS contaminant_id, j AS contaminant_jaccard
-        |FROM r WHERE rk = 1
-        |ORDER BY id""".stripMargin,
-
-    "q41_message_quality" ->
-      """WITH q AS (
-        |  SELECT user_id,
-        |    (event_id % 5) * 1000000 AS latency_us,
-        |    (CASE WHEN event_type IS NULL THEN 1 ELSE 0 END +
-        |     CASE WHEN json_extract_string(props, '$.k') IS NULL THEN 1 ELSE 0 END)
-        |      AS missing_fields_count,
-        |    value = 0.0 AS zero_price,
-        |    COALESCE(
-        |      lag(value) OVER w != 0.0 AND
-        |      abs((value - lag(value) OVER w) / lag(value) OVER w) * 100 > 50,
-        |      FALSE) AS price_gap,
-        |    COALESCE(
-        |      epoch_us(ts) - lag(epoch_us(ts)) OVER w > 3000000,
-        |      FALSE) AS stale
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id))
-        |SELECT user_id,
-        |  COUNT(*) AS message_count,
-        |  CAST(SUM(latency_us) AS BIGINT) AS total_latency_us,
-        |  CAST(SUM(missing_fields_count) AS BIGINT) AS missing_fields_count,
-        |  COUNT(CASE WHEN zero_price THEN 1 END) AS zero_prices,
-        |  COUNT(CASE WHEN price_gap THEN 1 END) AS price_gaps,
-        |  COUNT(CASE WHEN stale THEN 1 END) AS stale_data_count,
-        |  COUNT(CASE WHEN latency_us > 3000000 OR missing_fields_count > 0
-        |             OR zero_price OR price_gap OR stale THEN 1 END) AS alert_count
-        |FROM q
-        |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-
-    "q39_text_quality" ->
-      """WITH tok AS (SELECT doc_id, text,
-        |  string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-        |  FROM documents)
-        |SELECT doc_id,
-        |  (CASE WHEN len(toks) BETWEEN 20 AND 1000 THEN 1.0 ELSE 0.5 END) * 0.4
-        |    + (CAST(len(list_filter(toks, t -> t IN ('the','a','of','to','and','in','is','for'))) AS DOUBLE) / len(toks)) * 0.3
-        |    + (CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks)) * 0.3 AS quality,
-        |  CAST(len(toks) AS BIGINT) AS n_whitespace,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n_bpeish,
-        |  CAST(ceil(length(text) / 4.0) AS BIGINT) AS n_chars_div4,
-        |  list_reduce(list_prepend('', toks), (acc, t) -> md5(acc || t)) AS roll_hash
-        |FROM tok
-        |ORDER BY doc_id""".stripMargin,
-
-    "q38_dup_components" ->
-      s"""WITH RECURSIVE $BLOCKED_PAIRS_CTE,
-        |edges AS (
-        |  SELECT id_a AS u, id_b AS v FROM pairs
-        |  UNION
-        |  SELECT id_b, id_a FROM pairs),
-        |reach AS (
-        |  SELECT u AS id, v AS r FROM edges
-        |  UNION
-        |  SELECT reach.id, e.v FROM reach JOIN edges e ON reach.r = e.u)
-        |SELECT id, least(id, min(r)) AS comp
-        |FROM reach GROUP BY id
-        |ORDER BY id""".stripMargin,
-
-    "q36_lineage" ->
-      """WITH RECURSIVE dim AS (SELECT DISTINCT user_id AS id FROM events),
-        |edges AS (
-        |  SELECT CAST(id AS VARCHAR) AS id,
-        |    CAST(id // 2 AS VARCHAR) AS ancestor_id
-        |  FROM dim WHERE id > 1),
-        |clos AS (
-        |  SELECT id, ancestor_id, 1 AS depth FROM edges
-        |  UNION ALL
-        |  SELECT c.id, e.ancestor_id, c.depth + 1
-        |  FROM clos c JOIN edges e ON c.ancestor_id = e.id)
-        |SELECT id, ancestor_id, depth FROM clos
-        |ORDER BY id, ancestor_id, depth""".stripMargin,
-
-    "q31_darkpool_decimal" ->
-      """WITH raw AS (
-        |  SELECT epoch_ms(ts) AS ts, event_type AS symbol,
-        |    CAST(CAST(value * 0.99 AS DECIMAL(18,4)) AS VARCHAR) AS bid_s,
-        |    CAST(CAST(value * 1.01 AS DECIMAL(18,4)) AS VARCHAR) AS ask_s,
-        |    CAST(CAST(value AS DECIMAL(18,4)) AS VARCHAR) AS price_s,
-        |    CAST(event_id % 50 + 1 AS INTEGER) AS qty
-        |  FROM events),
-        |t AS (
-        |  SELECT ts, symbol, qty,
-        |    CAST(bid_s AS DECIMAL(18,4)) AS bid_d,
-        |    CAST(ask_s AS DECIMAL(18,4)) AS ask_d,
-        |    CAST(price_s AS DECIMAL(18,4)) AS price_d,
-        |    bid_s, ask_s, price_s
-        |  FROM raw)
-        |SELECT ts, symbol,
-        |  CAST(bid_d AS VARCHAR) AS bid,
-        |  CAST(ask_d AS VARCHAR) AS ask,
-        |  CAST(price_d AS VARCHAR) AS price,
-        |  CAST(CAST(price_d * qty AS DECIMAL(18,4)) AS VARCHAR) AS value,
-        |  qty,
-        |  CASE WHEN abs(price_d - bid_d) < abs(price_d - ask_d) THEN 'S'
-        |       WHEN abs(price_d - bid_d) > abs(price_d - ask_d) THEN 'B'
-        |       ELSE 'N' END AS side,
-        |  sha256(symbol || '|' || CAST(ts AS VARCHAR) || '|' || price_s
-        |         || '|' || CAST(qty AS VARCHAR)) AS row_key,
-        |  'DP1' AS venue
-        |FROM t
-        |ORDER BY ts, row_key""".stripMargin,
-
-    "q32_news_nested" ->
-      """SELECT CAST(event_id AS VARCHAR) AS id,
-        |  ts AS published_at,
-        |  event_type AS publisher_name,
-        |  upper(event_type) || ',SPY' AS tickers_str,
-        |  'title-' || CAST(event_id AS VARCHAR) AS title,
-        |  strftime(ts, '%Y-%m-%d') AS published_date,
-        |  upper(event_type) || ',SPY' AS header_tickers
-        |FROM events
-        |ORDER BY id""".stripMargin,
-
-    "q30_udaf_buckets" ->
-      s"""SELECT date_trunc('minute', ts) AS minute_ts, user_id,
-        |  ${DSUM("CASE WHEN value > 75.0 AND event_type = 'purchase' THEN value ELSE 0.0 END")} AS vol_big_purchase,
-        |  ${DSUM("CASE WHEN value > 75.0 AND event_type <> 'purchase' THEN value ELSE 0.0 END")} AS vol_big_other,
-        |  ${DSUM("CASE WHEN value <= 75.0 AND event_type = 'purchase' THEN value ELSE 0.0 END")} AS vol_small_purchase,
-        |  ${DSUM("CASE WHEN value <= 75.0 AND event_type <> 'purchase' THEN value ELSE 0.0 END")} AS vol_small_other,
-        |  COUNT(CASE WHEN event_type = 'error' THEN 1 END) AS n_error,
-        |  COUNT(*) AS n_events
-        |FROM events
-        |GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-
-    "q24_ann_recall" ->
-      "SELECT CAST(10 AS BIGINT) AS n_queries, CAST(TRUE AS BOOLEAN) AS recall_ok",
-
-    "q25_ivf_recall" ->
-      "SELECT CAST(10 AS BIGINT) AS n_queries, CAST(TRUE AS BOOLEAN) AS recall_ok",
-
-    // measured-recall self-oracle (q24/q25 protocol): the real checks
-    // are computed in-engine against the exact audit; the oracle pins
-    // schema, the all-rows join completeness, and "both gates passed"
-    "q144_knn_audit_approx" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |  CAST(TRUE AS BOOLEAN) AS recall_ok,
-        |  CAST(TRUE AS BOOLEAN) AS vote_mae_ok
-        |FROM embeddings""".stripMargin,
-
-    "q22_union_fanin" ->
-      s"""SELECT src, COUNT(*) AS n_rows, ${DSUM("value")} AS sum_value,
-        |  COUNT(user_id) AS n_with_user
-        |FROM (
-        |  SELECT event_id, value, CAST(NULL AS BIGINT) AS user_id, 'purchases' AS src
-        |  FROM events WHERE event_type = 'purchase'
-        |  UNION ALL
-        |  SELECT event_id, value, user_id, 'errors' AS src
-        |  FROM events WHERE event_type = 'error')
-        |GROUP BY src
-        |ORDER BY src""".stripMargin,
-
-    "q23_multimodal_meta" ->
-      """SELECT doc_id,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  CAST(ord(text[1]) AS BIGINT) AS format_id,
-        |  CAST(ord(text[2]) * 16 AS BIGINT) AS width,
-        |  CAST(ord(text[3]) * 16 AS BIGINT) AS height,
-        |  md5(text) AS content_md5
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    "q45_planner_interpolation" ->
-      s"""WITH daily AS (
-        |  SELECT json_extract_string(props, '$$.k') AS k,
-        |    date_trunc('day', ts) AS bucket_ts,
-        |    ${DAVG("value")} AS mv
-        |  FROM events WHERE event_type = 'signup' GROUP BY 1, 2),
-        |bounds AS (SELECT k, min(bucket_ts) AS mn, max(bucket_ts) AS mx FROM daily GROUP BY 1),
-        |spine AS (SELECT k, unnest(generate_series(mn, mx, INTERVAL 1 DAY)) AS bucket_ts FROM bounds),
-        |j AS (SELECT s.k, s.bucket_ts, d.mv
-        |      FROM spine s LEFT JOIN daily d
-        |      ON s.k IS NOT DISTINCT FROM d.k AND s.bucket_ts = d.bucket_ts),
-        |f AS (SELECT k, bucket_ts, mv, epoch_us(bucket_ts) AS tu,
-        |  last_value(mv IGNORE NULLS) OVER wp AS pv,
-        |  last_value(CASE WHEN mv IS NOT NULL THEN epoch_us(bucket_ts) END IGNORE NULLS) OVER wp AS pt,
-        |  first_value(mv IGNORE NULLS) OVER wn AS nv,
-        |  first_value(CASE WHEN mv IS NOT NULL THEN epoch_us(bucket_ts) END IGNORE NULLS) OVER wn AS nt
-        |  FROM j
-        |  WINDOW wp AS (PARTITION BY k ORDER BY bucket_ts
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |         wn AS (PARTITION BY k ORDER BY bucket_ts
-        |                ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING))
-        |SELECT bucket_ts, k,
-        |  CASE WHEN mv IS NOT NULL THEN mv
-        |       WHEN pv IS NULL THEN nv
-        |       WHEN nv IS NULL THEN pv
-        |       ELSE pv + (nv - pv) * (CAST(tu - pt AS DOUBLE) / CAST(nt - pt AS DOUBLE))
-        |  END AS mean_value
-        |FROM f
-        |ORDER BY k, bucket_ts""".stripMargin,
-
-    // thresholds are floor(rate·2³²) in zero-padded lowercase hex:
-    // 0.5 → 80000000, 0.25 → 40000000, 0.0 → 00000000 (drops the
-    // stratum: no md5 prefix sorts below it), default 0.125 → 20000000
-    "q46_stratified_sample" ->
-      """SELECT doc_id, source FROM documents
-        |WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) <
-        |  CASE source WHEN 'src0' THEN '80000000'
-        |              WHEN 'src1' THEN '40000000'
-        |              WHEN 'src2' THEN '00000000'
-        |              ELSE '20000000' END
-        |ORDER BY doc_id""".stripMargin,
-
-    "q50_curation_v2" ->
-      """WITH norm AS (
-        |  SELECT *, lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS nt
-        |  FROM documents),
-        |canon AS (
-        |  SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY nt ORDER BY doc_id) AS rk
-        |    FROM norm) WHERE rk = 1),
-        |el AS (SELECT doc_id, nt FROM canon
-        |       WHERE len(string_split(nt, ' ')) >= 3),
-        |contained AS (
-        |  SELECT DISTINCT a.doc_id FROM el a JOIN el b ON a.doc_id != b.doc_id
-        |  WHERE (len(a.nt) < len(b.nt)
-        |         OR (len(a.nt) = len(b.nt) AND a.doc_id < b.doc_id))
-        |    AND position((' ' || a.nt || ' ') IN (' ' || b.nt || ' ')) > 0),
-        |nx AS (SELECT * FROM canon
-        |       WHERE doc_id NOT IN (SELECT doc_id FROM contained)),
-        |tok AS (SELECT doc_id, string_split(nt, ' ') AS toks FROM nx),
-        |sh AS (SELECT doc_id,
-        |  list_distinct(list_transform(range(len(toks)-2),
-        |    i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS s
-        |  FROM tok WHERE len(toks) >= 3),
-        |shz AS (SELECT doc_id, s, len(s) AS sz FROM sh),
-        |ctok AS (SELECT doc_id,
-        |  string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-        |  FROM documents WHERE doc_id % 97 = 0),
-        |csh AS (SELECT doc_id AS cid,
-        |  list_distinct(list_transform(range(len(toks)-2),
-        |    i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS cs
-        |  FROM ctok WHERE len(toks) >= 3),
-        |cshz AS (SELECT cid, cs, len(cs) AS csz FROM csh),
-        |contaminated AS (
-        |  SELECT DISTINCT a.doc_id
-        |  FROM shz a, cshz c
-        |  WHERE CAST(len(list_intersect(a.s, c.cs)) AS DOUBLE) /
-        |        CAST(a.sz + c.csz - len(list_intersect(a.s, c.cs)) AS DOUBLE)
-        |        >= 0.5),
-        |clean AS (
-        |  SELECT * FROM nx
-        |  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)),
-        |reptok AS (SELECT doc_id, string_split(nt, ' ') AS toks FROM clean),
-        |rep AS (
-        |  SELECT doc_id FROM reptok
-        |  WHERE CAST(list_max(list_transform(list_distinct(toks),
-        |          t -> len(list_filter(toks, x -> x = t)))) AS DOUBLE)
-        |        / CAST(len(toks) AS DOUBLE) <= 0.12),
-        |mixed AS (
-        |  SELECT * FROM clean
-        |  WHERE doc_id IN (SELECT doc_id FROM rep)
-        |    AND substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) <
-        |      CASE source WHEN 'src0' THEN '80000000'
-        |                  WHEN 'src1' THEN '40000000'
-        |                  WHEN 'src2' THEN '00000000'
-        |                  ELSE '80000000' END),
-        |q AS (
-        |  SELECT source, doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY source
-        |                       ORDER BY n_chars DESC, doc_id ASC) AS rk
-        |  FROM mixed)
-        |SELECT source, doc_id, n_chars
-        |FROM q WHERE rk <= 10
-        |ORDER BY source, n_chars DESC, doc_id""".stripMargin,
-
-    "q48_containment" ->
-      """WITH t AS (SELECT doc_id,
-        |  lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS nt
-        |  FROM documents),
-        |tok AS (SELECT doc_id, nt FROM t
-        |        WHERE len(string_split(nt, ' ')) >= 3)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |FROM tok a JOIN tok b ON a.doc_id != b.doc_id
-        |WHERE (len(a.nt) < len(b.nt)
-        |       OR (len(a.nt) = len(b.nt) AND a.doc_id < b.doc_id))
-        |  AND position((' ' || a.nt || ' ') IN (' ' || b.nt || ' ')) > 0
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q49_repetition_stats" ->
-      """WITH tok AS (SELECT doc_id,
-        |  string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(toks) AS BIGINT) AS ntok,
-        |  CASE WHEN len(toks) - 2 > 0 THEN
-        |    1.0 - CAST(len(list_distinct(list_transform(range(len(toks)-2),
-        |      i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3]))) AS DOUBLE)
-        |      / CAST(len(toks) - 2 AS DOUBLE)
-        |  ELSE 0.0 END AS dup_ngram_rate,
-        |  CASE WHEN len(toks) > 0 THEN
-        |    CAST(list_max(list_transform(list_distinct(toks),
-        |      t -> len(list_filter(toks, x -> x = t)))) AS DOUBLE)
-        |      / CAST(len(toks) AS DOUBLE)
-        |  ELSE 0.0 END AS top_token_ratio
-        |FROM tok
-        |ORDER BY doc_id""".stripMargin,
-
-    "q53_semantic_decontam" ->
-      """WITH c AS (SELECT vec_id AS cid, embedding AS cvec
-        |           FROM embeddings WHERE vec_id % 97 = 0),
-        |scored AS (
-        |  SELECT e.vec_id AS id, c.cid,
-        |    list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |                           CAST(c.cvec AS DOUBLE[])) AS cosine
-        |  FROM embeddings e, c),
-        |hits AS (SELECT * FROM scored WHERE cosine >= 0.6),
-        |best AS (
-        |  SELECT id, cid AS contaminant_id, cosine AS contaminant_cosine,
-        |    row_number() OVER (PARTITION BY id
-        |                       ORDER BY cosine DESC, cid ASC) AS rk
-        |  FROM hits),
-        |dropped AS (SELECT id, contaminant_id,
-        |              LEAST(contaminant_cosine, 1.0) AS contaminant_cosine
-        |            FROM best WHERE rk = 1),
-        |summary AS (
-        |  SELECT CAST(-1 AS BIGINT) AS id, CAST(-1 AS BIGINT) AS contaminant_id,
-        |    CAST(-1.0 AS DOUBLE) AS contaminant_cosine,
-        |    (SELECT count(*) FROM embeddings
-        |     WHERE vec_id NOT IN (SELECT id FROM dropped)) AS n_kept)
-        |SELECT id, contaminant_id, contaminant_cosine,
-        |  CAST(NULL AS BIGINT) AS n_kept FROM dropped
-        |UNION ALL
-        |SELECT * FROM summary
-        |ORDER BY id, contaminant_id""".stripMargin,
-
-    "q54_group_search" ->
-      """WITH leaves AS (
-        |  SELECT '/' || p_type || '/' || p_brand || '/' || p_name AS path,
-        |         '/' || p_type || '/' || p_brand AS location,
-        |         p_name AS name
-        |  FROM part),
-        |mids AS (
-        |  SELECT DISTINCT '/' || p_type || '/' || p_brand AS path,
-        |         '/' || p_type AS location,
-        |         p_brand AS name
-        |  FROM part),
-        |g AS (SELECT * FROM leaves UNION ALL SELECT * FROM mids),
-        |cc AS (
-        |  SELECT nullif(regexp_replace(path, '/[^/]*$', ''), '') AS ppath,
-        |         COUNT(*) AS cnt
-        |  FROM g WHERE nullif(regexp_replace(path, '/[^/]*$', ''), '') IS NOT NULL
-        |  GROUP BY 1),
-        |gc AS (
-        |  SELECT g.path, g.name, g.location,
-        |         COALESCE(cc.cnt, 0) AS children_count
-        |  FROM g LEFT JOIN cc ON g.path = cc.ppath)
-        |SELECT path, name, location, children_count
-        |FROM gc
-        |WHERE (location = '/ECONOMY' OR starts_with(location, '/ECONOMY/'))
-        |  AND contains(lower(name), 'an')
-        |ORDER BY path, name""".stripMargin,
-
-    // df = distinct docs containing the LINE; parallel unnests zip in
-    // DuckDB, string_agg(... ORDER BY pos) preserves original order
-    "q58_line_dedup" ->
-      """WITH aug AS (
-        |  SELECT doc_id, 'COOKIE BANNER' || chr(10) || text ||
-        |    CASE WHEN doc_id % 5 = 0 THEN chr(10) || 'SUBSCRIBE NOW'
-        |         ELSE '' END ||
-        |    chr(10) || 'footer ' || CAST(doc_id AS VARCHAR) AS text
-        |  FROM documents),
-        |ls AS (SELECT doc_id, string_split(text, chr(10)) AS arr FROM aug),
-        |lines AS (
-        |  SELECT doc_id, unnest(arr) AS line,
-        |    unnest(range(1, len(arr) + 1)) AS pos
-        |  FROM ls),
-        |dfreq AS (
-        |  SELECT line, COUNT(DISTINCT doc_id) AS df FROM lines GROUP BY 1),
-        |kept AS (
-        |  SELECT l.* FROM lines l JOIN dfreq d ON l.line = d.line
-        |  WHERE d.df <= 10),
-        |rebuilt AS (
-        |  SELECT doc_id,
-        |    string_agg(line, chr(10) ORDER BY pos) AS text,
-        |    COUNT(*) AS n_kept_lines
-        |  FROM kept GROUP BY doc_id),
-        |totals AS (SELECT doc_id, COUNT(*) AS n_total FROM lines GROUP BY 1)
-        |SELECT t.doc_id,
-        |  COALESCE(r.text, '') AS text,
-        |  COALESCE(r.n_kept_lines, 0) AS n_kept_lines,
-        |  t.n_total - COALESCE(r.n_kept_lines, 0) AS n_dropped_lines
-        |FROM totals t LEFT JOIN rebuilt r ON t.doc_id = r.doc_id
-        |ORDER BY t.doc_id""".stripMargin,
-
-    // counts are over the RAW augmented text; replacement order
-    // email -> ip -> phone is part of the contract in both engines
-    "q57_pii_redaction" ->
-      """WITH aug AS (
-        |  SELECT doc_id,
-        |    text || ' contact user' || CAST(doc_id AS VARCHAR) ||
-        |      '@example.com via 10.' || CAST(doc_id % 256 AS VARCHAR) ||
-        |      '.' || CAST(doc_id % 100 AS VARCHAR) || '.7 or +1-555-' ||
-        |      lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS text
-        |  FROM documents)
-        |, steps AS (
-        |  -- progressive redaction: each pattern is COUNTED on the text
-        |  -- as it stands when its replacement runs, so the audit
-        |  -- columns are exact replacement counts (mirrors redactPii)
-        |  SELECT doc_id, text AS t0,
-        |    regexp_replace(text,
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-        |      '<EMAIL>', 'g') AS t1
-        |  FROM aug)
-        |, steps2 AS (
-        |  SELECT doc_id, t0, t1,
-        |    regexp_replace(t1,
-        |      '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') AS t2
-        |  FROM steps)
-        |SELECT doc_id,
-        |  regexp_replace(t2,
-        |    '\+\d{1,3}[- ]\d{3,4}[- ]\d{3,4}\b', '<PHONE>', 'g') AS text,
-        |  len(regexp_extract_all(t0,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
-        |  len(regexp_extract_all(t1,
-        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS n_ipv4,
-        |  len(regexp_extract_all(t2,
-        |    '\+\d{1,3}[- ]\d{3,4}[- ]\d{3,4}\b')) AS n_phones
-        |FROM steps2
-        |ORDER BY doc_id""".stripMargin,
-
-    // plain IN-subquery twin: the bloom stage must be answer-invariant
-    "q56_bloom_semijoin" ->
-      """SELECT l_returnflag, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(30,6))) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |WHERE l_orderkey IN (
-        |  SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT')
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-
-    // round-trip identity: the twin is the flat table (content_length
-    // = UTF-8 byte length, which strlen measures)
-    "q72_warc_roundtrip" ->
-      """SELECT doc_id, text,
-        |  CAST(strlen(text) AS BIGINT) AS content_length
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    // identical feature spec (unigrams + bigrams WITH multiplicity,
-    // md5/8-hex bucket mod 1024), add-one smoothing, per-feature
-    // round-9 DECIMAL log-ratio — so the weights AND the top-100
-    // selection hash-match
-    "q73_dsir_select" ->
-      s"""WITH $DSIR_W_CTE
-        |SELECT doc_id, nfeat, log_weight,
-        |  CAST(row_number() OVER (ORDER BY log_weight DESC, doc_id)
-        |    AS INTEGER) AS rk
-        |FROM w
-        |ORDER BY log_weight DESC, doc_id
-        |LIMIT 100""".stripMargin,
-
-    // same quantizer slice, same (sim DESC, cent_id) assignment
-    // tie-break, same chained lower-id drop rule — manifest is
-    // hash-exact including the cosines (the q13 list_cosine_similarity
-    // parity)
-    "q74_semdedup" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 32),
-        |s AS (SELECT e.vec_id, c.cent_id,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cent_id)
-        |      AS rk
-        |  FROM e CROSS JOIN c),
-        |a AS (SELECT s.vec_id, s.cent_id, e.v
-        |  FROM s JOIN e USING (vec_id) WHERE rk = 1),
-        |p AS (SELECT x.vec_id, x.cent_id, y.vec_id AS dup_of,
-        |    list_cosine_similarity(x.v, y.v) AS cos_sim
-        |  FROM a x JOIN a y
-        |    ON x.cent_id = y.cent_id AND y.vec_id < x.vec_id
-        |  WHERE list_cosine_similarity(x.v, y.v) >= 0.4),
-        |d AS (SELECT vec_id, cent_id, dup_of, cos_sim,
-        |    row_number() OVER (PARTITION BY vec_id
-        |      ORDER BY cos_sim DESC, dup_of) AS rk
-        |  FROM p)
-        |SELECT vec_id, cent_id, dup_of, cos_sim
-        |FROM d WHERE rk = 1
-        |ORDER BY vec_id""".stripMargin,
-
-    // same chain: uri synth + split-parse (round trip is identity per
-    // q72), tokenize-once gates, min-id-per-normalized-text dedup,
-    // 3-shingle Jaccard decontam (q42 fragment), per-host quota window
-    "q75_web_pipeline" ->
-      """WITH base AS (SELECT doc_id,
-        |    'https://d' || CAST(doc_id % 37 AS VARCHAR) ||
-        |      '.example.com/doc/' || CAST(doc_id AS VARCHAR) AS uri,
-        |    text
-        |  FROM documents),
-        |parsed AS (SELECT
-        |    CAST(string_split(uri, '/')[5] AS BIGINT) AS doc_id,
-        |    string_split(uri, '/')[3] AS host, text
-        |  FROM base),
-        |tok AS (SELECT doc_id, host, text,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-        |  FROM parsed),
-        |gated AS (SELECT doc_id, host, text, toks,
-        |    len(toks) AS n_tokens
-        |  FROM tok
-        |  WHERE len(toks) >= 20
-        |    AND CAST(len(list_distinct(toks)) AS DOUBLE)
-        |        / CAST(len(toks) AS DOUBLE) >= 0.4),
-        |dd AS (SELECT *, row_number() OVER (
-        |    PARTITION BY lower(trim(regexp_replace(text, '\s+', ' ', 'g')))
-        |    ORDER BY doc_id) AS drk
-        |  FROM gated),
-        |u AS (SELECT doc_id, host, text, toks, n_tokens
-        |  FROM dd WHERE drk = 1),
-        |sh_u AS (SELECT doc_id,
-        |    list_distinct(list_transform(range(len(toks)-2),
-        |      i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS s
-        |  FROM u WHERE len(toks) >= 3),
-        |sh_c AS (SELECT t.doc_id,
-        |    list_distinct(list_transform(range(len(t.toks)-2),
-        |      i -> t.toks[i+1] || ' ' || t.toks[i+2] || ' ' || t.toks[i+3])) AS s
-        |  FROM tok t WHERE t.doc_id % 97 = 0 AND len(t.toks) >= 3),
-        |drop_ids AS (SELECT DISTINCT a.doc_id
-        |  FROM sh_u a JOIN sh_c c ON
-        |    CAST(len(list_intersect(a.s, c.s)) AS DOUBLE) /
-        |    CAST(len(a.s) + len(c.s) - len(list_intersect(a.s, c.s))
-        |      AS DOUBLE) >= 0.5),
-        |clean AS (SELECT u.* FROM u
-        |  WHERE u.doc_id NOT IN (SELECT doc_id FROM drop_ids)),
-        |q AS (SELECT doc_id, host, n_tokens,
-        |    row_number() OVER (PARTITION BY host
-        |      ORDER BY length(text) DESC, doc_id) AS qrk
-        |  FROM clean)
-        |SELECT doc_id, host, n_tokens
-        |FROM q WHERE qrk <= 10
-        |ORDER BY doc_id""".stripMargin,
-
-    // same distinct-3-shingle sets; min-id first owner; integer novel
-    // count + one final division
-    "q76_novelty" ->
-      s"""WITH $SHINGLES_CTE,
-        |ex AS (SELECT doc_id, sz, unnest(s) AS g FROM shz),
-        |f AS (SELECT g, MIN(doc_id) AS first_id FROM ex GROUP BY 1),
-        |agg AS (SELECT e.doc_id, e.sz,
-        |    CAST(SUM(CASE WHEN f.first_id = e.doc_id THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_novel
-        |  FROM ex e JOIN f USING (g)
-        |  GROUP BY 1, 2)
-        |SELECT doc_id, sz AS n_shingles, n_novel,
-        |  CAST(n_novel AS DOUBLE) / CAST(sz AS DOUBLE) AS novelty
-        |FROM agg
-        |ORDER BY doc_id""".stripMargin,
-
-    // identical RE2-compatible patterns (no backreferences), same
-    // block order (head first), same entity order (&amp; last)
-    "q77_html_extract" ->
-      """WITH aug AS (SELECT doc_id,
-        |  '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR) ||
-        |  ' | d' || CAST(doc_id % 37 AS VARCHAR) ||
-        |  '</title><style>p{margin:0}</style>' ||
-        |  '<script>var x = 1 < 2;</script></head>' ||
-        |  '<body><nav>home | about</nav><p>' || text ||
-        |  ' &amp; more</p><footer>(c) 2026 example</footer>' ||
-        |  '</body></html>' AS h
-        |  FROM documents),
-        |ext AS (SELECT doc_id,
-        |  regexp_extract(h, '(?s)<title(?:\s[^>]*)?>(.*?)</title>', 1)
-        |    AS title,
-        |  trim(regexp_replace(
-        |    replace(replace(replace(replace(replace(replace(
-        |      regexp_replace(
-        |        regexp_replace(regexp_replace(regexp_replace(
-        |          regexp_replace(regexp_replace(h,
-        |            '(?s)<head(\s[^>]*)?>.*?</head>', ' ', 'g'),
-        |            '(?s)<script(\s[^>]*)?>.*?</script>', ' ', 'g'),
-        |            '(?s)<style(\s[^>]*)?>.*?</style>', ' ', 'g'),
-        |            '(?s)<nav(\s[^>]*)?>.*?</nav>', ' ', 'g'),
-        |            '(?s)<footer(\s[^>]*)?>.*?</footer>', ' ', 'g'),
-        |        '<[^>]+>', ' ', 'g'),
-        |      '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-        |      '&#39;', ''''), '&nbsp;', ' '), '&amp;', '&'),
-        |    '\s+', ' ', 'g')) AS body
-        |  FROM aug)
-        |SELECT doc_id, title, body,
-        |  CAST(length(body) AS BIGINT) AS n_chars
-        |FROM ext
-        |ORDER BY doc_id""".stripMargin,
-
-    // same tokenizer, same (freq DESC, tok) order, round-9 ln pair
-    "q85_zipf_curve" ->
-      """WITH tok AS (SELECT unnest(string_split(
-        |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS tok
-        |  FROM documents),
-        |f AS (SELECT tok, COUNT(*) AS freq FROM tok GROUP BY 1),
-        |top AS (SELECT tok, freq FROM f
-        |  ORDER BY freq DESC, tok LIMIT 1000),
-        |r AS (SELECT CAST(row_number() OVER (ORDER BY freq DESC, tok)
-        |    AS BIGINT) AS rank, tok, freq FROM top)
-        |SELECT rank, tok, freq,
-        |  round(ln(CAST(rank AS DOUBLE)), 9) AS ln_rank,
-        |  round(ln(CAST(freq AS DOUBLE)), 9) AS ln_freq
-        |FROM r
-        |ORDER BY rank""".stripMargin,
-
-    // same bucket = least(9, floor(id·10/N)) (double division then
-    // floor in both engines), min-first-bucket vocabulary, 10-row
-    // cumulative window
-    "q86_heaps_growth" ->
-      """WITH n AS (SELECT COUNT(*) AS n FROM documents),
-        |occ AS (SELECT
-        |    least(9, CAST(floor(doc_id * 10 / n.n) AS INTEGER)) AS b,
-        |    unnest(string_split(
-        |      lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' '))
-        |      AS tok
-        |  FROM documents CROSS JOIN n),
-        |tp AS (SELECT b, COUNT(*) AS n_tok FROM occ GROUP BY 1),
-        |vp AS (SELECT b, COUNT(*) AS n_new FROM (
-        |  SELECT tok, MIN(b) AS b FROM occ GROUP BY 1) GROUP BY 1)
-        |SELECT CAST(tp.b AS INTEGER) AS bucket,
-        |  CAST(SUM(tp.n_tok) OVER (ORDER BY tp.b) AS BIGINT)
-        |    AS cum_tokens,
-        |  CAST(SUM(COALESCE(vp.n_new, 0)) OVER (ORDER BY tp.b)
-        |    AS BIGINT) AS cum_vocab
-        |FROM tp LEFT JOIN vp USING (b)
-        |ORDER BY bucket""".stripMargin,
-
-    // the classifier twin: same seed split, same closed-form
-    // naive-Bayes bucket weights (DECIMAL round-9), same mean-pooled
-    // sigmoid — both halves of q87 re-derived end-to-end in SQL
-    "q87_linear_quality" ->
-      s"""WITH $Q87_SCORE_CTE
-        |SELECT doc_id, nfeat, score, score >= 0.5 AS kept
-        |FROM scored
-        |ORDER BY doc_id""".stripMargin,
-
-    // calibration twin: the shared scoring chain, then the identical
-    // decile bucketing (floor of the same doubles) and the exact-sum
-    // mean (DSUM/COUNT) + long-ratio positive rate
-    "q92_quality_calibration" ->
-      s"""WITH $Q87_SCORE_CTE
-        |SELECT least(CAST(floor(score * 10) AS BIGINT), 9) AS decile,
-        |  COUNT(*) AS n_docs,
-        |  COUNT(*) FILTER (WHERE d.source = 'src0') AS n_pos,
-        |  CAST(COUNT(*) FILTER (WHERE d.source = 'src0') AS DOUBLE)
-        |    / COUNT(*) AS pos_rate,
-        |  ${DAVG("score")} AS mean_score
-        |FROM scored JOIN documents d USING (doc_id)
-        |GROUP BY 1
-        |ORDER BY decile""".stripMargin,
-
-    // q81's closure + the one-left-join tagging; docs outside any
-    // cluster are their own canonical
-    "q84_semantic_canonicalize" ->
-      """WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 32),
-        |s AS (SELECT e.vec_id, c.cent_id,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cent_id)
-        |      AS rk
-        |  FROM e CROSS JOIN c),
-        |a AS (SELECT s.vec_id, s.cent_id, e.v
-        |  FROM s JOIN e USING (vec_id) WHERE rk = 1),
-        |p AS (SELECT x.vec_id AS id_a, y.vec_id AS id_b
-        |  FROM a x JOIN a y
-        |    ON x.cent_id = y.cent_id AND x.vec_id < y.vec_id
-        |  WHERE list_cosine_similarity(x.v, y.v) >= 0.4),
-        |edges AS (SELECT id_a AS u, id_b AS v FROM p
-        |  UNION SELECT id_b, id_a FROM p),
-        |reach AS (SELECT u AS id, v AS r FROM edges
-        |  UNION
-        |  SELECT reach.id, e2.v FROM reach JOIN edges e2 ON reach.r = e2.u),
-        |comp AS (SELECT id, least(id, min(r)) AS comp
-        |  FROM reach GROUP BY id)
-        |SELECT em.vec_id, em.label,
-        |  COALESCE(cc.comp, em.vec_id) AS canonical_id,
-        |  COALESCE(cc.comp, em.vec_id) = em.vec_id AS keep
-        |FROM embeddings em LEFT JOIN comp cc ON em.vec_id = cc.id
-        |ORDER BY em.vec_id""".stripMargin,
-
-    // same banner aug, q63's slice idiom for the 16/16 windows, df by
-    // COUNT DISTINCT doc, ordered string_agg reassembly (q58 shape)
-    "q83_span_dedup" ->
-      """WITH aug AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 3 = 0 THEN
-        |      'terms of service apply to this mirror copy of the page please do not redistribute ever '
-        |        || text
-        |    ELSE text END AS text
-        |  FROM documents),
-        |tok AS (SELECT doc_id, string_split(
-        |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-        |  FROM aug),
-        |w AS (SELECT doc_id,
-        |    CAST(start // 16 AS BIGINT) AS idx,
-        |    array_to_string(
-        |      toks[start + 1 : least(start + 16, len(toks))], ' ') AS wt
-        |  FROM (SELECT doc_id, toks,
-        |          unnest(range(0, len(toks), 16)) AS start
-        |        FROM tok)),
-        |dfreq AS (SELECT wt, COUNT(DISTINCT doc_id) AS df
-        |  FROM w GROUP BY 1),
-        |kept AS (SELECT w.* FROM w JOIN dfreq USING (wt) WHERE df <= 1),
-        |totals AS (SELECT doc_id, COUNT(*) AS n_total FROM w GROUP BY 1),
-        |rebuilt AS (SELECT doc_id,
-        |    string_agg(wt, ' ' ORDER BY idx) AS text,
-        |    COUNT(*) AS n_kept
-        |  FROM kept GROUP BY 1)
-        |SELECT t.doc_id,
-        |  COALESCE(r.text, '') AS text,
-        |  CAST(COALESCE(r.n_kept, 0) AS BIGINT) AS n_kept_windows,
-        |  CAST(t.n_total - COALESCE(r.n_kept, 0) AS BIGINT)
-        |    AS n_dropped_windows
-        |FROM totals t LEFT JOIN rebuilt r USING (doc_id)
-        |ORDER BY t.doc_id""".stripMargin,
-
-    // same counts (even-id model), same add-one unigram with the
-    // 0.4·(u) association, same round-9 DECIMAL factor sums, same
-    // integer nano mean — parallel unnest slices give the aligned
-    // (prev, cur) pairs
-    "q82_stupid_backoff" ->
-      """WITH mt AS (SELECT
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-        |  FROM documents WHERE doc_id % 2 = 0),
-        |uni AS (SELECT w, COUNT(*) AS c1 FROM (
-        |  SELECT unnest(toks) AS w FROM mt) GROUP BY 1),
-        |bi AS (SELECT prev, cur, COUNT(*) AS c2 FROM (
-        |  SELECT unnest(toks[1:len(toks)-1]) AS prev,
-        |         unnest(toks[2:len(toks)]) AS cur FROM mt) GROUP BY 1, 2),
-        |n AS (SELECT CAST(SUM(c1) AS BIGINT) AS n FROM uni),
-        |v AS (SELECT COUNT(*) AS v FROM uni),
-        |bt AS (SELECT doc_id,
-        |    string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-        |  FROM documents WHERE doc_id % 2 = 1),
-        |fs AS (SELECT bt.doc_id,
-        |    CAST(round(ln(CAST(COALESCE(u.c1, 0) + 1 AS DOUBLE) /
-        |      CAST(n.n + v.v AS DOUBLE)), 9) AS DECIMAL(30,9)) AS lp
-        |  FROM bt LEFT JOIN uni u ON bt.toks[1] = u.w
-        |  CROSS JOIN n CROSS JOIN v
-        |  WHERE len(bt.toks) >= 1),
-        |brows AS (SELECT doc_id,
-        |    unnest(toks[1:len(toks)-1]) AS prev,
-        |    unnest(toks[2:len(toks)]) AS cur
-        |  FROM bt),
-        |bs AS (SELECT brows.doc_id,
-        |    CASE WHEN b2.c2 IS NOT NULL THEN
-        |      CAST(round(ln(CAST(b2.c2 AS DOUBLE) /
-        |        CAST(up.c1 AS DOUBLE)), 9) AS DECIMAL(30,9))
-        |    ELSE
-        |      CAST(round(ln(0.4 * (CAST(COALESCE(uc.c1, 0) + 1 AS DOUBLE) /
-        |        CAST(n.n + v.v AS DOUBLE))), 9) AS DECIMAL(30,9))
-        |    END AS lp
-        |  FROM brows
-        |  LEFT JOIN bi b2 USING (prev, cur)
-        |  LEFT JOIN uni up ON brows.prev = up.w
-        |  LEFT JOIN uni uc ON brows.cur = uc.w
-        |  CROSS JOIN n CROSS JOIN v),
-        |allf AS (SELECT * FROM fs UNION ALL SELECT * FROM bs)
-        |SELECT doc_id, COUNT(*) AS nfactor,
-        |  CAST(SUM(lp) AS DOUBLE) AS logprob_sum,
-        |  CAST(SUM(lp) * -1000000000 AS BIGINT) // COUNT(*) AS nll_mean_nano
-        |FROM allf GROUP BY 1
-        |ORDER BY doc_id""".stripMargin,
-
-    // q74's assignment + full pair CTEs, then the q38 recursive
-    // min-label closure over the semantic edges
-    "q81_semantic_clusters" ->
-      """WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 32),
-        |s AS (SELECT e.vec_id, c.cent_id,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cent_id)
-        |      AS rk
-        |  FROM e CROSS JOIN c),
-        |a AS (SELECT s.vec_id, s.cent_id, e.v
-        |  FROM s JOIN e USING (vec_id) WHERE rk = 1),
-        |p AS (SELECT x.vec_id AS id_a, y.vec_id AS id_b
-        |  FROM a x JOIN a y
-        |    ON x.cent_id = y.cent_id AND x.vec_id < y.vec_id
-        |  WHERE list_cosine_similarity(x.v, y.v) >= 0.4),
-        |edges AS (SELECT id_a AS u, id_b AS v FROM p
-        |  UNION SELECT id_b, id_a FROM p),
-        |reach AS (SELECT u AS id, v AS r FROM edges
-        |  UNION
-        |  SELECT reach.id, e2.v FROM reach JOIN edges e2 ON reach.r = e2.u)
-        |SELECT id, least(id, min(r)) AS comp
-        |FROM reach GROUP BY id
-        |ORDER BY id""".stripMargin,
-
-    // same q78 quantizer chain, dequant = codes·scale, two exact
-    // top-10 rankings (cos DESC, nbr_id tie-break — the q13 parity),
-    // per-query overlap via the guarded left join
-    "q80_quantized_recall" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |m AS (SELECT vec_id, v,
-        |    list_max(list_transform(v, x -> abs(x))) AS maxabs
-        |  FROM e),
-        |qz AS (SELECT vec_id, v, maxabs / 127.0 AS scale,
-        |    CASE WHEN maxabs = 0 THEN list_transform(v, x -> 0)
-        |         ELSE list_transform(v,
-        |           x -> CAST(floor(x / (maxabs / 127.0) + 0.5)
-        |             AS INTEGER)) END AS codes
-        |  FROM m),
-        |deq AS (SELECT vec_id,
-        |    list_transform(codes, c -> c * scale) AS dv
-        |  FROM qz),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e
-        |  WHERE vec_id IN (0,1,2,3,4,5,6,7,8,9)),
-        |qd AS (SELECT vec_id AS query_id, dv AS qdv FROM deq
-        |  WHERE vec_id IN (0,1,2,3,4,5,6,7,8,9)),
-        |ex AS (SELECT query_id, nbr_id FROM (
-        |  SELECT q.query_id, e.vec_id AS nbr_id,
-        |    row_number() OVER (PARTITION BY q.query_id
-        |      ORDER BY list_cosine_similarity(q.qv, e.v) DESC, e.vec_id)
-        |      AS rk
-        |  FROM e CROSS JOIN q WHERE e.vec_id <> q.query_id)
-        |  WHERE rk <= 10),
-        |ap AS (SELECT query_id, nbr_id FROM (
-        |  SELECT qd.query_id, d.vec_id AS nbr_id,
-        |    row_number() OVER (PARTITION BY qd.query_id
-        |      ORDER BY list_cosine_similarity(qd.qdv, d.dv) DESC,
-        |        d.vec_id) AS rk
-        |  FROM deq d CROSS JOIN qd WHERE d.vec_id <> qd.query_id)
-        |  WHERE rk <= 10),
-        |ov AS (SELECT ex.query_id, COUNT(*) AS n_overlap
-        |  FROM ex JOIN ap USING (query_id, nbr_id) GROUP BY 1)
-        |SELECT q.query_id,
-        |  CAST(COALESCE(ov.n_overlap, 0) AS BIGINT) AS n_overlap,
-        |  CAST(COALESCE(ov.n_overlap, 0) AS DOUBLE) / 10.0 AS recall
-        |FROM q LEFT JOIN ov USING (query_id)
-        |ORDER BY q.query_id""".stripMargin,
-
-    // the same weight CTE chain, then the md5-Gumbel draw:
-    // u = (h32 + 0.5)/2^32, g = round9(-ln(-ln u)), top-100 by
-    // (log_weight + g) — the drawn sample set is engine-exact
-    "q79_dsir_gumbel" ->
-      s"""WITH $DSIR_W_CTE,
-        |g AS (SELECT doc_id, log_weight,
-        |    round(-ln(-ln(
-        |      (CAST(('0x' || substr(md5('dsir-r7#' ||
-        |         CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) + 0.5)
-        |      / 4294967296.0)), 9) AS gumbel
-        |  FROM w)
-        |SELECT doc_id, log_weight, gumbel,
-        |  log_weight + gumbel AS gumbel_score,
-        |  CAST(row_number() OVER (ORDER BY log_weight + gumbel DESC,
-        |    doc_id) AS INTEGER) AS rk
-        |FROM g
-        |ORDER BY gumbel_score DESC, doc_id
-        |LIMIT 100""".stripMargin,
-
-    // same float→double cast, same maxabs/127 scale, same
-    // floor(x/scale + 0.5) code, same comma-joined md5 fingerprint
-    "q78_quantize_int8" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |m AS (SELECT vec_id, v,
-        |    list_max(list_transform(v, x -> abs(x))) AS maxabs
-        |  FROM e),
-        |q AS (SELECT vec_id, v, maxabs / 127.0 AS scale,
-        |    CASE WHEN maxabs = 0 THEN list_transform(v, x -> 0)
-        |         ELSE list_transform(v,
-        |           x -> CAST(floor(x / (maxabs / 127.0) + 0.5)
-        |             AS INTEGER)) END AS codes
-        |  FROM m)
-        |SELECT vec_id, scale,
-        |  md5(array_to_string(codes, ',')) AS code_md5,
-        |  list_max(list_transform(range(len(v)),
-        |    i -> abs(v[i+1] - codes[i+1] * scale))) AS max_abs_err
-        |FROM q
-        |ORDER BY vec_id""".stripMargin,
-
-    // the q68/q63/q66/q70/q47 fragments composed as one CTE chain;
-    // chunk_text is already-normalized space-joined tokens, so the
-    // chunk-level tokenizer is a plain split
-    "q71_training_capstone" ->
-      """WITH hist AS (SELECT DISTINCT
-        |    sha256(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS h
-        |  FROM documents WHERE doc_id % 2 = 0),
-        |batch AS (SELECT doc_id, source, text FROM documents
-        |  WHERE doc_id % 2 = 1
-        |    AND sha256(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
-        |      NOT IN (SELECT h FROM hist)),
-        |ta AS (SELECT doc_id, source, string_split(
-        |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-        |  FROM batch),
-        |st AS (SELECT doc_id, source, toks,
-        |    unnest(range(0, len(toks), 48)) AS start FROM ta),
-        |chunks AS (SELECT
-        |    doc_id * 1000 + CAST(start // 48 AS BIGINT) AS ckey,
-        |    doc_id, source,
-        |    CAST(least(64, len(toks) - start) AS BIGINT) AS n_chunk_tok,
-        |    array_to_string(toks[start + 1 : least(start + 64, len(toks))],
-        |      ' ') AS chunk_text
-        |  FROM st),
-        |ctok AS (SELECT ckey, unnest(string_split(chunk_text, ' ')) AS tok
-        |  FROM chunks),
-        |ccnt AS (SELECT tok, COUNT(*) AS cnt FROM ctok GROUP BY 1),
-        |ctot AS (SELECT COUNT(*) AS total FROM ctok),
-        |csc AS (SELECT ckey, CAST(round(ln(CAST(cnt AS DOUBLE) /
-        |    CAST(total AS DOUBLE)), 9) AS DECIMAL(30,9)) AS lp
-        |  FROM ctok JOIN ccnt USING (tok) CROSS JOIN ctot),
-        |lm AS (SELECT ckey,
-        |    CAST(SUM(lp) * -1000000000 AS BIGINT) // COUNT(*) AS nll
-        |  FROM csc GROUP BY 1),
-        |thr AS (SELECT CAST(SUM(nll) AS BIGINT) // COUNT(*) AS t FROM lm),
-        |gated AS (SELECT c.* FROM chunks c
-        |  JOIN lm ON lm.ckey = c.ckey CROSS JOIN thr
-        |  WHERE lm.nll < thr.t),
-        |mcnt AS (SELECT source, COUNT(*) AS n FROM gated GROUP BY 1),
-        |mtot AS (SELECT COUNT(*) AS total FROM gated),
-        |mw AS (SELECT source, n, total,
-        |    round(pow(CAST(n AS DOUBLE) / CAST(total AS DOUBLE),
-        |      CAST(0.5 AS DOUBLE)), 9) AS w
-        |  FROM mcnt CROSS JOIN mtot),
-        |mws AS (SELECT CAST(SUM(CAST(w AS DECIMAL(20,9))) AS DOUBLE) AS wsum
-        |  FROM mw),
-        |rates AS (SELECT source,
-        |    least(CAST(1.0 AS DOUBLE),
-        |      CAST(0.5 AS DOUBLE) * CAST(total AS DOUBLE) * (w / wsum) /
-        |        CAST(n AS DOUBLE)) AS keep_rate
-        |  FROM mw CROSS JOIN mws),
-        |mixed AS (SELECT g.* FROM gated g JOIN rates r USING (source)
-        |  WHERE CAST(('0x' || substr(md5(CAST(g.ckey AS VARCHAR)), 1, 8))
-        |      AS BIGINT)
-        |    < CAST(floor(r.keep_rate * 4294967296.0) AS BIGINT))
-        |SELECT source, ckey, n_chunk_tok,
-        |  CAST(COALESCE(CAST(SUM(n_chunk_tok) OVER (PARTITION BY source
-        |    ORDER BY ckey ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |    AS BIGINT), 0) // 2000 AS BIGINT) AS shard
-        |FROM mixed
-        |ORDER BY source, ckey""".stripMargin,
-
-    // identical rate arithmetic: round-9 pow, DECIMAL weight sum,
-    // one IEEE chain, integer coin vs floor(rate*2^32)
-    "q70_temperature_mix" ->
-      """WITH cnt AS (SELECT source, COUNT(*) AS n FROM documents GROUP BY 1),
-        |tot AS (SELECT COUNT(*) AS total FROM documents),
-        |w AS (SELECT source, n, total,
-        |  round(pow(CAST(n AS DOUBLE) / CAST(total AS DOUBLE),
-        |    CAST(0.5 AS DOUBLE)), 9) AS w
-        |  FROM cnt CROSS JOIN tot),
-        |ws AS (SELECT CAST(SUM(CAST(w AS DECIMAL(20,9))) AS DOUBLE) AS wsum
-        |  FROM w),
-        |rates AS (SELECT source,
-        |  least(CAST(1.0 AS DOUBLE),
-        |    CAST(0.5 AS DOUBLE) * CAST(total AS DOUBLE) * (w / wsum) /
-        |      CAST(n AS DOUBLE)) AS keep_rate
-        |  FROM w CROSS JOIN ws)
-        |SELECT d.doc_id, d.source
-        |FROM documents d JOIN rates r USING (source)
-        |WHERE CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))
-        |    AS BIGINT)
-        |  < CAST(floor(r.keep_rate * 4294967296.0) AS BIGINT)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // per-source registers + pairwise elementwise-max union, the same
-    // estimate formula as q65 applied per group at both levels
-    "q69_vocab_overlap" ->
-      """WITH tok AS (SELECT source, unnest(string_split(
-        |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS tok
-        |  FROM documents),
-        |h AS (SELECT source, tok,
-        |  CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS h FROM tok),
-        |r AS (SELECT source, CAST(h % 256 AS INTEGER) AS bucket,
-        |  CASE WHEN h // 256 = 0 THEN 53
-        |       ELSE 52 - (length(bin(h // 256)) - 1) END AS rho
-        |  FROM h),
-        |sreg AS (SELECT source, bucket, CAST(MAX(rho) AS INTEGER) AS max_rho
-        |  FROM r GROUP BY 1, 2),
-        |sagg AS (SELECT source, COUNT(*) AS n_set,
-        |  CAST(SUM(CAST(1 AS BIGINT) << (53 - max_rho)) AS BIGINT) +
-        |    (256 - COUNT(*)) * (CAST(1 AS BIGINT) << 53) AS harm
-        |  FROM sreg GROUP BY 1),
-        |sraw AS (SELECT source, n_set,
-        |  CAST(0.7213 AS DOUBLE) /
-        |    (CAST(1.0 AS DOUBLE) + CAST(1.079 AS DOUBLE) / CAST(256.0 AS DOUBLE))
-        |    * CAST(256.0 AS DOUBLE) * CAST(256.0 AS DOUBLE)
-        |    * CAST(9007199254740992.0 AS DOUBLE) / CAST(harm AS DOUBLE) AS raw
-        |  FROM sagg),
-        |sest AS (SELECT source,
-        |  CASE WHEN (256 - n_set) > 0 AND raw < 640.0
-        |       THEN round(CAST(256.0 AS DOUBLE) * ln(CAST(256.0 AS DOUBLE) /
-        |         CAST(256 - n_set AS DOUBLE)), 9)
-        |       ELSE round(raw, 9) END + 0.0 AS estimate
-        |  FROM sraw),
-        |srcs AS (SELECT DISTINCT source FROM sreg),
-        |pairs AS (SELECT a.source AS source_a, b.source AS source_b
-        |  FROM srcs a, srcs b WHERE a.source < b.source),
-        |members AS (
-        |  SELECT source_a, source_b, source_a AS source FROM pairs
-        |  UNION ALL
-        |  SELECT source_a, source_b, source_b AS source FROM pairs),
-        |mreg AS (SELECT m.source_a, m.source_b, g.bucket,
-        |    MAX(g.max_rho) AS max_rho
-        |  FROM members m JOIN sreg g ON g.source = m.source
-        |  GROUP BY 1, 2, 3),
-        |magg AS (SELECT source_a, source_b, COUNT(*) AS n_set,
-        |  CAST(SUM(CAST(1 AS BIGINT) << (53 - max_rho)) AS BIGINT) +
-        |    (256 - COUNT(*)) * (CAST(1 AS BIGINT) << 53) AS harm
-        |  FROM mreg GROUP BY 1, 2),
-        |mraw AS (SELECT source_a, source_b, n_set,
-        |  CAST(0.7213 AS DOUBLE) /
-        |    (CAST(1.0 AS DOUBLE) + CAST(1.079 AS DOUBLE) / CAST(256.0 AS DOUBLE))
-        |    * CAST(256.0 AS DOUBLE) * CAST(256.0 AS DOUBLE)
-        |    * CAST(9007199254740992.0 AS DOUBLE) / CAST(harm AS DOUBLE) AS raw
-        |  FROM magg),
-        |uest AS (SELECT source_a, source_b,
-        |  CASE WHEN (256 - n_set) > 0 AND raw < 640.0
-        |       THEN round(CAST(256.0 AS DOUBLE) * ln(CAST(256.0 AS DOUBLE) /
-        |         CAST(256 - n_set AS DOUBLE)), 9)
-        |       ELSE round(raw, 9) END + 0.0 AS est_union
-        |  FROM mraw),
-        |dtok AS (SELECT DISTINCT source, tok FROM h),
-        |exact AS (SELECT x.source AS source_a, y.source AS source_b,
-        |    COUNT(*) AS exact_overlap
-        |  FROM dtok x JOIN dtok y ON x.tok = y.tok AND x.source < y.source
-        |  GROUP BY 1, 2)
-        |SELECT p.source_a, p.source_b,
-        |  ea.estimate AS est_a, eb.estimate AS est_b, u.est_union,
-        |  round(ea.estimate + eb.estimate - u.est_union, 9) + 0.0
-        |    AS est_overlap,
-        |  COALESCE(e.exact_overlap, 0) AS exact_overlap
-        |FROM pairs p
-        |JOIN sest ea ON ea.source = p.source_a
-        |JOIN sest eb ON eb.source = p.source_b
-        |JOIN uest u ON u.source_a = p.source_a AND u.source_b = p.source_b
-        |LEFT JOIN exact e ON e.source_a = p.source_a
-        |  AND e.source_b = p.source_b
-        |ORDER BY 1, 2""".stripMargin,
-
-    // plain NOT-IN twin: the bloom split must be answer-invariant
-    "q68_incremental_dedup" ->
-      """WITH hist AS (SELECT DISTINCT
-        |    sha256(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS h
-        |  FROM documents WHERE doc_id % 2 = 0)
-        |SELECT doc_id, lang, source
-        |FROM documents
-        |WHERE doc_id % 2 = 1
-        |  AND sha256(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
-        |    NOT IN (SELECT h FROM hist)
-        |ORDER BY doc_id""".stripMargin,
-
-    // same md5/15-hex convention; raw mod (n-1) then the skip-self
-    // shift — all-integer, so the sampled pair set hash-matches
-    "q67_negative_pairs" ->
-      """WITH n AS (SELECT COUNT(*) AS n FROM documents),
-        |draws AS (
-        |  SELECT d.doc_id, CAST(j.j AS INTEGER) AS j,
-        |    CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR) || '#' ||
-        |      CAST(j.j AS VARCHAR)), 1, 15)) AS BIGINT) % (n.n - 1) AS raw
-        |  FROM documents d
-        |  CROSS JOIN (SELECT unnest(range(0, 2)) AS j) j
-        |  CROSS JOIN n),
-        |neg AS (
-        |  SELECT doc_id, j,
-        |    CASE WHEN raw >= doc_id THEN raw + 1 ELSE raw END AS neg_id
-        |  FROM draws)
-        |SELECT neg.doc_id, neg.j, neg.neg_id,
-        |  d2.source AS neg_source, d2.lang AS neg_lang
-        |FROM neg JOIN documents d2 ON neg.neg_id = d2.doc_id
-        |ORDER BY 1, 2""".stripMargin,
-
-    // per-token log-prob rounded to 9 dp FIRST, summed as
-    // DECIMAL(30,9) (order-independent); the mean is the all-integer
-    // floor((-sum*1e9)/ntok) — positive, so // and Spark's div agree
-    // token-exact wordlist count over the shared tokenizer
-    "q94_wordlist_gate" ->
-      """SELECT doc_id,
-        |  CAST(len(list_filter(string_split(
-        |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' '),
-        |    t -> t IN ('slow', 'broken', 'panic'))) AS BIGINT) AS n_flagged,
-        |  len(list_filter(string_split(
-        |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' '),
-        |    t -> t IN ('slow', 'broken', 'panic'))) = 0 AS kept
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    // the pair set is pinned identical to the exact join's (q38's
-    // qualification), so the matrix twin runs the exact all-pairs
-    // Jaccard + the same least/greatest cell normalization
-    "q93_crossdup_matrix" ->
-      s"""WITH $BLOCKED_PAIRS_CTE,
-        |lab AS (SELECT p.id_a, p.id_b, da.source AS sa, db.source AS sb
-        |  FROM pairs p
-        |  JOIN documents da ON p.id_a = da.doc_id
-        |  JOIN documents db ON p.id_b = db.doc_id)
-        |SELECT least(sa, sb) AS src_a, greatest(sa, sb) AS src_b,
-        |  COUNT(*) AS n_pairs
-        |FROM lab GROUP BY 1, 2
-        |ORDER BY src_a, src_b""".stripMargin,
-
-    // q38's recursive closure + q39's quality formula + the per-cluster
-    // argmax (row_number with the same (quality DESC, id ASC) ordering)
-    "q91_quality_canonicalize" ->
-      s"""WITH RECURSIVE $BLOCKED_PAIRS_CTE,
-        |edges AS (
-        |  SELECT id_a AS u, id_b AS v FROM pairs
-        |  UNION
-        |  SELECT id_b, id_a FROM pairs),
-        |reach AS (
-        |  SELECT u AS id, v AS r FROM edges
-        |  UNION
-        |  SELECT reach.id, e.v FROM reach JOIN edges e ON reach.r = e.u),
-        |comp AS (SELECT id, least(id, min(r)) AS comp
-        |  FROM reach GROUP BY id),
-        |q AS (SELECT doc_id,
-        |  (CASE WHEN len(toks) BETWEEN 20 AND 1000 THEN 1.0 ELSE 0.5 END) * 0.4
-        |    + (CAST(len(list_filter(toks, t -> t IN ('the','a','of','to','and','in','is','for'))) AS DOUBLE) / len(toks)) * 0.3
-        |    + (CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks)) * 0.3
-        |    AS quality
-        |  FROM tok),
-        |tagged AS (SELECT q.doc_id, COALESCE(c.comp, q.doc_id) AS comp,
-        |    q.quality
-        |  FROM q LEFT JOIN comp c ON q.doc_id = c.id),
-        |reps AS (SELECT comp, doc_id AS rep_id FROM (
-        |    SELECT comp, doc_id, row_number() OVER (PARTITION BY comp
-        |      ORDER BY quality DESC, doc_id ASC) AS rn FROM tagged)
-        |  WHERE rn = 1)
-        |SELECT t.doc_id, t.comp, t.quality, r.rep_id,
-        |  t.doc_id = r.rep_id AS is_rep
-        |FROM tagged t JOIN reps r USING (comp)
-        |ORDER BY t.doc_id""".stripMargin,
-
-    // manifest twin: q66's LM CTEs + sha256 of the shared normText →
-    // the same keyed aggregate (integer-divide mean, exact sums)
-    "q90_corpus_manifest" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(
-        |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS tok
-        |  FROM documents),
-        |cnt AS (SELECT tok, COUNT(*) AS cnt FROM tok GROUP BY 1),
-        |tot AS (SELECT COUNT(*) AS total FROM tok),
-        |scored AS (
-        |  SELECT doc_id, COUNT(*) AS ntok,
-        |    CAST(SUM(CAST(round(ln(CAST(cnt AS DOUBLE) /
-        |      CAST(total AS DOUBLE)), 9) AS DECIMAL(30,9)))
-        |      * -1000000000 AS BIGINT) // COUNT(*) AS nll_mean_nano
-        |  FROM tok JOIN cnt USING (tok) CROSS JOIN tot GROUP BY doc_id),
-        |base AS (SELECT d.doc_id, d.source, d.lang,
-        |    sha256(lower(trim(regexp_replace(d.text, '\s+', ' ', 'g'))))
-        |      AS nt,
-        |    s.ntok, s.nll_mean_nano
-        |  FROM documents d JOIN scored s USING (doc_id))
-        |SELECT source, lang, COUNT(*) AS n_docs,
-        |  CAST(SUM(ntok) AS BIGINT) AS total_tokens,
-        |  COUNT(DISTINCT nt) AS n_unique,
-        |  CAST(SUM(nll_mean_nano) AS BIGINT) // COUNT(*) AS mean_nll_nano
-        |FROM base GROUP BY source, lang
-        |ORDER BY source, lang""".stripMargin,
-
-    // the URL gate twin: the IDENTICAL RE2-portable regex chain, step
-    // for step ('g' flag — Spark's regexp_replace is always global)
-    "q89_url_blocklist" ->
-      """WITH u0 AS (SELECT doc_id,
-        |    'HTTPS://WWW.' || source || '-' || CAST(doc_id % 5 AS VARCHAR) ||
-        |    '.Example.COM:443/Docs/' || CAST(doc_id AS VARCHAR) ||
-        |    '/?utm_source=feed&id=' || CAST(doc_id % 7 AS VARCHAR) ||
-        |    '&ref=tracker#sec-' || lang AS url
-        |  FROM documents),
-        |u1 AS (SELECT doc_id, regexp_replace(url, '#.*$', '', 'g') AS u
-        |  FROM u0),
-        |u2 AS (SELECT doc_id,
-        |    lower(regexp_extract(u, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*)', 1))
-        |    || regexp_replace(u, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', '', 'g')
-        |    AS u FROM u1),
-        |u3 AS (SELECT doc_id,
-        |    regexp_replace(u, '^https://', 'http://', 'g') AS u FROM u2),
-        |u4 AS (SELECT doc_id,
-        |    regexp_replace(u, '^(http://)www\.', '\1', 'g') AS u FROM u3),
-        |u5 AS (SELECT doc_id, regexp_replace(u,
-        |    '^(http://[^/:?]*):(80|443)([/?].*)?$', '\1\3', 'g') AS u
-        |  FROM u4),
-        |u6 AS (SELECT doc_id, regexp_replace(u, '\?', '?&', 'g') AS u
-        |  FROM u5),
-        |u7 AS (SELECT doc_id, regexp_replace(u,
-        |    '&(utm_[^&=]*|ref|fbclid|gclid)=[^&]*', '', 'g') AS u FROM u6),
-        |u8 AS (SELECT doc_id, regexp_replace(u, '\?&', '?', 'g') AS u
-        |  FROM u7),
-        |u9 AS (SELECT doc_id, regexp_replace(u, '[?&]+$', '', 'g') AS u
-        |  FROM u8),
-        |uA AS (SELECT doc_id, regexp_replace(u, '/$', '', 'g') AS u
-        |  FROM u9),
-        |g AS (SELECT doc_id, u AS canonical_url,
-        |    regexp_extract(u, '^http://([^/:?]*)', 1) AS host FROM uA)
-        |SELECT doc_id, canonical_url, host FROM g
-        |WHERE host NOT IN ('src2-0.example.com', 'src2-1.example.com',
-        |  'src2-2.example.com', 'src2-3.example.com', 'src2-4.example.com')
-        |ORDER BY doc_id""".stripMargin,
-
-    // the CCNet bucketing twin: q66's LM CTEs, then the same
-    // stride-sample → row_number tercile order statistics → bucket →
-    // md5-coin chain (rate hexes: 1.0 → 'g', 0.5 → 0x80000000,
-    // 0.1 → trunc(0.1·2^32) = 0x19999999)
-    "q88_perplexity_buckets" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(
-        |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS tok
-        |  FROM documents),
-        |cnt AS (SELECT tok, COUNT(*) AS cnt FROM tok GROUP BY 1),
-        |tot AS (SELECT COUNT(*) AS total FROM tok),
-        |scored AS (
-        |  SELECT doc_id, COUNT(*) AS ntok,
-        |    CAST(SUM(CAST(round(ln(CAST(cnt AS DOUBLE) /
-        |      CAST(total AS DOUBLE)), 9) AS DECIMAL(30,9)))
-        |      * -1000000000 AS BIGINT) // COUNT(*) AS nll_mean_nano
-        |  FROM tok JOIN cnt USING (tok) CROSS JOIN tot GROUP BY doc_id),
-        |n AS (SELECT COUNT(*) AS n FROM scored),
-        |stride AS (SELECT GREATEST(1, (n + 999) // 1000) AS s FROM n),
-        |samp AS (SELECT nll_mean_nano FROM scored, stride
-        |  WHERE doc_id % s = 0),
-        |m AS (SELECT COUNT(*) AS m FROM samp),
-        |ks AS (SELECT GREATEST(1, (m + 2) // 3) AS k1,
-        |    GREATEST(1, (2 * m + 2) // 3) AS k2 FROM m),
-        |ranked AS (SELECT nll_mean_nano,
-        |    row_number() OVER (ORDER BY nll_mean_nano) AS r FROM samp),
-        |thr AS (SELECT
-        |    MIN(CASE WHEN r = k1 THEN nll_mean_nano END) AS t1,
-        |    MIN(CASE WHEN r = k2 THEN nll_mean_nano END) AS t2
-        |  FROM ranked, ks),
-        |b AS (SELECT doc_id, ntok, nll_mean_nano,
-        |    CASE WHEN nll_mean_nano <= t1 THEN 'head'
-        |         WHEN nll_mean_nano <= t2 THEN 'middle'
-        |         ELSE 'tail' END AS bucket
-        |  FROM scored, thr)
-        |SELECT doc_id, bucket, nll_mean_nano, ntok FROM b
-        |WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) <
-        |  CASE bucket WHEN 'head' THEN 'g'
-        |              WHEN 'middle' THEN '80000000'
-        |              ELSE '19999999' END
-        |ORDER BY doc_id""".stripMargin,
-
-    "q66_lm_score" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(
-        |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS tok
-        |  FROM documents),
-        |cnt AS (SELECT tok, COUNT(*) AS cnt FROM tok GROUP BY 1),
-        |tot AS (SELECT COUNT(*) AS total FROM tok),
-        |scored AS (
-        |  SELECT doc_id, CAST(round(ln(CAST(cnt AS DOUBLE) /
-        |    CAST(total AS DOUBLE)), 9) AS DECIMAL(30,9)) AS lp
-        |  FROM tok JOIN cnt USING (tok) CROSS JOIN tot)
-        |SELECT doc_id, COUNT(*) AS ntok,
-        |  CAST(SUM(lp) AS DOUBLE) AS logprob_sum,
-        |  CAST(SUM(lp) * -1000000000 AS BIGINT) // COUNT(*) AS nll_mean_nano
-        |FROM scored GROUP BY 1
-        |ORDER BY doc_id""".stripMargin,
-
-    // identical md5/15-hex/60-bit register construction; the harmonic
-    // sum is LONG arithmetic (shift by 53-rho), the alpha expression
-    // is written in the same IEEE evaluation order, ln through the
-    // round-9 idiom — so even the estimate hash-matches
-    "q65_hll_distinct" ->
-      """WITH tok AS (SELECT unnest(string_split(
-        |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS tok
-        |  FROM documents),
-        |h AS (SELECT CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS h,
-        |  tok FROM tok),
-        |r AS (SELECT CAST(h % 256 AS INTEGER) AS bucket,
-        |  CASE WHEN h // 256 = 0 THEN 53
-        |       ELSE 52 - (length(bin(h // 256)) - 1) END AS rho
-        |  FROM h),
-        |reg AS (SELECT bucket, CAST(MAX(rho) AS INTEGER) AS max_rho
-        |  FROM r GROUP BY 1),
-        |est AS (SELECT
-        |  COUNT(*) AS n_buckets_set,
-        |  CAST(SUM(CAST(1 AS BIGINT) << (53 - max_rho)) AS BIGINT) +
-        |    (256 - COUNT(*)) * (CAST(1 AS BIGINT) << 53)
-        |    AS harmonic_sum_scaled
-        |  FROM reg),
-        |est2 AS (SELECT n_buckets_set, harmonic_sum_scaled,
-        |  CAST(0.7213 AS DOUBLE) /
-        |    (CAST(1.0 AS DOUBLE) + CAST(1.079 AS DOUBLE) / CAST(256.0 AS DOUBLE))
-        |    * CAST(256.0 AS DOUBLE) * CAST(256.0 AS DOUBLE)
-        |    * CAST(9007199254740992.0 AS DOUBLE)
-        |    / CAST(harmonic_sum_scaled AS DOUBLE) AS raw
-        |  FROM est),
-        |est3 AS (SELECT n_buckets_set, harmonic_sum_scaled,
-        |  CASE WHEN (256 - n_buckets_set) > 0 AND raw < 640.0
-        |       THEN round(CAST(256.0 AS DOUBLE) * ln(CAST(256.0 AS DOUBLE) /
-        |         CAST(256 - n_buckets_set AS DOUBLE)), 9)
-        |       ELSE round(raw, 9) END + 0.0 AS estimate
-        |  FROM est2),
-        |ex AS (SELECT COUNT(DISTINCT tok) AS exact_distinct FROM h)
-        |SELECT reg.bucket, reg.max_rho, est3.n_buckets_set,
-        |  est3.harmonic_sum_scaled, est3.estimate, ex.exact_distinct
-        |FROM reg CROSS JOIN est3 CROSS JOIN ex
-        |ORDER BY reg.bucket""".stripMargin,
-
-    // the twin reads the FLAT table: the z-order layout must be
-    // answer-invariant under the two-dimensional predicate
-    "q64_zorder_roundtrip" ->
-      s"""SELECT event_type, COUNT(*) AS n_events,
-        |  ${DSUM("value")} AS sum_value
-        |FROM events
-        |WHERE user_id BETWEEN 20 AND 40
-        |  AND ts >= TIMESTAMP '2024-01-05 00:00:00'
-        |  AND ts < TIMESTAMP '2024-01-12 00:00:00'
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-
-    // same tokenizer; DuckDB range() excludes the end like Spark's
-    // sequence(0, n-1); list slice clips like Spark's slice
-    "q63_doc_chunks" ->
-      """WITH tok AS (SELECT doc_id, string_split(
-        |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-        |  FROM documents),
-        |starts AS (
-        |  SELECT doc_id, toks, unnest(range(0, len(toks), 48)) AS start
-        |  FROM tok)
-        |SELECT doc_id,
-        |  CAST(start // 48 AS BIGINT) AS chunk_idx,
-        |  CAST(start AS BIGINT) AS start_tok,
-        |  CAST(least(64, len(toks) - start) AS BIGINT) AS n_chunk_tok,
-        |  array_to_string(toks[start + 1 : least(start + 64, len(toks))], ' ')
-        |    AS chunk_text
-        |FROM starts
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // same tokenizer as q52; score = round(tf * ln(N/df), 9) + 0.0 —
-    // the q27 idiom — with tok as the deterministic tie-break
-    "q62_tfidf_topk" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(
-        |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS tok
-        |  FROM documents),
-        |tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
-        |dfreq AS (SELECT tok, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY 1),
-        |n AS (SELECT COUNT(*) AS n_docs FROM documents),
-        |scored AS (
-        |  SELECT doc_id, tok, tf, df,
-        |    round(tf * ln(CAST(n_docs AS DOUBLE) / df), 9) + 0.0 AS score
-        |  FROM tf JOIN dfreq USING (tok) CROSS JOIN n),
-        |ranked AS (
-        |  SELECT *, CAST(row_number() OVER (
-        |    PARTITION BY doc_id ORDER BY score DESC, tok) AS INTEGER) AS rank
-        |  FROM scored)
-        |SELECT doc_id, rank, tok, tf, df, score
-        |FROM ranked WHERE rank <= 3
-        |ORDER BY doc_id, rank""".stripMargin,
-
-    // naive range-join twin: the bucketed equi-join rewrite must be
-    // answer-invariant (pairs, distinct points, exact sums)
-    "q59_interval_join" ->
-      """WITH w AS (
-        |  SELECT user_id, ts AS w_start, ts + INTERVAL 1 HOUR AS w_end
-        |  FROM events WHERE event_type = 'signup'),
-        |p AS (SELECT event_id, user_id, ts, event_type, value
-        |  FROM events WHERE event_type <> 'signup')
-        |SELECT p.event_type, COUNT(*) AS n_pairs,
-        |  COUNT(DISTINCT p.event_id) AS n_attributed,
-        |  CAST(SUM(CAST(p.value AS DECIMAL(30,6))) AS DOUBLE) AS sum_value
-        |FROM p JOIN w ON p.user_id = w.user_id
-        |  AND p.ts >= w.w_start AND p.ts < w.w_end
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-
-    // same lag/running-sum construction; exact-30min gap stays in the
-    // session (strictly-greater splits) in both engines
-    "q60_sessionize" ->
-      """WITH o AS (
-        |  SELECT user_id, ts, event_id, value,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |           OR ts - LAG(ts) OVER w > INTERVAL 30 MINUTE
-        |         THEN 1 ELSE 0 END AS opens
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT *, CAST(SUM(opens) OVER (
-        |    PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-        |  FROM o)
-        |SELECT user_id, session_seq,
-        |  MIN(ts) AS session_start, MAX(ts) AS session_end,
-        |  COUNT(*) AS n_events,
-        |  CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) AS sum_value
-        |FROM s GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-
-    // ROLLUP twin; lvl derived from null-ness on both sides (no null
-    // flags exist in the data, so null <=> subtotal row)
-    "q61_rollup_agg" ->
-      s"""SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
-        |  COALESCE(l_linestatus, 'ALL') AS linestatus,
-        |  (CASE WHEN l_returnflag IS NULL THEN 2 ELSE 0 END +
-        |   CASE WHEN l_linestatus IS NULL THEN 1 ELSE 0 END) AS lvl,
-        |  COUNT(*) AS n_rows,
-        |  ${DSUM("l_quantity")} AS sum_qty,
-        |  ${DSUM("l_extendedprice")} AS sum_price
-        |FROM lineitem
-        |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY 3, 1, 2""".stripMargin,
-
-    // the twin reads the FLAT table: the layout (dt partitioning,
-    // compaction, in-file sort) must be answer-invariant
-    "q55_layout_roundtrip" ->
-      s"""SELECT date_trunc('day', ts) AS bucket_ts, event_type,
-        |  ${DSUM("value")} AS sum_value,
-        |  ${DAVG("value")} AS mean_value,
-        |  COUNT(value) AS count_value
-        |FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-03 00:00:00'
-        |  AND ts < TIMESTAMP '2024-01-17 00:00:00'
-        |  AND user_id IN (0,1,2,3,4,5,6,7,8,9,10,11,12,13,14,15)
-        |  AND event_type IN ('click','view')
-        |GROUP BY 1, 2
-        |ORDER BY 2, 1""".stripMargin,
-
-    "q52_cms_heavy_hitters" ->
-      """WITH tok AS (SELECT unnest(string_split(
-        |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS tok
-        |  FROM documents),
-        |tcnt AS (SELECT tok, count(*) AS cnt FROM tok GROUP BY tok),
-        |rows_ AS (SELECT unnest(generate_series(0, 3)) AS i),
-        |b AS (SELECT i, tok, cnt,
-        |  CAST(CAST(('0x' || substr(md5(CAST(i AS VARCHAR) || '#' || tok), 1, 8))
-        |    AS BIGINT) % 4096 AS INT) AS bucket
-        |  FROM tcnt, rows_),
-        |counters AS (SELECT i, bucket, sum(cnt) AS counter
-        |             FROM b GROUP BY i, bucket),
-        |top10 AS (SELECT tok, cnt FROM tcnt ORDER BY cnt DESC, tok LIMIT 10)
-        |SELECT t.tok, CAST(t.cnt AS BIGINT) AS exact_cnt,
-        |  CAST(min(c.counter) AS BIGINT) AS cms_est
-        |FROM top10 t
-        |JOIN b tb ON tb.tok = t.tok
-        |JOIN counters c ON c.i = tb.i AND c.bucket = tb.bucket
-        |GROUP BY t.tok, t.cnt
-        |ORDER BY exact_cnt DESC, t.tok""".stripMargin,
-
-    "q51_token_rarity" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(
-        |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS tok
-        |  FROM documents),
-        |dfq AS (SELECT tok, count(DISTINCT doc_id) AS df FROM tok GROUP BY tok)
-        |SELECT t.doc_id,
-        |  count(*) AS n_tok,
-        |  CAST(sum(d.df) AS BIGINT) AS sum_tok_df,
-        |  CAST(min(d.df) AS BIGINT) AS min_tok_df,
-        |  CAST(sum(d.df) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_tok_df
-        |FROM tok t JOIN dfq d ON t.tok = d.tok
-        |GROUP BY t.doc_id
-        |ORDER BY t.doc_id""".stripMargin,
-
-    "q47_token_shards" ->
-      """WITH tok AS (SELECT source, doc_id,
-        |  CAST(len(string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS BIGINT) AS n_tok
-        |  FROM documents)
-        |SELECT source, doc_id, n_tok,
-        |  CAST(COALESCE(CAST(SUM(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0) // 2000
-        |    AS BIGINT) AS shard
-        |FROM tok
-        |ORDER BY source, doc_id""".stripMargin,
-
-    "q95_hash_split" -> {
-      val t1 = graft.operators.Curation.rateThresholdHex(0.96)
-      val t2 = graft.operators.Curation.rateThresholdHex(0.98)
-      s"""WITH s AS (SELECT source,
-        |  CAST(len(string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ')) AS BIGINT) AS n_tok,
-        |  substr(md5('split#' || CAST(doc_id AS VARCHAR)), 1, 8) AS coin
-        |  FROM documents)
-        |SELECT CASE WHEN coin < '$t1' THEN 'train'
-        |            WHEN coin < '$t2' THEN 'val'
-        |            ELSE 'test' END AS split,
-        |  source, COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS total_tokens
-        |FROM s
-        |GROUP BY 1, 2
-        |ORDER BY split, source""".stripMargin
-    },
-
-    "q96_knn_label_audit" ->
-      """WITH scored AS (
-        |  SELECT a.vec_id, a.label, b.vec_id AS nbr_id, b.label AS nbr_label,
-        |    list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |                           CAST(b.embedding AS DOUBLE[])) AS cos_sim
-        |  FROM embeddings a, embeddings b WHERE a.vec_id <> b.vec_id),
-        |r AS (SELECT vec_id, label, nbr_label,
-        |        row_number() OVER (PARTITION BY vec_id
-        |                           ORDER BY cos_sim DESC, nbr_id) AS rank
-        |      FROM scored)
-        |SELECT vec_id, label,
-        |  CAST(SUM(CASE WHEN nbr_label = label THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
-        |  CAST(SUM(CASE WHEN nbr_label = label THEN 1 ELSE 0 END) AS DOUBLE) / 5 AS agree_rate
-        |FROM r WHERE rank <= 5
-        |GROUP BY vec_id, label
-        |ORDER BY vec_id""".stripMargin,
-
-    "q97_centroid_outliers" ->
-      """WITH x0 AS (SELECT vec_id, label, unnest(range(len(embedding))) AS dim, embedding
-        |            FROM embeddings),
-        |x AS (SELECT vec_id, label, dim,
-        |        CAST(floor(CAST(embedding[dim + 1] AS DOUBLE) * 1e9 + 0.5) AS BIGINT)
-        |          + 2000000000 AS xi
-        |      FROM x0),
-        |c AS (SELECT label, dim, CAST(SUM(xi) AS BIGINT) // COUNT(*) AS ci
-        |      FROM x GROUP BY 1, 2),
-        |d AS (SELECT x.vec_id, x.label,
-        |        SUM(CAST(x.xi - c.ci AS DECIMAL(38,0)) * (x.xi - c.ci)) AS s2
-        |      FROM x JOIN c ON x.label = c.label AND x.dim = c.dim
-        |      GROUP BY 1, 2),
-        |r AS (SELECT label, vec_id, s2,
-        |        row_number() OVER (PARTITION BY label
-        |                           ORDER BY s2 DESC, vec_id) AS rank
-        |      FROM d)
-        |SELECT label, rank, vec_id, CAST(s2 AS DOUBLE) / 1e18 AS dist2
-        |FROM r WHERE rank <= 20
-        |ORDER BY label, rank""".stripMargin,
-
-    "q98_split_leakage" -> {
-      val t1 = graft.operators.Curation.rateThresholdHex(0.96)
-      val t2 = graft.operators.Curation.rateThresholdHex(0.98)
-      s"""WITH $BLOCKED_PAIRS_CTE,
-        |sp AS (SELECT doc_id,
-        |  CASE WHEN substr(md5('split#' || CAST(doc_id AS VARCHAR)), 1, 8) < '$t1' THEN 'train'
-        |       WHEN substr(md5('split#' || CAST(doc_id AS VARCHAR)), 1, 8) < '$t2' THEN 'val'
-        |       ELSE 'test' END AS split
-        |  FROM documents),
-        |lab AS (SELECT p.id_a, p.id_b, sa.split AS spa, sb.split AS spb
-        |  FROM pairs p
-        |  JOIN sp sa ON p.id_a = sa.doc_id
-        |  JOIN sp sb ON p.id_b = sb.doc_id)
-        |SELECT least(spa, spb) AS split_a, greatest(spa, spb) AS split_b,
-        |  COUNT(*) AS n_pairs,
-        |  least(spa, spb) <> greatest(spa, spb) AS leaky
-        |FROM lab GROUP BY 1, 2, 4
-        |ORDER BY split_a, split_b""".stripMargin
-    },
-
-    "q99_train_overlap" -> {
-      val t1 = graft.operators.Curation.rateThresholdHex(0.96)
-      val t2 = graft.operators.Curation.rateThresholdHex(0.98)
-      s"""WITH $SHINGLES_CTE,
-        |sp AS (SELECT doc_id, s,
-        |  CASE WHEN substr(md5('split#' || CAST(doc_id AS VARCHAR)), 1, 8) < '$t1' THEN 'train'
-        |       WHEN substr(md5('split#' || CAST(doc_id AS VARCHAR)), 1, 8) < '$t2' THEN 'val'
-        |       ELSE 'test' END AS split
-        |  FROM shz),
-        |ex AS (SELECT doc_id, split, unnest(s) AS g FROM sp),
-        |tr AS (SELECT DISTINCT g FROM ex WHERE split = 'train')
-        |SELECT e.doc_id, COUNT(*) AS n_grams,
-        |  CAST(SUM(CASE WHEN t.g IS NULL THEN 0 ELSE 1 END) AS BIGINT) AS n_in_train,
-        |  CAST(SUM(CASE WHEN t.g IS NULL THEN 0 ELSE 1 END) AS DOUBLE) / COUNT(*) AS overlap_rate
-        |FROM ex e LEFT JOIN tr t USING (g)
-        |WHERE e.split = 'val'
-        |GROUP BY 1
-        |ORDER BY doc_id""".stripMargin
-    },
-
-    "q100_epoch_plan" ->
-      """WITH tok AS (SELECT source,
-        |  CAST(len(string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS BIGINT) AS n_tok
-        |  FROM documents),
-        |cnt AS (SELECT source, COUNT(*) AS n_docs,
-        |  CAST(SUM(n_tok) AS BIGINT) AS n_tokens FROM tok GROUP BY 1),
-        |tot AS (SELECT CAST(SUM(n_tok) AS BIGINT) AS total FROM tok),
-        |w AS (SELECT source, n_docs, n_tokens, total,
-        |  round(pow(CAST(n_tokens AS DOUBLE) / CAST(total AS DOUBLE),
-        |    CAST(0.5 AS DOUBLE)), 9) AS weight
-        |  FROM cnt CROSS JOIN tot),
-        |ws AS (SELECT CAST(SUM(CAST(weight AS DECIMAL(20,9))) AS DOUBLE) AS wsum
-        |  FROM w)
-        |SELECT source, n_docs, n_tokens, weight,
-        |  CAST(floor(CAST(100000 AS DOUBLE) * (weight / wsum)) AS BIGINT)
-        |    AS target_tokens,
-        |  round(least(CAST(4.0 AS DOUBLE),
-        |    CAST(CAST(floor(CAST(100000 AS DOUBLE) * (weight / wsum)) AS BIGINT)
-        |      AS DOUBLE) / CAST(n_tokens AS DOUBLE)), 9) AS epochs
-        |FROM w CROSS JOIN ws
-        |ORDER BY source""".stripMargin,
-
-    "q101_bpe_pairs" ->
-      s"""WITH $BPE_VOCAB_CTE
-        |SELECT u.a AS a, u.b AS b, CAST(SUM(c) AS BIGINT) AS pair_count
-        |FROM wc CROSS JOIN unnest(list_transform(range(length(w)),
-        |  i -> {'a': w[i+1],
-        |        'b': CASE WHEN i+2 <= length(w) THEN w[i+2] ELSE '</w>' END})) AS t(u)
-        |GROUP BY 1, 2
-        |ORDER BY pair_count DESC, a, b
-        |LIMIT 50""".stripMargin,
-
-    "q102_bpe_train" -> bpeTrainOracle(6),
-
-    "q103_bpe_fertility" -> bpeFertilityOracle(6),
-
-    "q104_seqlen_dist" ->
-      """WITH tok AS (SELECT source,
-        |  CAST(len(string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS BIGINT) AS n_tok
-        |  FROM documents)
-        |SELECT source, COUNT(*) AS n_docs,
-        |  CAST(SUM(n_tok) AS BIGINT) AS total_tokens,
-        |  round(quantile_cont(n_tok, 0.5), 9) AS p50,
-        |  round(quantile_cont(n_tok, 0.9), 9) AS p90,
-        |  round(quantile_cont(n_tok, 0.99), 9) AS p99,
-        |  max(n_tok) AS max_tokens
-        |FROM tok
-        |GROUP BY source
-        |ORDER BY source""".stripMargin,
-
-    "q105_table_profile" -> {
-      val shared = (c: String, t: String) =>
-        s"""SELECT '$c' AS "column", '$t' AS dtype, COUNT(*) AS n_rows,
-           |  COUNT(*) - COUNT($c) AS n_null, COUNT(DISTINCT $c) AS n_distinct""".stripMargin
-      def num(c: String, t: String) =
-        s"""${shared(c, t)},
-           |  round(CAST(MIN($c) AS DOUBLE), 9) AS min_num,
-           |  round(CAST(MAX($c) AS DOUBLE), 9) AS max_num,
-           |  CAST(NULL AS VARCHAR) AS min_str, CAST(NULL AS VARCHAR) AS max_str
-           |FROM orders""".stripMargin
-      def str(c: String) =
-        s"""${shared(c, "string")},
-           |  CAST(NULL AS DOUBLE) AS min_num, CAST(NULL AS DOUBLE) AS max_num,
-           |  MIN($c) AS min_str, MAX($c) AS max_str
-           |FROM orders""".stripMargin
-      def ts(c: String) =
-        s"""${shared(c, "timestamp_ntz")},
-           |  CAST(NULL AS DOUBLE) AS min_num, CAST(NULL AS DOUBLE) AS max_num,
-           |  strftime(MIN($c), '%Y-%m-%d %H:%M:%S') AS min_str,
-           |  strftime(MAX($c), '%Y-%m-%d %H:%M:%S') AS max_str
-           |FROM orders""".stripMargin
-      Seq(num("o_orderkey", "bigint"), num("o_custkey", "bigint"),
-          str("o_orderstatus"), num("o_totalprice", "double"),
-          ts("o_orderdate"), str("o_orderpriority"))
-        .mkString("", "\nUNION ALL\n", "\nORDER BY \"column\"")
-    },
-
-    "q106_bpe_encode" ->
-      s"""WITH ${bpeRoundsCte(6)},
-        |tokd AS (SELECT doc_id,
-        |  string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS toks
-        |  FROM documents),
-        |pw AS (SELECT doc_id, u.pos AS pos, u.w AS w
-        |  FROM tokd CROSS JOIN unnest(list_transform(range(len(toks)),
-        |    i -> {'pos': i, 'w': toks[i+1]})) AS t(u)
-        |  WHERE u.w <> '')
-        |SELECT doc_id, CAST(SUM(len(v.s)) AS BIGINT) AS n_subwords,
-        |  array_to_string(flatten(list(v.s ORDER BY pos))[1:20], ' ') AS prefix
-        |FROM pw JOIN v6 v USING (w)
-        |GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    "q107_dataset_card" ->
-      s"""WITH tok AS (SELECT doc_id, unnest(string_split(
-        |    lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ')) AS tok
-        |  FROM documents),
-        |cnt AS (SELECT tok, COUNT(*) AS cnt FROM tok GROUP BY 1),
-        |tot AS (SELECT COUNT(*) AS total FROM tok),
-        |scored AS (
-        |  SELECT doc_id, COUNT(*) AS ntok,
-        |    CAST(SUM(CAST(round(ln(CAST(cnt AS DOUBLE) /
-        |      CAST(total AS DOUBLE)), 9) AS DECIMAL(30,9)))
-        |      * -1000000000 AS BIGINT) // COUNT(*) AS nll_mean_nano
-        |  FROM tok JOIN cnt USING (tok) CROSS JOIN tot GROUP BY doc_id),
-        |base AS (SELECT d.doc_id, d.source,
-        |    sha256(lower(trim(regexp_replace(d.text, '\\s+', ' ', 'g'))))
-        |      AS nt,
-        |    s.ntok, s.nll_mean_nano
-        |  FROM documents d JOIN scored s USING (doc_id)),
-        |man AS (SELECT source, COUNT(*) AS n_docs,
-        |  CAST(SUM(ntok) AS BIGINT) AS total_tokens,
-        |  COUNT(DISTINCT nt) AS n_unique,
-        |  CAST(SUM(nll_mean_nano) AS BIGINT) // COUNT(*) AS mean_nll_nano
-        |  FROM base GROUP BY source),
-        |tok2 AS (SELECT source,
-        |  CAST(len(string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ')) AS BIGINT) AS n_tok
-        |  FROM documents),
-        |dist AS (SELECT source,
-        |  round(quantile_cont(n_tok, 0.5), 9) AS p50,
-        |  round(quantile_cont(n_tok, 0.9), 9) AS p90,
-        |  round(quantile_cont(n_tok, 0.99), 9) AS p99,
-        |  max(n_tok) AS max_tokens
-        |  FROM tok2 GROUP BY source),
-        |${bpeRoundsCte(6)},
-        |ws AS (SELECT source, w, COUNT(*) AS c FROM (
-        |  SELECT source, unnest(string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ')) AS w
-        |  FROM documents) WHERE w <> '' GROUP BY 1, 2),
-        |fert AS (SELECT source, CAST(SUM(ws.c) AS BIGINT) AS n_words,
-        |  CAST(SUM(ws.c * len(v.s)) AS BIGINT) AS n_subwords,
-        |  round(CAST(SUM(ws.c * len(v.s)) AS DOUBLE) / CAST(SUM(ws.c) AS DOUBLE), 9) AS fertility
-        |  FROM ws JOIN v6 v USING (w) GROUP BY source)
-        |SELECT source, n_docs, total_tokens, n_unique, mean_nll_nano,
-        |  p50, p90, p99, max_tokens, n_words, n_subwords, fertility
-        |FROM man JOIN dist USING (source) JOIN fert USING (source)
-        |ORDER BY source""".stripMargin,
-
-    // chained-min formulation — equivalent to the engine's fold state
-    // machine because strict > makes tie order irrelevant
-    "q108_funnel" ->
-      """WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, MIN(e.ts) AS t2 FROM events e
-        |  JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, MIN(e.ts) AS t3 FROM events e
-        |  JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY 1),
-        |u AS (SELECT DISTINCT user_id FROM events)
-        |SELECT u.user_id,
-        |  CAST((t1 IS NOT NULL) AS INTEGER) + CAST((t2 IS NOT NULL) AS INTEGER)
-        |    + CAST((t3 IS NOT NULL) AS INTEGER) AS depth,
-        |  t1, t2, t3
-        |FROM u LEFT JOIN s1 USING (user_id) LEFT JOIN s2 USING (user_id)
-        |  LEFT JOIN s3 USING (user_id)
-        |ORDER BY user_id""".stripMargin,
-
-    // q108's chained-min twin over the SAME earliest-events prefilter:
-    // row_number per entity in (ts, event_type) order, keep <= cap.
-    // Same-(ts, type) ties are interchangeable rows, so the kept
-    // multiset — and with it the funnel — is deterministic either way.
-    "q145_funnel_capped" ->
-      s"""WITH capped AS (SELECT user_id, ts, event_type FROM (
-        |    SELECT user_id, ts, event_type,
-        |      row_number() OVER (PARTITION BY user_id
-        |                         ORDER BY ts, event_type) AS rn
-        |    FROM events) WHERE rn <= $FunnelEntityCap),
-        |s1 AS (SELECT user_id, MIN(ts) AS t1 FROM capped
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, MIN(e.ts) AS t2 FROM capped e
-        |  JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, MIN(e.ts) AS t3 FROM capped e
-        |  JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY 1),
-        |u AS (SELECT DISTINCT user_id FROM capped)
-        |SELECT u.user_id,
-        |  CAST((t1 IS NOT NULL) AS INTEGER) + CAST((t2 IS NOT NULL) AS INTEGER)
-        |    + CAST((t3 IS NOT NULL) AS INTEGER) AS depth,
-        |  t1, t2, t3
-        |FROM u LEFT JOIN s1 USING (user_id) LEFT JOIN s2 USING (user_id)
-        |  LEFT JOIN s3 USING (user_id)
-        |ORDER BY user_id""".stripMargin,
-
-    "q146_heavy_hitters" ->
-      s"""WITH tok AS (SELECT unnest(string_split(lower(trim(
-        |    regexp_replace(text, '\\s+', ' ', 'g'))), ' ')) AS w
-        |  FROM documents),
-        |c AS (SELECT w, COUNT(*) AS cnt FROM tok GROUP BY 1),
-        |n AS (SELECT COUNT(*) AS n FROM tok)
-        |SELECT w AS item, cnt,
-        |  round(CAST(cnt AS DOUBLE) / CAST(n AS DOUBLE), 9) AS share
-        |FROM c, n WHERE cnt * $HeavyHitterK > n
-        |ORDER BY cnt DESC, item""".stripMargin,
-
-    "q147_sorted_neighborhood" -> snmTwin,
-
-    "q148_cooccurrence_lift" ->
-      s"""WITH o AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |           OR ts - LAG(ts) OVER w > INTERVAL $SessionGapMinutes MINUTE
-        |         THEN 1 ELSE 0 END AS opens
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT *, CAST(SUM(opens) OVER (
-        |    PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-        |  FROM o),
-        |st AS (SELECT DISTINCT user_id, session_seq, event_type FROM s),
-        |ns AS (SELECT COUNT(*) AS n FROM
-        |  (SELECT DISTINCT user_id, session_seq FROM st)),
-        |tc AS (SELECT event_type AS t, COUNT(*) AS n_t FROM st GROUP BY 1),
-        |pr AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-        |    COUNT(*) AS n_ab
-        |  FROM st a JOIN st b
-        |    ON a.user_id = b.user_id AND a.session_seq = b.session_seq
-        |      AND a.event_type < b.event_type
-        |  GROUP BY 1, 2)
-        |SELECT type_a, type_b, n_ab,
-        |  round(CAST(n_ab AS DOUBLE) / CAST(ns.n AS DOUBLE), 9) AS support,
-        |  round(CAST(n_ab AS DOUBLE) / CAST(ta.n_t AS DOUBLE), 9)
-        |    AS confidence,
-        |  round(CAST(n_ab * ns.n AS DOUBLE) /
-        |    CAST(ta.n_t * tb.n_t AS DOUBLE), 9) AS lift
-        |FROM pr CROSS JOIN ns
-        |  JOIN tc ta ON ta.t = pr.type_a
-        |  JOIN tc tb ON tb.t = pr.type_b
-        |ORDER BY type_a, type_b""".stripMargin,
-
-    "q149_referential_audit" -> refAuditTwin,
-
-    "q150_transition_pagerank" -> pageRankTwin(PageRankIters,
-      PageRankDampingPct),
-
-    "q151_random_projection" ->
-      s"""WITH x0 AS (SELECT vec_id, unnest(range(len(embedding))) AS dim,
-        |    embedding FROM embeddings),
-        |x AS (SELECT vec_id, CAST(dim AS BIGINT) AS dim,
-        |    CAST(floor(CAST(embedding[dim + 1] AS DOUBLE) * 1e9 + 0.5)
-        |      AS BIGINT) AS xi
-        |  FROM x0),
-        |ks AS (SELECT CAST(unnest(range($SrpOutDims)) AS BIGINT) AS k),
-        |sg AS (SELECT ks.k, d.dim,
-        |    CASE WHEN substr(md5(CAST(ks.k AS VARCHAR) || ':' ||
-        |        CAST(d.dim AS VARCHAR)), 1, 1) >= '8'
-        |      THEN 1 ELSE -1 END AS s
-        |  FROM ks CROSS JOIN (SELECT DISTINCT dim FROM x) d),
-        |p AS (SELECT x.vec_id, sg.k,
-        |    CAST(SUM(sg.s * x.xi) AS BIGINT) AS proj
-        |  FROM x JOIN sg USING (dim) GROUP BY 1, 2)
-        |SELECT vec_id, k, proj FROM p ORDER BY vec_id, k""".stripMargin,
-
-    "q153_srp_code_histogram" ->
-      s"""WITH x0 AS (SELECT vec_id, unnest(range(len(embedding))) AS dim,
-        |    embedding FROM embeddings),
-        |x AS (SELECT vec_id, CAST(dim AS BIGINT) AS dim,
-        |    CAST(floor(CAST(embedding[dim + 1] AS DOUBLE) * 1e9 + 0.5)
-        |      AS BIGINT) AS xi
-        |  FROM x0),
-        |ks AS (SELECT CAST(unnest(range($SrpOutDims)) AS BIGINT) AS k),
-        |sg AS (SELECT ks.k, d.dim,
-        |    CASE WHEN substr(md5(CAST(ks.k AS VARCHAR) || ':' ||
-        |        CAST(d.dim AS VARCHAR)), 1, 1) >= '8'
-        |      THEN 1 ELSE -1 END AS s
-        |  FROM ks CROSS JOIN (SELECT DISTINCT dim FROM x) d),
-        |p AS (SELECT x.vec_id, sg.k,
-        |    CAST(SUM(sg.s * x.xi) AS BIGINT) AS proj
-        |  FROM x JOIN sg USING (dim) GROUP BY 1, 2),
-        |cd AS (SELECT vec_id,
-        |    CAST(SUM(CASE WHEN proj >= 0
-        |      THEN CAST(power(2, k) AS BIGINT) ELSE 0 END) AS BIGINT)
-        |      AS code
-        |  FROM p GROUP BY 1),
-        |h AS (SELECT code, COUNT(*) AS n FROM cd GROUP BY 1),
-        |t AS (SELECT CAST(SUM(n) AS BIGINT) AS total FROM h)
-        |SELECT code, n,
-        |  round(CAST(n AS DOUBLE) / CAST(total AS DOUBLE), 9) AS share
-        |FROM h CROSS JOIN t
-        |ORDER BY n DESC, code""".stripMargin,
-
-    "q154_pack_efficiency" ->
-      s"""WITH tok AS (SELECT source, doc_id,
-        |    CAST(len(string_split(lower(trim(
-        |      regexp_replace(text, '\\s+', ' ', 'g'))), ' ')) AS BIGINT)
-        |      AS n_tok
-        |  FROM documents),
-        |o AS (SELECT source AS shard, doc_id, n_tok,
-        |    COALESCE(CAST(SUM(n_tok) OVER (PARTITION BY source
-        |      ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |      AS BIGINT), 0) AS start_tok
-        |  FROM tok),
-        |p AS (SELECT shard, n_tok,
-        |    (start_tok + n_tok - 1) // $PackBinTokens
-        |      - start_tok // $PackBinTokens + 1 AS bins_spanned
-        |  FROM o),
-        |a AS (SELECT shard, COUNT(*) AS n_docs,
-        |    CAST(SUM(n_tok) AS BIGINT) AS total_tok,
-        |    CAST(SUM(CASE WHEN bins_spanned > 1 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_straddling
-        |  FROM p GROUP BY 1),
-        |b AS (SELECT shard, n_docs, total_tok, n_straddling,
-        |    (total_tok - 1) // $PackBinTokens + 1 AS n_bins
-        |  FROM a)
-        |SELECT shard, n_docs, total_tok, n_straddling, n_bins,
-        |  n_bins * $PackBinTokens - total_tok AS pad_tok,
-        |  round(CAST(total_tok AS DOUBLE) /
-        |    CAST(n_bins * $PackBinTokens AS DOUBLE), 9) + 0.0 AS fill_rate,
-        |  round(CAST(n_straddling AS DOUBLE) / CAST(n_docs AS DOUBLE), 9)
-        |    + 0.0 AS straddle_share
-        |FROM b ORDER BY shard""".stripMargin,
-
-    "q155_dedup_survivorship" ->
-      """WITH b AS (SELECT source AS grp, doc_id AS id,
-        |    sha256(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
-        |      AS content_hash
-        |  FROM documents),
-        |c AS (SELECT content_hash, min(id) AS canonical_id
-        |  FROM b GROUP BY 1),
-        |j AS (SELECT b.grp, b.id, c.canonical_id, cg.grp AS canonical_grp
-        |  FROM b JOIN c USING (content_hash)
-        |  JOIN b cg ON cg.id = c.canonical_id),
-        |a AS (SELECT grp, COUNT(*) AS n_docs,
-        |    CAST(SUM(CASE WHEN id = canonical_id THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_kept,
-        |    CAST(SUM(CASE WHEN id <> canonical_id THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_dropped,
-        |    CAST(SUM(CASE WHEN id <> canonical_id
-        |        AND grp <> canonical_grp THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_lost_cross_group
-        |  FROM j GROUP BY 1)
-        |SELECT grp, n_docs, n_kept, n_dropped, n_lost_cross_group,
-        |  round(CAST(n_dropped AS DOUBLE) / CAST(n_docs AS DOUBLE), 9)
-        |    + 0.0 AS drop_share
-        |FROM a ORDER BY grp""".stripMargin,
-
-    "q156_split_balance" -> {
-      val t1 = graft.operators.Curation.rateThresholdHex(0.96)
-      val t2 = graft.operators.Curation.rateThresholdHex(0.98)
-      s"""WITH s AS (SELECT source AS grp,
-        |    substr(md5('split#' || CAST(doc_id AS VARCHAR)), 1, 8) AS coin
-        |  FROM documents),
-        |a AS (SELECT CASE WHEN coin < '$t1' THEN 'train'
-        |             WHEN coin < '$t2' THEN 'val'
-        |             ELSE 'test' END AS split, grp FROM s),
-        |cell AS (SELECT split, grp, COUNT(*) AS n_docs
-        |  FROM a GROUP BY 1, 2),
-        |ps AS (SELECT split, CAST(SUM(n_docs) AS BIGINT) AS split_total
-        |  FROM cell GROUP BY 1),
-        |pg AS (SELECT grp, CAST(SUM(n_docs) AS BIGINT) AS grp_total
-        |  FROM cell GROUP BY 1),
-        |ct AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS corpus_total
-        |  FROM cell),
-        |sh AS (SELECT cell.split, cell.grp, cell.n_docs,
-        |    round(CAST(cell.n_docs AS DOUBLE) /
-        |      CAST(ps.split_total AS DOUBLE), 9) + 0.0 AS obs_share,
-        |    round(CAST(pg.grp_total AS DOUBLE) /
-        |      CAST(ct.corpus_total AS DOUBLE), 9) + 0.0 AS exp_share
-        |  FROM cell JOIN ps USING (split) JOIN pg USING (grp)
-        |  CROSS JOIN ct)
-        |SELECT split, grp, n_docs, obs_share, exp_share,
-        |  round(abs(obs_share - exp_share), 9) + 0.0 AS abs_dev
-        |FROM sh ORDER BY split, grp""".stripMargin
-    },
-
-    "q152_pack_plan" ->
-      s"""WITH tok AS (SELECT source, doc_id,
-        |    CAST(len(string_split(lower(trim(
-        |      regexp_replace(text, '\\s+', ' ', 'g'))), ' ')) AS BIGINT)
-        |      AS n_tok
-        |  FROM documents),
-        |o AS (SELECT source AS shard, doc_id, n_tok,
-        |    COALESCE(CAST(SUM(n_tok) OVER (PARTITION BY source
-        |      ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |      AS BIGINT), 0) AS start_tok
-        |  FROM tok)
-        |SELECT shard, doc_id, n_tok, start_tok,
-        |  start_tok // $PackBinTokens AS bin,
-        |  start_tok % $PackBinTokens AS bin_pos,
-        |  (start_tok + n_tok - 1) // $PackBinTokens
-        |    - start_tok // $PackBinTokens + 1 AS bins_spanned
-        |FROM o ORDER BY shard, doc_id""".stripMargin,
-
-    "q157_binned_quantiles" ->
-      s"""WITH tok AS (SELECT source,
-        |    CAST(len(string_split(lower(trim(
-        |      regexp_replace(text, '\\s+', ' ', 'g'))), ' ')) AS BIGINT)
-        |      AS n_tok
-        |  FROM documents),
-        |b AS (SELECT source, n_tok // $TokQuantileBinTokens AS bin,
-        |    COUNT(*) AS n
-        |  FROM tok GROUP BY 1, 2),
-        |c AS (SELECT source, bin,
-        |    CAST(SUM(n) OVER (PARTITION BY source ORDER BY bin)
-        |      AS BIGINT) AS cum,
-        |    CAST(SUM(n) OVER (PARTITION BY source) AS BIGINT) AS total
-        |  FROM b),
-        |p AS (SELECT source, bin, pct FROM c
-        |  CROSS JOIN (SELECT unnest([${TokQuantilePcts.mkString(", ")}])
-        |    AS pct)
-        |  WHERE cum * 100 >= pct * total)
-        |SELECT source, CAST(pct AS INTEGER) AS pct, MIN(bin) AS q_bin,
-        |  MIN(bin) * $TokQuantileBinTokens AS q_lo,
-        |  (MIN(bin) + 1) * $TokQuantileBinTokens - 1 AS q_hi
-        |FROM p GROUP BY 1, 2 ORDER BY source, pct""".stripMargin,
-
-    "q158_langid_confusion" -> {
-      // the twin replays langIdPredict's left-fold argmax ("later
-      // profile wins only on STRICTLY greater score") on the integer
-      // matched counts — equivalent because every score shares the
-      // document's token-count denominator
-      def inList(ws: Seq[String]) = ws.map(w => s"'$w'").mkString(", ")
-      val Seq((n1, w1), (n2, w2), (n3, w3)) = LangIdProfiles
-      s"""WITH tok AS (SELECT lang,
-        |    string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS toks
-        |  FROM documents),
-        |m AS (SELECT lang, CAST(len(toks) AS BIGINT) AS n_tok,
-        |    CAST(len(list_filter(toks, t -> t IN (${inList(w1)}))) AS BIGINT) AS m1,
-        |    CAST(len(list_filter(toks, t -> t IN (${inList(w2)}))) AS BIGINT) AS m2,
-        |    CAST(len(list_filter(toks, t -> t IN (${inList(w3)}))) AS BIGINT) AS m3
-        |  FROM tok),
-        |p AS (SELECT lang, n_tok,
-        |    CASE WHEN m3 > (CASE WHEN m2 > m1 THEN m2 ELSE m1 END) THEN '$n3'
-        |         WHEN m2 > m1 THEN '$n2' ELSE '$n1' END AS pred,
-        |    CASE WHEN m3 > (CASE WHEN m2 > m1 THEN m2 ELSE m1 END) THEN m3
-        |         WHEN m2 > m1 THEN m2 ELSE m1 END AS m_pred
-        |  FROM m)
-        |SELECT lang, pred, COUNT(*) AS n_docs,
-        |  CAST(SUM(m_pred) AS BIGINT) AS matched_tokens,
-        |  CAST(SUM(n_tok) AS BIGINT) AS total_tokens
-        |FROM p GROUP BY 1, 2 ORDER BY lang, pred""".stripMargin
-    },
-
-    "q159_embedding_covariance" ->
-      """WITH d AS (SELECT unnest(range(len(
-        |    (SELECT embedding FROM embeddings LIMIT 1)))) AS k),
-        |pr AS (SELECT a.k AS i, b.k AS j FROM d a, d b WHERE b.k >= a.k),
-        |x AS (SELECT pr.i, pr.j,
-        |    CAST(floor(CAST(embedding[pr.i + 1] AS DOUBLE) * 1e9 + 0.5)
-        |      AS BIGINT) AS xi,
-        |    CAST(floor(CAST(embedding[pr.j + 1] AS DOUBLE) * 1e9 + 0.5)
-        |      AS BIGINT) AS xj
-        |  FROM embeddings, pr),
-        |agg AS (SELECT i, j, COUNT(*) AS n,
-        |    SUM(CAST(xi AS DECIMAL(38,0))) AS sx,
-        |    SUM(CAST(xj AS DECIMAL(38,0))) AS sy,
-        |    SUM(CAST(xi AS DECIMAL(38,0)) * xj) AS sxy
-        |  FROM x GROUP BY 1, 2),
-        |c AS (SELECT i, j, n,
-        |    CAST(CAST(n AS DECIMAL(38,0)) * sxy - sx * sy AS HUGEINT)
-        |      AS cov_num,
-        |    CAST(CAST(n AS DECIMAL(38,0)) * n AS HUGEINT) AS nn
-        |  FROM agg)
-        |SELECT CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j, n,
-        |  CAST(CAST((cov_num + nn * 8000000000000000000) // nn
-        |      AS BIGINT) - 8000000000000000000 AS DOUBLE) / 1e18 AS cov
-        |FROM c ORDER BY i, j""".stripMargin,
-
-    "q160_rolling_active_hll" ->
-      """SELECT COUNT(DISTINCT CAST(ts AS DATE)) AS n_days,
-        |  CAST(TRUE AS BOOLEAN) AS rel_err_ok
-        |FROM events""".stripMargin,
-
-    "q109_cohort_retention" ->
-      """WITH fd AS (SELECT user_id, MIN(CAST(ts AS DATE)) AS cohort_d
-        |  FROM events GROUP BY 1),
-        |ad AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events)
-        |SELECT strftime(cohort_d, '%Y-%m-%d') AS cohort_day,
-        |  CAST(datediff('day', cohort_d, d) AS INTEGER) AS k,
-        |  COUNT(DISTINCT user_id) AS n_active
-        |FROM ad JOIN fd USING (user_id)
-        |GROUP BY 1, 2
-        |ORDER BY cohort_day, k""".stripMargin,
-
-    "q110_rolling_active" ->
-      """WITH du AS (SELECT DISTINCT CAST(ts AS DATE) AS d, user_id AS u
-        |  FROM events),
-        |dau AS (SELECT d, COUNT(DISTINCT u) AS dau FROM du GROUP BY 1),
-        |rw AS (SELECT d + CAST(i AS INTEGER) AS anchor, u FROM du
-        |  CROSS JOIN unnest(generate_series(0, 6)) t(i)),
-        |wau AS (SELECT anchor, COUNT(DISTINCT u) AS wau_7d
-        |  FROM rw GROUP BY 1)
-        |SELECT strftime(dau.d, '%Y-%m-%d') AS day, dau.dau AS dau,
-        |  wau.wau_7d AS wau_7d
-        |FROM dau JOIN wau ON dau.d = wau.anchor
-        |ORDER BY day""".stripMargin,
-
-    "q111_event_transitions" ->
-      """WITH nx AS (SELECT event_type AS et,
-        |  lead(event_type) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) AS net
-        |  FROM events),
-        |cnt AS (SELECT et, net, COUNT(*) AS n FROM nx
-        |  WHERE net IS NOT NULL GROUP BY 1, 2)
-        |SELECT et, net, n,
-        |  round(CAST(n AS DOUBLE) /
-        |    CAST(SUM(n) OVER (PARTITION BY et) AS DOUBLE), 9) AS p
-        |FROM cnt
-        |ORDER BY et, net""".stripMargin,
-
-    "q112_conversion_stats" ->
-      """WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, MIN(e.ts) AS t2 FROM events e
-        |  JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, MIN(e.ts) AS t3 FROM events e
-        |  JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY 1),
-        |u AS (SELECT DISTINCT user_id FROM events),
-        |d AS (SELECT u.user_id, t3,
-        |  CAST(epoch_us(t3) - epoch_us(t1) AS DOUBLE) / 1000000.0 AS d
-        |  FROM u LEFT JOIN s1 USING (user_id) LEFT JOIN s3 USING (user_id))
-        |SELECT COUNT(*) AS n_users, COUNT(t3) AS n_converted,
-        |  round(CAST(COUNT(t3) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 9)
-        |    AS conv_rate,
-        |  round(quantile_cont(d, 0.5), 9) AS p50_secs,
-        |  round(quantile_cont(d, 0.9), 9) AS p90_secs,
-        |  round(MAX(d), 9) AS max_secs
-        |FROM d""".stripMargin,
-
-    "q113_label_separation" ->
-      """WITH x0 AS (SELECT label, unnest(range(len(embedding))) AS dim, embedding
-        |            FROM embeddings),
-        |x AS (SELECT label, dim,
-        |        CAST(floor(CAST(embedding[dim + 1] AS DOUBLE) * 1e9 + 0.5) AS BIGINT)
-        |          + 2000000000 AS xi
-        |      FROM x0),
-        |c AS (SELECT label, dim, CAST(SUM(xi) AS BIGINT) // COUNT(*) AS ci
-        |      FROM x GROUP BY 1, 2),
-        |sz AS (SELECT label, COUNT(*) AS n FROM embeddings GROUP BY 1),
-        |p AS (SELECT a.label AS label_a, b.label AS label_b,
-        |        SUM(CAST(a.ci - b.ci AS DECIMAL(38,0)) * (a.ci - b.ci)) AS s2
-        |      FROM c a JOIN c b ON a.dim = b.dim AND a.label < b.label
-        |      GROUP BY 1, 2)
-        |SELECT label_a, label_b, sa.n AS n_a, sb.n AS n_b,
-        |  CAST(s2 AS DOUBLE) / 1e18 AS dist2
-        |FROM p JOIN sz sa ON p.label_a = sa.label
-        |       JOIN sz sb ON p.label_b = sb.label
-        |ORDER BY label_a, label_b""".stripMargin,
-
-    "q114_embedding_norms" ->
-      """WITH x0 AS (SELECT vec_id, label, unnest(range(len(embedding))) AS dim, embedding
-        |            FROM embeddings),
-        |x AS (SELECT vec_id, label,
-        |        CAST(floor(CAST(embedding[dim + 1] AS DOUBLE) * 1e9 + 0.5) AS BIGINT) AS xi
-        |      FROM x0),
-        |nr AS (SELECT vec_id, label,
-        |        CAST(SUM(CAST(xi AS DECIMAL(38,0)) * xi) AS DOUBLE) / 1e18 AS norm2
-        |      FROM x GROUP BY 1, 2)
-        |SELECT label, COUNT(*) AS n,
-        |  round(quantile_cont(norm2, 0.5), 9) AS p50_norm2,
-        |  round(quantile_cont(norm2, 0.9), 9) AS p90_norm2,
-        |  round(MIN(norm2), 9) AS min_norm2,
-        |  round(MAX(norm2), 9) AS max_norm2
-        |FROM nr
-        |GROUP BY label
-        |ORDER BY label""".stripMargin,
-
-    "q115_top_paths" ->
-      """WITH nx AS (SELECT event_type AS e0,
-        |    lead(event_type, 1) OVER w AS e1,
-        |    lead(event_type, 2) OVER w AS e2
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT e0 || ' > ' || e1 || ' > ' || e2 AS path, COUNT(*) AS n
-        |FROM nx WHERE e2 IS NOT NULL
-        |GROUP BY 1
-        |ORDER BY n DESC, path
-        |LIMIT 20""".stripMargin,
-
-    // same nano quantization as q113/q114; mean and the variance
-    // numerator n*S2 - S1^2 stay integral and are floor-quantized to
-    // nano units by integral divides BEFORE any double cast (wide
-    // DECIMAL->DOUBLE rounds differently across engines past 2^53 —
-    // the q121 lesson; int64->double is correctly rounded everywhere);
-    // the collapsed flag compares in integer nano^2-space
-    "q116_dimension_stats" ->
-      """WITH x0 AS (SELECT unnest(range(len(embedding))) AS dim, embedding
-        |            FROM embeddings),
-        |x AS (SELECT CAST(dim AS BIGINT) AS dim,
-        |        CAST(floor(CAST(embedding[dim + 1] AS DOUBLE) * 1e9 + 0.5) AS BIGINT) AS xi
-        |      FROM x0),
-        |agg AS (SELECT dim, COUNT(*) AS n,
-        |          SUM(CAST(xi AS DECIMAL(38,0))) AS s1,
-        |          SUM(CAST(xi AS DECIMAL(38,0)) * xi) AS s2
-        |        FROM x GROUP BY 1),
-        |v AS (SELECT dim, n, s1, n * s2 - s1 * s1 AS var_num FROM agg)
-        |SELECT dim, n,
-        |  CAST(CAST(CAST(s1 + CAST(n AS DECIMAL(38,0)) * 2000000000
-        |      AS HUGEINT) // n AS BIGINT) - 2000000000 AS DOUBLE) / 1e9
-        |    AS mean,
-        |  CAST(CAST(CAST(var_num AS HUGEINT) // (n * n) AS BIGINT)
-        |      AS DOUBLE) / 1e18 AS variance,
-        |  var_num < CAST(100000000000000 AS DECIMAL(38,0)) * n * n AS collapsed
-        |FROM v
-        |ORDER BY dim""".stripMargin,
-
-    // shared-token terms via the q66 round-9/DECIMAL idiom; unshared
-    // probability mass contributes 0.5*ln(2)*(1 - sharedMass) in
-    // closed form (m = p/2 there), pinned as one double chain
-    "q117_source_divergence" ->
-      """WITH tok AS (SELECT source AS src, unnest(string_split(
-        |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS tok
-        |  FROM documents),
-        |tk AS (SELECT src, tok FROM tok WHERE len(tok) > 0),
-        |cnt AS (SELECT src, tok, COUNT(*) AS cnt FROM tk GROUP BY 1, 2),
-        |tot AS (SELECT src, COUNT(*) AS tot FROM tk GROUP BY 1),
-        |sh AS (SELECT a.src AS src_a, b.src AS src_b,
-        |         a.cnt AS cnt_a, b.cnt AS cnt_b, ta.tot AS tot_a, tb.tot AS tot_b
-        |       FROM cnt a JOIN cnt b ON a.tok = b.tok AND a.src < b.src
-        |       JOIN tot ta ON ta.src = a.src JOIN tot tb ON tb.src = b.src),
-        |pm AS (SELECT src_a, src_b, cnt_a, cnt_b,
-        |         CAST(cnt_a AS DOUBLE) / CAST(tot_a AS DOUBLE) AS pa,
-        |         CAST(cnt_b AS DOUBLE) / CAST(tot_b AS DOUBLE) AS pb
-        |       FROM sh),
-        |tm AS (SELECT src_a, src_b, cnt_a, cnt_b,
-        |         CAST(round(0.5 * (pa * ln(pa / ((pa + pb) / 2))
-        |           + pb * ln(pb / ((pa + pb) / 2))), 9) AS DECIMAL(30,9)) AS contrib
-        |       FROM pm),
-        |agg AS (SELECT src_a, src_b, COUNT(*) AS n_shared,
-        |          CAST(SUM(cnt_a) AS BIGINT) AS sh_a,
-        |          CAST(SUM(cnt_b) AS BIGINT) AS sh_b, SUM(contrib) AS c
-        |        FROM tm GROUP BY 1, 2),
-        |pairs AS (SELECT a.src AS src_a, b.src AS src_b,
-        |            a.tot AS tot_a, b.tot AS tot_b
-        |          FROM tot a JOIN tot b ON a.src < b.src)
-        |SELECT p.src_a, p.src_b, COALESCE(n_shared, 0) AS n_shared,
-        |  CAST(COALESCE(c, 0) AS DOUBLE)
-        |    + (0.5 * ln(2)) * (CAST(tot_a - COALESCE(sh_a, 0) AS DOUBLE)
-        |        / CAST(tot_a AS DOUBLE))
-        |    + (0.5 * ln(2)) * (CAST(tot_b - COALESCE(sh_b, 0) AS DOUBLE)
-        |        / CAST(tot_b AS DOUBLE)) AS js
-        |FROM pairs p LEFT JOIN agg USING (src_a, src_b)
-        |ORDER BY src_a, src_b""".stripMargin,
-
-    // trailing stats stay integral (n*S2 - S1^2) until one pinned
-    // double chain + IEEE sqrt; RANGE window on the epoch-day key so
-    // missing days shrink the sample
-    "q118_volume_anomaly" ->
-      """WITH daily AS (SELECT event_type AS et, CAST(ts AS DATE) AS d,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |dn AS (SELECT et, d, n,
-        |    CAST(datediff('day', DATE '1970-01-01', d) AS BIGINT) AS dnum
-        |  FROM daily),
-        |w AS (SELECT et, d, n,
-        |    COUNT(n) OVER tw AS n_days,
-        |    CAST(SUM(n) OVER tw AS BIGINT) AS s1,
-        |    CAST(SUM(n * n) OVER tw AS BIGINT) AS s2
-        |  FROM dn
-        |  WINDOW tw AS (PARTITION BY et ORDER BY dnum
-        |    RANGE BETWEEN 7 PRECEDING AND 1 PRECEDING)),
-        |f AS (SELECT *, n_days * s2 - s1 * s1 AS var_num,
-        |    CAST(s1 AS DOUBLE) / CAST(n_days AS DOUBLE) AS mean_w
-        |  FROM w WHERE n_days >= 3),
-        |z AS (SELECT *, CASE WHEN var_num > 0 THEN
-        |    (CAST(n AS DOUBLE) - mean_w)
-        |      / sqrt(CAST(var_num AS DOUBLE)
-        |          / CAST(n_days * (n_days - 1) AS DOUBLE)) END AS z
-        |  FROM f)
-        |SELECT et AS event_type, strftime(d, '%Y-%m-%d') AS day, n, n_days,
-        |  mean_w, z, COALESCE(abs(z) > 3.0, FALSE) AS spike
-        |FROM z
-        |ORDER BY event_type, day""".stripMargin,
-
-    "q119_event_cadence" ->
-      """WITH g AS (SELECT event_type,
-        |    epoch_us(ts) - lag(epoch_us(ts)) OVER
-        |      (PARTITION BY user_id, event_type ORDER BY ts, event_id) AS g
-        |  FROM events),
-        |gg AS (SELECT event_type, g, CAST(g AS DOUBLE) / 1000000.0 AS gs
-        |  FROM g WHERE g IS NOT NULL)
-        |SELECT event_type, COUNT(*) AS n_gaps,
-        |  CAST(SUM(g) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) / 1000000.0
-        |    AS mean_s,
-        |  round(quantile_cont(gs, 0.5), 9) AS p50_s,
-        |  round(quantile_cont(gs, 0.9), 9) AS p90_s,
-        |  MAX(gs) AS max_s
-        |FROM gg GROUP BY 1
-        |ORDER BY event_type""".stripMargin,
-
-    // rank-sum Gini: numerator 2*Sum(i*x) - (n+1)*Sum(x) exact in
-    // DECIMAL; top-decile cut is ceil(n/10) entities by the pinned
-    // (x, entity) ascending order
-    "q120_activity_gini" ->
-      """WITH pu AS (SELECT event_type, user_id AS u, COUNT(*) AS x
-        |  FROM events GROUP BY 1, 2),
-        |r AS (SELECT event_type, u, x,
-        |    CAST(row_number() OVER
-        |      (PARTITION BY event_type ORDER BY x, u) AS BIGINT) AS i,
-        |    COUNT(*) OVER (PARTITION BY event_type) AS ntot
-        |  FROM pu),
-        |t AS (SELECT *, i > ntot - ((ntot + 9) // 10) AS topdec FROM r)
-        |SELECT event_type, COUNT(*) AS n_users,
-        |  CAST(SUM(x) AS BIGINT) AS n_events,
-        |  CAST(CAST((CAST(2 * SUM(CAST(i AS DECIMAL(38,0)) * x) AS HUGEINT)
-        |        - (COUNT(*) + 1) * CAST(SUM(x) AS HUGEINT)) * 1000000000
-        |      // (CAST(COUNT(*) AS HUGEINT) * CAST(SUM(x) AS HUGEINT))
-        |      AS BIGINT) AS DOUBLE) / 1e9 AS gini,
-        |  CAST(SUM(CASE WHEN topdec THEN x ELSE 0 END) AS DOUBLE)
-        |    / CAST(SUM(x) AS DOUBLE) AS top10_share
-        |FROM t GROUP BY 1
-        |ORDER BY event_type""".stripMargin,
-
-    "q121_kmeans" -> kmeansTwin(8, 3),
-
-    // q108's chained-min formulation gives the same per-step reach as
-    // the state machine (strict-after makes tie order irrelevant);
-    // step-1's conv_from_prev denominator is the full entity population
-    "q122_funnel_dropoff" ->
-      """WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, MIN(e.ts) AS t2 FROM events e
-        |  JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, MIN(e.ts) AS t3 FROM events e
-        |  JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY 1),
-        |u AS (SELECT COUNT(DISTINCT user_id) AS n_total FROM events),
-        |n AS (SELECT CAST(1 AS BIGINT) AS step, 'view' AS step_name,
-        |        (SELECT COUNT(*) FROM s1) AS n_reached
-        |      UNION ALL SELECT 2, 'click', (SELECT COUNT(*) FROM s2)
-        |      UNION ALL SELECT 3, 'purchase', (SELECT COUNT(*) FROM s3)),
-        |w AS (SELECT n.*,
-        |    lag(n_reached, 1, (SELECT n_total FROM u)) OVER (ORDER BY step)
-        |      AS prev,
-        |    (SELECT n_total FROM u) AS n_total
-        |  FROM n)
-        |SELECT step, step_name, n_reached,
-        |  CASE WHEN prev > 0 THEN
-        |    CAST(n_reached AS DOUBLE) / CAST(prev AS DOUBLE) END
-        |    AS conv_from_prev,
-        |  CASE WHEN n_total > 0 THEN
-        |    CAST(n_reached AS DOUBLE) / CAST(n_total AS DOUBLE) END
-        |    AS conv_from_total
-        |FROM w
-        |ORDER BY step""".stripMargin,
-
-    "q123_lexical_diversity" ->
-      """WITH tok AS (SELECT source, unnest(string_split(
-        |    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS tok
-        |  FROM documents),
-        |cnt AS (SELECT source, tok, COUNT(*) AS cnt FROM tok
-        |  WHERE len(tok) > 0 GROUP BY 1, 2)
-        |SELECT source, CAST(SUM(cnt) AS BIGINT) AS n_tokens,
-        |  COUNT(*) AS vocab,
-        |  CAST(SUM(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
-        |  CAST(COUNT(*) AS DOUBLE) / CAST(CAST(SUM(cnt) AS BIGINT) AS DOUBLE)
-        |    AS ttr,
-        |  CAST(CAST(SUM(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS hapax_ratio
-        |FROM cnt
-        |GROUP BY source
-        |ORDER BY source""".stripMargin,
-
-    // the q60 sessionizer CTE collapsed to one global engagement row
-    "q124_session_stats" ->
-      s"""WITH o AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |           OR ts - LAG(ts) OVER w > INTERVAL $SessionGapMinutes MINUTE
-        |         THEN 1 ELSE 0 END AS opens
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT *, CAST(SUM(opens) OVER (
-        |    PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-        |  FROM o),
-        |per AS (SELECT user_id, session_seq,
-        |    MAX(epoch_us(ts)) - MIN(epoch_us(ts)) AS dur_us,
-        |    COUNT(*) AS n_events
-        |  FROM s GROUP BY 1, 2),
-        |d AS (SELECT *, CAST(dur_us AS DOUBLE) / 1000000.0 AS dur_s FROM per)
-        |SELECT COUNT(*) AS n_sessions,
-        |  CAST(SUM(dur_us) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) / 1000000.0
-        |    AS mean_dur_s,
-        |  round(quantile_cont(dur_s, 0.5), 9) AS p50_dur_s,
-        |  round(quantile_cont(dur_s, 0.9), 9) AS p90_dur_s,
-        |  CAST(SUM(n_events) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-        |    AS mean_events,
-        |  CAST(SUM(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / CAST(COUNT(*) AS DOUBLE) AS bounce_rate
-        |FROM d""".stripMargin,
-
-    "q125_dup_histogram" ->
-      """WITH g AS (SELECT sha256(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS h,
-        |    COUNT(*) AS size
-        |  FROM documents GROUP BY 1),
-        |hist AS (SELECT size, COUNT(*) AS n_clusters,
-        |    CAST(size * COUNT(*) AS BIGINT) AS n_docs
-        |  FROM g GROUP BY 1),
-        |t AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS n_total FROM hist)
-        |SELECT size, n_clusters, n_docs,
-        |  CAST(n_docs AS DOUBLE) / CAST(n_total AS DOUBLE) AS doc_share
-        |FROM hist CROSS JOIN t
-        |ORDER BY size""".stripMargin,
-
-    "q126_error_rates" ->
-      """SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
-        |  COUNT(*) AS n_events,
-        |  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_errors,
-        |  COUNT(DISTINCT CASE WHEN event_type = 'error' THEN user_id END)
-        |    AS n_error_users,
-        |  CAST(CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS error_rate
-        |FROM events
-        |GROUP BY CAST(ts AS DATE)
-        |ORDER BY day""".stripMargin,
-
-    // split point and counts integral; bucket assignment and the PSI
-    // term are pinned IEEE chains (ln through the q66 round-9 idiom);
-    // empty-on-either-side cells report a null term, no epsilon
-    "q127_value_psi" ->
-      """WITH base AS (SELECT CAST(value AS DOUBLE) AS v, epoch_us(ts) AS tus
-        |  FROM events),
-        |b AS (SELECT MIN(tus) AS t0, MAX(tus) AS t1,
-        |    MIN(v) AS vmin, MAX(v) AS vmax FROM base),
-        |ws AS (SELECT v, tus, (t0 + t1) // 2 AS mid,
-        |    (vmax - vmin) / 10 AS w, vmin FROM base CROSS JOIN b),
-        |bk AS (SELECT CASE WHEN tus <= mid THEN 'a' ELSE 'b' END AS side,
-        |    CAST(CASE WHEN w > 0 THEN least(floor((v - vmin) / w), 9.0)
-        |      ELSE 0.0 END AS BIGINT) AS bucket
-        |  FROM ws),
-        |c AS (SELECT bucket,
-        |    CAST(SUM(CASE WHEN side = 'a' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-        |    CAST(SUM(CASE WHEN side = 'b' THEN 1 ELSE 0 END) AS BIGINT) AS n_b
-        |  FROM bk GROUP BY 1),
-        |t AS (SELECT CAST(SUM(n_a) AS BIGINT) AS ta,
-        |    CAST(SUM(n_b) AS BIGINT) AS tb FROM c),
-        |g AS (SELECT CAST(unnest(range(10)) AS BIGINT) AS bucket)
-        |SELECT g.bucket, COALESCE(n_a, 0) AS n_a, COALESCE(n_b, 0) AS n_b,
-        |  CASE WHEN COALESCE(n_a, 0) > 0 AND COALESCE(n_b, 0) > 0 THEN
-        |    round((CAST(n_a AS DOUBLE) / CAST(ta AS DOUBLE)
-        |        - CAST(n_b AS DOUBLE) / CAST(tb AS DOUBLE))
-        |      * ln((CAST(n_a AS DOUBLE) / CAST(ta AS DOUBLE))
-        |          / (CAST(n_b AS DOUBLE) / CAST(tb AS DOUBLE))), 9) END
-        |    AS psi_term
-        |FROM g LEFT JOIN c ON c.bucket = g.bucket CROSS JOIN t
-        |ORDER BY 1""".stripMargin,
-
-    // the GLOBAL sweep formulation (one window): equals the engine's
-    // day-partitioned sweep + carry-in decomposition exactly; ends
-    // order before starts at the same instant (d ascending)
-    "q128_peak_concurrency" ->
-      s"""WITH o AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |           OR ts - LAG(ts) OVER w > INTERVAL $SessionGapMinutes MINUTE
-        |         THEN 1 ELSE 0 END AS opens
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |sn AS (
-        |  SELECT *, CAST(SUM(opens) OVER (
-        |    PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-        |  FROM o),
-        |sess AS (SELECT user_id, session_seq,
-        |    MIN(epoch_us(ts)) AS s, MAX(epoch_us(ts)) AS e
-        |  FROM sn GROUP BY 1, 2),
-        |sweep AS (SELECT s AS t, CAST(1 AS BIGINT) AS d FROM sess
-        |  UNION ALL SELECT e, -1 FROM sess),
-        |r AS (SELECT t, d, CAST(SUM(d) OVER (ORDER BY t, d
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS run
-        |  FROM sweep)
-        |SELECT strftime(CAST(make_timestamp(t) AS DATE), '%Y-%m-%d') AS day,
-        |  MAX(run) AS peak
-        |FROM r
-        |GROUP BY 1
-        |ORDER BY day""".stripMargin,
-
-    "q129_bot_candidates" ->
-      s"""WITH g AS (SELECT user_id,
-        |    epoch_us(ts) - lag(epoch_us(ts)) OVER
-        |      (PARTITION BY user_id ORDER BY ts, event_id) AS g
-        |  FROM events),
-        |a AS (SELECT user_id, COUNT(*) AS n_events,
-        |    CAST(MIN(g) AS DOUBLE) / 1000000.0 AS min_gap_s,
-        |    round(quantile_cont(CAST(g AS DOUBLE) / 1000000.0, 0.5), 9)
-        |      AS median_gap_s
-        |  FROM g GROUP BY 1)
-        |SELECT user_id, n_events, min_gap_s, median_gap_s,
-        |  n_events >= $BotMinEvents AND median_gap_s <= $BotMaxMedianGapS AS bot_flag
-        |FROM a
-        |WHERE min_gap_s IS NOT NULL
-        |ORDER BY user_id""".stripMargin,
-
-    // q122's chained-min twin with a 1-day deadline on each step edge
-    "q130_funnel_deadline" ->
-      s"""WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, MIN(e.ts) AS t2 FROM events e
-        |  JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t1
-        |    AND e.ts <= s1.t1 + INTERVAL $FunnelDeadlineS SECOND GROUP BY 1),
-        |s3 AS (SELECT e.user_id, MIN(e.ts) AS t3 FROM events e
-        |  JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-        |    AND e.ts <= s2.t2 + INTERVAL $FunnelDeadlineS SECOND GROUP BY 1),
-        |u AS (SELECT COUNT(DISTINCT user_id) AS n_total FROM events),
-        |n AS (SELECT CAST(1 AS BIGINT) AS step, 'view' AS step_name,
-        |        (SELECT COUNT(*) FROM s1) AS n_reached
-        |      UNION ALL SELECT 2, 'click', (SELECT COUNT(*) FROM s2)
-        |      UNION ALL SELECT 3, 'purchase', (SELECT COUNT(*) FROM s3)),
-        |w AS (SELECT n.*,
-        |    lag(n_reached, 1, (SELECT n_total FROM u)) OVER (ORDER BY step)
-        |      AS prev,
-        |    (SELECT n_total FROM u) AS n_total
-        |  FROM n)
-        |SELECT step, step_name, n_reached,
-        |  CASE WHEN prev > 0 THEN
-        |    CAST(n_reached AS DOUBLE) / CAST(prev AS DOUBLE) END
-        |    AS conv_from_prev,
-        |  CASE WHEN n_total > 0 THEN
-        |    CAST(n_reached AS DOUBLE) / CAST(n_total AS DOUBLE) END
-        |    AS conv_from_total
-        |FROM w
-        |ORDER BY step""".stripMargin,
-
-    "q131_attribution" ->
-      """WITH ch AS (SELECT event_type,
-        |    last_value(CASE WHEN event_type <> 'purchase' THEN event_type END
-        |      IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS channel
-        |  FROM events),
-        |conv AS (SELECT COALESCE(channel, '(none)') AS channel,
-        |    COUNT(*) AS n_conversions
-        |  FROM ch WHERE event_type = 'purchase' GROUP BY 1),
-        |t AS (SELECT CAST(SUM(n_conversions) AS BIGINT) AS n_total FROM conv)
-        |SELECT channel, n_conversions,
-        |  CAST(n_conversions AS DOUBLE) / CAST(n_total AS DOUBLE) AS share
-        |FROM conv CROSS JOIN t
-        |ORDER BY channel""".stripMargin,
-
-    // weekday pinned Monday=0 on both engines (weekday == isodow - 1)
-    "q132_usage_heatmap" ->
-      """WITH c AS (SELECT CAST(isodow(ts) - 1 AS BIGINT) AS dow,
-        |    CAST(hour(ts) AS BIGINT) AS hod, COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |t AS (SELECT CAST(SUM(n) AS BIGINT) AS n_total FROM c)
-        |SELECT dow, hod, n,
-        |  CAST(n AS DOUBLE) / CAST(n_total AS DOUBLE) AS share
-        |FROM c CROSS JOIN t
-        |ORDER BY dow, hod""".stripMargin,
-
-    "q133_snapshot_diff" ->
-      """WITH a AS (SELECT doc_id,
-        |    sha256(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS h
-        |  FROM documents),
-        |v2 AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 7 = 0 THEN text || ' v2' ELSE text END AS text
-        |  FROM documents WHERE doc_id % 13 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + (SELECT MAX(doc_id) + 1 FROM documents),
-        |    'new ' || text FROM documents
-        |  WHERE doc_id % 11 = 0),
-        |b AS (SELECT doc_id,
-        |    sha256(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS h
-        |  FROM v2),
-        |j AS (SELECT a.h AS ha, b.h AS hb
-        |  FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id)
-        |SELECT CASE WHEN ha IS NULL THEN 'added'
-        |            WHEN hb IS NULL THEN 'removed'
-        |            WHEN ha = hb THEN 'unchanged'
-        |            ELSE 'changed' END AS status,
-        |  COUNT(*) AS n_docs
-        |FROM j GROUP BY 1
-        |ORDER BY status""".stripMargin,
-
-    "q134_key_skew" ->
-      """WITH c AS (SELECT CAST(user_id AS VARCHAR) AS key, COUNT(*) AS n
-        |  FROM events GROUP BY 1),
-        |t AS (SELECT COUNT(*) AS n_keys, CAST(SUM(n) AS BIGINT) AS n_rows
-        |  FROM c),
-        |r AS (SELECT key, n, CAST(row_number() OVER
-        |    (ORDER BY n DESC, key ASC) AS BIGINT) AS rank FROM c)
-        |SELECT rank, key, n,
-        |  CAST(n AS DOUBLE) / CAST(n_rows AS DOUBLE) AS share,
-        |  CAST(n AS DOUBLE) * CAST(n_keys AS DOUBLE) / CAST(n_rows AS DOUBLE)
-        |    AS skew_factor
-        |FROM r CROSS JOIN t
-        |WHERE rank <= 20
-        |ORDER BY rank""".stripMargin,
-
-    "q135_entity_split" -> {
-      val t1 = graft.operators.Curation.rateThresholdHex(0.9)
-      val t2 = graft.operators.Curation.rateThresholdHex(0.95)
-      s"""WITH s AS (SELECT user_id,
-        |    substr(md5('user#' || CAST(user_id AS VARCHAR)), 1, 8) AS coin
-        |  FROM events)
-        |SELECT CASE WHEN coin < '$t1' THEN 'train'
-        |            WHEN coin < '$t2' THEN 'val'
-        |            ELSE 'test' END AS split,
-        |  COUNT(*) AS n_events, COUNT(DISTINCT user_id) AS n_users
-        |FROM s
-        |GROUP BY 1
-        |ORDER BY split""".stripMargin
-    },
-
-    // the twin replays the 6-round trainer (bpeRoundsCte) and checks
-    // the SAME concatenation property over its own vocabulary
-    "q136_bpe_integrity" ->
-      s"""WITH ${bpeRoundsCte(6)}
-        |SELECT COUNT(*) AS n_words,
-        |  CAST(SUM(len(s)) AS BIGINT) AS n_subwords,
-        |  CAST(MAX(len(s)) AS BIGINT) AS max_subwords,
-        |  CAST(SUM(CASE WHEN list_aggregate(s, 'string_agg', '')
-        |      <> w || '</w>' THEN 1 ELSE 0 END) AS BIGINT) AS n_violations
-        |FROM v6""".stripMargin,
-
-    "q137_rfm_segments" ->
-      """WITH u AS (SELECT user_id AS u, MAX(epoch_us(ts)) AS last_us,
-        |    COUNT(*) AS f, SUM(CAST(value AS DECIMAL(30,6))) AS m
-        |  FROM events GROUP BY 1),
-        |mx AS (SELECT MAX(last_us) AS max_us FROM u),
-        |t AS (SELECT
-        |    CAST(ntile(3) OVER (ORDER BY max_us - last_us ASC, u ASC)
-        |      AS BIGINT) AS r_t,
-        |    CAST(ntile(3) OVER (ORDER BY f DESC, u ASC) AS BIGINT) AS f_t,
-        |    CAST(ntile(3) OVER (ORDER BY m DESC, u ASC) AS BIGINT) AS m_t
-        |  FROM u CROSS JOIN mx)
-        |SELECT r_t, f_t, m_t, COUNT(*) AS n_users
-        |FROM t GROUP BY 1, 2, 3
-        |ORDER BY r_t, f_t, m_t""".stripMargin,
-
-    // q108's chained-min funnel cohorted by ISO week of the first step
-    // (both engines truncate weeks to Monday)
-    "q138_conversion_trend" ->
-      """WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, MIN(e.ts) AS t2 FROM events e
-        |  JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, MIN(e.ts) AS t3 FROM events e
-        |  JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY 1)
-        |SELECT strftime(CAST(date_trunc('week', t1) AS DATE), '%Y-%m-%d')
-        |    AS week,
-        |  COUNT(*) AS n_entered, COUNT(t3) AS n_converted,
-        |  CAST(COUNT(t3) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS conv_rate
-        |FROM s1 LEFT JOIN s3 USING (user_id)
-        |GROUP BY 1
-        |ORDER BY week""".stripMargin,
-
-    "q143_regional_volume" ->
-      s"""SELECT r_name, n_name, COUNT(*) AS n_items,
-        |  ${DSUM("l_extendedprice * (1.0 - l_discount)")} AS revenue
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE c_nationkey = s_nationkey
-        |GROUP BY 1, 2
-        |ORDER BY r_name, n_name""".stripMargin,
-
-    "q141_order_distribution" ->
-      """WITH cc AS (SELECT c_custkey, COUNT(o_orderkey) AS c_count
-        |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |  GROUP BY 1)
-        |SELECT c_count, COUNT(*) AS custdist
-        |FROM cc
-        |GROUP BY 1
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "q142_brand_revenue" ->
-      """WITH rev AS (SELECT p_brand, COUNT(*) AS n_items,
-        |    SUM(CAST(l_extendedprice * (1.0 - l_discount)
-        |      AS DECIMAL(30,6))) AS revd
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  GROUP BY 1),
-        |t AS (SELECT SUM(revd) AS totd FROM rev)
-        |SELECT p_brand, n_items, CAST(revd AS DOUBLE) AS revenue,
-        |  CAST(revd AS DOUBLE) / CAST(totd AS DOUBLE) AS rev_share
-        |FROM rev CROSS JOIN t
-        |ORDER BY p_brand""".stripMargin,
-
-    "q139_shipping_priority" ->
-      s"""SELECT l_orderkey, o_orderdate, o_orderpriority,
-        |  ${DSUM("l_extendedprice * (1.0 - l_discount)")} AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-06-01 00:00:00'
-        |  AND l_shipdate > TIMESTAMP '1998-06-01 00:00:00'
-        |GROUP BY 1, 2, 3
-        |ORDER BY revenue DESC, o_orderdate ASC, l_orderkey ASC
-        |LIMIT 10""".stripMargin,
-
-    "q140_nation_flow" ->
-      s"""SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
-        |  COUNT(*) AS n_items,
-        |  ${DSUM("l_extendedprice * (1.0 - l_discount)")} AS revenue
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ns ON s_nationkey = ns.n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation nc ON c_nationkey = nc.n_nationkey
-        |GROUP BY 1, 2
-        |ORDER BY supp_nation, cust_nation""".stripMargin,
-
-    "q161_promo_revenue" ->
-      s"""SELECT COUNT(*) AS n_items,
-        |  ${DSUM("CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1.0 - l_discount) END")} AS promo_revenue,
-        |  ${DSUM("l_extendedprice * (1.0 - l_discount)")} AS total_revenue,
-        |  100.0 * promo_revenue / total_revenue AS promo_share_pct
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '$TpchQtrFrom'
-        |  AND l_shipdate < TIMESTAMP '$TpchQtrTo'""".stripMargin,
-
-    "q162_top_supplier" ->
-      s"""WITH rev AS (SELECT l_suppkey,
-        |    SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,6)))
-        |      AS revd
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '$TpchQtrFrom'
-        |    AND l_shipdate < TIMESTAMP '$TpchQtrTo'
-        |  GROUP BY 1)
-        |SELECT s_suppkey, s_name, CAST(revd AS DOUBLE) AS revenue
-        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE revd = (SELECT MAX(revd) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q163_supplier_part_counts" ->
-      """SELECT p_brand, p_type, p_size,
-        |  COUNT(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_suppkey NOT IN
-        |  (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY 1, 2, 3
-        |ORDER BY 1, 2, 3""".stripMargin,
-
-    "q164_large_orders" ->
-      s"""WITH big AS (SELECT l_orderkey,
-        |    SUM(CAST(l_quantity AS DECIMAL(30,6))) AS sum_qtyd
-        |  FROM lineitem GROUP BY 1
-        |  HAVING sum_qtyd > $LargeOrderMinQty)
-        |SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice,
-        |  CAST(sum_qtyd AS DOUBLE) AS sum_qty
-        |FROM big
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey ASC""".stripMargin,
-
-    "q165_disjunctive_revenue" -> {
-      val bands = DisjBands.map { case (brand, szLo, szHi, qLo, qHi) =>
-        s"""  (p_brand = '$brand' AND p_size BETWEEN $szLo AND $szHi
-           |    AND l_quantity BETWEEN $qLo AND $qHi)""".stripMargin
-      }.mkString("\n  OR\n")
-      s"""SELECT COUNT(*) AS n_items,
-        |  ${DSUM("l_extendedprice * (1.0 - l_discount)")} AS revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE
-        |$bands""".stripMargin
-    },
-
-    "q166_dormant_customers" ->
-      s"""WITH cust AS (SELECT c_custkey, c_acctbal, c_mktsegment
-        |    FROM customer WHERE c_acctbal > 0),
-        |  pos AS (SELECT SUM(CAST(c_acctbal AS DECIMAL(30,6))) AS sbal,
-        |      COUNT(*) AS npos FROM cust),
-        |  active AS (SELECT DISTINCT o_custkey FROM orders
-        |    WHERE o_orderdate >= TIMESTAMP '$DormantCutoff')
-        |SELECT c_mktsegment, COUNT(*) AS n_cust,
-        |  ${DSUM("c_acctbal")} AS total_bal
-        |FROM cust CROSS JOIN pos
-        |WHERE CAST(c_acctbal AS DECIMAL(30,6)) * npos > sbal
-        |  AND c_custkey NOT IN (SELECT o_custkey FROM active)
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-
-    "q167_late_shipment_priority" ->
-      s"""SELECT o_orderpriority, COUNT(*) AS n_late_orders
-        |FROM orders o
-        |WHERE EXISTS (SELECT 1 FROM lineitem l
-        |  WHERE l.l_orderkey = o.o_orderkey
-        |    AND l.l_shipdate > o.o_orderdate + INTERVAL $LateShipDays DAY)
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-
-    "q168_contingency_chi2" ->
-      """WITH cell AS (SELECT lang, source, COUNT(*) AS obs
-        |    FROM documents GROUP BY 1, 2),
-        |  rm AS (SELECT lang, CAST(SUM(obs) AS BIGINT) AS row_margin
-        |    FROM cell GROUP BY 1),
-        |  cm AS (SELECT source, CAST(SUM(obs) AS BIGINT) AS col_margin
-        |    FROM cell GROUP BY 1),
-        |  tot AS (SELECT CAST(SUM(obs) AS BIGINT) AS total FROM cell)
-        |SELECT rm.lang, cm.source, COALESCE(obs, 0) AS obs,
-        |  row_margin, col_margin,
-        |  CAST(row_margin AS DOUBLE) * CAST(col_margin AS DOUBLE) /
-        |    CAST(total AS DOUBLE) AS expected,
-        |  POWER(CAST(COALESCE(obs, 0) AS DOUBLE) - expected, 2) / expected
-        |    AS chi2_term
-        |FROM rm CROSS JOIN cm
-        |LEFT JOIN cell ON cell.lang = rm.lang AND cell.source = cm.source
-        |CROSS JOIN tot
-        |ORDER BY rm.lang, cm.source""".stripMargin,
-
-    "q169_numeric_correlation" -> corrTwin("lineitem", CorrCols),
-
-    "q170_bigram_pmi" ->
-      s"""WITH tok AS (SELECT string_split(lower(trim(
-        |    regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS toks
-        |  FROM documents),
-        |uni AS (SELECT unnest(toks) AS w FROM tok),
-        |c1 AS (SELECT w, COUNT(*) AS c FROM uni GROUP BY 1),
-        |nu AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM c1),
-        |bg AS (SELECT unnest(list_transform(range(len(toks) - 1),
-        |    i -> struct_pack(prev := toks[i+1], cur := toks[i+2]))) AS b
-        |  FROM tok WHERE len(toks) >= 2),
-        |c2 AS (SELECT b.prev AS prev, b.cur AS cur, COUNT(*) AS n_pair
-        |  FROM bg GROUP BY 1, 2),
-        |nb AS (SELECT CAST(SUM(n_pair) AS BIGINT) AS n FROM c2)
-        |SELECT prev, cur, n_pair,
-        |  round(ln(CAST(n_pair AS DOUBLE)) + 2 * ln(CAST(nu.n AS DOUBLE))
-        |    - ln(CAST(nb.n AS DOUBLE)) - ln(CAST(p.c AS DOUBLE))
-        |    - ln(CAST(q.c AS DOUBLE)), 9) AS pmi
-        |FROM c2 JOIN c1 p ON c2.prev = p.w JOIN c1 q ON c2.cur = q.w
-        |CROSS JOIN nu CROSS JOIN nb
-        |WHERE n_pair >= $BigramPmiMinCount
-        |ORDER BY n_pair DESC, prev, cur""".stripMargin,
-
-    "q171_dup_triangles" ->
-      s"""WITH $BLOCKED_PAIRS_CTE,
-        |e AS (SELECT id_a AS a, id_b AS b FROM pairs),
-        |nodes AS (SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e),
-        |deg AS (SELECT v, COUNT(*) AS d FROM nodes GROUP BY 1),
-        |o AS (SELECT
-        |    CASE WHEN (da.d < db.d) OR (da.d = db.d AND e.a < e.b)
-        |      THEN e.a ELSE e.b END AS src,
-        |    CASE WHEN (da.d < db.d) OR (da.d = db.d AND e.a < e.b)
-        |      THEN e.b ELSE e.a END AS dst
-        |  FROM e JOIN deg da ON e.a = da.v JOIN deg db ON e.b = db.v),
-        |wd AS (SELECT o1.dst AS wv, o2.dst AS ww FROM o o1 JOIN o o2
-        |  ON o1.src = o2.src AND o1.dst < o2.dst),
-        |tri AS (SELECT COUNT(*) AS n_triangles FROM
-        |  (SELECT least(wv, ww) AS a, greatest(wv, ww) AS b FROM wd) x
-        |  JOIN e USING (a, b))
-        |SELECT (SELECT COUNT(*) FROM e) AS n_edges,
-        |  (SELECT COUNT(*) FROM wd) AS n_wedges, n_triangles
-        |FROM tri""".stripMargin,
-
-    "q172_bucketed_join" ->
-      s"""SELECT o_orderpriority, COUNT(*) AS n_items,
-        |  ${DSUM("l_extendedprice * (1.0 - l_discount)")} AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-
-    "q173_blocking_audit" -> {
-      val leads = (1 until SnmWindow).map(j =>
-        s"lead(doc_id, $j) OVER w AS id$j").mkString(", ")
-      val branches = (1 until SnmWindow).map(j =>
-        s"  SELECT doc_id AS a, id$j AS b FROM l WHERE id$j IS NOT NULL")
-        .mkString("\n  UNION ALL\n")
-      s"""WITH $BLOCKED_PAIRS_CTE,
-        |truth AS (SELECT id_a AS pa, id_b AS pb FROM pairs),
-        |t AS (SELECT doc_id,
-        |    lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS nt
-        |  FROM documents),
-        |k AS (SELECT doc_id, substr(nt, 1, $SnmKeyLen) AS key,
-        |    substr(nt, 1, $SnmPrefixLen) AS blk FROM t),
-        |l AS (SELECT doc_id, $leads
-        |  FROM k WINDOW w AS (PARTITION BY blk ORDER BY key, doc_id)),
-        |rawp AS (
-        |$branches),
-        |cand AS (SELECT DISTINCT least(a, b) AS pa, greatest(a, b) AS pb
-        |  FROM rawp),
-        |nd AS (SELECT COUNT(*) AS n_docs FROM documents),
-        |nc AS (SELECT COUNT(*) AS n_candidates FROM cand),
-        |ntp AS (SELECT COUNT(*) AS n_true_pairs FROM truth),
-        |cg AS (SELECT COUNT(*) AS n_caught
-        |  FROM truth JOIN cand USING (pa, pb))
-        |SELECT n_docs, n_candidates, n_true_pairs, n_caught,
-        |  CAST(n_caught AS DOUBLE) / CAST(n_true_pairs AS DOUBLE)
-        |    AS pair_completeness,
-        |  CAST(n_candidates AS DOUBLE) /
-        |    CAST((n_docs * (n_docs - 1)) // 2 AS DOUBLE)
-        |    AS candidate_fraction
-        |FROM nd CROSS JOIN nc CROSS JOIN ntp CROSS JOIN cg""".stripMargin
-    },
-
-    "q174_pareto_frontier" ->
-      """WITH p AS (SELECT doc_id, n_chars AS x,
-        |    CAST(len(list_distinct(string_split(lower(trim(
-        |      regexp_replace(text, '\s+', ' ', 'g'))), ' '))) AS BIGINT)
-        |      AS y
-        |  FROM documents),
-        |g AS (SELECT x, max(y) AS maxy FROM p GROUP BY 1),
-        |c AS (SELECT x, maxy, max(maxy) OVER (ORDER BY x DESC
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |    AS prevmax
-        |  FROM g)
-        |SELECT doc_id, x AS n_chars, y AS n_types
-        |FROM p JOIN c USING (x)
-        |WHERE y = maxy AND (prevmax IS NULL OR prevmax < y)
-        |ORDER BY n_chars DESC, doc_id""".stripMargin,
-
-    "q175_cusum_changepoint" ->
-      """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS d,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |w AS (SELECT event_type, d, n,
-        |    ROW_NUMBER() OVER po AS t,
-        |    CAST(SUM(n) OVER po AS BIGINT) AS prefix,
-        |    COUNT(*) OVER pa AS n_days,
-        |    CAST(SUM(n) OVER pa AS BIGINT) AS total
-        |  FROM daily
-        |  WINDOW po AS (PARTITION BY event_type ORDER BY d),
-        |    pa AS (PARTITION BY event_type)),
-        |dr AS (SELECT *, n_days * prefix - t * total AS drift FROM w),
-        |pick AS (SELECT *, ROW_NUMBER() OVER
-        |    (PARTITION BY event_type ORDER BY abs(drift) DESC, d) AS rk
-        |  FROM dr)
-        |SELECT event_type, n_days, total AS total_events,
-        |  strftime(d, '%Y-%m-%d') AS cp_day, CAST(t AS INTEGER) AS cp_index,
-        |  CAST(drift AS BIGINT) AS cp_drift_scaled,
-        |  CAST(drift AS DOUBLE) / CAST(n_days AS DOUBLE) AS cp_drift
-        |FROM pick WHERE rk = 1
-        |ORDER BY event_type""".stripMargin,
-
-    "q177_robust_outliers" ->
-      s"""WITH v AS (SELECT source AS g, CAST(n_chars AS DOUBLE) AS v
-        |  FROM documents),
-        |m AS (SELECT g, quantile_cont(v, 0.5) AS med, COUNT(*) AS n
-        |  FROM v GROUP BY 1),
-        |d AS (SELECT v.g, abs(v.v - m.med) AS ad FROM v JOIN m USING (g)),
-        |md AS (SELECT g, quantile_cont(ad, 0.5) AS mad FROM d GROUP BY 1)
-        |SELECT m.g AS source, m.n, m.med AS med, md.mad AS mad,
-        |  CAST(SUM(CASE WHEN d.ad > $MadK * md.mad THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_outliers,
-        |  CAST(SUM(CASE WHEN d.ad > $MadK * md.mad THEN 1 ELSE 0 END)
-        |    AS DOUBLE) / CAST(m.n AS DOUBLE) AS outlier_frac
-        |FROM d JOIN m USING (g) JOIN md USING (g)
-        |GROUP BY 1, 2, 3, 4
-        |ORDER BY 1""".stripMargin,
-
-    "q179_event_trigrams" ->
-      s"""WITH t AS (SELECT user_id AS u, event_type AS e1,
-        |    lead(event_type, 1) OVER w AS e2,
-        |    lead(event_type, 2) OVER w AS e3
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT e1, e2, e3, COUNT(*) AS n_occurrences,
-        |  COUNT(DISTINCT u) AS n_users
-        |FROM t WHERE e3 IS NOT NULL
-        |GROUP BY 1, 2, 3
-        |HAVING COUNT(*) >= $TrigramMinSupport
-        |ORDER BY n_occurrences DESC, e1, e2, e3""".stripMargin,
-
-    "q176_rolling_corr" ->
-      s"""WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS d,
-        |    COUNT(*) AS c,
-        |    CAST(SUM(CAST(floor(value * $RollCorrQuant) AS BIGINT))
-        |      AS BIGINT) AS vq
-        |  FROM events GROUP BY 1, 2),
-        |w AS (SELECT event_type, d,
-        |    COUNT(*) OVER fr AS nw,
-        |    CAST(SUM(c) OVER fr AS BIGINT) AS sc,
-        |    CAST(SUM(c * c) OVER fr AS BIGINT) AS scc,
-        |    CAST(SUM(vq) OVER fr AS BIGINT) AS sv,
-        |    CAST(SUM(vq * vq) OVER fr AS BIGINT) AS svv,
-        |    CAST(SUM(c * vq) OVER fr AS BIGINT) AS scv
-        |  FROM daily
-        |  WINDOW fr AS (PARTITION BY event_type ORDER BY d
-        |    ROWS BETWEEN ${RollCorrDays - 1} PRECEDING AND CURRENT ROW)),
-        |f AS (SELECT *, nw * scc - sc * sc AS var_c,
-        |    nw * svv - sv * sv AS var_v
-        |  FROM w WHERE nw = $RollCorrDays)
-        |SELECT event_type, strftime(d, '%Y-%m-%d') AS day,
-        |  CAST(nw * scv - sc * sv AS DOUBLE) /
-        |    sqrt(CAST(var_c AS DOUBLE) * CAST(var_v AS DOUBLE))
-        |    AS vol_value_r
-        |FROM f WHERE var_c > 0 AND var_v > 0
-        |ORDER BY event_type, day""".stripMargin,
-
-    "q178_systematic_sample" ->
-      s"""WITH c AS (SELECT doc_id, n_chars,
-        |    CAST(SUM(n_chars) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum
-        |  FROM documents)
-        |SELECT doc_id, n_chars, cum AS cum_weight,
-        |  cum // $SampleStrideChars AS pick_index
-        |FROM c
-        |WHERE cum // $SampleStrideChars >
-        |  (cum - n_chars) // $SampleStrideChars
-        |ORDER BY doc_id""".stripMargin,
-
-    "q180_local_clustering" ->
-      s"""WITH $BLOCKED_PAIRS_CTE,
-        |e AS (SELECT id_a AS a, id_b AS b FROM pairs),
-        |nodes AS (SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e),
-        |deg AS (SELECT v, COUNT(*) AS d FROM nodes GROUP BY 1),
-        |o AS (SELECT
-        |    CASE WHEN (da.d < db.d) OR (da.d = db.d AND e.a < e.b)
-        |      THEN e.a ELSE e.b END AS src,
-        |    CASE WHEN (da.d < db.d) OR (da.d = db.d AND e.a < e.b)
-        |      THEN e.b ELSE e.a END AS dst
-        |  FROM e JOIN deg da ON e.a = da.v JOIN deg db ON e.b = db.v),
-        |tri AS (SELECT o1.src AS apex, o1.dst AS wv, o2.dst AS ww
-        |  FROM o o1 JOIN o o2 ON o1.src = o2.src AND o1.dst < o2.dst
-        |  JOIN e ON e.a = least(o1.dst, o2.dst)
-        |    AND e.b = greatest(o1.dst, o2.dst)),
-        |tv AS (SELECT apex AS v FROM tri
-        |  UNION ALL SELECT wv FROM tri
-        |  UNION ALL SELECT ww FROM tri),
-        |tc AS (SELECT v, COUNT(*) AS t FROM tv GROUP BY 1)
-        |SELECT deg.v AS node, deg.d AS degree,
-        |  CAST(COALESCE(tc.t, 0) AS BIGINT) AS n_triangles,
-        |  CASE WHEN deg.d >= 2 THEN
-        |    (2.0 * CAST(COALESCE(tc.t, 0) AS DOUBLE)) /
-        |      CAST(deg.d * (deg.d - 1) AS DOUBLE)
-        |    ELSE 0.0 END AS clustering_coeff
-        |FROM deg LEFT JOIN tc USING (v)
-        |ORDER BY node""".stripMargin,
-
-    "q181_linkage_agreement" -> {
-      val leads = (1 until SnmWindow).map(j =>
-        s"lead(doc_id, $j) OVER w AS id$j").mkString(", ")
-      val branches = (1 until SnmWindow).map(j =>
-        s"  SELECT doc_id AS a, id$j AS b FROM l WHERE id$j IS NOT NULL")
-        .mkString("\n  UNION ALL\n")
-      s"""WITH $BLOCKED_PAIRS_CTE,
-        |truth AS (SELECT id_a AS pa, id_b AS pb FROM pairs),
-        |t AS (SELECT doc_id,
-        |    lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS nt
-        |  FROM documents),
-        |k AS (SELECT doc_id, substr(nt, 1, $SnmKeyLen) AS key,
-        |    substr(nt, 1, $SnmPrefixLen) AS blk FROM t),
-        |l AS (SELECT doc_id, $leads
-        |  FROM k WINDOW w AS (PARTITION BY blk ORDER BY key, doc_id)),
-        |rawp AS (
-        |$branches),
-        |cand AS (SELECT DISTINCT least(a, b) AS pa, greatest(a, b) AS pb
-        |  FROM rawp),
-        |attrs AS (SELECT doc_id, lang, source,
-        |    n_chars // $LinkLenBandChars AS band FROM documents),
-        |sc AS (SELECT
-        |    CAST(CASE WHEN aa.lang = ab.lang THEN 4 ELSE 0 END +
-        |      CASE WHEN aa.source = ab.source THEN 2 ELSE 0 END +
-        |      CASE WHEN aa.band = ab.band THEN 1 ELSE 0 END
-        |      AS BIGINT) AS agreement,
-        |    CASE WHEN tr.pa IS NOT NULL THEN 1 ELSE 0 END AS is_true
-        |  FROM cand JOIN attrs aa ON cand.pa = aa.doc_id
-        |  JOIN attrs ab ON cand.pb = ab.doc_id
-        |  LEFT JOIN truth tr ON tr.pa = cand.pa AND tr.pb = cand.pb)
-        |SELECT agreement, COUNT(*) AS n_pairs,
-        |  CAST(SUM(is_true) AS BIGINT) AS n_true,
-        |  CAST(SUM(is_true) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-        |    AS match_rate
-        |FROM sc GROUP BY 1
-        |ORDER BY agreement DESC""".stripMargin
-    },
-
-    "q182_power_user_curve" ->
-      """WITH pu AS (SELECT user_id,
-        |    COUNT(DISTINCT CAST(ts AS DATE)) AS nd
-        |  FROM events GROUP BY 1),
-        |h AS (SELECT nd AS n_active_days, COUNT(*) AS n_users
-        |  FROM pu GROUP BY 1)
-        |SELECT n_active_days, n_users,
-        |  CAST(SUM(n_users) OVER (ORDER BY n_active_days DESC
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_users_at_least
-        |FROM h ORDER BY n_active_days""".stripMargin,
-
-    "q183_daily_acf" ->
-      s"""WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS d,
-        |    COUNT(*) AS c FROM events GROUP BY 1, 2),
-        |ls AS (SELECT CAST(unnest(range(1, ${AcfMaxLag + 1})) AS BIGINT)
-        |  AS lag),
-        |p AS (SELECT a.event_type, ls.lag, a.c AS x, b.c AS y
-        |  FROM daily a CROSS JOIN ls
-        |  JOIN daily b ON b.event_type = a.event_type
-        |    AND b.d = a.d - CAST(ls.lag AS INTEGER)),
-        |m AS (SELECT event_type, lag, COUNT(*) AS n_pairs,
-        |    CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-        |    CAST(SUM(x * x) AS BIGINT) AS sxx,
-        |    CAST(SUM(y * y) AS BIGINT) AS syy,
-        |    CAST(SUM(x * y) AS BIGINT) AS sxy
-        |  FROM p GROUP BY 1, 2),
-        |f AS (SELECT *, n_pairs * sxx - sx * sx AS var_x,
-        |    n_pairs * syy - sy * sy AS var_y
-        |  FROM m)
-        |SELECT event_type, lag, n_pairs,
-        |  round(CAST(n_pairs * sxy - sx * sy AS DOUBLE) /
-        |    sqrt(CAST(var_x AS DOUBLE) * CAST(var_y AS DOUBLE)), 9)
-        |    + 0.0 AS acf
-        |FROM f WHERE n_pairs >= 2 AND var_x > 0 AND var_y > 0
-        |ORDER BY event_type, lag""".stripMargin,
-
-    "q184_funnel_latency" ->
-      """WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, MIN(e.ts) AS t2 FROM events e
-        |  JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, MIN(e.ts) AS t3 FROM events e
-        |  JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY 1),
-        |g AS (
-        |  SELECT CAST(1 AS INTEGER) AS step_seq, 'view' AS step_from,
-        |    'click' AS step_to, epoch_us(t2) - epoch_us(t1) AS gap_us
-        |  FROM s1 JOIN s2 USING (user_id)
-        |  UNION ALL
-        |  SELECT CAST(2 AS INTEGER), 'click', 'purchase',
-        |    epoch_us(t3) - epoch_us(t2)
-        |  FROM s2 JOIN s3 USING (user_id))
-        |SELECT step_seq, step_from, step_to, COUNT(*) AS n_converted,
-        |  MIN(gap_us) AS min_gap_us, MAX(gap_us) AS max_gap_us,
-        |  CAST(SUM(gap_us) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-        |    AS mean_gap_us
-        |FROM g GROUP BY 1, 2, 3 ORDER BY step_seq""".stripMargin,
-
-    "q185_session_entry_exit" ->
-      s"""WITH o AS (SELECT user_id, ts, event_id, event_type,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |           OR ts - LAG(ts) OVER w > INTERVAL $SessionGapMinutes MINUTE
-        |         THEN 1 ELSE 0 END AS opens
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (SELECT *, CAST(SUM(opens) OVER (
-        |    PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sid
-        |  FROM o),
-        |fe AS (SELECT user_id, sid,
-        |    first_value(event_type) OVER ws AS entry_type,
-        |    last_value(event_type) OVER (PARTITION BY user_id, sid
-        |      ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING
-        |      AND UNBOUNDED FOLLOWING) AS exit_type,
-        |    COUNT(*) OVER (PARTITION BY user_id, sid) AS n
-        |  FROM s WINDOW ws AS (PARTITION BY user_id, sid
-        |    ORDER BY ts, event_id)),
-        |d AS (SELECT DISTINCT user_id, sid, entry_type, exit_type, n
-        |  FROM fe)
-        |SELECT entry_type, exit_type, COUNT(*) AS n_sessions,
-        |  CAST(SUM(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_single_event
-        |FROM d GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q186_market_share" ->
-      s"""WITH asia AS (SELECT n_nationkey FROM nation
-        |  JOIN region ON n_regionkey = r_regionkey
-        |  WHERE r_name = '$MarketShareRegion'),
-        |rev AS (SELECT year(o_orderdate) AS o_year, n2.n_name AS nation,
-        |    SUM(CAST(l_extendedprice * (1.0 - l_discount)
-        |      AS DECIMAL(30,6))) AS revd
-        |  FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey
-        |    AND p_type = '$MarketSharePartType'
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN asia ON c_nationkey = asia.n_nationkey
-        |  GROUP BY 1, 2),
-        |yt AS (SELECT o_year, SUM(revd) AS totd FROM rev GROUP BY 1)
-        |SELECT CAST(rev.o_year AS BIGINT) AS o_year, nation,
-        |  CAST(revd AS DOUBLE) AS revenue,
-        |  CAST(revd AS DOUBLE) / CAST(totd AS DOUBLE) AS mkt_share
-        |FROM rev JOIN yt USING (o_year)
-        |ORDER BY o_year, nation""".stripMargin,
-
-    "q187_waiting_suppliers" ->
-      """WITH g1 AS (SELECT l_orderkey, l_suppkey, MAX(l_shipdate) AS sm
-        |  FROM lineitem GROUP BY 1, 2),
-        |g2 AS (SELECT l_orderkey, COUNT(*) AS ns, MAX(sm) AS om
-        |  FROM g1 GROUP BY 1),
-        |w AS (SELECT g1.l_orderkey, COUNT(*) AS n_at_max,
-        |    MAX(g1.l_suppkey) AS sk
-        |  FROM g1 JOIN g2 USING (l_orderkey)
-        |  WHERE g2.ns >= 2 AND g1.sm = g2.om
-        |  GROUP BY 1),
-        |c AS (SELECT sk, COUNT(*) AS n_held_orders FROM w
-        |  WHERE n_at_max = 1 GROUP BY 1)
-        |SELECT s_name, n_held_orders
-        |FROM c JOIN supplier ON sk = s_suppkey
-        |ORDER BY n_held_orders DESC, s_name""".stripMargin,
-
-    "q188_small_quantity_revenue" ->
-      """WITH li AS (SELECT l_partkey, CAST(l_quantity AS BIGINT) AS ql,
-        |    l_extendedprice FROM lineitem),
-        |st AS (SELECT l_partkey AS pk, COUNT(*) AS n,
-        |    CAST(SUM(ql) AS BIGINT) AS sq FROM li GROUP BY 1)
-        |SELECT p_brand, COUNT(*) AS n_items,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,6))) AS DOUBLE)
-        |    AS revenue
-        |FROM li JOIN st ON l_partkey = pk
-        |JOIN part ON l_partkey = p_partkey
-        |WHERE 5 * ql * n < sq
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q189_label_centroid_cosine" ->
-      """WITH x0 AS (SELECT CAST(label AS BIGINT) AS lbl,
-        |    unnest(range(len(embedding))) AS dim, embedding
-        |  FROM embeddings),
-        |q AS (SELECT lbl, CAST(dim AS BIGINT) AS dim,
-        |    CAST(floor(CAST(embedding[dim + 1] AS DOUBLE) * 1e9 + 0.5)
-        |      AS BIGINT) AS xi
-        |  FROM x0),
-        |s AS (SELECT lbl, dim, CAST(SUM(xi) AS HUGEINT) AS s,
-        |    COUNT(*) AS n FROM q GROUP BY 1, 2),
-        |p AS (SELECT a.lbl AS label_a, b.lbl AS label_b,
-        |    MAX(a.n) AS n_a, MAX(b.n) AS n_b,
-        |    SUM(a.s * b.s) AS dot, SUM(a.s * a.s) AS naa,
-        |    SUM(b.s * b.s) AS nbb
-        |  FROM s a JOIN s b ON a.dim = b.dim AND a.lbl <= b.lbl
-        |  GROUP BY 1, 2)
-        |SELECT label_a, label_b, n_a, n_b,
-        |  round(CAST(dot AS DOUBLE) /
-        |    (sqrt(CAST(naa AS DOUBLE)) * sqrt(CAST(nbb AS DOUBLE))), 9)
-        |    + 0.0 AS centroid_cos
-        |FROM p WHERE naa > 0 AND nbb > 0
-        |ORDER BY label_a, label_b""".stripMargin,
-
-    "q190_degree_assortativity" ->
-      s"""WITH $BLOCKED_PAIRS_CTE,
-        |e AS (SELECT id_a AS a, id_b AS b FROM pairs),
-        |deg AS (SELECT v, COUNT(*) AS d FROM
-        |  (SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e)
-        |  GROUP BY 1),
-        |st AS (SELECT a AS x, b AS y FROM e
-        |  UNION ALL SELECT b AS x, a AS y FROM e),
-        |dd AS (SELECT dx.d AS dx, dy.d AS dy FROM st
-        |  JOIN deg dx ON st.x = dx.v JOIN deg dy ON st.y = dy.v),
-        |m AS (SELECT COUNT(*) AS m, CAST(SUM(dx) AS HUGEINT) AS s,
-        |    CAST(SUM(dx * dy) AS HUGEINT) AS sxy,
-        |    CAST(SUM(dx * dx) AS HUGEINT) AS sxx
-        |  FROM dd)
-        |SELECT CAST(m // 2 AS BIGINT) AS n_edges,
-        |  CASE WHEN m * sxx - s * s > 0
-        |    THEN CAST(m * sxy - s * s AS DOUBLE) /
-        |      CAST(m * sxx - s * s AS DOUBLE)
-        |    ELSE NULL END AS assortativity
-        |FROM m""".stripMargin,
-
-    "q191_repeat_purchase" ->
-      """WITH g AS (SELECT o_custkey,
-        |    CAST(datediff('day', LAG(o_orderdate) OVER w, o_orderdate)
-        |      AS BIGINT) AS gap_days
-        |  FROM orders
-        |  WINDOW w AS (PARTITION BY o_custkey
-        |    ORDER BY o_orderdate, o_orderkey)),
-        |pc AS (SELECT o_custkey, COUNT(*) AS n_orders,
-        |    CAST(SUM(gap_days) AS BIGINT) AS sum_gap,
-        |    COUNT(gap_days) AS n_gaps
-        |  FROM g GROUP BY 1),
-        |seg AS (SELECT c_mktsegment, COUNT(*) AS n_customers,
-        |    CAST(SUM(CASE WHEN n_orders >= 2 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_repeat_customers,
-        |    CAST(SUM(n_orders) AS BIGINT) AS n_orders,
-        |    CAST(SUM(sum_gap) AS BIGINT) AS sg,
-        |    CAST(SUM(n_gaps) AS BIGINT) AS ng
-        |  FROM pc JOIN customer ON o_custkey = c_custkey
-        |  GROUP BY 1)
-        |SELECT c_mktsegment, n_customers, n_repeat_customers, n_orders,
-        |  CAST(n_orders AS DOUBLE) / CAST(n_customers AS DOUBLE)
-        |    AS orders_per_customer,
-        |  CAST(sg AS DOUBLE) / CAST(ng AS DOUBLE) AS mean_gap_days
-        |FROM seg ORDER BY c_mktsegment""".stripMargin,
-
-    "q192_exact_dedup_savings" ->
-      """WITH f AS (SELECT doc_id, source, n_chars,
-        |    doc_id = MIN(doc_id) OVER (PARTITION BY
-        |      sha256(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
-        |    ) AS keep
-        |  FROM documents)
-        |SELECT source, COUNT(*) AS n_docs,
-        |  CAST(SUM(CASE WHEN NOT keep THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_removed,
-        |  CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-        |  CAST(SUM(CASE WHEN NOT keep THEN n_chars ELSE 0 END)
-        |    AS BIGINT) AS chars_saved,
-        |  CAST(SUM(CASE WHEN NOT keep THEN n_chars ELSE 0 END)
-        |      AS DOUBLE) /
-        |    CAST(SUM(n_chars) AS DOUBLE) AS share_saved
-        |FROM f GROUP BY 1 ORDER BY source""".stripMargin,
-
-    "q193_top_brands_per_nation" ->
-      """WITH rev AS (SELECT n_name AS nation, p_brand,
-        |    SUM(CAST(l_extendedprice * (1.0 - l_discount)
-        |      AS DECIMAL(30,6))) AS revd
-        |  FROM lineitem
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN part ON l_partkey = p_partkey
-        |  GROUP BY 1, 2),
-        |r AS (SELECT nation, p_brand, revd,
-        |    row_number() OVER (PARTITION BY nation
-        |      ORDER BY revd DESC, p_brand) AS rnk
-        |  FROM rev)
-        |SELECT nation, CAST(rnk AS BIGINT) AS rnk, p_brand,
-        |  CAST(revd AS DOUBLE) AS revenue
-        |FROM r WHERE rnk <= 3
-        |ORDER BY nation, rnk""".stripMargin,
-
-    "q194_blocking_graph_bfs" -> {
-      val leads = (1 until SnmWindow).map(j =>
-        s"lead(doc_id, $j) OVER w AS id$j").mkString(", ")
-      val branches = (1 until SnmWindow).map(j =>
-        s"  SELECT doc_id AS a, id$j AS b FROM l WHERE id$j IS NOT NULL")
-        .mkString("\n  UNION ALL\n")
-      val rounds = (1 to BfsMaxDepth).map { k =>
-        s"""d$k AS (SELECT v, MIN(dist) AS dist FROM (
-           |  SELECT v, dist FROM d${k - 1}
-           |  UNION ALL
-           |  SELECT adj.t AS v, ${k} AS dist
-           |  FROM d${k - 1} p JOIN adj ON p.v = adj.s
-           |  WHERE p.dist = ${k - 1}) GROUP BY 1)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH t AS (SELECT doc_id,
-        |    lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS nt
-        |  FROM documents),
-        |k AS (SELECT doc_id, substr(nt, 1, $SnmKeyLen) AS key,
-        |    substr(nt, 1, $SnmPrefixLen) AS blk FROM t),
-        |l AS (SELECT doc_id, $leads
-        |  FROM k WINDOW w AS (PARTITION BY blk ORDER BY key, doc_id)),
-        |rawp AS (
-        |$branches),
-        |e AS (SELECT DISTINCT least(a, b) AS a, greatest(a, b) AS b
-        |  FROM rawp WHERE a <> b),
-        |adj AS (SELECT a AS s, b AS t FROM e
-        |  UNION ALL SELECT b AS s, a AS t FROM e),
-        |seed AS (SELECT s AS v FROM adj GROUP BY 1
-        |  ORDER BY COUNT(*) DESC, s LIMIT 1),
-        |d0 AS (SELECT v, 0 AS dist FROM seed),
-        |$rounds
-        |SELECT v AS node, CAST(dist AS BIGINT) AS distance
-        |FROM d$BfsMaxDepth ORDER BY node""".stripMargin
-    },
-
-    "q195_transition_impurity" ->
-      """WITH p AS (SELECT event_type AS et,
-        |    LEAD(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS net
-        |  FROM events),
-        |c AS (SELECT et, net, COUNT(*) AS n FROM p
-        |  WHERE net IS NOT NULL GROUP BY 1, 2),
-        |m AS (SELECT et AS event_type,
-        |    CAST(SUM(n) AS BIGINT) AS n_transitions,
-        |    COUNT(*) AS n_next_states,
-        |    CAST(SUM(CAST(n AS HUGEINT) * n) AS HUGEINT) AS ssq
-        |  FROM c GROUP BY 1)
-        |SELECT event_type, n_transitions, n_next_states,
-        |  CAST(CAST(n_transitions AS HUGEINT) * n_transitions - ssq
-        |      AS DOUBLE) /
-        |    CAST(CAST(n_transitions AS HUGEINT) * n_transitions
-        |      AS DOUBLE) AS gini_impurity
-        |FROM m ORDER BY event_type""".stripMargin,
-
-    "q196_depth_value" ->
-      s"""WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, MIN(e.ts) AS t2 FROM events e
-        |  JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t1
-        |    AND e.ts <= s1.t1 + INTERVAL $FunnelDeadlineS SECOND
-        |  GROUP BY 1),
-        |s3 AS (SELECT e.user_id, MIN(e.ts) AS t3 FROM events e
-        |  JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-        |    AND e.ts <= s2.t2 + INTERVAL $FunnelDeadlineS SECOND
-        |  GROUP BY 1),
-        |u AS (SELECT DISTINCT user_id FROM events),
-        |f AS (SELECT u.user_id,
-        |    CAST((t1 IS NOT NULL) AS INTEGER)
-        |      + CAST((t2 IS NOT NULL) AS INTEGER)
-        |      + CAST((t3 IS NOT NULL) AS INTEGER) AS depth
-        |  FROM u LEFT JOIN s1 USING (user_id)
-        |    LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)),
-        |v AS (SELECT user_id,
-        |    CAST(SUM(CAST(floor(value * $RollCorrQuant) AS BIGINT))
-        |      AS BIGINT) AS vq
-        |  FROM events GROUP BY 1)
-        |SELECT depth, COUNT(*) AS n_users,
-        |  CAST(SUM(vq) AS DOUBLE) / $RollCorrQuant.0 AS total_value,
-        |  CAST(SUM(vq) AS DOUBLE) /
-        |    (CAST(COUNT(*) AS DOUBLE) * $RollCorrQuant.0)
-        |    AS mean_value_per_user
-        |FROM f JOIN v USING (user_id)
-        |GROUP BY 1 ORDER BY depth""".stripMargin,
-
-    "q197_shipping_lag_distribution" ->
-      """SELECT o_orderpriority,
-        |  CAST(datediff('day', o_orderdate, l_shipdate) AS BIGINT)
-        |    AS lag_days,
-        |  COUNT(*) AS n_items
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q198_discount_bands" ->
-      """SELECT CAST(floor(l_discount * 100 + 0.5) AS BIGINT)
-        |    AS discount_pct,
-        |  COUNT(*) AS n_items,
-        |  CAST(SUM(CAST(l_quantity AS BIGINT)) AS DOUBLE) /
-        |    CAST(COUNT(*) AS DOUBLE) AS mean_quantity,
-        |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-        |    AS DECIMAL(30,6))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q199_length_quantiles" -> {
-      val qcols = DomainQuantilePcts.map(p =>
-        s"  MIN(CASE WHEN cum * 100 >= n * $p THEN v END) AS p$p")
-        .mkString(",\n")
-      s"""WITH c AS (SELECT lang AS g, CAST(n_chars AS BIGINT) AS v,
-        |    COUNT(*) AS c
-        |  FROM documents GROUP BY 1, 2),
-        |cu AS (SELECT g, v,
-        |    CAST(SUM(c) OVER (PARTITION BY g ORDER BY v
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-        |    CAST(SUM(c) OVER (PARTITION BY g) AS BIGINT) AS n
-        |  FROM c)
-        |SELECT g AS lang, MAX(n) AS n,
-        |$qcols
-        |FROM cu GROUP BY 1 ORDER BY lang""".stripMargin
-    },
-
-    "q200_source_vocab_jaccard" ->
-      """WITH t0 AS (SELECT source, unnest(string_split(lower(trim(
-        |    regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS tok
-        |  FROM documents),
-        |tok AS (SELECT DISTINCT source, tok FROM t0),
-        |sz AS (SELECT source, COUNT(*) AS sz FROM tok GROUP BY 1),
-        |i AS (SELECT a.source AS source_a, b.source AS source_b,
-        |    COUNT(*) AS n_common
-        |  FROM tok a JOIN tok b
-        |    ON a.tok = b.tok AND a.source < b.source
-        |  GROUP BY 1, 2)
-        |SELECT source_a, source_b, n_common,
-        |  CAST(n_common AS DOUBLE) /
-        |    CAST(na.sz + nb.sz - n_common AS DOUBLE) AS vocab_jaccard
-        |FROM i JOIN sz na ON i.source_a = na.source
-        |JOIN sz nb ON i.source_b = nb.source
-        |ORDER BY 1, 2""".stripMargin,
-
-    "q201_value_band_conversion" ->
-      s"""WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, MIN(e.ts) AS t2 FROM events e
-        |  JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t1
-        |    AND e.ts <= s1.t1 + INTERVAL $FunnelDeadlineS SECOND
-        |  GROUP BY 1),
-        |s3 AS (SELECT e.user_id, MIN(e.ts) AS t3 FROM events e
-        |  JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-        |    AND e.ts <= s2.t2 + INTERVAL $FunnelDeadlineS SECOND
-        |  GROUP BY 1),
-        |u AS (SELECT DISTINCT user_id FROM events),
-        |f AS (SELECT u.user_id,
-        |    CAST((t1 IS NOT NULL) AS INTEGER)
-        |      + CAST((t2 IS NOT NULL) AS INTEGER)
-        |      + CAST((t3 IS NOT NULL) AS INTEGER) AS depth
-        |  FROM u LEFT JOIN s1 USING (user_id)
-        |    LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)),
-        |v AS (SELECT user_id,
-        |    CAST(SUM(CAST(floor(value * $RollCorrQuant) AS BIGINT))
-        |      AS BIGINT) AS vq
-        |  FROM events GROUP BY 1),
-        |b AS (SELECT user_id,
-        |    CASE WHEN vq > 0 THEN length(bin(vq)) ELSE 0 END
-        |      AS value_band
-        |  FROM v)
-        |SELECT value_band, COUNT(*) AS n_users,
-        |  CAST(SUM(depth) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-        |    AS mean_depth,
-        |  CAST(SUM(CASE WHEN depth = 3 THEN 1 ELSE 0 END) AS DOUBLE) /
-        |    CAST(COUNT(*) AS DOUBLE) AS conversion_rate
-        |FROM f JOIN b USING (user_id)
-        |GROUP BY 1 ORDER BY value_band""".stripMargin,
-
-    "q202_new_vs_returning" ->
-      """WITH days AS (SELECT DISTINCT user_id AS u, CAST(ts AS DATE)
-        |    AS d FROM events),
-        |fd AS (SELECT u, MIN(d) AS fd FROM days GROUP BY 1)
-        |SELECT strftime(d, '%Y-%m-%d') AS day, COUNT(*) AS n_active,
-        |  CAST(SUM(CASE WHEN d = fd THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_new,
-        |  CAST(COUNT(*) - SUM(CASE WHEN d = fd THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_returning,
-        |  CAST(COUNT(*) - SUM(CASE WHEN d = fd THEN 1 ELSE 0 END)
-        |      AS DOUBLE) /
-        |    CAST(COUNT(*) AS DOUBLE) AS returning_share
-        |FROM days JOIN fd USING (u)
-        |GROUP BY d ORDER BY day""".stripMargin,
-
-    "q203_order_gap_quantiles" -> {
-      val qcols = DomainQuantilePcts.map(p =>
-        s"  MIN(CASE WHEN cum * 100 >= n * $p THEN v END) AS p$p")
-        .mkString(",\n")
-      s"""WITH g AS (SELECT o_custkey,
-        |    CAST(datediff('day', LAG(o_orderdate) OVER w, o_orderdate)
-        |      AS BIGINT) AS gap_days
-        |  FROM orders
-        |  WINDOW w AS (PARTITION BY o_custkey
-        |    ORDER BY o_orderdate, o_orderkey)),
-        |j AS (SELECT c_mktsegment AS g, gap_days AS v0 FROM g
-        |  JOIN customer ON o_custkey = c_custkey
-        |  WHERE gap_days IS NOT NULL),
-        |c AS (SELECT g, v0 AS v, COUNT(*) AS c FROM j GROUP BY 1, 2),
-        |cu AS (SELECT g, v,
-        |    CAST(SUM(c) OVER (PARTITION BY g ORDER BY v
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-        |    CAST(SUM(c) OVER (PARTITION BY g) AS BIGINT) AS n
-        |  FROM c)
-        |SELECT g AS c_mktsegment, MAX(n) AS n,
-        |$qcols
-        |FROM cu GROUP BY 1 ORDER BY c_mktsegment""".stripMargin
-    },
-
-    "q204_order_count_distribution" ->
-      s"""WITH c_orders AS (SELECT c_custkey,
-        |    COUNT(o_orderkey) AS c_count
-        |  FROM customer LEFT OUTER JOIN orders
-        |    ON c_custkey = o_custkey
-        |    AND o_orderpriority <> '$Q13ExcludedPriority'
-        |  GROUP BY 1)
-        |SELECT c_count, COUNT(*) AS custdist
-        |FROM c_orders GROUP BY 1
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "q205_excess_capacity_suppliers" ->
-      s"""WITH sp AS (SELECT l_suppkey,
-        |    SUM(CAST(l_quantity AS DECIMAL(30,6))) AS qty_all,
-        |    SUM(CAST(CASE WHEN l_shipdate >= TIMESTAMP '$Q20YearFrom'
-        |      AND l_shipdate < TIMESTAMP '$Q20YearTo'
-        |      THEN l_quantity ELSE 0 END AS DECIMAL(30,6))) AS qty_win
-        |  FROM lineitem
-        |  WHERE l_partkey IN
-        |    (SELECT p_partkey FROM part WHERE p_name LIKE '$Q20PartPrefix%')
-        |  GROUP BY l_suppkey, l_partkey)
-        |SELECT s_suppkey, s_name, s_acctbal FROM supplier
-        |WHERE s_suppkey IN (SELECT l_suppkey FROM sp
-        |  WHERE qty_win > 0 AND qty_all > qty_win * $Q20CapacityMult)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q206_knn_recall_sampled" ->
-      s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_probes,
-        |  CAST(TRUE AS BOOLEAN) AS recall_ok,
-        |  CAST(TRUE AS BOOLEAN) AS vote_mae_ok
-        |FROM embeddings
-        |WHERE substr(md5('$KnnSampleSalt#' || CAST(vec_id AS VARCHAR)),
-        |  1, 8) < '$KnnSampleHex'""".stripMargin,
-
-    "q207_forecast_revenue" ->
-      s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_lines,
-        |  ${DSUM("l_extendedprice * l_discount")} AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '$TpchYearFrom'
-        |  AND l_shipdate < TIMESTAMP '$TpchYearTo'
-        |  AND l_discount >= $Q6DiscLo AND l_discount <= $Q6DiscHi
-        |  AND l_quantity < $Q6MaxQty""".stripMargin,
-
-    "q208_product_profit" ->
-      s"""SELECT n_name AS nation,
-        |  CAST(year(l_shipdate) AS BIGINT) AS o_year,
-        |  ${DSUM("l_extendedprice * (1.0 - l_discount) - " +
-          "l_quantity * p_retailprice * 0.1")} AS sum_profit
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE p_name LIKE '%$Q9NamePattern%'
-        |GROUP BY 1, 2
-        |ORDER BY nation, o_year DESC""".stripMargin,
-
-    "q209_returned_revenue" ->
-      s"""WITH rev AS (SELECT o_custkey,
-        |    ${DSUM("l_extendedprice * (1.0 - l_discount)")} AS revenue
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE l_returnflag = 'R'
-        |    AND o_orderdate >= TIMESTAMP '$TpchQtrFrom'
-        |    AND o_orderdate < TIMESTAMP '$TpchQtrTo'
-        |  GROUP BY 1)
-        |SELECT c_custkey, c_name, c_acctbal, n_name, revenue
-        |FROM rev
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |ORDER BY revenue DESC, c_custkey ASC
-        |LIMIT 20""".stripMargin,
-
-    "q210_important_parts" ->
-      s"""WITH qv AS (SELECT l_partkey,
-        |    SUM(CAST(l_quantity AS DECIMAL(30,6))) AS qvd
-        |  FROM lineitem
-        |  WHERE l_suppkey IN (SELECT s_suppkey FROM supplier
-        |    JOIN nation ON s_nationkey = n_nationkey
-        |    WHERE n_name = '$Q11Nation')
-        |  GROUP BY 1)
-        |SELECT l_partkey AS p_partkey, CAST(qvd AS DOUBLE) AS value
-        |FROM qv
-        |WHERE qvd * $Q11FracDen > (SELECT SUM(qvd) FROM qv)
-        |ORDER BY value DESC, p_partkey ASC""".stripMargin,
-
-    "q211_lag_priority" ->
-      s"""SELECT datediff('day', o_orderdate, l_shipdate) // $Q12BandDays
-        |    AS lag_band,
-        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |    THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '$TpchYearFrom'
-        |  AND l_shipdate < TIMESTAMP '$TpchYearTo'
-        |GROUP BY 1
-        |ORDER BY lag_band""".stripMargin,
-
-    "q212_min_cost_supplier" ->
-      s"""WITH ps AS (SELECT DISTINCT p_partkey, p_brand, p_size,
-        |    l_suppkey
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE p_type = '$Q2PartType' AND p_size <= $Q2MaxSize),
-        |r AS (SELECT p_partkey, p_brand, p_size, s_suppkey, s_name,
-        |    s_acctbal,
-        |    row_number() OVER (PARTITION BY p_partkey
-        |      ORDER BY s_acctbal ASC, s_suppkey ASC) AS rk
-        |  FROM ps JOIN supplier ON l_suppkey = s_suppkey)
-        |SELECT p_partkey, p_brand, p_size, s_suppkey, s_name, s_acctbal
-        |FROM r WHERE rk = 1
-        |ORDER BY s_acctbal DESC, p_partkey ASC""".stripMargin,
-
-    "q213_two_step_transitions" ->
-      """WITH p AS (SELECT et, net, COUNT(*) AS n FROM (
-        |    SELECT event_type AS et,
-        |      LEAD(event_type) OVER (PARTITION BY user_id
-        |        ORDER BY ts, event_id) AS net
-        |    FROM events)
-        |  WHERE net IS NOT NULL GROUP BY 1, 2)
-        |SELECT a.et AS et_from, b.net AS et_to,
-        |  CAST(SUM(CAST(a.n AS HUGEINT) * b.n) AS BIGINT) AS n_paths
-        |FROM p a JOIN p b ON a.net = b.et
-        |GROUP BY 1, 2
-        |ORDER BY et_from, et_to""".stripMargin,
-
-    "q214_hourly_profile" ->
-      """WITH c AS (SELECT event_type,
-        |    CAST(hour(ts) AS BIGINT) AS hour_of_day, COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2)
-        |SELECT event_type, hour_of_day, n,
-        |  CAST(n AS DOUBLE) /
-        |    CAST(SUM(n) OVER (PARTITION BY event_type) AS DOUBLE) AS share
-        |FROM c ORDER BY event_type, hour_of_day""".stripMargin,
-
-    "q215_effective_dims" ->
-      """WITH d AS (SELECT unnest(range(len(
-        |    (SELECT embedding FROM embeddings LIMIT 1)))) AS k),
-        |x AS (SELECT d.k,
-        |    CAST(floor(CAST(embedding[d.k + 1] AS DOUBLE) * 1000 + 0.5)
-        |      AS BIGINT) AS xi
-        |  FROM embeddings, d),
-        |agg AS (SELECT k, COUNT(*) AS n,
-        |    SUM(CAST(xi AS DECIMAL(38,0))) AS sx,
-        |    SUM(CAST(xi AS DECIMAL(38,0)) * xi) AS sxx
-        |  FROM x GROUP BY 1),
-        |v AS (SELECT n,
-        |    CAST(CAST(n AS DECIMAL(38,0)) * sxx - sx * sx AS HUGEINT)
-        |      AS var_num
-        |  FROM agg),
-        |s AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_dims,
-        |    MAX(n) AS n_rows,
-        |    SUM(var_num) AS s1, SUM(var_num * var_num) AS s2
-        |  FROM v)
-        |SELECT n_rows, n_dims,
-        |  round(CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) /
-        |    CAST(s2 AS DOUBLE), 9) + 0.0 AS pr_effective_dims
-        |FROM s WHERE s2 > 0""".stripMargin,
-
-    "q216_supplier_sla" ->
-      s"""WITH rated AS (SELECT l_suppkey,
-        |    CAST(COUNT(*) AS BIGINT) AS n_lines,
-        |    CAST(SUM(CASE WHEN datediff('day', o_orderdate, l_shipdate)
-        |        > $LateShipDays
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS n_late
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  GROUP BY 1
-        |  HAVING COUNT(*) >= $SlaMinLines)
-        |SELECT s_suppkey, s_name, n_lines, n_late,
-        |  CAST(n_late AS DOUBLE) / CAST(n_lines AS DOUBLE) AS late_rate
-        |FROM rated JOIN supplier ON l_suppkey = s_suppkey
-        |ORDER BY late_rate DESC, s_suppkey ASC""".stripMargin,
-
-    "q217_session_lift" ->
-      s"""WITH o AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |           OR ts - LAG(ts) OVER w > INTERVAL $SessionGapMinutes MINUTE
-        |         THEN 1 ELSE 0 END AS opens
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT *, CAST(SUM(opens) OVER (
-        |    PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-        |  FROM o),
-        |st AS (SELECT DISTINCT user_id, session_seq, event_type FROM s),
-        |ns AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_sessions FROM
-        |  (SELECT DISTINCT user_id, session_seq FROM st)),
-        |na AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_t
-        |  FROM st GROUP BY 1),
-        |pr AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-        |    CAST(COUNT(*) AS BIGINT) AS n_ab
-        |  FROM st a JOIN st b ON a.user_id = b.user_id
-        |    AND a.session_seq = b.session_seq
-        |    AND a.event_type < b.event_type
-        |  GROUP BY 1, 2)
-        |SELECT type_a, type_b, n_ab,
-        |  round(CAST(n_ab * n_sessions AS DOUBLE) /
-        |    CAST(na1.n_t * na2.n_t AS DOUBLE), 9) + 0.0 AS lift
-        |FROM pr
-        |CROSS JOIN ns
-        |JOIN na na1 ON pr.type_a = na1.event_type
-        |JOIN na na2 ON pr.type_b = na2.event_type
-        |ORDER BY type_a, type_b""".stripMargin
-  )
-
-  /** q169 twin, generated from the SAME CorrCols list as the Spark
-    * call (ADVICE r9 rule): one aggregate CTE holding every
-    * DECIMAL(30,6)-exact Σx/Σx²/Σxy, then one UNION ALL row per pair
-    * applying the identical final double formula.
-    */
-  private def corrTwin(table: String, cols: Seq[String]): String = {
-    val pairs = for {
-      i <- cols.indices; j <- cols.indices if i < j
-    } yield (cols(i), cols(j))
-    val sums = cols.flatMap { c =>
-      Seq(s"${DSUM(c)} AS s_$c", s"${DSUM(s"$c*$c")} AS ss_$c")
-    } ++ pairs.map { case (x, y) =>
-      s"${DSUM(s"$x*$y")} AS sp_${x}_$y"
-    }
-    val rows = pairs.map { case (x, y) =>
-      s"""  SELECT '$x' AS col_x, '$y' AS col_y, n,
-         |    (CAST(n AS DOUBLE) * sp_${x}_$y - s_$x * s_$y) /
-         |    sqrt((CAST(n AS DOUBLE) * ss_$x - s_$x * s_$x) *
-         |      (CAST(n AS DOUBLE) * ss_$y - s_$y * s_$y)) AS pearson_r
-         |  FROM s""".stripMargin
-    }.mkString("\n  UNION ALL\n")
-    s"""WITH s AS (SELECT COUNT(*) AS n,
-       |  ${sums.mkString(",\n  ")}
-       |  FROM $table)
-       |SELECT * FROM (
-       |$rows
-       |) ORDER BY col_x, col_y""".stripMargin
-  }
+  private[graft] val sharedSourceVocab = new Seam((s, dir) =>
+    Tables.documents(s, dir)
+      .select(col("source"),
+        explode(graft.functions.tokens(col("text"))).as("tok"))
+      .distinct())
 }

@@ -39,7 +39,7 @@ object StreamBench {
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val cpus = GraftConf.hostCpus
     val spark = GraftConf.localSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
 

@@ -483,7 +483,11 @@ object StressBench {
     // output-proportional, constant ~1); c = 4 keeps the face heavy
     // enough to show core scaling without dominating the suite.
     val copies = 4
+    // a null or zero-norm vector has no cosine, so its clones never
+    // pair with each other; keep only vectors the C(c,2)·n term counts
     val emb = Tables.embeddings(s, sfDir).select("vec_id", "embedding")
+      .filter(graft.functions.dotProduct(col("embedding"),
+        col("embedding")) > 0)
     val n = emb.count()
     val offset = emb.agg(max("vec_id")).head().getLong(0) + 1
     val corpus = emb.withColumnRenamed("vec_id", "doc_id")
@@ -520,7 +524,11 @@ object StressBench {
     def lmStats(in: DataFrame): (Long, Long, Long) = {
       val chunked = Curation.chunkDocsToks(in, "doc_id", "text",
           chunkTokens = 64, strideTokens = 48)
-        .withColumn("ckey", col("doc_id") * 1000 + col("chunk_idx"))
+        // ckey packs chunk_idx into three decimal digits; a 1000th
+        // chunk would alias the next document's first chunk
+        .withColumn("ckey", coalesce(
+          assert_true(col("chunk_idx") < 1000).cast("long"),
+          col("doc_id") * 1000 + col("chunk_idx")))
       val lm = TextAnalysis.unigramLogProbPreTokenized(chunked, "ckey",
         "chunk_toks")
       val cnt = lm.count()
@@ -881,7 +889,7 @@ object StressBench {
       .withColumn("l_shipdate", col("__js")).drop("__js", "__k"))
 
     // q216's aggregate shape (lateness = exact integer day diff > 60,
-    // SparkEntry.LateShipDays); no SlaMinLines floor — the stress wants
+    // TpchQueries.LateShipDays); no SlaMinLines floor — the stress wants
     // every supplier row in the closed-form compare
     def sla(lines: org.apache.spark.sql.DataFrame) = lines
       .join(o, col("l_orderkey") === col("o_orderkey"))
@@ -1398,7 +1406,7 @@ object StressBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = GraftConf.hostCpus
     val spark = GraftConf.localSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
 

@@ -206,9 +206,6 @@ package object functions {
   def dotProduct(a: Column, b: Column): Column =
     toCol(graft.expressions.DotProduct(toExpr(a), toExpr(b)))
 
-  /** L2 norm (double). */
-  def l2Norm(a: Column): Column = sqrt(dotProduct(a, a))
-
   /** Cosine similarity between two float/double-array columns — one
     * native codegen'd pass accumulating dot and both norms
     * ([[graft.expressions.CosineSimilarity]]).

@@ -945,14 +945,6 @@ object Dedup {
       .withColumn("is_rep", col(idCol) === col("rep_id"))
   }
 
-  /** SimHash near-dup over the 64-bit xxhash64 fingerprint (the
-    * engine-fast default; for an oracle-reproducible variant use
-    * [[simhashPortable64]] + [[hammingPairs]]).
-    */
-  def simhashNearDup(docs: DataFrame, idCol: String, textCol: String,
-                     maxHamming: Int): DataFrame =
-    hammingPairs(simhash(docs, idCol, textCol), 64, maxHamming)
-
   /** Sorted-neighborhood near-duplicate blocking (Hernández & Stolfo,
     * SIGMOD 1995): sort records by a normalized sort key (the first
     * `keyLen` chars of whitespace-normalized lowercase text), slide a

@@ -10,7 +10,7 @@ import graft.operators.Similarity
   */
 object MeasureQ144 {
   def main(args: Array[String]): Unit = {
-    val spark = GraftConf.localSession(32)
+    val spark = GraftConf.localSession(GraftConf.hostCpus)
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { dir =>
       val emb = Tables.embeddings(spark, dir)

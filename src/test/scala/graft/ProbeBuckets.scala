@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   */
 object ProbeBuckets {
   def main(args: Array[String]): Unit = {
-    val spark = GraftConf.localSession(8)
+    val spark = GraftConf.localSession(GraftConf.hostCpus)
     spark.sparkContext.setLogLevel("ERROR")
     val emb = Tables.embeddings(spark, args(0))
     val planes = (0 until 12).map(tb =>

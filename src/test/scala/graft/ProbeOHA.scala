@@ -79,7 +79,7 @@ object ProbeOHA {
     val src = args(0); val out = args(1)
     val copies = if (args.length > 2) args(2).toInt else 10
     val passes = if (args.length > 3) args(3).toInt else 3
-    val spark = GraftConf.localSession(32)
+    val spark = GraftConf.localSession(GraftConf.hostCpus)
     spark.sparkContext.setLogLevel("ERROR")
     buildClone(spark, src, out, copies)
 

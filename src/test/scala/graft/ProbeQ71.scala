@@ -13,7 +13,7 @@ object ProbeQ71 {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val passes = if (args.length > 1) args(1).toInt else 3
-    val spark = GraftConf.localSession(32)
+    val spark = GraftConf.localSession(GraftConf.hostCpus)
     spark.sparkContext.setLogLevel("ERROR")
     val s = spark
 

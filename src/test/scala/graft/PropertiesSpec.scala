@@ -25,6 +25,19 @@ class PropertiesSpec extends SparkSpec {
     q.diff(o) shouldBe empty
   }
 
+  test("query registry refuses a duplicated name") {
+    import graft.queries.Query
+    val build = (s: org.apache.spark.sql.SparkSession, _: String) => s.range(1).toDF()
+    val e = intercept[IllegalArgumentException] {
+      Query.registry(Seq(Query("qa", build, "SELECT 1"),
+        Query("qb", build, "SELECT 2"), Query("qa", build, "SELECT 3")))
+    }
+    e.getMessage should include("qa")
+    e.getMessage should not include "qb"
+    SparkEntry.registry.map(_.name).distinct should have size
+      SparkEntry.registry.size.toLong
+  }
+
   test("BPE mergeFold property: distributed fold == reference fold on random sequences") {
     import graft.operators.TextAnalysis
     val rnd = new scala.util.Random(11)

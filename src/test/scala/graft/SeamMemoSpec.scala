@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Pins the build-once seam machinery itself (VERDICT r12 items 2-3,
   * r13 item 4): exactly-once builds under concurrent first access, the
@@ -21,15 +21,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 class SeamMemoSpec extends SparkSpec {
 
   test("perSessionMemo builds exactly once under concurrent first access") {
-    val cache = new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, SparkEntry.SeamBox]]()
     val builds = new AtomicInteger(0)
-    def memoCall(): DataFrame =
-      SparkEntry.perSessionMemo(cache, spark, "k") {
-        builds.incrementAndGet()
-        // a real (lazy, session-bound) frame, as the seams build
-        spark.range(3).toDF("id").localCheckpoint(true)
-      }
+    val seam = new SparkEntry.Seam((s, _) => {
+      builds.incrementAndGet()
+      // a real (lazy, session-bound) frame, as the seams build
+      s.range(3).toDF("id")
+    })
+    def memoCall(): DataFrame = seam(spark, "k")
     // two threads race the FIRST access through a start barrier — the
     // old getOrElseUpdate-of-DataFrame evaluated the builder in both
     val ready = new CountDownLatch(2)
@@ -55,6 +53,25 @@ class SeamMemoSpec extends SparkSpec {
       assert(memoCall() eq dfs(0))
       builds.get() shouldBe 1
     } finally pool.shutdown()
+  }
+
+  test("two seams over the same (session, dir) get distinct memo entries") {
+    val builds = new AtomicInteger(0)
+    def rangeSeam(n: Int) = new SparkEntry.Seam((s, _) => {
+      builds.incrementAndGet()
+      s.range(n).toDF("id")
+    })
+    val (a, b) = (rangeSeam(3), rangeSeam(5))
+    val (fa, fb) = (a(spark, "d"), b(spark, "d"))
+    assert(fa ne fb)
+    fa.count() shouldBe 3L
+    fb.count() shouldBe 5L
+    builds.get() shouldBe 2
+    // each seam's entry is reused; a different dir is a new entry
+    assert(a(spark, "d") eq fa)
+    assert(b(spark, "d") eq fb)
+    assert(a(spark, "other") ne fa)
+    builds.get() shouldBe 3
   }
 
   test("pinSeam reliable mode checkpoints to the configured dir and yields the same rows") {

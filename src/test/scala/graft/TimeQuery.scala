@@ -14,7 +14,7 @@ object TimeQuery {
     val dir = args(0)
     val names = args(1).split(',').toSeq // comma-list shares one JVM/session
     val passes = if (args.length > 2) args(2).toInt else 3
-    val spark = GraftConf.localSession(32)
+    val spark = GraftConf.localSession(GraftConf.hostCpus)
     spark.sparkContext.setLogLevel("ERROR")
     args.drop(3).foreach { kv =>
       val Array(k, v) = kv.split("=", 2) // values may contain '='

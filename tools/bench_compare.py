@@ -175,6 +175,14 @@ def main():
             qa = {q: v for q, v in qa.items() if v is not None}
             qb = {q: matched_min(d) for q, d in db.items()}
             qb = {q: v for q, v in qb.items() if v is not None}
+            # annotate() must read the same k passes the minima came
+            # from: every list in a query's detail is per-pass
+            def first_k(d):
+                return {f: v[:k] if isinstance(v, list) else v
+                        for f, v in d.items()}
+            da = {q: first_k(d) for q, d in da.items()}
+            db = {q: first_k(d) for q, d in db.items()}
+            steal_a, steal_b = steal_a[:k], steal_b[:k]
             print(f"!! Comparing min over the FIRST {k} passes of each "
                   "record instead (pass-matched).")
         else:

@@ -24,9 +24,13 @@ WORKERS=${3:-6}
 THREADS=${4:-5}
 # Reuse an existing dump (resume case: the Spark phase is cheap but
 # re-dumping would orphan the progress JSONL's row counts).
+# Cores and heap come from the host, as in the tier-1 test command:
+# every core, and half of MemTotal clamped to 2..8 GiB.
+CPUS=$(env -u OMP_NUM_THREADS nproc)
+HEAP=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)
 if [ ! -f "$OUT/oracle_sql.json" ]; then
   rm -rf "$OUT"
-  SPARK_GRAFT_CPUS=32 java -Xmx96g \
+  SPARK_GRAFT_CPUS=$CPUS java -Xmx$HEAP \
     -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
     graft.Verify /root/testdata/sf0.1 "$OUT" > /tmp/sf01_dump.log 2>&1
   if grep -q "\[verify\].*failed" /tmp/sf01_dump.log; then
