@@ -17,12 +17,12 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *    whose passes read [16.1, 16.0] regressed; [13.3, 3.6] hit a
   *    transient (GC storm, load burst, codegen compile) on pass 1.
   *  - per-query `gc_ms` / `gc_pause_ms` / `codegen_compiles` per
-  *    pass: `gc_ms` is the summed task jvmGCTime — 32 concurrent
+  *    pass: `gc_ms` is the summed task jvmGCTime — concurrent
   *    tasks each count the same collection, so it over-reads real
   *    pause time by up to the task-slot count (r13/r14 burned
   *    adjudication time on ">100% gc share" artifacts); `gc_pause_ms`
   *    is the JVM GarbageCollectorMXBean collection-time delta — the
-  *    REAL wall-clock pause, exact in local[32]'s single JVM (VERDICT
+  *    REAL wall-clock pause, exact in local mode's single JVM (VERDICT
   *    r14 item 1). Quote gc_pause_ms; gc_ms remains for its
   *    allocation-pressure signal (tasks × pauses).
   *  - per-query `steal` per pass + top-level `pass_steal`: host CPU
@@ -54,6 +54,9 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * silently replace the committed round record in the working tree.
   */
 object Bench {
+  import Instruments.{codegenCompiles, delta, flushListenerBus, gcPauseMs,
+    hostSnapshot, stealJiffies}
+
   def main(args: Array[String]): Unit = {
     // ---- explicit promotion mode: the ONLY writer of bench_out.json
     if (args.length >= 1 && args(0) == "--promote") {
@@ -73,26 +76,7 @@ object Bench {
     }
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-
-    def stealJiffies(): Long =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        try {
-          val f = src.getLines().next().trim.split("\\s+")
-          if (f.length > 8) f(8).toLong else -1L
-        } finally src.close()
-      } catch { case _: Throwable => -1L }
-
-    // Real GC pause time: the JVM's own collector-time counter. In
-    // local[32] there is exactly one JVM, so deltas of this counter
-    // ARE the wall-clock milliseconds the collectors ran — no
-    // task-level multi-counting.
-    def gcPauseMs(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
+    val cpus = GraftConf.hostCpus
 
     // Pre-run steal sample BEFORE the session spins up (an idle JVM —
     // any steal observed here is the host's, not ours). Records both
@@ -114,12 +98,8 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- per-query GC attribution: one listener accumulating task
-    // jvmGCTime; snapshot deltas around each query. The listener bus
-    // is async, so the post-query snapshot flushes it first (via the
-    // bytecode-public LiveListenerBus.waitUntilEmpty — private[spark]
-    // in source, hence reflection; best-effort: on any failure the
-    // delta still lands, attributed to whichever query the late
-    // events trail into).
+    // jvmGCTime; snapshot deltas around each query, with the async
+    // listener bus flushed first (Instruments.flushListenerBus)
     val gcAccum = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -129,26 +109,6 @@ object Bench {
           if (m != null) { gcAccum.addAndGet(m.jvmGCTime); () }
         }
       })
-    val flushListenerBus: () => Unit =
-      try {
-        val busM = spark.sparkContext.getClass.getMethod("listenerBus")
-        val bus = busM.invoke(spark.sparkContext)
-        val waitM = bus.getClass.getMethod("waitUntilEmpty")
-        () => { try { waitM.invoke(bus); () } catch { case _: Throwable => () } }
-      } catch { case _: Throwable => () => () }
-
-    // Janino compilation counter (Spark's global CodegenMetrics — the
-    // object is private[spark], so reflection again; -1 everywhere if
-    // the internals moved, never a crash)
-    val codegenCount: () => Long =
-      try {
-        val cls = Class.forName(
-          "org.apache.spark.metrics.source.CodegenMetrics$")
-        val mod = cls.getField("MODULE$").get(null)
-        val hist = cls.getMethod("METRIC_COMPILATION_TIME").invoke(mod)
-          .asInstanceOf[com.codahale.metrics.Histogram]
-        () => hist.getCount
-      } catch { case _: Throwable => () => -1L }
 
     // Warmup: run the flagship once untimed so JVM/codegen/session setup
     // is not attributed to the first timed query (r2's q01 showed 17 s of
@@ -165,48 +125,14 @@ object Bench {
     var failCounts = Map.empty[String, Int].withDefaultValue(0)
     // Host-load attribution (r9 verdict item 4: the driver read +31%
     // over the builder's recorded total, uniformly — environment, not
-    // regression, but unprovable without data). One snapshot before
-    // each pass and one after the last: 1-min loadavg, cumulative cpu
-    // steal jiffies from /proc/stat (deltas between snapshots = steal
-    // during the pass), and the number of live JVMs (concurrent
-    // harnesses are the usual contention source on a shared host).
-    def hostSnapshot(): String = {
-      val load = java.lang.management.ManagementFactory
-        .getOperatingSystemMXBean.getSystemLoadAverage
-      val steal = stealJiffies()
-      // FOREIGN JVMs only (VERDICT r11 nit: the old count included the
-      // bench's own sbt parent, so a demonstrably quiet host read
-      // jvms=2 and needed prose attribution) — exclude this process,
-      // its ancestors (the sbt/launcher chain), and its descendants,
-      // so a clean run reads foreign_jvms=0 machine-checkably.
-      val own = scala.collection.mutable.Set.empty[Long]
-      var cur: java.util.Optional[ProcessHandle] =
-        java.util.Optional.of(ProcessHandle.current())
-      while (cur.isPresent) { own += cur.get.pid(); cur = cur.get.parent() }
-      ProcessHandle.current().descendants().forEach(p => own += p.pid())
-      val jvms = ProcessHandle.allProcesses()
-        .filter(p => p.info().command()
-          .map[java.lang.Boolean](_.contains("java")).orElse(false))
-        .filter(p => !own.contains(p.pid()))
-        .count()
-      val l = "%.2f".formatLocal(java.util.Locale.ROOT, load)
-      s"""{"loadavg":$l,"steal_jiffies":$steal,"foreign_jvms":$jvms}"""
-    }
+    // regression, but unprovable without data): one
+    // Instruments.hostSnapshot before each pass and one after the last.
     val hostSnaps = scala.collection.mutable.ArrayBuffer.empty[String]
-    // VERDICT r11 item 3: q144's full-exact corpus² side is the
-    // GATE-SCALE recall audit; q206 (sampled probes) is the
-    // 100×-survivable protocol. The bench carries ONE price per
-    // protocol: q144 stays oracle-gated every round via Verify and its
-    // full-exact run is stress-hosted (StressBench knn_exact_full),
-    // but it is not timed in the resident bench suite. Passing it as
-    // an explicit arg still benches it for local iteration. The
-    // record DECLARES this (VERDICT r14 item 4) in its `excluded`
-    // field so n=216-vs-217-gated explains itself.
-    val benchExcluded = Map(
-      "q144_knn_audit_approx" ->
-        ("gate-scale full-exact recall audit: oracle-gated every round " +
-          "via Verify, timed as StressBench knn_exact_full; q206 is the " +
-          "benched sampled-probe ANN protocol"))
+    // queries the full-suite run leaves out, each with its reason (the
+    // registry's `benchExcluded` field); the record DECLARES them
+    // (VERDICT r14 item 4) in its `excluded` field so n-vs-gated
+    // explains itself. Passing one as an explicit arg still benches it.
+    val benchExcluded = SparkEntry.benchExcluded
     // optional args = query-name subset for local iteration; the driver
     // passes none and gets the full suite
     val selected =
@@ -232,8 +158,8 @@ object Bench {
     def runPass(): Unit =
       order.foreach { name =>
         val fn = selected(name)
-        flushListenerBus()
-        val gc0 = gcAccum.get(); val cg0 = codegenCount()
+        flushListenerBus(spark)
+        val gc0 = gcAccum.get(); val cg0 = codegenCompiles()
         val gp0 = gcPauseMs(); val st0 = stealJiffies()
         val t0 = System.nanoTime()
         var ok = true
@@ -244,14 +170,12 @@ object Bench {
           ok = false
         }
         val elapsed = (System.nanoTime() - t0) / 1e9
-        flushListenerBus()
+        flushListenerBus(spark)
         buf(passTimes, name) += (if (ok) elapsed else -1.0)
         buf(passGc, name) += gcAccum.get() - gc0
         buf(passGcPause, name) += gcPauseMs() - gp0
-        val st1 = stealJiffies()
-        buf(passSteal, name) += (if (st0 < 0 || st1 < 0) -1L else st1 - st0)
-        val cg1 = codegenCount()
-        buf(passCodegen, name) += (if (cg0 < 0 || cg1 < 0) -1L else cg1 - cg0)
+        buf(passSteal, name) += delta(st0, stealJiffies())
+        buf(passCodegen, name) += delta(cg0, codegenCompiles())
         // drop this query's persisted tables so later queries aren't
         // timed under the accumulated heap pressure of the whole suite
         // (observed 4x run-to-run swings on the dedup self-joins without)
@@ -287,8 +211,7 @@ object Bench {
       hostSnaps += hostSnapshot()
       val st0 = stealJiffies()
       runPass()
-      val st1 = stealJiffies()
-      passStealTotals += (if (st0 < 0 || st1 < 0) -1L else st1 - st0)
+      passStealTotals += delta(st0, stealJiffies())
       val ranBase = passStealTotals.size >= basePasses
       val cleanSoFar = passStealTotals.count(isClean)
       val extrasLeft = passStealTotals.size - basePasses < maxExtra

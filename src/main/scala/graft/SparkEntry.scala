@@ -49,6 +49,10 @@ object SparkEntry {
   val oracleSql: Map[String, String] =
     registry.map(q => q.name -> q.oracleSql).toMap
 
+  /** Query name → why the full-suite bench does not time it. */
+  val benchExcluded: Map[String, String] =
+    registry.flatMap(q => q.benchExcluded.map(q.name -> _)).toMap
+
   /** Exactly-once holder for a seam build: racing first callers may
     * both allocate a box, but only the TrieMap winner's `lazy val` is
     * ever forced, and lazy-val initialization is itself synchronized —

@@ -1,11 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.{Catalog, Curation, Dedup, EventAnalytics, Similarity, TextAnalysis}
 
 /** 100×-readiness stress harness as a DRIVER-RUNNABLE artifact: the
@@ -178,8 +175,8 @@ object StressBench {
     * skew-join off, then on — under demo-scaled AQE thresholds (the
     * corpus is MBs, not the 100 TB the production thresholds assume;
     * broadcast is disabled because at corpus scale the join sides are
-    * far beyond any broadcast threshold anyway). Evidence: a
-    * QueryExecutionListener captures every executed plan and the run
+    * far beyond any broadcast threshold anyway) by [[skewProbe]].
+    * Evidence: the run
     * with skew-join on must contain a skew=true join while the run
     * with it off must not; both runs must emit the identical pair
     * count. The hot cluster's within-cluster join partition splits
@@ -203,64 +200,12 @@ object StressBench {
       expr(s"transform(sequence(0, ${dim - 1}), j -> " +
         "cast(CASE WHEN j = id THEN 1.0 ELSE 0.0 END as float))").as("cv"))
 
-    val demoConfs = Map(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "131072",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "65536",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0")
-    val saved = (demoConfs.keys ++
-      Seq("spark.sql.adaptive.skewJoin.enabled")).map { k =>
-      k -> s.conf.getOption(k)
-    }.toMap
-
-    def run(skewOn: Boolean): (Long, Double, Boolean) = {
-      demoConfs.foreach { case (k, v) => s.conf.set(k, v) }
-      s.conf.set("spark.sql.adaptive.skewJoin.enabled", skewOn.toString)
-      val plans = ArrayBuffer.empty[String]
-      val listener = new QueryExecutionListener {
-        override def onSuccess(funcName: String, qe: QueryExecution,
-                               durationNs: Long): Unit =
-          plans.synchronized { plans += qe.executedPlan.toString }
-        override def onFailure(funcName: String, qe: QueryExecution,
-                               exception: Exception): Unit = ()
+    val ((pairsOff, secsOff, skewOff), (pairsOn, secsOn, skewOn)) =
+      skewProbe(s) {
+        val df = Similarity.semDedupPairs(emb, "vec_id", "embedding",
+          cents, "cent_id", "cv", t = 0.8)
+        val c = df.count(); df.unpersist(blocking = false); c
       }
-      s.listenerManager.register(listener)
-      try {
-        val (pairs, secs) = time {
-          val df = Similarity.semDedupPairs(emb, "vec_id", "embedding",
-            cents, "cent_id", "cv", t = 0.8)
-          val c = df.count(); df.unpersist(blocking = false); c
-        }
-        // listener events are posted asynchronously, and the operator
-        // runs SEVERAL actions (internal materialize counts + the final
-        // count) — waiting for "any plan with a Join" could read the
-        // buffer before the skewed join's plan lands and flakily report
-        // skew_split_seen_on=false. Wait until the event stream
-        // quiesces (no new plan for 500 ms), or the skew marker itself
-        // shows up when we expect one, bounded by a 10 s deadline.
-        val deadline = System.currentTimeMillis + 10000
-        var last = -1
-        var stableTicks = 0
-        while (System.currentTimeMillis < deadline && stableTicks < 5 &&
-          !(skewOn && plans.synchronized(plans.exists(_.contains("skew=true"))))) {
-          val c = plans.synchronized(plans.length)
-          if (c == last && c > 0) stableTicks += 1
-          else { stableTicks = 0; last = c }
-          Thread.sleep(100)
-        }
-        val sawSkew =
-          plans.synchronized { plans.exists(_.contains("skew=true")) }
-        (pairs, secs, sawSkew)
-      } finally {
-        s.listenerManager.unregister(listener)
-        saved.foreach { case (k, vOpt) =>
-          vOpt.fold(s.conf.unset(k))(v => s.conf.set(k, v))
-        }
-      }
-    }
-
-    val (pairsOff, secsOff, skewOff) = run(skewOn = false)
-    val (pairsOn, secsOn, skewOn) = run(skewOn = true)
     val ok = pairsOn == pairsOff && skewOn && !skewOff
     s""""semdedup_skew_aqe":{"vectors":$nVecs,"hot_fraction":0.9,""" +
       s""""secs_skew_off":${r3(secsOff)},"secs_skew_on":${r3(secsOn)},""" +
@@ -772,13 +717,13 @@ object StressBench {
       s""""heavy_missed":${hm1 + hm10},"ok":$ok}"""
   }
 
-  /** Two-run AQE skew probe shared by the fact×fact skew faces:
-    * executes `action` with AQE skew-join OFF then ON under the
-    * demo-scale skew thresholds of the semdedup_skew_aqe precedent,
-    * broadcast disabled (at 100 TB neither side of these joins
-    * broadcasts — SMJ is the honest physical shape), capturing every
-    * executed plan to report whether a skew=true join actually ran.
-    * Session confs are restored after each run. Returns
+  /** Two-run AQE skew probe shared by semdedup_skew_aqe and the
+    * fact×fact skew faces: executes `action` with AQE skew-join OFF
+    * then ON under demo-scale skew thresholds, broadcast disabled (at
+    * 100 TB neither side of these joins broadcasts — SMJ is the honest
+    * physical shape), capturing every executed plan
+    * (Instruments.executions) to report whether a skew=true join
+    * actually ran. Session confs are restored after each run. Returns
     * ((resultOff, secsOff, sawSkewOff), (resultOn, secsOn, sawSkewOn)).
     */
   private def skewProbe[T](s: SparkSession)(action: => T)
@@ -796,42 +741,18 @@ object StressBench {
     def run(skewOn: Boolean): (T, Double, Boolean) = {
       demoConfs.foreach { case (k, v) => s.conf.set(k, v) }
       s.conf.set("spark.sql.adaptive.skewJoin.enabled", skewOn.toString)
-      val plans = ArrayBuffer.empty[String]
-      val listener = new QueryExecutionListener {
-        override def onSuccess(funcName: String, qe: QueryExecution,
-                               durationNs: Long): Unit =
-          plans.synchronized { plans += qe.executedPlan.toString }
-        override def onFailure(funcName: String, qe: QueryExecution,
-                               exception: Exception): Unit = ()
-      }
-      s.listenerManager.register(listener)
       try {
-        val (result, secs) = time(action)
-        // listener events post asynchronously after the action
-        // returns; wait for the stream to settle (or the expected
-        // skew marker to land), bounded at 10 s
-        val deadline = System.currentTimeMillis + 10000
-        var last = -1
-        var stableTicks = 0
-        while (System.currentTimeMillis < deadline && stableTicks < 5 &&
-          !(skewOn && plans.synchronized(plans.exists(_.contains("skew=true"))))) {
-          val c = plans.synchronized(plans.length)
-          if (c == last && c > 0) stableTicks += 1
-          else { stableTicks = 0; last = c }
-          Thread.sleep(100)
-        }
-        val sawSkew =
-          plans.synchronized { plans.exists(_.contains("skew=true")) }
+        // every execution the action runs (internal materialize
+        // counts included), with its final AQE plan
+        val ((result, secs), execs) = Instruments.executions(s)(time(action))
+        val sawSkew = execs.exists(_.plan.contains("skew=true"))
         if (skewOn && !sawSkew &&
             sys.env.contains("SPARK_GRAFT_STRESS_DEBUG"))
-          plans.synchronized(plans.foreach(p =>
-            System.err.println(s"[stress-debug] captured plan:\n$p")))
+          execs.foreach(e =>
+            System.err.println(s"[stress-debug] captured plan:\n${e.plan}"))
         (result, secs, sawSkew)
-      } finally {
-        s.listenerManager.unregister(listener)
-        saved.foreach { case (k, vOpt) =>
-          vOpt.fold(s.conf.unset(k))(v => s.conf.set(k, v))
-        }
+      } finally saved.foreach { case (k, vOpt) =>
+        vOpt.fold(s.conf.unset(k))(v => s.conf.set(k, v))
       }
     }
 

@@ -3,13 +3,15 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One named query: its build function over (session, table dir) and the
-  * DuckDB twin whose output it must match.
+/** One named query: its build function over (session, table dir), the
+  * DuckDB twin whose output it must match, and — for a query the
+  * full-suite bench leaves out — the reason it is not timed there.
   */
 final case class Query(
     name: String,
     build: (SparkSession, String) => DataFrame,
-    oracleSql: String)
+    oracleSql: String,
+    benchExcluded: Option[String] = None)
 
 object Query {
 

@@ -95,13 +95,7 @@ object ProbeOHA {
       val saved = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
       conf.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
-        val runs = (1 to passes).map { _ =>
-          spark.catalog.clearCache()
-          System.gc()
-          val t0 = System.nanoTime()
-          f().write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
+        val runs = (1 to passes).map(_ => Instruments.noopPass(spark)(f()).wallS)
         println(f"[probeoha] $name min=${runs.min}%.3f " +
           f"all=${runs.map(r => f"$r%.2f").mkString(",")}")
         runs.min

@@ -9,6 +9,7 @@ import graft.operators.Similarity
   * separately through the noop sink, then prints ACTUAL recall and
   * candidate volume for a grid of (tables, planesPerTable, multiProbe)
   * dials — the evidence a dial change must carry (VERDICT r16 item 2).
+  * Every wall is min-of-N [[Instruments.noopPass]].
   * Args: sfDir [passes]
   */
 object ProbeQ37 {
@@ -18,14 +19,10 @@ object ProbeQ37 {
     val spark = GraftConf.localSession(GraftConf.hostCpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    def stage(name: String)(f: () => DataFrame): Unit = {
-      val runs = (1 to passes).map { _ =>
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        f().write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+    def walls(f: => DataFrame): Seq[Double] =
+      (1 to passes).map(_ => Instruments.noopPass(spark)(f).wallS)
+    def stage(name: String)(f: => DataFrame): Unit = {
+      val runs = walls(f)
       println(f"[probe] $name min=${runs.min}%.3f all=${runs.map(r => f"$r%.2f").mkString(",")}")
     }
 
@@ -43,13 +40,14 @@ object ProbeQ37 {
         .distinct()
     }
 
-    stage("exact_sampled_gate")(() => exactSampled())
-    stage("approx_t16_mp")(() =>
+    stage("exact_sampled_gate")(exactSampled())
+    stage("approx_t16_mp")(
       Similarity.cosineNearDup(emb, "vec_id", "embedding", t,
         tables = 16, multiProbe = true))
 
-    // recall/volume grid: exact baseline once, then each dial
-    val exact = exactSampled().persist()
+    // recall/volume grid: exact baseline once (checkpointed, so the
+    // timed passes' cache clears keep it), then each dial
+    val exact = exactSampled().localCheckpoint()
     val nExact = exact.count()
     println(s"[probe] exact sampled pairs: $nExact  corpus: ${e.count()}")
     for ((tb, pl, mp) <- Seq((16, 6, true), (12, 6, true), (8, 6, true),
@@ -61,20 +59,14 @@ object ProbeQ37 {
       val nApprox = approx.count()
       val hits = exact.join(approx, Seq("id_a", "id_b"), "left_semi").count()
       val recall = if (nExact == 0) 1.0 else hits.toDouble / nExact
+      approx.unpersist()
       // wall for this dial
-      val runs = (1 to passes).map { _ =>
-        val t0 = System.nanoTime()
-        Similarity.cosineNearDup(emb, "vec_id", "embedding", t,
-            tables = tb, planesPerTable = pl, multiProbe = mp)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      val runs = walls(Similarity.cosineNearDup(emb, "vec_id", "embedding",
+        t, tables = tb, planesPerTable = pl, multiProbe = mp))
       println(f"[probe] dial tables=$tb planes=$pl mp=$mp recall=$recall%.4f " +
         f"($hits/$nExact) pairs=$nApprox wall_min=${runs.min}%.3f " +
         f"all=${runs.map(r => f"$r%.2f").mkString(",")}")
-      approx.unpersist()
     }
-    exact.unpersist()
     spark.stop()
   }
 }

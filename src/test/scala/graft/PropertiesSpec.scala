@@ -38,6 +38,13 @@ class PropertiesSpec extends SparkSpec {
       SparkEntry.registry.size.toLong
   }
 
+  test("the bench excludes exactly q144, for its gate-scale exact audit") {
+    SparkEntry.benchExcluded shouldBe Map("q144_knn_audit_approx" ->
+      ("gate-scale full-exact recall audit: oracle-gated every round " +
+        "via Verify, timed as StressBench knn_exact_full; q206 is the " +
+        "benched sampled-probe ANN protocol"))
+  }
+
   test("BPE mergeFold property: distributed fold == reference fold on random sequences") {
     import graft.operators.TextAnalysis
     val rnd = new scala.util.Random(11)
