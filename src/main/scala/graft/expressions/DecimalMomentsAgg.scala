@@ -1,6 +1,5 @@
 package graft.expressions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.math.BigInteger
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -9,10 +8,11 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Ge
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 
-/** Exact fixed-point helpers shared by [[DecimalMomentsAgg]]: the
-  * 6-decimal-place HALF_UP rounding Spark's `Cast(double →
-  * DECIMAL(30,6))` applies, reproduced WITHOUT allocating on the hot
-  * path, plus a 128-bit two's-complement accumulator.
+/** Exact fixed-point helpers shared by [[DecimalMomentsAgg]] and
+  * [[DSumAgg]]: the 6-decimal-place HALF_UP rounding Spark's
+  * `Cast(double → DECIMAL(30,6))` applies, reproduced WITHOUT
+  * allocating on the hot path, and the add/convert pair between a
+  * double and a [[WideSums]] slot.
   *
   * Why this exists: `sum(cast(x AS DECIMAL(30,6)))` allocates per ROW
   * per SUM — the cast goes through `Double.toString` (shortest-repr
@@ -87,63 +87,26 @@ object FixedPoint6 {
     }
     dec.toJavaBigDecimal.unscaledValue()
   }
-}
 
-/** Mutable aggregation buffer: nSums independent 128-bit
-  * two's-complement integer accumulators plus a seen-bitmask (a sum
-  * that received no value evaluates to null, matching builtin `sum`).
-  * Fixed 16·nSums-byte state regardless of row count; updates are
-  * pure long arithmetic.
-  */
-final class MomentsBuffer(val nSums: Int) {
-  require(nSums <= 64, s"seen-bitmask limits nSums to 64: $nSums")
-  val hi = new Array[Long](nSums)
-  val lo = new Array[Long](nSums)
-  var seen: Long = 0L
-
-  /** Add a signed 64-bit addend (sign-extended to 128). */
-  def add(i: Int, v: Long): Unit = {
-    val l = lo(i)
-    val nl = l + v
-    // unsigned carry-out of lo + v, branch-free
-    val carry = ((l & v) | ((l | v) & ~nl)) >>> 63
-    hi(i) += (v >> 63) + carry
-    lo(i) = nl
-    seen |= 1L << i
-  }
-
-  /** Add a full 128-bit two's-complement addend. */
-  def addWide(i: Int, vHi: Long, vLo: Long): Unit = {
-    val l = lo(i)
-    val nl = l + vLo
-    val carry = ((l & vLo) | ((l | vLo) & ~nl)) >>> 63
-    hi(i) += vHi + carry
-    lo(i) = nl
-    seen |= 1L << i
-  }
-
-  def mergeFrom(o: MomentsBuffer): Unit = {
-    var i = 0
-    while (i < nSums) {
-      if ((o.seen & (1L << i)) != 0) addWide(i, o.hi(i), o.lo(i))
-      i += 1
-    }
-  }
-
-  /** The accumulated sum as the exact decimal(scale 6) it represents,
-    * converted to double exactly the way `sum(DECIMAL).cast(double)`
-    * converts (BigDecimal.doubleValue on the same numeric value).
+  /** Add round6(v) into slot i: the fast path when it commits, else
+    * Spark's own cast; a null cast (non-finite, or > 30 digits without
+    * ANSI) leaves the slot untouched, as builtin `sum` skips the row.
     */
-  def toDouble(i: Int): Double = {
-    val bytes = new Array[Byte](16)
-    var b = 0
-    while (b < 8) {
-      bytes(b) = (hi(i) >>> (56 - 8 * b)).toByte
-      bytes(b + 8) = (lo(i) >>> (56 - 8 * b)).toByte
-      b += 1
+  def addTo(s: WideSums, i: Int, v: Double, failOnError: Boolean): Unit = {
+    val f = fastUnscaled6(v)
+    if (f != Slow) s.add(i, f)
+    else {
+      val bi = slowUnscaled6(v, failOnError)
+      if (bi != null) s.addWide(i, bi.shiftRight(64).longValue(), bi.longValue())
     }
-    new java.math.BigDecimal(new BigInteger(bytes), 6).doubleValue()
   }
+
+  /** Slot i as the exact scale-6 decimal it holds, converted to double
+    * the way `sum(DECIMAL).cast(double)` converts
+    * (BigDecimal.doubleValue on the same numeric value).
+    */
+  def toDouble(s: WideSums, i: Int): Double =
+    new java.math.BigDecimal(s.toBigInteger(i), 6).doubleValue()
 }
 
 /** All second-order moments of k double columns — Σround6(xᵢ),
@@ -151,8 +114,9 @@ final class MomentsBuffer(val nSums: Int) {
   * typed-imperative aggregate whose per-row work is primitive
   * arithmetic (VERDICT r14 item 3: the equivalent 15-builtin-sum
   * formulation allocated 5.57 GB/pass at sf0.1; this holds the same
-  * bit-exact DECIMAL(30,6) contract with a 16·nSums-byte buffer and
-  * near-zero per-row allocation). round6 = Spark's
+  * bit-exact DECIMAL(30,6) contract in one nSums-slot [[WideSums]],
+  * for any column count, with near-zero per-row allocation). round6 =
+  * Spark's
   * `cast(x AS DECIMAL(30,6))`: [[FixedPoint6]] proves the fast path
   * and delegates every undecidable case to Spark's own Decimal.
   *
@@ -179,13 +143,11 @@ case class DecimalMomentsAgg(
     failOnError: Boolean,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MomentsBuffer] {
+  extends TypedImperativeAggregate[WideSums] {
 
   require(colNames.size == colExprs.size && colExprs.nonEmpty)
   private val k = colExprs.size
   private val nSums = 2 * k + k * (k - 1) / 2
-  require(nSums <= 64,
-    s"at most 9 columns (seen-bitmask holds 64 sums): got $k")
 
   override def children: Seq[Expression] = colExprs
   override def nullable: Boolean = false
@@ -207,8 +169,8 @@ case class DecimalMomentsAgg(
       s"$prettyName requires double columns, got " +
         colExprs.map(_.dataType.sql).mkString(", "))
 
-  override def createAggregationBuffer(): MomentsBuffer =
-    new MomentsBuffer(nSums)
+  override def createAggregationBuffer(): WideSums =
+    new WideSums(nSums)
 
   // Unboxed fast path (the TopKByScoreAgg pattern): direct column
   // children are BoundReference by update() time — read primitives
@@ -228,17 +190,7 @@ case class DecimalMomentsAgg(
   @transient private lazy val vals = new Array[Double](k)
   @transient private lazy val isNul = new Array[Boolean](k)
 
-  private def addValue(buf: MomentsBuffer, idx: Int, v: Double): Unit = {
-    val f = FixedPoint6.fastUnscaled6(v)
-    if (f != FixedPoint6.Slow) buf.add(idx, f)
-    else {
-      val bi = FixedPoint6.slowUnscaled6(v, failOnError)
-      if (bi != null) // null = the cast is null (non-ANSI): sum skips
-        buf.addWide(idx, bi.shiftRight(64).longValue(), bi.longValue())
-    }
-  }
-
-  override def update(buf: MomentsBuffer, input: InternalRow): MomentsBuffer = {
+  override def update(buf: WideSums, input: InternalRow): WideSums = {
     var i = 0
     if (boundOrdinals != null) {
       while (i < k) {
@@ -259,8 +211,8 @@ case class DecimalMomentsAgg(
     while (i < k) {
       if (!isNul(i)) {
         val x = vals(i)
-        addValue(buf, i, x)
-        addValue(buf, k + i, x * x)
+        FixedPoint6.addTo(buf, i, x, failOnError)
+        FixedPoint6.addTo(buf, k + i, x * x, failOnError)
       }
       i += 1
     }
@@ -269,7 +221,8 @@ case class DecimalMomentsAgg(
     while (i < k) {
       var j = i + 1
       while (j < k) {
-        if (!isNul(i) && !isNul(j)) addValue(buf, p, vals(i) * vals(j))
+        if (!isNul(i) && !isNul(j))
+          FixedPoint6.addTo(buf, p, vals(i) * vals(j), failOnError)
         p += 1
         j += 1
       }
@@ -278,44 +231,25 @@ case class DecimalMomentsAgg(
     buf
   }
 
-  override def merge(buf: MomentsBuffer, other: MomentsBuffer): MomentsBuffer = {
+  override def merge(buf: WideSums, other: WideSums): WideSums = {
     buf.mergeFrom(other)
     buf
   }
 
-  override def eval(buf: MomentsBuffer): Any = {
+  override def eval(buf: WideSums): Any = {
     val out = new Array[Any](nSums)
     var i = 0
     while (i < nSums) {
-      out(i) = if ((buf.seen & (1L << i)) != 0) buf.toDouble(i) else null
+      out(i) = if (buf.isSeen(i)) FixedPoint6.toDouble(buf, i) else null
       i += 1
     }
     new GenericInternalRow(out)
   }
 
-  override def serialize(buf: MomentsBuffer): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.nSums)
-    out.writeLong(buf.seen)
-    var i = 0
-    while (i < buf.nSums) {
-      out.writeLong(buf.hi(i)); out.writeLong(buf.lo(i)); i += 1
-    }
-    out.flush()
-    bos.toByteArray
-  }
+  override def serialize(buf: WideSums): Array[Byte] = buf.toBytes
 
-  override def deserialize(bytes: Array[Byte]): MomentsBuffer = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val buf = new MomentsBuffer(in.readInt())
-    buf.seen = in.readLong()
-    var i = 0
-    while (i < buf.nSums) {
-      buf.hi(i) = in.readLong(); buf.lo(i) = in.readLong(); i += 1
-    }
-    buf
-  }
+  override def deserialize(bytes: Array[Byte]): WideSums =
+    WideSums.fromBytes(bytes, nSums)
 
   override def withNewMutableAggBufferOffset(n: Int): DecimalMomentsAgg =
     copy(mutableAggBufferOffset = n)
@@ -330,10 +264,12 @@ case class DecimalMomentsAgg(
   * `graft.functions.dsum` order-independent sum — as ONE
   * allocation-free aggregate: [[FixedPoint6]] rounding per row
   * (fast path, slow-path delegation to Spark's own cast where
-  * undecidable) into a single [[MomentsBuffer]] slot, the double
-  * emitted by the same exact BigDecimal conversion `cast(double)`
-  * applies. Bit-identical to the builtin formulation it replaces
-  * (DSumSpec pins fuzz + adversarial parity and the ANSI probes);
+  * undecidable) into a one-slot [[WideSums]], the double emitted by
+  * the same exact BigDecimal conversion `cast(double)` applies. The
+  * serialized buffer is 17 bytes; the option-aggregation stream's
+  * state store holds 24 of them per (minute, symbol) group.
+  * Bit-identical to the builtin formulation it replaces (DSumSpec
+  * pins fuzz + adversarial parity and the ANSI probes);
   * null and non-finite inputs are sum-skipped exactly like the
   * builtin (cast → null → skipped), >30-digit inputs ANSI-throw /
   * non-ANSI-skip via the shared slow path.
@@ -357,7 +293,7 @@ case class DSumAgg(
     failOnError: Boolean,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MomentsBuffer] {
+  extends TypedImperativeAggregate[WideSums] {
 
   override def children: Seq[Expression] = child :: Nil
   override def nullable: Boolean = true
@@ -370,7 +306,7 @@ case class DSumAgg(
       s"$prettyName requires a double column, got ${t.sql}")
   }
 
-  override def createAggregationBuffer(): MomentsBuffer = new MomentsBuffer(1)
+  override def createAggregationBuffer(): WideSums = new WideSums(1)
 
   // unboxed read through the planner's BoundReference (the
   // TopKByScoreAgg pattern); eval fallback boxes one Double per row
@@ -379,49 +315,31 @@ case class DSumAgg(
     case _ => None
   }
 
-  private def addValue(buf: MomentsBuffer, v: Double): Unit = {
-    val f = FixedPoint6.fastUnscaled6(v)
-    if (f != FixedPoint6.Slow) buf.add(0, f)
-    else {
-      val bi = FixedPoint6.slowUnscaled6(v, failOnError)
-      if (bi != null) // null = the cast is null (non-ANSI): sum skips
-        buf.addWide(0, bi.shiftRight(64).longValue(), bi.longValue())
-    }
-  }
-
-  override def update(buf: MomentsBuffer, input: InternalRow): MomentsBuffer = {
+  override def update(buf: WideSums, input: InternalRow): WideSums = {
     boundOrdinal match {
       case Some(o) =>
-        if (!input.isNullAt(o)) addValue(buf, input.getDouble(o))
+        if (!input.isNullAt(o))
+          FixedPoint6.addTo(buf, 0, input.getDouble(o), failOnError)
       case None =>
         val v = child.eval(input)
-        if (v != null) addValue(buf, v.asInstanceOf[Double])
+        if (v != null)
+          FixedPoint6.addTo(buf, 0, v.asInstanceOf[Double], failOnError)
     }
     buf
   }
 
-  override def merge(buf: MomentsBuffer, other: MomentsBuffer): MomentsBuffer = {
+  override def merge(buf: WideSums, other: WideSums): WideSums = {
     buf.mergeFrom(other)
     buf
   }
 
-  override def eval(buf: MomentsBuffer): Any =
-    if ((buf.seen & 1L) != 0) buf.toDouble(0) else null
+  override def eval(buf: WideSums): Any =
+    if (buf.isSeen(0)) FixedPoint6.toDouble(buf, 0) else null
 
-  override def serialize(buf: MomentsBuffer): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(17)
-    bb.put(if ((buf.seen & 1L) != 0) 1.toByte else 0.toByte)
-    bb.putLong(buf.hi(0)); bb.putLong(buf.lo(0))
-    bb.array()
-  }
+  override def serialize(buf: WideSums): Array[Byte] = buf.toBytes
 
-  override def deserialize(bytes: Array[Byte]): MomentsBuffer = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val buf = new MomentsBuffer(1)
-    buf.seen = if (bb.get() == 1.toByte) 1L else 0L
-    buf.hi(0) = bb.getLong(); buf.lo(0) = bb.getLong()
-    buf
-  }
+  override def deserialize(bytes: Array[Byte]): WideSums =
+    WideSums.fromBytes(bytes, 1)
 
   override def withNewMutableAggBufferOffset(n: Int): DSumAgg =
     copy(mutableAggBufferOffset = n)

@@ -29,8 +29,10 @@ import org.apache.spark.sql.types._
   * Bit-parity contract with the join formulation (KMeansAssignSpec):
   *
   *  - arithmetic is [[SumSqDiffAgg]]'s: one long subtract, exact
-  *    128-bit square via Math.multiplyHigh, two-long accumulator; `d2`
-  *    is emitted as the same DECIMAL(38,0).
+  *    128-bit square via Math.multiplyHigh, the same carry add held
+  *    in two local longs (generated code has no buffer object); `d2`
+  *    is emitted through the same [[WideSums.decimal38]] conversion,
+  *    one Decimal per row, the only allocation on the path.
   *  - a null vector element, or a null centroid coordinate, skips that
   *    term (null xi or ci made sumSqDiff skip the row).
   *  - a cluster is a CANDIDATE iff min(len(vec), dims(cluster)) ≥ 1 —
@@ -112,7 +114,7 @@ case class KMeansAssignExpr(
     else {
       val fields = new Array[Any](2)
       fields(0) = bc
-      fields(1) = if (bNull) null else KMeansAssignExpr.d2Decimal(bHi, bLo)
+      fields(1) = if (bNull) null else WideSums.decimal38(bHi, bLo)
       new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(fields)
     }
   }
@@ -120,7 +122,7 @@ case class KMeansAssignExpr(
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val centRef = ctx.addReferenceObj("kmCent", cent, "long[][]")
     val nullRef = ctx.addReferenceObj("kmCentNull", centNull, "boolean[][]")
-    val helper = KMeansAssignExpr.getClass.getName.stripSuffix("$") + "$.MODULE$"
+    val helper = WideSums.getClass.getName.stripSuffix("$") + "$.MODULE$"
     nullSafeCodeGen(ctx, ev, vec => {
       val cm = ctx.freshName("cm")
       val nm = ctx.freshName("nm")
@@ -183,7 +185,7 @@ case class KMeansAssignExpr(
          |} else {
          |  final Object[] $fields = new Object[2];
          |  $fields[0] = (Long) $bc;
-         |  $fields[1] = $bNull ? null : $helper.d2Decimal($bHi, $bLo);
+         |  $fields[1] = $bNull ? null : $helper.decimal38($bHi, $bLo);
          |  ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow($fields);
          |}
        """.stripMargin
@@ -211,21 +213,4 @@ case class KMeansAssignExpr(
     31 * (31 * child.hashCode() +
       java.util.Arrays.deepHashCode(cent.asInstanceOf[Array[AnyRef]])) +
       java.util.Arrays.deepHashCode(centNull.asInstanceOf[Array[AnyRef]])
-}
-
-object KMeansAssignExpr {
-  /** Two's-complement 128-bit → the DECIMAL(38,0) [[SumSqDiffAgg]]
-    * emits — one Decimal per ROW here (vs per group there), the only
-    * allocation on the assignment path.
-    */
-  def d2Decimal(hi: Long, lo: Long): Decimal = {
-    val bytes = new Array[Byte](16)
-    var b = 0
-    while (b < 8) {
-      bytes(b) = (hi >>> (56 - 8 * b)).toByte
-      bytes(b + 8) = (lo >>> (56 - 8 * b)).toByte
-      b += 1
-    }
-    Decimal(new java.math.BigDecimal(new java.math.BigInteger(bytes), 0), 38, 0)
-  }
 }

@@ -1,42 +1,10 @@
 package graft.expressions
 
-import java.math.BigInteger
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
-
-/** 128-bit accumulator for Σ(x−c)² over long inputs — the buffer of
-  * [[SumSqDiffAgg]]. Two's-complement (hi, lo) plus a seen flag so an
-  * all-null group evaluates to null like builtin `sum`.
-  */
-final class Sum128 {
-  var hi: Long = 0L
-  var lo: Long = 0L
-  var seen: Boolean = false
-
-  def addWide(vHi: Long, vLo: Long): Unit = {
-    val l = lo
-    val nl = l + vLo
-    val carry = ((l & vLo) | ((l | vLo) & ~nl)) >>> 63
-    hi += vHi + carry
-    lo = nl
-    seen = true
-  }
-
-  def toBigInteger: BigInteger = {
-    val bytes = new Array[Byte](16)
-    var b = 0
-    while (b < 8) {
-      bytes(b) = (hi >>> (56 - 8 * b)).toByte
-      bytes(b + 8) = (lo >>> (56 - 8 * b)).toByte
-      b += 1
-    }
-    new BigInteger(bytes)
-  }
-}
 
 /** Σ(x − c)² as one allocation-free aggregate over long columns,
   * bit-identical to the builtin idiom it replaces in the k-means
@@ -51,8 +19,8 @@ final class Sum128 {
   * iteration (q121 measured 4.7 GB allocated/pass at sf0.1). Here the
   * difference is one long subtract, the square is an exact 128-bit
   * primitive product (Math.multiplyHigh for the high word — d² of any
-  * long fits 126 bits), and the accumulator is two longs; the ONLY
-  * allocation is one Decimal per GROUP at eval.
+  * long fits 126 bits), and the accumulator is a one-slot
+  * [[WideSums]]; the ONLY allocation is one Decimal per GROUP at eval.
   *
   * Output type is DECIMAL(38,0), exactly what the builtin sum
   * produced, so downstream comparisons (argmin windows) and the final
@@ -69,7 +37,7 @@ case class SumSqDiffAgg(
     cChild: Expression,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Sum128] {
+  extends TypedImperativeAggregate[WideSums] {
 
   override def children: Seq[Expression] = xChild :: cChild :: Nil
   override def nullable: Boolean = true
@@ -83,7 +51,7 @@ case class SumSqDiffAgg(
         s"$prettyName requires (bigint, bigint), got (${a.sql}, ${b.sql})")
     }
 
-  override def createAggregationBuffer(): Sum128 = new Sum128
+  override def createAggregationBuffer(): WideSums = new WideSums(1)
 
   // unboxed read through the planner's BoundReferences (the
   // TopKByScoreAgg pattern); eval fallback boxes two Longs per row
@@ -94,12 +62,12 @@ case class SumSqDiffAgg(
       case _ => None
     }
 
-  private def addSq(buf: Sum128, x: Long, c: Long): Unit = {
+  private def addSq(buf: WideSums, x: Long, c: Long): Unit = {
     val d = x - c
-    buf.addWide(Math.multiplyHigh(d, d), d * d)
+    buf.addWide(0, Math.multiplyHigh(d, d), d * d)
   }
 
-  override def update(buf: Sum128, input: InternalRow): Sum128 = {
+  override def update(buf: WideSums, input: InternalRow): WideSums = {
     boundOrdinals match {
       case Some((xo, co)) =>
         if (!input.isNullAt(xo) && !input.isNullAt(co))
@@ -113,29 +81,18 @@ case class SumSqDiffAgg(
     buf
   }
 
-  override def merge(buf: Sum128, other: Sum128): Sum128 = {
-    if (other.seen) buf.addWide(other.hi, other.lo)
+  override def merge(buf: WideSums, other: WideSums): WideSums = {
+    buf.mergeFrom(other)
     buf
   }
 
-  override def eval(buf: Sum128): Any =
-    if (!buf.seen) null
-    else org.apache.spark.sql.types.Decimal(
-      new java.math.BigDecimal(buf.toBigInteger, 0), 38, 0)
+  override def eval(buf: WideSums): Any =
+    if (!buf.isSeen(0)) null else WideSums.decimal38(buf.hi(0), buf.lo(0))
 
-  override def serialize(buf: Sum128): Array[Byte] = {
-    val out = java.nio.ByteBuffer.allocate(17)
-    out.putLong(buf.hi).putLong(buf.lo).put(if (buf.seen) 1.toByte else 0.toByte)
-    out.array()
-  }
+  override def serialize(buf: WideSums): Array[Byte] = buf.toBytes
 
-  override def deserialize(bytes: Array[Byte]): Sum128 = {
-    val in = java.nio.ByteBuffer.wrap(bytes)
-    val buf = new Sum128
-    buf.hi = in.getLong(); buf.lo = in.getLong()
-    buf.seen = in.get() == 1.toByte
-    buf
-  }
+  override def deserialize(bytes: Array[Byte]): WideSums =
+    WideSums.fromBytes(bytes, 1)
 
   override def withNewMutableAggBufferOffset(n: Int): SumSqDiffAgg =
     copy(mutableAggBufferOffset = n)

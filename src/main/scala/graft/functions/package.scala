@@ -245,9 +245,10 @@ package object functions {
       failOnError = org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
       .toAggregateExpression())
 
-  /** Σ(x − c)² over longs into a 128-bit accumulator, emitted as the
-    * DECIMAL(38,0) the builtin `sum((x−c).cast(dec38) * (x−c))` idiom
-    * produced ([[graft.expressions.SumSqDiffAgg]]) — bit-identical,
+  /** Σ(x − c)² over longs into one 128-bit
+    * [[graft.expressions.WideSums]] slot, emitted as the DECIMAL(38,0)
+    * the builtin `sum((x−c).cast(dec38) * (x−c))` idiom produced
+    * ([[graft.expressions.SumSqDiffAgg]]) — bit-identical,
     * allocation-free per row. Kept as the spec-pinned PARITY REFERENCE
     * (the Similarity.bucketCol/bucketsCol discipline) for [[kmeansAssign]],
     * which embeds the same arithmetic per row after the Lloyd

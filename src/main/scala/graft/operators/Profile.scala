@@ -306,34 +306,20 @@ object Profile {
     val pairs = for {
       i <- cols.indices; j <- cols.indices if i < j
     } yield (cols(i), cols(j))
-    // The exact sums come from ONE DecimalMomentsAgg pass: same
-    // DECIMAL(30,6) values bit-for-bit (ProfileSpec pins parity with
-    // the builtin-sum formulation it replaced), but primitive 128-bit
-    // accumulation instead of a per-row-per-sum BigDecimal chain —
-    // the builtin menu allocated 5.57 GB/pass on q169 at sf0.1, ~all
-    // of the query's cost (VERDICT r14 item 3). >9 columns (a 64-sum
-    // bitmask bound nothing here approaches) keeps the builtin path.
+    // The exact sums come from ONE DecimalMomentsAgg pass over any
+    // column count: the same DECIMAL(30,6) values bit-for-bit as the
+    // builtin-sum menu it replaced (DecimalMomentsSpec pins parity at
+    // 4 and 12 columns), but primitive 128-bit accumulation instead
+    // of a per-row-per-sum BigDecimal chain — the builtin menu
+    // allocated 5.57 GB/pass on q169 at sf0.1, ~all of the query's
+    // cost (VERDICT r14 item 3).
     val one =
-      if (cols.size <= 9)
-        df.agg(count(lit(1)).cast("double").as("__n"),
-            graft.functions.decimalMoments(
-              cols.map(c => col(c).cast("double")), cols).as("__m"))
-          .select(col("__n") +: cols.map(c => col(s"__m.__s_$c")) ++:
-            cols.map(c => col(s"__m.__ss_$c")) ++:
-            pairs.map { case (x, y) => col(s"__m.__sp_${x}_$y") }: _*)
-      else {
-        val dec = DecimalType(30, 6)
-        def dsumD(c: Column) = sum(c.cast(dec)).cast("double")
-        val aggs =
-          count(lit(1)).cast("double").as("__n") +:
-          (cols.flatMap { c =>
-            Seq(dsumD(col(c)).as(s"__s_$c"),
-              dsumD(col(c) * col(c)).as(s"__ss_$c"))
-          } ++ pairs.map { case (x, y) =>
-            dsumD(col(x) * col(y)).as(s"__sp_${x}_$y")
-          })
-        df.agg(aggs.head, aggs.tail: _*)
-      }
+      df.agg(count(lit(1)).cast("double").as("__n"),
+          graft.functions.decimalMoments(
+            cols.map(c => col(c).cast("double")), cols).as("__m"))
+        .select(col("__n") +: cols.map(c => col(s"__m.__s_$c")) ++:
+          cols.map(c => col(s"__m.__ss_$c")) ++:
+          pairs.map { case (x, y) => col(s"__m.__sp_${x}_$y") }: _*)
     val rows = pairs.map { case (x, y) =>
       struct(lit(x).as("col_x"), lit(y).as("col_y"),
         col("__n").cast("long").as("n"),

@@ -130,9 +130,15 @@ class CovMomentsSpec extends SparkSpec {
     val back = agg.deserialize(agg.serialize(buf))
     assert(back.dims == buf.dims)
     assert(java.util.Arrays.equals(back.n, buf.n))
-    assert(java.util.Arrays.equals(back.sxyHi, buf.sxyHi))
-    assert(java.util.Arrays.equals(back.sxyLo, buf.sxyLo))
-    assert(java.util.Arrays.equals(back.sxSeen, buf.sxSeen))
+    // every slot of Σxi, Σxj and Σxi·xj: value and seen bit
+    Seq((back.sx, buf.sx), (back.sy, buf.sy), (back.sxy, buf.sxy)).foreach {
+      case (b, o) =>
+        assert(b.size == o.size && o.size == buf.pairs)
+        (0 until o.size).foreach { p =>
+          assert(b.hi(p) == o.hi(p) && b.lo(p) == o.lo(p), s"slot $p")
+          assert(b.isSeen(p) == o.isSeen(p), s"seen $p")
+        }
+    }
     // merging the round-tripped buffer equals merging the original
     val m1 = agg.merge(agg.createAggregationBuffer(), buf)
     val m2 = agg.merge(agg.createAggregationBuffer(), back)

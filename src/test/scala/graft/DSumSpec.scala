@@ -116,10 +116,11 @@ class DSumSpec extends SparkSpec {
         .GenericInternalRow(Array[Any](d)))
     }
     val back = agg.deserialize(agg.serialize(buf))
-    assert(back.seen == buf.seen)
+    assert(back.size == 1 && buf.isSeen(0))
+    assert(back.isSeen(0) == buf.isSeen(0))
     assert(back.hi(0) == buf.hi(0) && back.lo(0) == buf.lo(0))
     val empty = agg.deserialize(agg.serialize(agg.createAggregationBuffer()))
-    assert(empty.seen == 0L && agg.eval(empty) == null)
+    assert(!empty.isSeen(0) && agg.eval(empty) == null)
   }
 
   test("q01 end-to-end: rows identical to the builtin formulation on sf0.001") {

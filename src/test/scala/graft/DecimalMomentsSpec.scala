@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.expressions.{FixedPoint6, MomentsBuffer}
+import graft.expressions.{FixedPoint6, WideSums}
 import graft.operators.Profile
 
 /** [[graft.expressions.DecimalMomentsAgg]]: the allocation-free
@@ -109,7 +109,7 @@ class DecimalMomentsSpec extends SparkSpec {
 
   test("128-bit accumulator matches BigInteger on signed fuzz") {
     val rnd = new scala.util.Random(42L)
-    val buf = new MomentsBuffer(2)
+    val buf = new WideSums(2)
     var ref0 = BigInteger.ZERO
     var ref1 = BigInteger.ZERO
     (1 to 200000).foreach { _ =>
@@ -132,10 +132,12 @@ class DecimalMomentsSpec extends SparkSpec {
         .add(new BigInteger(1, java.nio.ByteBuffer.allocate(8).putLong(lo).array()))
     assert(as128(buf.hi(0), buf.lo(0)) == ref0)
     assert(as128(buf.hi(1), buf.lo(1)) == ref1)
+    assert(buf.toBigInteger(0) == ref0 && buf.toBigInteger(1) == ref1)
+    assert(buf.isSeen(0) && buf.isSeen(1))
     // toDouble agrees with the BigDecimal it represents
-    assert(buf.toDouble(0) ==
+    assert(FixedPoint6.toDouble(buf, 0) ==
       new java.math.BigDecimal(ref0, 6).doubleValue())
-    assert(buf.toDouble(1) ==
+    assert(FixedPoint6.toDouble(buf, 1) ==
       new java.math.BigDecimal(ref1, 6).doubleValue())
   }
 
@@ -246,6 +248,13 @@ class DecimalMomentsSpec extends SparkSpec {
     // aggregate vs the identical formula over builtin sums
     val df = Tables.lineitem(spark, "/root/testdata/sf0.001")
     val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+    assertCorrelationParity(df, cols)
+  }
+
+  /** The full operator (formula + explode + ordering) over the
+    * aggregate vs the identical formula over [[builtinMoments]].
+    */
+  private def assertCorrelationParity(df: DataFrame, cols: Seq[String]): Unit = {
     val newRows = Profile.correlationMatrix(df, cols).collect()
     // reference: builtin sums + the same final formula
     val s = builtinMoments(df, cols)
@@ -253,15 +262,16 @@ class DecimalMomentsSpec extends SparkSpec {
     val pairs = for {
       i <- cols.indices; j <- cols.indices if i < j
     } yield (cols(i), cols(j))
-    val refRows = pairs.map { case (x, y) =>
-      val r = s.select(col("__n"),
-        ((col("__n") * col(s"__sp_${x}_$y") -
-          col(s"__s_$x") * col(s"__s_$y")) /
-          sqrt((col("__n") * col(s"__ss_$x") -
-            col(s"__s_$x") * col(s"__s_$x")) *
-            (col("__n") * col(s"__ss_$y") -
-              col(s"__s_$y") * col(s"__s_$y"))))).collect()(0)
-      (x, y) -> (r.getDouble(0).toLong, r.getDouble(1))
+    val r = s.select(col("__n") +: pairs.map { case (x, y) =>
+      (col("__n") * col(s"__sp_${x}_$y") -
+        col(s"__s_$x") * col(s"__s_$y")) /
+        sqrt((col("__n") * col(s"__ss_$x") -
+          col(s"__s_$x") * col(s"__s_$x")) *
+          (col("__n") * col(s"__ss_$y") -
+            col(s"__s_$y") * col(s"__s_$y")))
+    }: _*).collect()(0)
+    val refRows = pairs.zipWithIndex.map { case (xy, k) =>
+      xy -> (r.getDouble(0).toLong, r.getDouble(k + 1))
     }.toMap
     // the operator orders by (col_x, col_y) alphabetically — compare
     // keyed, not positionally
@@ -273,5 +283,30 @@ class DecimalMomentsSpec extends SparkSpec {
       assert(java.lang.Double.doubleToRawLongBits(n.getDouble(3)) ==
         java.lang.Double.doubleToRawLongBits(r), s"pearson_r($key)")
     }
+  }
+
+  test("correlationMatrix past 64 sums: 12 columns ≡ the builtin formulation") {
+    // 12 columns = 90 sums, beyond what one 64-bit seen mask could
+    // hold; nulls and mixed magnitudes over 8 partitions exercise the
+    // multi-word seen bitset through serialize and merge
+    val rnd = new scala.util.Random(12L)
+    val cols = (0 until 12).map(i => s"c$i")
+    val rows = (1 to 3000).map { _ =>
+      org.apache.spark.sql.Row(cols.indices.map { i =>
+        if (rnd.nextInt(15) == 0) null
+        else i % 3 match {
+          case 0 => java.lang.Double.valueOf(rnd.nextInt(100000000) / 100.0)
+          case 1 => java.lang.Double.valueOf(rnd.nextInt(1000) / 1000.0)
+          case _ => java.lang.Double.valueOf(
+            rnd.nextGaussian() * math.pow(10, rnd.nextInt(8) - 2))
+        }
+      }: _*)
+    }
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 8),
+      org.apache.spark.sql.types.StructType(cols.map(
+        org.apache.spark.sql.types.StructField(_,
+          org.apache.spark.sql.types.DoubleType, nullable = true))))
+    assertCorrelationParity(df, cols)
   }
 }
