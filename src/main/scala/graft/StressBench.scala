@@ -417,8 +417,8 @@ object StressBench {
     * is a candidate iff base pair (a, b) was (identical buckets,
     * identical multiprobe set), verifying at the identical cosine —
     * so exactly c²·basePairs cross pairs. Work scales with OUTPUT,
-    * never n². Runs at the r16 production dial (tables = 12,
-    * multiprobe — the q37 recall-evidenced setting).
+    * never n². Runs at q37's dial (multiprobe, tables from
+    * [[Similarity.nearDupTables]]).
     */
   private def neardupClone4x(s: SparkSession, sfDir: String): String = {
     // 4 copies, not 10: exact-duplicate groups are the LSH worst case
@@ -440,7 +440,8 @@ object StressBench {
       .withColumnRenamed("doc_id", "vec_id")
     def pairs(in: DataFrame): Long =
       Similarity.cosineNearDup(in, "vec_id", "embedding", t = 0.4,
-        tables = 12, multiProbe = true).count()
+        tables = Similarity.nearDupTables(0.4, 6), planesPerTable = 6,
+        multiProbe = true).count()
     val (basePairs, baseSecs) = time(pairs(emb))
     val (pairsC, secsC) = time(pairs(corpus))
     val expected = copies.toLong * (copies - 1) / 2 * n +

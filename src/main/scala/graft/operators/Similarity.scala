@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions._
@@ -78,10 +78,12 @@ object Similarity {
     * Scale shape: this EXACT variant broadcasts the (id, vec) corpus
     * projection against a streaming probe scan — right whenever the
     * projection fits a broadcast (n·dim·4 bytes; ~2.5 GB at 10M
-    * vectors × 64 dims). Past that, [[knnLabelAgreementApprox]] runs
-    * the SAME vote over [[knnNeighborsApprox]]'s LSH candidate sets —
+    * vectors × 64 dims). Past that, [[labelVote]] over
+    * [[knnNeighborsApprox]] runs the SAME vote over LSH candidate sets —
     * the audit math is unchanged, only candidate generation swaps,
-    * exactly as search does (q13 → q24); q144 recall-gates the swap.
+    * exactly as search does (q13 → q24); q144 recall-gates the swap. A
+    * row whose approximate neighborhood has fewer than k candidates
+    * votes over what it has, with agree_rate still over k.
     */
   def knnLabelAgreement(emb: DataFrame, idCol: String, vecCol: String,
                         labelCol: String, k: Int): DataFrame =
@@ -122,13 +124,8 @@ object Similarity {
     // partition — but the DOWNSTREAM cost is n× per row (the broadcast
     // product), which size-based rules cannot see. The post-join
     // projection keeps the two 64-float arrays out of the ranking.
-    val probeBase = probeCoin match {
-      case Some((salt, hex)) => emb.filter(
-        substring(md5(concat(lit(s"$salt#"), col(idCol).cast("string"))),
-          1, 8) < lit(hex))
-      case None => emb
-    }
-    val probes = probeBase.select(col(idCol).as("vec_id"),
+    val probes = emb.filter(probeSample(idCol, probeCoin))
+      .select(col(idCol).as("vec_id"),
         col(vecCol).as("query_vec"))
       .repartition(emb.sparkSession.sessionState.conf.numShufflePartitions,
         col("vec_id"))
@@ -138,81 +135,48 @@ object Similarity {
     rankTopK(scored, "vec_id", k)
   }
 
-  /** All-rows APPROXIMATE kNN neighbor table via the [[lshTopK]]
-    * machinery with every row as a probe: the corpus is hyperplane-
-    * bucketed ONCE and self-joined on (table, bucket), candidates are
-    * exactly re-ranked, output shape matches [[knnNeighborsExact]].
-    * This is the past-broadcast-ceiling route the exact audit's
-    * scaladoc names: no n² product anywhere — candidate volume is the
-    * bucket-join output (corpus/2^planes expected per bucket per
-    * table), so the audit survives corpora where the (id, vec, label)
-    * projection no longer broadcasts. Query-side multiprobe (Hamming-1
-    * bucket flips) trades candidate volume for recall without touching
-    * the index — the same asymmetry as [[lshTopK]], though here the
-    * probe side is corpus-sized too, so it multiplies probe rows by
-    * (planesPerTable + 1).
+  /** The probe-side predicate of `probeCoin`: true for every row when
+    * the coin is absent, else `substr(md5(salt#id), 1, 8) < hexThreshold`
+    * (see [[knnNeighborsExact]]).
+    */
+  private def probeSample(idCol: String,
+                          probeCoin: Option[(String, String)]): Column =
+    probeCoin.fold(lit(true)) { case (salt, hex) =>
+      substring(md5(concat(lit(s"$salt#"), col(idCol).cast("string"))),
+        1, 8) < lit(hex)
+    }
+
+  /** All-rows APPROXIMATE kNN neighbor table: every row (or every
+    * `probeCoin`-sampled row) probes the full corpus index through
+    * [[lshCandidates]], candidates are exactly re-ranked, and the output
+    * shape matches [[knnNeighborsExact]]. This is the past-broadcast-
+    * ceiling route the exact audit's scaladoc names: no n² product
+    * anywhere — candidate volume is the bucket-join output
+    * (corpus/2^planes expected per bucket per table), so the audit
+    * survives corpora where the (id, vec, label) projection no longer
+    * broadcasts. Unlike [[lshTopK]]'s small query set, the probe side is
+    * corpus-sized here, so multiprobe multiplies it by
+    * (planesPerTable + 1). A sampled probe still meets every
+    * bucket-mate: only the probe side thins, so candidate volume scales
+    * with the sample while the index stays the full corpus.
     */
   def knnNeighborsApprox(emb: DataFrame, idCol: String, vecCol: String,
       k: Int, tables: Int = 8, planesPerTable: Int = 6, dim: Int = 64,
       seed: Long = 42L, multiProbe: Boolean = false,
       probeCoin: Option[(String, String)] = None): DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    val planes = (0 until tables).map(t => hyperplanes(planesPerTable, dim, seed + t))
-    val bucketed = emb
-      .select(col(idCol).as("id"), posexplode(bucketsCol(col(vecCol), planes)))
-      .toDF("id", "tbl", "bucket")
-    // probeCoin (see knnNeighborsExact): the INDEX side stays the full
-    // corpus — a sampled probe must still meet every bucket-mate — and
-    // only the probe side thins, so candidate volume scales with the
-    // sample while the index build stays one pass over the corpus.
-    val probeSide = probeCoin match {
-      case Some((salt, hex)) => bucketed.filter(
-        substring(md5(concat(lit(s"$salt#"), col("id").cast("string"))),
-          1, 8) < lit(hex))
-      case None => bucketed
-    }
-    val probes =
-      if (!multiProbe) probeSide.select(col("tbl"), col("bucket"),
-        col("id").as("vec_id"))
-      else probeSide.select(col("id").as("vec_id"), col("tbl"),
-        hamming1Probes(col("bucket"), planesPerTable).as("bucket"))
-    // distinct on NARROW id pairs before vectors are joined back —
-    // the multi-table self-join surfaces each pair up to `tables`
-    // times (× probes under multiprobe), and a distinct carrying the
-    // embedding arrays would shuffle dim×8 bytes per duplicate
-    val cand = bucketed
-      .select(col("tbl"), col("bucket"), col("id").as("nbr_id"))
-      .join(probes, Seq("tbl", "bucket"))
-      .filter(col("nbr_id") =!= col("vec_id"))
-      .select("vec_id", "nbr_id").distinct()
+    val scored = lshCandidates(emb, idCol, vecCol,
+        probeSample(idCol, probeCoin), _ =!= _, tables, planesPerTable, dim,
+        seed, multiProbe)
+      .toDF("vec_id", "nbr_id")
       .join(emb.select(col(idCol).as("nbr_id"), col(vecCol).as("nbr_vec")),
         "nbr_id")
       .join(emb.select(col(idCol).as("vec_id"), col(vecCol).as("query_vec")),
         "vec_id")
-    val scored = cand
       .withColumn("cos_sim", cosineSim(col("query_vec"), col("nbr_vec")))
       .select(col("vec_id"), col("nbr_id"), col("cos_sim"))
     rankTopK(scored, "vec_id", k)
   }
-
-  /** [[knnLabelAgreement]] over LSH candidate sets — the NAMED
-    * past-broadcast-ceiling variant (VERDICT r9 item 6): identical
-    * vote math, only candidate generation swaps from the broadcast
-    * brute-force product to [[knnNeighborsApprox]]'s bucket self-join,
-    * exactly as search swaps q13 → q24. A row whose approximate
-    * neighborhood has fewer than k candidates votes over what it has
-    * (n_agree ≤ found ≤ k; agree_rate keeps the /k denominator so
-    * sparse neighborhoods read as low agreement, never inflated).
-    * Gate protocol: q144 compares both the neighbor sets and the vote
-    * rates against the exact audit with a recall floor, mirroring
-    * q24/q25.
-    */
-  def knnLabelAgreementApprox(emb: DataFrame, idCol: String, vecCol: String,
-      labelCol: String, k: Int, tables: Int = 8, planesPerTable: Int = 6,
-      dim: Int = 64, seed: Long = 42L,
-      multiProbe: Boolean = false): DataFrame =
-    labelVote(knnNeighborsApprox(emb, idCol, vecCol, k, tables,
-      planesPerTable, dim, seed, multiProbe), emb, idCol, labelCol, k)
 
   /** The shared vote step of the label-agreement audits, public so a
     * caller holding a neighbor table ([[knnNeighborsExact]] /
@@ -635,63 +599,107 @@ object Similarity {
         org.apache.spark.sql.GraftColumnBridge.expression(vec), planes.toArray))
 
   /** The Hamming-1 probe set of a bucket column: the bucket itself plus
-    * every single-sign-bit flip — ONE definition shared by the top-k
-    * (query-side) and near-dup (one corpus side) multiprobe flavors so
-    * the probe geometry cannot silently diverge between them.
+    * every single-sign-bit flip.
     */
-  private def hamming1Probes(bucket: org.apache.spark.sql.Column,
-                             planesPerTable: Int): org.apache.spark.sql.Column =
+  private def hamming1Probes(bucket: Column, planesPerTable: Int): Column =
     explode(array(bucket +:
       (0 until planesPerTable).map(p => bucket.bitwiseXOR(lit(1L << p))): _*))
 
+  /** The one LSH candidate stage under [[lshTopK]], [[knnNeighborsApprox]]
+    * and [[cosineNearDup]]: distinct narrow `(probe_id, index_id)` pairs
+    * whose sign-bit buckets meet in at least one of `tables` independent
+    * hyperplane sets of `planesPerTable` bits. Probe rows are the rows
+    * of `emb` where `probe` holds; the index is every row of `emb`; a
+    * null vector has no buckets and is never a candidate. `keep(probe,
+    * index)` filters the pairs (`=!=` drops self-pairs, `<` keeps one
+    * orientation of a self-join). Each caller exact-scores the result,
+    * so the candidate set alone decides its output.
+    *
+    *  - Multiprobe: the PROBE side additionally probes every Hamming-1
+    *    bucket, so a pair qualifies when its buckets differ by at most
+    *    one sign bit in some table. The index is untouched — free on a
+    *    small query set, (planesPerTable + 1)× narrow rows on a
+    *    corpus-sized probe side.
+    *  - Width: the join EXPANDS ~Σ n_bucket² rows from a few narrow MB
+    *    of input, so AQE's byte-based coalescing (and a broadcast join's
+    *    inherit-the-stream-side rule) would collapse pair generation to
+    *    ~1 task (stress probe: 35 s at 32 cores ≈ 49 s at 2 cores on a
+    *    4× clone corpus). An explicit numbered repartition of the probe
+    *    side by (tbl, bucket) is exempt from coalescing; its width is the
+    *    session's shuffle parallelism, never a constant, and the map-side
+    *    partial distinct absorbs the fan-out inside the same tasks.
+    *  - Narrow distinct: a pair surfaces up to `tables` times (× probes),
+    *    so ids are deduplicated before any vector is joined back — a
+    *    distinct carrying the embeddings would shuffle dim×8 bytes per
+    *    duplicate.
+    */
+  private def lshCandidates(emb: DataFrame, idCol: String, vecCol: String,
+      probe: Column, keep: (Column, Column) => Column, tables: Int,
+      planesPerTable: Int, dim: Int, seed: Long,
+      multiProbe: Boolean): DataFrame = {
+    val planes = (0 until tables).map(t => hyperplanes(planesPerTable, dim, seed + t))
+    def bucketed(df: DataFrame, id: String): DataFrame =
+      df.select(col(idCol).as(id),
+        posexplode(bucketsCol(col(vecCol), planes)).as(Seq("tbl", "bucket")))
+    val probes0 = bucketed(emb.filter(probe), "probe_id")
+    val probes =
+      if (!multiProbe) probes0
+      else probes0.select(col("probe_id"), col("tbl"),
+        hamming1Probes(col("bucket"), planesPerTable).as("bucket"))
+    probes
+      .repartition(emb.sparkSession.sessionState.conf.numShufflePartitions,
+        col("tbl"), col("bucket"))
+      .join(bucketed(emb, "index_id"), Seq("tbl", "bucket"))
+      .filter(keep(col("probe_id"), col("index_id")))
+      .select("probe_id", "index_id").distinct()
+  }
+
+  /** Recall target of [[nearDupTables]]: the chance that a pair exactly
+    * at the threshold collides in at least one table.
+    */
+  private val NearDupRecall = 0.999
+
+  /** The table count at which a pair of cosine exactly `t` becomes a
+    * Hamming-1 multiprobe candidate with probability [[NearDupRecall]]:
+    * a random hyperplane keeps the pair's sign with p = 1 − acos(t)/π,
+    * one table of k = `planesPerTable` planes collides within one bit
+    * with P₁ = pᵏ + k·pᵏ⁻¹(1−p), and `tables` independent tables miss
+    * with (1 − P₁)^tables, so tables = ⌈ln(1 − 0.999) / ln(1 − P₁)⌉ —
+    * 21 at t = 0.4, k = 6. The target is set by q37's gate (recall ≥ 0.9
+    * on 200-vector corpora with ~5–15 exact pairs, where one miss among
+    * nine pairs fails): over 2,000 unit-Gaussian 64-d corpora the gate
+    * failed on 126 at 12 tables, 26 at 16 (target 0.995) and 4 at 21.
+    */
+  private[graft] def nearDupTables(t: Double, planesPerTable: Int): Int = {
+    require(t > -1 && t <= 1, s"t must be in (-1, 1]: $t")
+    val p = 1 - math.acos(t) / math.Pi
+    val k = planesPerTable
+    val p1 = math.pow(p, k) + k * math.pow(p, k - 1) * (1 - p)
+    math.max(1, math.ceil(math.log(1 - NearDupRecall) / math.log(1 - p1)).toInt)
+  }
+
   /** LSH-bucketed ANN: `tables` independent hyperplane sets of
     * `planesPerTable` bits each. A vector lands in one bucket per table;
-    * query/corpus candidates meet via an equi-join on (table, bucket),
+    * the query set probes the corpus index through [[lshCandidates]],
     * then candidates are exactly re-ranked by cosine. Recall is tuned by
-    * (tables × planesPerTable); candidate volume per bucket is corpus/2^planes
-    * on average — this is the plan that survives 100 TB, since no pair
-    * outside a shared bucket is ever scored.
+    * (tables × planesPerTable) and query-side multiprobe; candidate
+    * volume per bucket is corpus/2^planes on average — this is the plan
+    * that survives 100 TB, since no pair outside a shared bucket is ever
+    * scored.
     */
   def lshTopK(emb: DataFrame, idCol: String, vecCol: String,
               queryIds: Seq[Long], k: Int,
               tables: Int = 8, planesPerTable: Int = 6, dim: Int = 64,
               seed: Long = 42L, multiProbe: Boolean = false): DataFrame = {
-    val planes = (0 until tables).map(t => hyperplanes(planesPerTable, dim, seed + t))
-    def withBuckets(df: DataFrame, id: String, vec: String): DataFrame =
-      df.select(col(id), col(vec),
-        posexplode(bucketsCol(col(vec), planes)))
-        .toDF(id, vec, "tbl", "bucket")
-    val corpus  = withBuckets(emb.select(col(idCol).as("nbr_id"), col(vecCol).as("nbr_vec")), "nbr_id", "nbr_vec")
-    val queries0 = withBuckets(
-      emb.filter(col(idCol).isin(queryIds: _*))
-        .select(col(idCol).as("query_id"), col(vecCol).as("query_vec")),
-      "query_id", "query_vec")
-    // Multiprobe: the QUERY side additionally probes every Hamming-1
-    // bucket (one sign bit flipped) in each table — near-misses where
-    // one hyperplane cuts between near-neighbors are recovered without
-    // growing the corpus index at all. Cost is (planesPerTable + 1)
-    // probe rows per (query, table): negligible on the small query
-    // side, zero on the corpus side — the right asymmetry at 100 TB,
-    // where the index dominates.
-    val queries =
-      if (!multiProbe) queries0
-      else queries0.select(col("query_id"), col("query_vec"), col("tbl"),
-          hamming1Probes(col("bucket"), planesPerTable).as("bucket"))
-    // distinct on NARROW id pairs — the multi-table join surfaces each
-    // pair up to `tables` times, and a distinct carrying both embedding
-    // vectors would shuffle dim×8 bytes per duplicate; vectors are
-    // joined back once per surviving pair (query side broadcast)
-    val cand = corpus.join(queries.select("tbl", "bucket", "query_id"), Seq("tbl", "bucket"))
-      .filter(col("nbr_id") =!= col("query_id"))
-      .select("query_id", "nbr_id").distinct()
-      // join vectors back from the ORIGINAL table, not the bucketed
-      // branch: corpus.distinct() would re-run the 16-table bucket
-      // explode and shuffle 16 wide vector rows per doc just to dedup
-      // them again
+    val isQuery = col(idCol).isin(queryIds: _*)
+    // vectors are joined back from the ORIGINAL table once per surviving
+    // pair (query side broadcast)
+    val cand = lshCandidates(emb, idCol, vecCol, isQuery, _ =!= _, tables,
+        planesPerTable, dim, seed, multiProbe)
+      .toDF("query_id", "nbr_id")
       .join(emb.select(col(idCol).as("nbr_id"), col(vecCol).as("nbr_vec")), "nbr_id")
-      .join(broadcast(
-        emb.filter(col(idCol).isin(queryIds: _*))
-          .select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))), "query_id")
+      .join(broadcast(emb.filter(isQuery)
+        .select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))), "query_id")
     val scored = cand.withColumn("cos_sim", cosineSim(col("query_vec"), col("nbr_vec")))
     rankTopK(scored, "query_id", k)
   }
@@ -806,58 +814,25 @@ object Similarity {
     rankTopK(scored, "query_id", k)
   }
 
-  /** Embedding-cosine near-dup pairs (id_a < id_b, cos >= t) via the
-    * same multi-table LSH candidate generation, exact-verified — the
-    * embedding flavor of near-duplicate detection.
+  /** Embedding-cosine near-dup pairs (id_a < id_b, cos >= t): the
+    * corpus self-joined through [[lshCandidates]] (every row probes,
+    * id_a is the probing side), then both vectors are joined back for
+    * the exact verify — the embedding flavor of near-duplicate
+    * detection. Multiprobe here multiplies a CORPUS-sized side by
+    * (planesPerTable + 1): still linear, a real dial that callers trade
+    * against tables ([[nearDupTables]] sizes the latter).
     */
   def cosineNearDup(emb: DataFrame, idCol: String, vecCol: String, t: Double,
                     tables: Int = 8, planesPerTable: Int = 6, dim: Int = 64,
-                    seed: Long = 42L, multiProbe: Boolean = false): DataFrame = {
-    val planes = (0 until tables).map(tb => hyperplanes(planesPerTable, dim, seed + tb))
-    // rename FIRST, bucket in a second select: referencing the `vec`
-    // alias from the same projection is a lateral-column-alias the
-    // analyzer rejects inside a generator
-    val renamed = emb.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    val withB = renamed.select(col("id"), col("vec"),
-        posexplode(bucketsCol(col("vec"), planes)))
-      .toDF("id", "vec", "tbl", "bucket")
-    // same narrow-distinct shape as [[lshTopK]]: dedup id pairs first
-    // (each pair can collide in up to `tables` buckets), then join the
-    // two vectors back for the exact verify
-    val idx = withB.select("id", "tbl", "bucket")
-    // Multiprobe for the SELF-join flavor: one side also probes every
-    // Hamming-1 bucket, so a pair qualifies when its buckets differ by
-    // at most one sign bit in some table. Unlike [[lshTopK]]'s
-    // query-side probing this multiplies a CORPUS-sized side by
-    // (planesPerTable + 1) — still linear, and only the narrow
-    // (id, tbl, bucket) rows fan out, but it is a real dial, not a
-    // free lunch; callers trade it against tables.
-    val probe =
-      if (!multiProbe) idx
-      else idx.select(col("id"), col("tbl"),
-        hamming1Probes(col("bucket"), planesPerTable).as("bucket"))
-    // Explicit width on the candidate join's streaming side (r16): its
-    // INPUTS are a few narrow MB, so AQE's byte-based coalescing (and
-    // a broadcast join's inherit-the-stream-side rule) collapses the
-    // join to ~1 task — but the join EXPANDS ~Σ n_bucket² rows, so the
-    // whole pair-generation stage ran serially (stress probe: 35 s at
-    // 32 cores ≈ 49 s at 2 cores on a 4× clone corpus). An explicit
-    // numbered repartition is exempt from AQE coalescing; width comes
-    // from the session's shuffle parallelism (cores locally, cluster-
-    // sized in production), never a constant. Map-side partial-distinct
-    // then absorbs the fan-out inside the same parallel tasks.
-    val width = emb.sparkSession.sessionState.conf.numShufflePartitions
-    val cand = probe.repartition(width, col("tbl"), col("bucket"))
-      .as("a").join(idx.as("b"), Seq("tbl", "bucket"))
-      .filter(col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-    cand
-      .join(renamed.select(col("id").as("id_a"), col("vec").as("vec_a")), "id_a")
-      .join(renamed.select(col("id").as("id_b"), col("vec").as("vec_b")), "id_b")
+                    seed: Long = 42L, multiProbe: Boolean = false): DataFrame =
+    lshCandidates(emb, idCol, vecCol, lit(true), _ < _, tables,
+        planesPerTable, dim, seed, multiProbe)
+      .toDF("id_a", "id_b")
+      .join(emb.select(col(idCol).as("id_a"), col(vecCol).as("vec_a")), "id_a")
+      .join(emb.select(col(idCol).as("id_b"), col(vecCol).as("vec_b")), "id_b")
       .withColumn("cos_sim", cosineSim(col("vec_a"), col("vec_b")))
       .filter(col("cos_sim") >= t)
       .select("id_a", "id_b", "cos_sim")
-  }
 
   /** Symmetric per-vector int8 quantization of an embedding column —
     * the memory lever that makes billion-vector ANN fit executor RAM

@@ -183,16 +183,14 @@ private[graft] object SimilarityQueries {
         .select(least(col("a.id"), col("b.id")).as("id_a"),
           greatest(col("a.id"), col("b.id")).as("id_b"))
         .distinct().persist()
-      // tables is the recall/cost dial: candidate volume (and the
-      // approx stage's wall) is linear in tables × (planes+1) probe
-      // rows. r16 re-ran the recall evidence across the grid
-      // (ProbeQ37, all 3 SFs): tables=12 keeps recall 1.0 / 1.0 /
-      // 0.9818 (sf0.001/0.01/0.1) against the sampled exact baseline —
-      // ≥ 8 points above the 0.9 gate everywhere — at ~0.7× the
-      // 16-table stage cost; tables=8 still passes but with a 0.038
-      // worst-case margin, too thin for a gated dial.
+      // tables follows the recall target: a pair at cosine t is a
+      // Hamming-1 candidate in one table with P₁ = pᵏ + k·pᵏ⁻¹(1−p),
+      // p = 1 − acos(t)/π, so ⌈ln(1 − 0.999)/ln(1 − P₁)⌉ tables miss it
+      // at most 0.1% of the time (21 at t = 0.4, k = 6)
+      val planes = 6
       val approx = Similarity.cosineNearDup(emb, "vec_id", "embedding", t,
-          tables = 12, multiProbe = true)
+          tables = Similarity.nearDupTables(t, planes),
+          planesPerTable = planes, multiProbe = true)
         .select(col("id_a"), col("id_b")).persist()
       // vacuous truths both ways: zero sampled exact pairs -> recall is
       // 0/0, which must read as "nothing to find" (coalesce true), and
@@ -724,7 +722,7 @@ private[graft] object SimilarityQueries {
         Tables.embeddings(s, dir), "vec_id", "embedding", k = 8, iters = 3), kmeansTwin(8, 3)),
 
     // LLM embeddings 11 — the ANN-ROUTED label-noise audit
-    // (knnLabelAgreementApprox): q96's neighborhood vote over LSH
+    // (labelVote over knnNeighborsApprox): q96's neighborhood vote over LSH
     // candidate sets instead of the broadcast n² product — the route
     // the exact audit takes past its ~2.5 GB broadcast ceiling.
     // Gated the q24/q25 way, on BOTH layers: (1) neighbor-set recall

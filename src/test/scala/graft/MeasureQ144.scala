@@ -32,8 +32,7 @@ object MeasureQ144 {
         .head().getDouble(0)
       val exactA = Similarity.knnLabelAgreement(emb, "vec_id", "embedding",
         "label", 5)
-      val approxA = Similarity.knnLabelAgreementApprox(emb, "vec_id",
-        "embedding", "label", 5, tables = 16, multiProbe = true)
+      val approxA = Similarity.labelVote(approxN, emb, "vec_id", "label", 5)
       val mae = exactA.select(col("vec_id"), col("agree_rate").as("er"))
         .join(approxA.select(col("vec_id"), col("agree_rate").as("ar")),
           "vec_id")

@@ -9,7 +9,8 @@ import graft.operators.Similarity
   * separately through the noop sink, then prints ACTUAL recall and
   * candidate volume for a grid of (tables, planesPerTable, multiProbe)
   * dials — the evidence a dial change must carry (VERDICT r16 item 2).
-  * Every wall is min-of-N [[Instruments.noopPass]].
+  * Every wall is min-of-N [[Instruments.noopPass]]; the first dial is
+  * q37's own ([[Similarity.nearDupTables]]).
   * Args: sfDir [passes]
   */
 object ProbeQ37 {
@@ -41,18 +42,20 @@ object ProbeQ37 {
     }
 
     stage("exact_sampled_gate")(exactSampled())
-    stage("approx_t16_mp")(
+    val q37Tables = Similarity.nearDupTables(t, 6)
+    stage(s"approx_t${q37Tables}_mp")(
       Similarity.cosineNearDup(emb, "vec_id", "embedding", t,
-        tables = 16, multiProbe = true))
+        tables = q37Tables, multiProbe = true))
 
     // recall/volume grid: exact baseline once (checkpointed, so the
     // timed passes' cache clears keep it), then each dial
     val exact = exactSampled().localCheckpoint()
     val nExact = exact.count()
     println(s"[probe] exact sampled pairs: $nExact  corpus: ${e.count()}")
-    for ((tb, pl, mp) <- Seq((16, 6, true), (12, 6, true), (8, 6, true),
-                             (6, 6, true), (4, 6, true), (16, 6, false),
-                             (8, 7, true), (12, 7, true))) {
+    for ((tb, pl, mp) <- Seq((q37Tables, 6, true), (16, 6, true),
+                             (12, 6, true), (8, 6, true), (6, 6, true),
+                             (4, 6, true), (16, 6, false), (8, 7, true),
+                             (12, 7, true))) {
       val approx = Similarity.cosineNearDup(emb, "vec_id", "embedding", t,
           tables = tb, planesPerTable = pl, multiProbe = mp)
         .select(col("id_a"), col("id_b")).persist()

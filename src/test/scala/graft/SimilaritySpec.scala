@@ -568,9 +568,10 @@ class SimilaritySpec extends SparkSpec {
       (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))
     val exact = Similarity.knnLabelAgreement(labeled, "vec_id", "embedding",
       "label", k = 3).collect().map(key).toSet
-    val approx = Similarity.knnLabelAgreementApprox(labeled, "vec_id",
-        "embedding", "label", k = 3, tables = 4, planesPerTable = 1, dim = 3,
-        multiProbe = true)
+    val approx = Similarity.labelVote(
+        Similarity.knnNeighborsApprox(labeled, "vec_id", "embedding", k = 3,
+          tables = 4, planesPerTable = 1, dim = 3, multiProbe = true),
+        labeled, "vec_id", "label", k = 3)
       .collect().map(key).toSet
     approx shouldBe exact
     // the mislabeled x-cluster vector is flagged by the approx audit too
@@ -585,9 +586,10 @@ class SimilaritySpec extends SparkSpec {
       (1L, Array(0.99f, 0.01f), "A"),
       (2L, Array(0.98f, 0.02f), "A")
     ).toDF("vec_id", "embedding", "label")
-    val out = Similarity.knnLabelAgreementApprox(tiny, "vec_id", "embedding",
-        "label", k = 5, tables = 4, planesPerTable = 1, dim = 2,
-        multiProbe = true)
+    val out = Similarity.labelVote(
+        Similarity.knnNeighborsApprox(tiny, "vec_id", "embedding", k = 5,
+          tables = 4, planesPerTable = 1, dim = 2, multiProbe = true),
+        tiny, "vec_id", "label", k = 5)
       .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getDouble(3)))
       .toMap
     out.keySet shouldBe Set(0L, 1L, 2L)
@@ -696,5 +698,157 @@ class SimilaritySpec extends SparkSpec {
       "label", "embedding")) shouldBe
       rowsOf(Similarity.labelCentroidCosine(emb.coalesce(1),
         "label", "embedding"))
+  }
+
+  test("lshCandidates semantics: every LSH wrapper equals a plain-Scala bucket model, both probe modes") {
+    // 300 × 8-d clustered fuzz corpus: ids 290-297 repeat the vectors of
+    // ids 0-7 (exact cosine ties), 298 is null (no buckets), 299 is the
+    // zero vector (every sign bit set; its cosines are NaN)
+    val r = new java.util.SplittableRandom(7L)
+    val centers = Array.fill(30)(Array.fill(8)(r.nextGaussian()))
+    val base = (0 until 290).map(i =>
+      centers(i % 30).map(c => (c + 0.35 * r.nextGaussian()).toFloat))
+    val vecs: IndexedSeq[Array[Float]] =
+      base ++ base.take(8) ++ Seq(null, Array.fill(8)(0f))
+    val corpus = vecs.indices.map(_.toLong).zip(vecs)
+    val emb = corpus.toDF("vec_id", "embedding")
+    val (tables, planes, dim) = (4, 3, 8)
+    def key(r: org.apache.spark.sql.Row, n: Int) =
+      (0 until n).map(i => r.get(i)) :+ java.lang.Double.doubleToLongBits(r.getDouble(n))
+    def modelRank(pairs: Set[(Long, Long)], k: Int) =
+      pairs.groupBy(_._1).toSeq.flatMap { case (q, ps) =>
+        val scored = ps.toSeq.map { case (_, b) =>
+          (b, LshModel.cos(vecs(q.toInt), vecs(b.toInt))) }
+        LshModel.topK(scored, k)
+          .zipWithIndex.map { case ((b, c), i) =>
+            Seq[Any](q, (i + 1).toLong, b, java.lang.Double.doubleToLongBits(c)) }
+      }.toSet
+    val queryIds = (0L until 20L) ++ Seq(290L, 298L, 299L)
+    val (salt, hex) = ("knnrecall", "60000000")
+    val sampled = corpus.map(_._1).filter(LshModel.coin(salt, hex)).toSet
+    sampled.size should (be > 50 and be < 250)
+    for (multiProbe <- Seq(false, true)) withClue(s"multiProbe=$multiProbe: ") {
+      def cands(probe: Long => Boolean, keep: (Long, Long) => Boolean) =
+        LshModel.candidates(corpus, probe, keep, tables, planes, dim, 42L, multiProbe)
+      val topK = Similarity.lshTopK(emb, "vec_id", "embedding", queryIds, 5,
+          tables, planes, dim, multiProbe = multiProbe)
+        .collect().map(key(_, 3)).toSet
+      topK shouldBe modelRank(cands(queryIds.toSet, _ != _), 5)
+      for (coin <- Seq(None, Some((salt, hex)))) withClue(s"probeCoin=$coin: ") {
+        val knn = Similarity.knnNeighborsApprox(emb, "vec_id", "embedding", 5,
+            tables, planes, dim, multiProbe = multiProbe, probeCoin = coin)
+          .collect().map(key(_, 3)).toSet
+        knn shouldBe modelRank(cands(id => coin.isEmpty || sampled(id), _ != _), 5)
+      }
+      // Spark orders NaN above every double, so the zero vector's NaN
+      // cosines pass the `>= t` verify
+      val nearDup = Similarity.cosineNearDup(emb, "vec_id", "embedding", 0.8,
+          tables, planes, dim, multiProbe = multiProbe)
+        .collect().map(key(_, 2)).toSet
+      nearDup shouldBe cands(_ => true, _ < _).toSeq.map { case (a, b) =>
+          (a, b, LshModel.cos(vecs(a.toInt), vecs(b.toInt))) }
+        .filter(p => p._3.isNaN || p._3 >= 0.8)
+        .map(p => Seq[Any](p._1, p._2, java.lang.Double.doubleToLongBits(p._3))).toSet
+      nearDup.size should be > 0
+    }
+  }
+
+  /** Every seed up to and including 56, the first whose corpus fails
+    * the gate at 12 tables (7 of 8 exact pairs found; also 7 of 8 at 16).
+    */
+  private val GateSeeds = 0L to 56L
+
+  test("q37's recall gate holds at nearDupTables on every seeded 200-vector corpus, and fails at 12 tables on one") {
+    // q37's gate (recall >= 0.9 of the exact pairs at cosine >= 0.4,
+    // every reported pair verified) on perfbench-shaped corpora: 200
+    // unit-Gaussian 64-d float vectors, exact pairs from the Scala model
+    val t = 0.4
+    Similarity.nearDupTables(t, 6) shouldBe 21
+    def gate(vecs: IndexedSeq[Array[Float]], tables: Int): (Boolean, String) = {
+      val emb = vecs.indices.map(_.toLong).zip(vecs).toDF("vec_id", "embedding")
+      val approx = Similarity.cosineNearDup(emb, "vec_id", "embedding", t,
+          tables = tables, multiProbe = true)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      val exact = for {
+        a <- vecs.indices; b <- a + 1 until vecs.length
+        if LshModel.cos(vecs(a), vecs(b)) >= t
+      } yield (a.toLong, b.toLong)
+      approx.values.foreach(_ should be >= t)
+      val hits = exact.count(approx.contains)
+      (exact.isEmpty || hits.toDouble / exact.size >= 0.9, s"$hits/${exact.size}")
+    }
+    val failsAt12 = GateSeeds.flatMap { seed =>
+      val vecs = LshModel.unitGaussian(seed, 200, 64)
+      val (ok, recall) = gate(vecs, Similarity.nearDupTables(t, 6))
+      withClue(s"seed $seed recall $recall: ")(ok shouldBe true)
+      if (gate(vecs, 12)._1) None else Some(seed)
+    }
+    // the set is sensitive: q37's former 12-table dial fails on it
+    failsAt12 should not be empty
+  }
+}
+
+/** Plain-Scala reference for the LSH candidate stage: buckets from
+  * [[Similarity.hyperplanes]] with the bucket expression's float→double
+  * dot and `>= 0` sign rule, and a pair is a candidate iff some table's
+  * buckets differ in at most one bit with multiprobe, or in none without.
+  */
+private object LshModel {
+  def buckets(v: Array[Float], planes: Seq[Array[Array[Double]]]): Array[Long] =
+    planes.map(_.zipWithIndex.foldLeft(0L) { case (acc, (plane, p)) =>
+      var dot = 0.0
+      var i = 0
+      while (i < math.min(v.length, plane.length)) {
+        dot += v(i).toDouble * plane(i); i += 1
+      }
+      if (dot >= 0) acc | (1L << p) else acc
+    }).toArray
+
+  def candidates(corpus: Seq[(Long, Array[Float])], probe: Long => Boolean,
+      keep: (Long, Long) => Boolean, tables: Int, planesPerTable: Int,
+      dim: Int, seed: Long, multiProbe: Boolean): Set[(Long, Long)] = {
+    val planes = (0 until tables).map(t =>
+      Similarity.hyperplanes(planesPerTable, dim, seed + t))
+    val b = corpus.collect { case (id, v) if v != null => id -> buckets(v, planes) }
+    val maxBits = if (multiProbe) 1 else 0
+    (for {
+      (p, bp) <- b if probe(p)
+      (i, bi) <- b if keep(p, i)
+      if bp.indices.exists(t => java.lang.Long.bitCount(bp(t) ^ bi(t)) <= maxBits)
+    } yield (p, i)).toSet
+  }
+
+  /** [[graft.expressions.CosineSimilarity]]'s arithmetic. */
+  def cos(a: Array[Float], b: Array[Float]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    for (i <- 0 until math.min(a.length, b.length)) {
+      val x = a(i).toDouble; val y = b(i).toDouble
+      dot += x * y; na += x * x; nb += y * y
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** Top-k by (score DESC with NaN highest, id ASC) — the rankTopK order. */
+  def topK(scored: Seq[(Long, Double)], k: Int): Seq[(Long, Double)] =
+    scored.sortWith { case ((i1, s1), (i2, s2)) =>
+      if (s1 == s2 || (s1.isNaN && s2.isNaN)) i1 < i2
+      else java.lang.Double.compare(s1, s2) > 0
+    }.take(k)
+
+  /** The probeCoin predicate: substr(md5(salt#id), 1, 8) < hex. */
+  def coin(salt: String, hex: String)(id: Long): Boolean = {
+    val h = java.security.MessageDigest.getInstance("MD5")
+      .digest(s"$salt#$id".getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+    h.take(8) < hex
+  }
+
+  /** perfbench's embedding shape: Gaussian 64-vectors scaled to unit norm. */
+  def unitGaussian(seed: Long, n: Int, dim: Int): IndexedSeq[Array[Float]] = {
+    val r = new java.util.SplittableRandom(seed)
+    (0 until n).map { _ =>
+      val g = Array.fill(dim)(r.nextGaussian())
+      val norm = math.sqrt(g.map(x => x * x).sum)
+      g.map(x => (x / norm).toFloat)
+    }
   }
 }
