@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -38,6 +39,12 @@ object StreamBench {
   private val ChangelogConf =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
+  /** One drain's measurements: input rows, wall seconds, micro-batches
+    * with data, the peak state-store row count, and the rows in the sink.
+    */
+  private case class Drained(inputRows: Long, secs: Double, batches: Int,
+                             stateRows: Long, outRows: Long)
+
   def main(args: Array[String]): Unit = {
     val cpus = GraftConf.hostCpus
     val spark = GraftConf.localSession(cpus)
@@ -71,33 +78,20 @@ object StreamBench {
       StructField("side", StringType), StructField("otype", StringType),
       StructField("qty", LongType), StructField("premium", DoubleType)))
 
-    /** One full pipeline run under the session's CURRENT state-store
-      * provider, against a fresh sink + checkpoint. Returns
-      * (inputRows, secs, batches, outWindows).
+    /** One AvailableNow drain of `build`'s output into a fresh parquet
+      * sink + checkpoint under the session's CURRENT state-store
+      * provider, timed from before `build` to the end of the drain.
       */
-    def runOnce(tag: String, expectRocksDb: Boolean): (Long, Double, Int, Long) = {
+    def drain(tag: String, expectRocksDb: Boolean)(build: => DataFrame): Drained = {
       val out = s"$dir/out_$tag"; val ckpt = s"$dir/ckpt_$tag"
       val t0 = System.nanoTime()
-      val raw = spark.readStream
-        .schema("key string, value string, ts timestamp")
-        .option("maxFilesPerTrigger", "2") // 16 files / 2 → 8 micro-batches
-        .parquet(topic)
-        .withColumnRenamed("ts", "kafka_ts")
-      val parsed = Ingest.valid(Ingest.parseJson(raw, "value", valueSchema))
-        .select("ts", "osym", "side", "otype", "qty", "premium")
-      // 10-minute grace: files drain near time-order (range-partitioned
-      // write), so real cross-batch disorder stays far inside the grace
-      val agged = StreamingOps.windowedAgg(parsed, "ts", "osym",
-        "1 minute", "10 minutes",
-        count(lit(1)).as("count") +: OptionAgg.measures())
-      val q = StreamingOps.sink(agged, "parquet", Some(out), ckpt,
+      val outDf = build
+      val q = StreamingOps.sink(outDf, "parquet", Some(out), ckpt,
         trigger = Trigger.AvailableNow()).start()
       q.awaitTermination()
       val secs = (System.nanoTime() - t0) / 1e9
 
       val progress = q.recentProgress
-      val inputRows = progress.map(_.numInputRows).sum
-      val batches = progress.count(_.numInputRows > 0)
       // provider engagement check: RocksDB's state operator exposes
       // rocksdb* custom metrics the default provider does not
       val rocksDbMetrics = progress.flatMap(_.stateOperators)
@@ -109,9 +103,29 @@ object StreamBench {
       // explicit schema: a tiny run (rows' event time all inside the
       // watermark grace) finalizes ZERO windows, and a schema-inferring
       // read of the empty sink dir would throw AFTER the bench succeeded
-      val outWindows = spark.read.schema(agged.schema).parquet(out).count()
-      (inputRows, secs, batches, outWindows)
+      Drained(progress.map(_.numInputRows).sum, secs,
+        progress.count(_.numInputRows > 0),
+        progress.flatMap(_.stateOperators).map(_.numRowsTotal)
+          .foldLeft(0L)(math.max),
+        spark.read.schema(outDf.schema).parquet(out).count())
     }
+
+    /** One full pipeline run, against a fresh sink + checkpoint. */
+    def runOnce(tag: String, expectRocksDb: Boolean): Drained =
+      drain(tag, expectRocksDb) {
+        val raw = spark.readStream
+          .schema("key string, value string, ts timestamp")
+          .option("maxFilesPerTrigger", "2") // 16 files / 2 → 8 micro-batches
+          .parquet(topic)
+          .withColumnRenamed("ts", "kafka_ts")
+        val parsed = Ingest.valid(Ingest.parseJson(raw, "value", valueSchema))
+          .select("ts", "osym", "side", "otype", "qty", "premium")
+        // 10-minute grace: files drain near time-order (range-partitioned
+        // write), so real cross-batch disorder stays far inside the grace
+        StreamingOps.windowedAgg(parsed, "ts", "osym",
+          "1 minute", "10 minutes",
+          count(lit(1)).as("count") +: OptionAgg.measures())
+      }
 
     /** Min-of-2 per provider, matching Bench's convention: whichever
       * provider runs second in this JVM would otherwise inherit warmed
@@ -124,13 +138,12 @@ object StreamBench {
                     expectRocksDb: Boolean): (String, Double) = {
       val p1 = runOnce(s"${tag}_p1", expectRocksDb)
       val p2 = runOnce(s"${tag}_p2", expectRocksDb)
-      val best = if (p2._2 <= p1._2) p2 else p1
-      val (inputRows, secs, batches, outWindows) = best
-      val rps = inputRows / secs
-      (s""""$tag":{"rows_per_sec":$rps,"secs":$secs,""" +
-        s""""secs_pass1":${p1._2},"secs_pass2":${p2._2},""" +
-        s""""input_rows":$inputRows,"batches":$batches,""" +
-        s""""out_windows":$outWindows,"rocksdb_engaged":$expectRocksDb}""",
+      val best = if (p2.secs <= p1.secs) p2 else p1
+      val rps = best.inputRows / best.secs
+      (s""""$tag":{"rows_per_sec":$rps,"secs":${best.secs},""" +
+        s""""secs_pass1":${p1.secs},"secs_pass2":${p2.secs},""" +
+        s""""input_rows":${best.inputRows},"batches":${best.batches},""" +
+        s""""out_windows":${best.outRows},"rocksdb_engaged":$expectRocksDb}""",
         rps)
     }
 
@@ -175,64 +188,49 @@ object StreamBench {
     writeFaceTopic(nf, faceTopic)
 
     def runFaceOnce(face: String, tag: String, expectRocksDb: Boolean,
-                    topic: String, rows: Long): (Long, Double, Long, Long) = {
+                    topic: String, rows: Long): Drained = {
       import spark.implicits._
-      val out = s"$dir/fout_$tag"; val ckpt = s"$dir/fckpt_$tag"
-      val t0 = System.nanoTime()
-      val ds = spark.readStream
-        .schema("user bigint, tsUs bigint, eid bigint, etype string")
-        .option("maxFilesPerTrigger", "2")
-        .parquet(topic)
-        .as[graft.streaming.TransEvent]
-      val outDf = face match {
-        case "transitions" => StreamingOps.transitionsStateful(ds).toDF()
-        case "gaps" => StreamingOps.gapsStateful(ds).toDF()
-        case "attribution" =>
-          StreamingOps.attributionStateful(ds, "purchase").toDF()
-        case "entry_exit_timeout" =>
-          StreamingOps.entryExitStatefulTimeout(ds, faceGapUs).toDF()
-        case "dedup_watermark" =>
-          // exactly-once-effect content dedup: every 4 consecutive
-          // events share a content key (integer DIV — `/` on longs is
-          // DOUBLE division and would make every key unique), so the
-          // within-watermark guarantee collapses each quadruple and
-          // out_rows has the exact closed form rows/4, asserted below.
-          // The grace deliberately covers the whole topic span
-          // (rows ms of event time + slack, SCALED with the row knob —
-          // a fixed grace would silently re-break past span > grace):
-          // FileStreamSource's pickup order is not time order (mtime
-          // ties across the range-partitioned files — observed 25%
-          // late-dropped under a 10 s grace, breaking the closed
-          // form), and the face's job is throughput + the
-          // exactly-once closed form; watermark EVICTION mechanics
-          // are pinned by StreamingSpec's dedup spec. State is
-          // key-count-bounded (nf/4), 4x below input.
-          StreamingOps.dedupWithinWatermark(
-            ds.toDF()
-              .withColumn("ts", timestamp_micros(col("tsUs")))
-              .withColumn("ckey", expr("eid DIV 4")),
-            "ts", s"${rows / 1000 + 60} seconds", Seq("ckey"))
+      val run = drain(s"face_$tag", expectRocksDb) {
+        val ds = spark.readStream
+          .schema("user bigint, tsUs bigint, eid bigint, etype string")
+          .option("maxFilesPerTrigger", "2")
+          .parquet(topic)
+          .as[graft.streaming.TransEvent]
+        face match {
+          case "transitions" => StreamingOps.transitionsStateful(ds).toDF()
+          case "gaps" => StreamingOps.gapsStateful(ds).toDF()
+          case "attribution" =>
+            StreamingOps.attributionStateful(ds, "purchase").toDF()
+          case "entry_exit_timeout" =>
+            StreamingOps.entryExitStatefulTimeout(ds, faceGapUs).toDF()
+          case "dedup_watermark" =>
+            // exactly-once-effect content dedup: every 4 consecutive
+            // events share a content key (integer DIV — `/` on longs is
+            // DOUBLE division and would make every key unique), so the
+            // within-watermark guarantee collapses each quadruple and
+            // out_rows has the exact closed form rows/4, asserted below.
+            // The grace deliberately covers the whole topic span
+            // (rows ms of event time + slack, SCALED with the row knob —
+            // a fixed grace would silently re-break past span > grace):
+            // FileStreamSource's pickup order is not time order (mtime
+            // ties across the range-partitioned files — observed 25%
+            // late-dropped under a 10 s grace, breaking the closed
+            // form), and the face's job is throughput + the
+            // exactly-once closed form; watermark EVICTION mechanics
+            // are pinned by StreamingSpec's dedup spec. State is
+            // key-count-bounded (nf/4), 4x below input.
+            StreamingOps.dedupWithinWatermark(
+              ds.toDF()
+                .withColumn("ts", timestamp_micros(col("tsUs")))
+                .withColumn("ckey", expr("eid DIV 4")),
+              "ts", s"${rows / 1000 + 60} seconds", Seq("ckey"))
+        }
       }
-      val q = StreamingOps.sink(outDf, "parquet", Some(out), ckpt,
-        trigger = Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val progress = q.recentProgress
-      val inputRows = progress.map(_.numInputRows).sum
-      val rocksDbMetrics = progress.flatMap(_.stateOperators)
-        .flatMap(_.customMetrics.keySet().toArray(Array.empty[String]))
-        .exists(_.toLowerCase(java.util.Locale.ROOT).contains("rocksdb"))
-      require(rocksDbMetrics == expectRocksDb,
-        s"state-store provider mismatch for '$tag': rocksdb metrics " +
-          s"present=$rocksDbMetrics, expected=$expectRocksDb")
-      val stateRows = progress.flatMap(_.stateOperators)
-        .map(_.numRowsTotal).foldLeft(0L)(math.max)
-      val outRows = spark.read.schema(outDf.schema).parquet(out).count()
       // the dedup face's correctness gate rides inside the bench: the
       // closed form holds on any batching (see the face's comment)
-      require(face != "dedup_watermark" || outRows == rows / 4,
-        s"dedup_watermark out_rows=$outRows, expected ${rows / 4}")
-      (inputRows, secs, stateRows, outRows)
+      require(face != "dedup_watermark" || run.outRows == rows / 4,
+        s"dedup_watermark out_rows=${run.outRows}, expected ${rows / 4}")
+      run
     }
 
     /** passes=2 (the Bench min-of-2 convention) for the base size;
@@ -247,11 +245,10 @@ object StreamBench {
       val runs = (1 to passes).map(i =>
         runFaceOnce(face, s"${face}_${provTag}_r${rows}_p$i", expectRocksDb,
           topic, rows))
-      val best = runs.minBy(_._2)
-      val (inputRows, secs, stateRows, outRows) = best
-      s""""$provTag":{"rows_per_sec":${inputRows / secs},"secs":$secs,""" +
-        s""""input_rows":$inputRows,"out_rows":$outRows,""" +
-        s""""state_rows":$stateRows,"rocksdb_engaged":$expectRocksDb}"""
+      val best = runs.minBy(_.secs)
+      s""""$provTag":{"rows_per_sec":${best.inputRows / best.secs},"secs":${best.secs},""" +
+        s""""input_rows":${best.inputRows},"out_rows":${best.outRows},""" +
+        s""""state_rows":${best.stateRows},"rocksdb_engaged":$expectRocksDb}"""
     }
 
     val faceNames =

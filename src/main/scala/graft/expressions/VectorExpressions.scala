@@ -78,7 +78,9 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 /** cos(a, b) = dot/(‖a‖·‖b‖), all three accumulators in ONE pass —
-  * the HOF version paid three separate interpreted folds.
+  * the HOF version paid three separate interpreted folds. NULL when
+  * either norm is 0: the cosine is undefined there, and 0/0 = NaN would
+  * sort above every score and pass every `>= t` filter.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
   extends VectorBinaryExpression {
@@ -94,7 +96,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
       dot += xe * ye; na += xe * xe; nb += ye * ye
       i += 1
     }
-    dot / (math.sqrt(na) * math.sqrt(nb))
+    if (na == 0.0 || nb == 0.0) null
+    else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -112,6 +115,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
          |  double $ye = ${genGet(y, elemIsFloat(right), i)};
          |  $dot += $xe * $ye; $na += $xe * $xe; $nb += $ye * $ye;
          |}
+         |if ($na == 0.0 || $nb == 0.0) ${ev.isNull} = true;
          |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
        """.stripMargin
     })

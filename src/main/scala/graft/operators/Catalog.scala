@@ -171,36 +171,11 @@ object Catalog {
 
   // -------------------------------------------------------------- lineage
 
-  /** Physical strategy for [[ancestors]] — both compute the identical
-    * min-depth closure (CatalogSpec pins equality on random DAGs), so
-    * the choice is pure cost, decided per call from the edge count the
-    * checkpointed edge table already knows:
-    *
-    *  - [[LineageStrategy.Doubling]] — min-plus pointer doubling:
-    *    ceil(log2 depth) rounds of reach⋈reach. Fewest driver
-    *    barriers; total shuffle volume O(closure × log depth).
-    *    Measured sf0.1 lineage (~50k edges, depth 16): 2.7 s vs the
-    *    BFS's 4.9 s — barriers dominate at catalog scale.
-    *  - [[LineageStrategy.LevelBfs]] — per-level frontier BFS: depth
-    *    rounds, but each round shuffles only the frontier, total
-    *    volume O(closure). Measured 1M-node binary tree (depth 19,
-    *    ~18M-pair closure): 70.7 s vs the doubling's 133.5 s on the
-    *    SAME host and session — volume dominates once the closure is
-    *    large.
-    *  - [[LineageStrategy.Auto]] — Doubling up to
-    *    [[DoublingEdgeBudget]] edges, LevelBfs beyond.
-    */
-  sealed trait LineageStrategy
-  object LineageStrategy {
-    case object Auto extends LineageStrategy
-    case object LevelBfs extends LineageStrategy
-    case object Doubling extends LineageStrategy
-  }
-
-  /** Auto crossover: below this many edges the barrier count is the
-    * cost driver (→ Doubling); above it the O(closure × log depth)
-    * join volume is (→ LevelBfs). Set between the two measured points
-    * (50k edges: doubling 1.8× faster; 1M edges: BFS 2.5× faster),
+  /** Crossover of [[ancestors]]' two closure strategies: below this
+    * many edges the barrier count is the cost driver (→
+    * [[doublingClosure]]); above it the O(closure × log depth) join
+    * volume is (→ [[levelBfsClosure]]). Set between the two measured
+    * points (50k edges: doubling 1.8× faster; 1M edges: BFS 2.5× faster),
     * nearer the small end because doubling's volume penalty grows with
     * the closure while the BFS's barrier penalty stays flat.
     */
@@ -213,8 +188,12 @@ object Catalog {
     * shortest path — diamonds deduplicate to the shallower route,
     * cycles saturate and terminate). Driver-coordinated loop of keyed
     * joins — the stream catalog is a dimension table (catalog-scale,
-    * not the 100 TB fact path) — with the loop SHAPE chosen cost-based
-    * (see [[LineageStrategy]]). If the closure would exceed
+    * not the 100 TB fact path) — with the loop SHAPE chosen from the
+    * edge count the checkpointed edge table already knows. Both shapes
+    * compute the identical min-depth closure (CatalogSpec pins equality
+    * on random DAGs), so the choice is pure cost:
+    * [[doublingClosure]] up to [[DoublingEdgeBudget]] edges,
+    * [[levelBfsClosure]] beyond. If the closure would exceed
     * `maxDepth`, the call throws rather than returning anything
     * truncated — truncation is indistinguishable from completion to
     * the caller.
@@ -226,40 +205,43 @@ object Catalog {
     * mode, same reason GraphX checkpoints).
     */
   def ancestors(streams: DataFrame, idCol: String, parentsCol: String,
-                maxDepth: Int = 20,
-                strategy: LineageStrategy = LineageStrategy.Auto): DataFrame = {
+                maxDepth: Int = 20): DataFrame =
+    withLineageEdges(streams, idCol, parentsCol) { edges =>
+      // count() on the just-checkpointed edges is a block-manager
+      // statistics read, not a recompute
+      if (edges.count() > DoublingEdgeBudget) levelBfsClosure(edges, maxDepth)
+      else doublingClosure(edges, maxDepth)
+    }
+
+  /** Runs `closure` over the distinct, eagerly checkpointed
+    * `(id, ancestor_id)` edges of `parentsCol`. The closure result is
+    * checkpoint-backed on both paths (doubling returns an eager
+    * checkpoint; level-BFS a union of eager frontier checkpoints), so
+    * the edges checkpoint is releasable the moment the closure returns —
+    * and on the maxDepth-refusal throw it must not linger until GC (the
+    * exact leak Checkpoints.free exists to prevent; connectedComponents
+    * frees its edges the same way).
+    */
+  private[graft] def withLineageEdges(streams: DataFrame, idCol: String,
+      parentsCol: String)(closure: DataFrame => DataFrame): DataFrame = {
     val edges = streams
       .select(col(idCol).cast("string").as("id"),
         explode(col(parentsCol)).as("__anc"))
       .select(col("id"), col("__anc").cast("string").as("ancestor_id"))
       .distinct().localCheckpoint(true)
-    val chosen = strategy match {
-      case LineageStrategy.Auto =>
-        // count() on the just-checkpointed edges is a block-manager
-        // statistics read, not a recompute
-        if (edges.count() > DoublingEdgeBudget) LineageStrategy.LevelBfs
-        else LineageStrategy.Doubling
-      case s => s
-    }
-    // the closure result is checkpoint-backed on both paths (doubling
-    // returns an eager checkpoint; level-BFS a union of eager frontier
-    // checkpoints), so the edges checkpoint is releasable the moment
-    // the closure returns — and on the maxDepth-refusal throw it must
-    // not linger until GC (the exact leak Checkpoints.free exists to
-    // prevent; connectedComponents frees its edges the same way)
-    try {
-      if (chosen == LineageStrategy.LevelBfs) levelBfsClosure(edges, maxDepth)
-      else doublingClosure(edges, maxDepth)
-    } finally Checkpoints.free(edges)
+    try closure(edges) finally Checkpoints.free(edges)
   }
 
-  /** Min-plus pointer doubling (see [[LineageStrategy.Doubling]]):
-    * after round r, `reach` holds EVERY pair within distance 2^r at
+  /** Min-plus pointer doubling: ceil(log2 depth) rounds of
+    * reach⋈reach. Fewest driver barriers; total shuffle volume
+    * O(closure × log depth). Measured sf0.1 lineage (~50k edges, depth
+    * 16): 2.7 s vs the BFS's 4.9 s — barriers dominate at catalog
+    * scale. After round r, `reach` holds EVERY pair within distance 2^r at
     * its exact shallowest depth (the standard min-plus matrix-power
     * argument: a shortest path of length ≤ 2^r splits into two halves
     * of length ≤ 2^(r-1), both already exact).
     */
-  private def doublingClosure(edges: DataFrame, maxDepth: Int): DataFrame = {
+  private[graft] def doublingClosure(edges: DataFrame, maxDepth: Int): DataFrame = {
     var reach = edges.withColumn("depth", lit(1)).localCheckpoint(true)
     var stats = reach.agg(count(lit(1)), coalesce(sum("depth"), lit(0L))).head()
     var round = 1
@@ -310,14 +292,17 @@ object Catalog {
     reach
   }
 
-  /** Per-level frontier BFS (see [[LineageStrategy.LevelBfs]]): only
-    * each round's FRONTIER is checkpointed; the closure is a lazy
-    * UNION of those flat checkpointed leaves, re-compacted every
+  /** Per-level frontier BFS: depth rounds, but each round shuffles
+    * only the frontier, total volume O(closure). Measured 1M-node binary
+    * tree (depth 19, ~18M-pair closure): 70.7 s vs the doubling's
+    * 133.5 s on the SAME host and session — volume dominates once the
+    * closure is large. Only each round's FRONTIER is checkpointed; the
+    * closure is a lazy UNION of those flat checkpointed leaves, re-compacted every
     * [[closureCompactEvery]] rounds to bound the anti-join's union
     * fan-in (K leaves) at O(E·depth/K) checkpoint volume — the r4/r5
     * balance point on both axes.
     */
-  private def levelBfsClosure(edges: DataFrame, maxDepth: Int): DataFrame = {
+  private[graft] def levelBfsClosure(edges: DataFrame, maxDepth: Int): DataFrame = {
     var frontier = edges.withColumn("depth", lit(1)).localCheckpoint(true)
     var closure = frontier
     var depth = 1

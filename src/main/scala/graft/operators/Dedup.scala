@@ -138,43 +138,12 @@ object Dedup {
     sh
   }
 
-  /** Physical strategy for [[jaccardSimilarityJoin]]. Both strategies
-    * compute the IDENTICAL exact pair set (DedupSpec pins equality on
-    * the fuzz corpora and the brute-force property); they differ only
-    * in shuffle structure, so the choice is a pure cost decision:
-    *
-    *  - [[JaccardStrategy.PrefixIndex]] — PPJoin-style rarest-prefix
-    *    inverted index + positional/length pruning + posting-list
-    *    verify (~9 shuffle stages). Candidate volume is bounded by the
-    *    PREFIX index, so a shingle shared by every document contributes
-    *    almost nothing (hot shingles rank last and fall outside most
-    *    prefixes). The safe default for boilerplate-heavy corpora.
-    *  - [[JaccardStrategy.PostingCount]] — one posting-list self-join
-    *    counts every co-occurring pair's intersection directly
-    *    (3 shuffle stages). Shuffle volume is Σ_s df(s)·(df(s)−1)/2 —
-    *    unbeatable when the df distribution is flat (measured 2.7×
-    *    faster than PrefixIndex at sf0.1 where max df = 25), quadratic
-    *    disaster when one shingle is corpus-hot.
-    *  - [[JaccardStrategy.Auto]] — CBO-style: one aggregate over the
-    *    document-frequency table (a pass the prefix path pays anyway to
-    *    rank shingles) computes both the posting volume and the exact
-    *    pair-row volume the direct join would shuffle, and picks
-    *    PostingCount only when the latter is within
-    *    `directPairBudgetFactor` of the former.
-    */
-  sealed trait JaccardStrategy
-  object JaccardStrategy {
-    case object Auto extends JaccardStrategy
-    case object PrefixIndex extends JaccardStrategy
-    case object PostingCount extends JaccardStrategy
-  }
-
-  /** Auto admits the direct posting self-join when its pair-row shuffle
+  /** The direct posting self-join is chosen when its pair-row shuffle
     * volume stays within this factor of the posting volume itself (the
-    * volume ANY strategy already shuffles to build df counts). 16× at
+    * volume either strategy already shuffles to build df counts). 16× at
     * avg doc size ~50 shingles means direct work per doc stays in the
     * hundreds-of-rows range; the 10×-clone stress corpus (every shingle
-    * df ≈ 100, ratio ≈ 48) correctly routes to PrefixIndex.
+    * df ≈ 100, ratio ≈ 48) correctly routes to [[prefixIndexJoin]].
     */
   private[graft] val DirectPairBudgetFactor = 16L
 
@@ -183,13 +152,21 @@ object Dedup {
     pairRows <= DirectPairBudgetFactor * postings
 
   /** Exact n-gram Jaccard similarity self-join. Two physical
-    * strategies, chosen cost-based by default (see [[JaccardStrategy]]):
-    * PPJoin-style prefix filtering — shingles ranked by global document
+    * strategies compute the IDENTICAL exact pair set (DedupSpec pins
+    * equality on the fuzz corpora and the brute-force property) and
+    * differ only in shuffle structure: PPJoin-style prefix filtering
+    * ([[prefixIndexJoin]]) — shingles ranked by global document
     * frequency (rarest first); two docs can reach Jaccard >= t only if
     * their rank-sorted prefixes of length |s| - ceil(t*|s|) + 1 share a
     * shingle, so the inverted index is built over prefixes only and
     * candidates are verified with the exact intersection — or a direct
-    * posting-count self-join when the df distribution proves it cheap.
+    * posting-count self-join ([[postingCountJoin]]). The choice is a
+    * pure cost decision made from the data: one aggregate over the
+    * document-frequency table (a pass the prefix path pays anyway to
+    * rank shingles) computes both the posting volume and the exact
+    * pair-row volume the direct join would shuffle, and the direct join
+    * runs only when the latter is within [[DirectPairBudgetFactor]] of
+    * the former.
     * Every stage of either strategy is a keyed shuffle (shingle / id /
     * pair) — no crossJoin, scales as the index, not as n².
     *
@@ -202,13 +179,23 @@ object Dedup {
     *   so no false positives ever). A qualifying pair is missed only if
     *   EVERY shingle its two prefixes share is hotter than the cap —
     *   i.e. boilerplate-only overlap. None (default) = exact. Setting
-    *   the cap forces the PrefixIndex strategy (the dial exists only
+    *   the cap forces [[prefixIndexJoin]] (the dial exists only
     *   there).
     */
   def jaccardSimilarityJoin(docs: DataFrame, idCol: String, textCol: String,
                             n: Int, t: Double,
-                            prefixDfCap: Option[Long] = None,
-                            strategy: JaccardStrategy = JaccardStrategy.Auto): DataFrame = {
+                            prefixDfCap: Option[Long] = None): DataFrame = {
+    val (sh, dfreq) = shingleIndex(docs, idCol, textCol, n)
+    if (prefixDfCap.isEmpty && directPays(dfreq)) postingCountJoin(sh, t)
+    else prefixIndexJoin(sh, dfreq, t, prefixDfCap)
+  }
+
+  /** The hashed shingle table `(id, sh, sz)` and its global shingle
+    * document-frequency table `(s, df)`, the two inputs of both Jaccard
+    * strategies.
+    */
+  private[graft] def shingleIndex(docs: DataFrame, idCol: String,
+      textCol: String, n: Int): (DataFrame, DataFrame) = {
     // The shingle table feeds four branches of this DAG (df-count,
     // ranking, and both sides of the verify); without persisting, Spark
     // re-tokenizes the corpus once per branch. At cluster scale this is
@@ -236,50 +223,61 @@ object Dedup {
     // global shingle document-frequency → rarest-first total order
     val dfreq = sh.select(col("id"), explode(col("sh")).as("s"))
       .groupBy("s").agg(count(lit(1)).as("df"))
+    (sh, dfreq)
+  }
 
-    val chosen = (strategy, prefixDfCap) match {
-      case (_, Some(_)) => JaccardStrategy.PrefixIndex // the dial lives there
-      case (JaccardStrategy.Auto, None) =>
-        // CBO pass: same posting-volume shuffle the prefix path pays to
-        // rank shingles (and the first action against `sh`, populating
-        // its cache either way). Σ df(df−1)/2 is the EXACT row count the
-        // direct self-join would shuffle — an upper bound on nothing,
-        // so the decision cannot be fooled by skew hiding in an average.
-        // doubles on purpose: df·(df−1) overflows LONG once one shingle
-        // nears 3e9 docs, and a wrapped-negative sum would wrongly admit
-        // the direct join exactly on the corpus that must avoid it. The
-        // 16× threshold needs no more precision than a double carries.
-        val stats = dfreq.agg(
-          coalesce(sum(col("df").cast("double")), lit(0.0)).as("postings"),
-          coalesce(sum(col("df").cast("double") * (col("df") - lit(1L)).cast("double")),
-            lit(0.0)).as("pair_rows_x2")).head()
-        if (directWithinBudget(stats.getDouble(1) / 2, stats.getDouble(0)))
-          JaccardStrategy.PostingCount
-        else JaccardStrategy.PrefixIndex
-      case (s, None) => s
-    }
+  /** The cost pass over the df table: same posting-volume shuffle the
+    * prefix path pays to rank shingles (and the first action against
+    * `sh`, populating its cache either way). Σ df(df−1)/2 is the EXACT
+    * row count the direct self-join would shuffle — an upper bound on
+    * nothing, so the decision cannot be fooled by skew hiding in an
+    * average. Doubles on purpose: df·(df−1) overflows LONG once one
+    * shingle nears 3e9 docs, and a wrapped-negative sum would wrongly
+    * admit the direct join exactly on the corpus that must avoid it.
+    * The 16× threshold needs no more precision than a double carries.
+    */
+  private def directPays(dfreq: DataFrame): Boolean = {
+    val stats = dfreq.agg(
+      coalesce(sum(col("df").cast("double")), lit(0.0)).as("postings"),
+      coalesce(sum(col("df").cast("double") * (col("df") - lit(1L)).cast("double")),
+        lit(0.0)).as("pair_rows_x2")).head()
+    directWithinBudget(stats.getDouble(1) / 2, stats.getDouble(0))
+  }
 
-    if (chosen == JaccardStrategy.PostingCount) {
-      // Direct posting-count: one self-join on the shingle key counts
-      // each co-occurring pair's exact intersection; sizes ride along in
-      // the grouping key so no size-lookup joins are needed. 3 shuffles
-      // total (df stats, join, pair groupBy) vs the index path's ~9 —
-      // measured 2.7× faster at sf0.1, identical 256-pair output.
-      val ex = sh.select(col("id"), col("sz"), explode(col("sh")).as("s"))
-      val out = ex.as("a").join(ex.as("b"), Seq("s"))
-        .filter(col("a.id") < col("b.id"))
-        .groupBy(col("a.id").as("id_a"), col("a.sz").as("sz_a"),
-          col("b.id").as("id_b"), col("b.sz").as("sz_b"))
-        .agg(count(lit(1)).as("inter"))
-        .withColumn("union_sz",
-          (col("sz_a") + col("sz_b")).cast("long") - col("inter"))
-        .withColumn("jaccard",
-          col("inter").cast("double") / col("union_sz").cast("double"))
-        .filter(col("jaccard") >= t)
-        .select("id_a", "id_b", "inter", "union_sz", "jaccard")
-      return materializeAndRelease(out, sh)
-    }
+  /** Direct posting-count strategy: one posting-list self-join on the
+    * shingle key counts each co-occurring pair's exact intersection;
+    * sizes ride along in the grouping key so no size-lookup joins are
+    * needed. 3 shuffle stages (df stats, join, pair groupBy) vs the
+    * index path's ~9 — measured 2.7× faster than [[prefixIndexJoin]]
+    * at sf0.1 (max df = 25), identical 256-pair output — but its
+    * shuffle volume is Σ_s df(s)·(df(s)−1)/2, a quadratic disaster when
+    * one shingle is corpus-hot.
+    */
+  private[graft] def postingCountJoin(sh: DataFrame, t: Double): DataFrame = {
+    val ex = sh.select(col("id"), col("sz"), explode(col("sh")).as("s"))
+    val out = ex.as("a").join(ex.as("b"), Seq("s"))
+      .filter(col("a.id") < col("b.id"))
+      .groupBy(col("a.id").as("id_a"), col("a.sz").as("sz_a"),
+        col("b.id").as("id_b"), col("b.sz").as("sz_b"))
+      .agg(count(lit(1)).as("inter"))
+      .withColumn("union_sz",
+        (col("sz_a") + col("sz_b")).cast("long") - col("inter"))
+      .withColumn("jaccard",
+        col("inter").cast("double") / col("union_sz").cast("double"))
+      .filter(col("jaccard") >= t)
+      .select("id_a", "id_b", "inter", "union_sz", "jaccard")
+    materializeAndRelease(out, sh)
+  }
 
+  /** PPJoin-style rarest-prefix strategy: inverted index over each
+    * doc's df-ranked prefix + positional/length pruning + posting-list
+    * verify (~9 shuffle stages). Candidate volume is bounded by the
+    * PREFIX index, so a shingle shared by every document contributes
+    * almost nothing (hot shingles rank last and fall outside most
+    * prefixes) — the safe choice for boilerplate-heavy corpora.
+    */
+  private[graft] def prefixIndexJoin(sh: DataFrame, dfreq: DataFrame,
+      t: Double, prefixDfCap: Option[Long]): DataFrame = {
     // per-doc shingles sorted by (df, s); keep the filtering prefix
     val prefixLen = (col("sz") - ceilSafe(lit(t) * col("sz")) + 1).cast("int")
     val ranked = sh.select(col("id"), col("sz"), explode(col("sh")).as("s"))

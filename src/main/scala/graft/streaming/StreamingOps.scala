@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import scala.collection.mutable.ArrayBuffer
+import scala.reflect.ClassTag
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.Row
@@ -60,15 +62,9 @@ object StreamingOps {
     */
   def windowedAgg(df: DataFrame, tsCol: String, keyCol: String,
                   windowSize: String, grace: String,
-                  aggs: Seq[Column]): DataFrame = {
-    val agged = df.withWatermark(tsCol, grace)
-      .groupBy(window(col(tsCol), windowSize), col(keyCol))
-      .agg(aggs.head, aggs.tail: _*)
-    agged.select(
-      col("window.start").as("window_start") +:
-        col("window.end").as("window_end") +:
-        agged.columns.filterNot(_ == "window").map(col).toSeq: _*)
-  }
+                  aggs: Seq[Column]): DataFrame =
+    windowReshape(df, tsCol, keyCol, grace, aggs,
+      window(col(tsCol), windowSize), "window")
 
   /** Sliding-window variant (SURVEY.md §2.10: the reference uses
     * tumbling only; Spark's sliding windows are exposed behind the
@@ -76,28 +72,33 @@ object StreamingOps {
     */
   def windowedAggSliding(df: DataFrame, tsCol: String, keyCol: String,
                          windowSize: String, slide: String, grace: String,
-                         aggs: Seq[Column]): DataFrame = {
-    val agged = df.withWatermark(tsCol, grace)
-      .groupBy(window(col(tsCol), windowSize, slide), col(keyCol))
-      .agg(aggs.head, aggs.tail: _*)
-    agged.select(
-      col("window.start").as("window_start") +:
-        col("window.end").as("window_end") +:
-        agged.columns.filterNot(_ == "window").map(col).toSeq: _*)
-  }
+                         aggs: Seq[Column]): DataFrame =
+    windowReshape(df, tsCol, keyCol, grace, aggs,
+      window(col(tsCol), windowSize, slide), "window")
 
   /** Session-window variant: windows close after `gap` of per-key
     * silence (same exposure rationale as [[windowedAggSliding]]).
     */
   def sessionAgg(df: DataFrame, tsCol: String, keyCol: String,
-                 gap: String, grace: String, aggs: Seq[Column]): DataFrame = {
+                 gap: String, grace: String, aggs: Seq[Column]): DataFrame =
+    windowReshape(df, tsCol, keyCol, grace, aggs,
+      session_window(col(tsCol), gap), "session")
+
+  /** The shared window reshape: watermark → group by (window, key) →
+    * aggregate → the window struct flattened into `<prefix>_start` /
+    * `<prefix>_end` ahead of the key and the aggregates.
+    */
+  private def windowReshape(df: DataFrame, tsCol: String, keyCol: String,
+                            grace: String, aggs: Seq[Column], win: Column,
+                            prefix: String): DataFrame = {
     val agged = df.withWatermark(tsCol, grace)
-      .groupBy(session_window(col(tsCol), gap), col(keyCol))
+      .groupBy(win, col(keyCol))
       .agg(aggs.head, aggs.tail: _*)
+    val w = agged.columns.head
     agged.select(
-      col("session_window.start").as("session_start") +:
-        col("session_window.end").as("session_end") +:
-        agged.columns.filterNot(_ == "session_window").map(col).toSeq: _*)
+      col(s"$w.start").as(s"${prefix}_start") +:
+        col(s"$w.end").as(s"${prefix}_end") +:
+        agged.columns.filterNot(_ == w).map(col).toSeq: _*)
   }
 
   /** Exactly-once-effect dedup by business key within the watermark —
@@ -135,25 +136,71 @@ object StreamingOps {
           sha2(graft.functions.normText(col(textCol)), 256)),
       tsCol, grace, Seq("content_key"))
 
-  /** One key's micro-batch group, sorted IN PLACE in a single array —
-    * the shared group-fold step of every stateful twin below. `rows`
-    * is a single-pass iterator and each fold needs (tsUs, tie) order,
-    * so the group must land in memory once; this allocates exactly ONE
-    * array (no toSeq → sorted-copy chain). Memory contract: the
-    * envelope is the hottest key's PER-MICRO-BATCH arrival volume —
-    * trigger-bounded, never all-time history (state stays O(1) per
-    * key) — and for the gap/transition-class twins the OUTPUT is
-    * itself group-sized, so O(group) working memory is the floor of
-    * ANY formulation, incremental or not. A bot-shaped key needs the
-    * same upstream guard as the batch side
-    * ([[graft.operators.EventAnalytics.funnel]]'s maxEventsPerEntity).
+  /** Event-time flush for [[foldByKey]]: a key's state becomes
+    * closable at `deadlineMs(state)`, and on timeout the key emits
+    * `emit(key, state)` and drops its state.
     */
-  private def sortedGroup[T, K](rows: Iterator[T])(key: T => K)(
-      implicit ct: scala.reflect.ClassTag[T], ord: Ordering[K]): Array[T] = {
-    val arr = rows.toArray
-    arr.sortInPlaceBy(key)
-    arr
-  }
+  private case class Flush[K, S, O](deadlineMs: S => Long, emit: (K, S) => O)
+
+  /** The one keyed-state fold under every stateful twin below: group
+    * by `key`, sort the key's micro-batch rows by `order`, fold `step`
+    * over them from the stored state (each call returns the next state
+    * and may `emit` output rows), and write the final state back once.
+    * Append output mode; works on batch Datasets too (state spans the
+    * whole group, and timeouts never fire).
+    *
+    * Memory contract: `rows` is a single-pass iterator and each fold
+    * needs `order`, so the group lands in memory once, in ONE array
+    * sorted in place. The envelope is the hottest key's PER-MICRO-BATCH
+    * arrival volume — trigger-bounded, never all-time history (state
+    * stays O(1) per key) — and for the gap/transition-class twins the
+    * OUTPUT is itself group-sized, so O(group) working memory is the
+    * floor of ANY formulation. A bot-shaped key needs the same upstream
+    * guard as the batch side
+    * ([[graft.operators.EventAnalytics.funnel]]'s maxEventsPerEntity).
+    *
+    * With `timeoutFlush` the state carries an EVENT-TIME timeout,
+    * re-armed once per (key, batch) at the flush's deadline. A single
+    * micro-batch can span MORE event time than the deadline's lead
+    * (hot backfill batches), leaving the deadline already behind the
+    * current watermark — Spark rejects that registration. It is
+    * clamped forward to watermark + 1 ms: the overdue timeout fires at
+    * the next micro-batch, which is exactly when the watermark says the
+    * state is closable anyway. (Try: batch execution has no watermark
+    * to read; there timeouts never fire and the raw registration is
+    * fine.)
+    */
+  private def foldByKey[T: ClassTag, K: Encoder, S: Encoder, O: Encoder, R: Ordering](
+      ds: Dataset[T], key: T => K, order: T => R,
+      timeoutFlush: Option[Flush[K, S, O]] = None)(
+      step: (K, Option[S], T, O => Unit) => Option[S]): Dataset[O] =
+    ds.groupByKey(key)
+      .flatMapGroupsWithState[S, O](OutputMode.Append(),
+        if (timeoutFlush.isEmpty) GroupStateTimeout.NoTimeout()
+        else GroupStateTimeout.EventTimeTimeout()) {
+        (k, rows, state: GroupState[S]) =>
+          if (state.hasTimedOut) {
+            val s = state.get
+            state.remove()
+            Iterator.single(timeoutFlush.get.emit(k, s))
+          } else {
+            val group = rows.toArray
+            group.sortInPlaceBy(order)
+            val out = ArrayBuffer.empty[O]
+            val emit: O => Unit = out += _
+            var st = state.getOption
+            group.foreach(r => st = step(k, st, r, emit))
+            st.foreach { s =>
+              state.update(s)
+              timeoutFlush.foreach { f =>
+                val wm = scala.util.Try(state.getCurrentWatermarkMs())
+                  .getOrElse(-1L)
+                state.setTimeoutTimestamp(math.max(f.deadlineMs(s), wm + 1L))
+              }
+            }
+            out.iterator
+          }
+      }
 
   /** W1/W2 as a STREAMING stateful operator: per-key previous-value
     * percent gap and inter-arrival staleness, carried across
@@ -165,23 +212,15 @@ object StreamingOps {
     */
   def lagMetricsStateful(ds: Dataset[LagPoint]): Dataset[LagMetrics] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[LagState, LagMetrics](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key, rows, state: GroupState[LagState]) =>
-          var st = state.getOption
-          val out = sortedGroup(rows)(r => (r.tsUs, r.value)).map { r =>
-            val m = LagMetrics(key, r.tsUs, r.value,
-              st.flatMap(s =>
-                if (s.lastValue == 0.0) None
-                else Some((r.value - s.lastValue) / s.lastValue * 100.0)),
-              st.map(r.tsUs - _.lastTs))
-            st = Some(LagState(r.tsUs, r.value))
-            m
-          }
-          st.foreach(state.update)
-          out.iterator
-      }
+    foldByKey(ds, (_: LagPoint).key, (r: LagPoint) => (r.tsUs, r.value)) {
+      (key, st: Option[LagState], r, emit: LagMetrics => Unit) =>
+        emit(LagMetrics(key, r.tsUs, r.value,
+          st.flatMap(s =>
+            if (s.lastValue == 0.0) None
+            else Some((r.value - s.lastValue) / s.lastValue * 100.0)),
+          st.map(r.tsUs - _.lastTs)))
+        Some(LagState(r.tsUs, r.value))
+    }
   }
 
   /** STREAMING twin of [[graft.operators.EventAnalytics.funnel]]: the
@@ -207,23 +246,17 @@ object StreamingOps {
       maxStepGapUs: Option[Long] = None): Dataset[FunnelProgress] = {
     require(steps.nonEmpty, "funnel needs at least one step")
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.user)
-      .flatMapGroupsWithState[FunnelState, FunnelProgress](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user, rows, state: GroupState[FunnelState]) =>
-          var st = state.getOption.map(_.stepTs).getOrElse(Seq.empty)
-          val out = Seq.newBuilder[FunnelProgress]
-          sortedGroup(rows)(r => (r.tsUs, r.etype)).foreach { r =>
-            if (st.length < steps.size && r.etype == steps(st.length) &&
-                (st.isEmpty || (r.tsUs > st.last &&
-                  maxStepGapUs.forall(gap => r.tsUs <= st.last + gap)))) {
-              st = st :+ r.tsUs
-              out += FunnelProgress(user, st.length, st)
-            }
-          }
-          state.update(FunnelState(st))
-          out.result().iterator
-      }
+    foldByKey(ds, (_: FunnelEvent).user, (r: FunnelEvent) => (r.tsUs, r.etype)) {
+      (user, st: Option[FunnelState], r, emit: FunnelProgress => Unit) =>
+        val reached = st.fold(Seq.empty[Long])(_.stepTs)
+        if (reached.length < steps.size && r.etype == steps(reached.length) &&
+            (reached.isEmpty || (r.tsUs > reached.last &&
+              maxStepGapUs.forall(gap => r.tsUs <= reached.last + gap)))) {
+          val next = reached :+ r.tsUs
+          emit(FunnelProgress(user, next.length, next))
+          Some(FunnelState(next))
+        } else Some(FunnelState(reached)) // written on every group seen
+    }
   }
 
   /** STREAMING twin of [[graft.operators.EventAnalytics
@@ -238,19 +271,11 @@ object StreamingOps {
     */
   def transitionsStateful(ds: Dataset[TransEvent]): Dataset[Transition] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.user)
-      .flatMapGroupsWithState[TransState, Transition](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user, rows, state: GroupState[TransState]) =>
-          var st = state.getOption
-          val out = Seq.newBuilder[Transition]
-          sortedGroup(rows)(r => (r.tsUs, r.eid)).foreach { r =>
-            st.foreach(p => out += Transition(user, p.etype, r.etype, r.tsUs))
-            st = Some(TransState(r.tsUs, r.eid, r.etype))
-          }
-          st.foreach(state.update)
-          out.result().iterator
-      }
+    foldByKey(ds, (_: TransEvent).user, eventOrder) {
+      (user, st: Option[TransState], r, emit: Transition => Unit) =>
+        st.foreach(p => emit(Transition(user, p.etype, r.etype, r.tsUs)))
+        Some(TransState(r.tsUs, r.eid, r.etype))
+    }
   }
 
   /** STREAMING twin of [[graft.operators.EventAnalytics
@@ -263,25 +288,18 @@ object StreamingOps {
     * multiset equals the batch lag-gaps under event-ordered arrival
     * across batches. Works on batch Datasets too.
     *
-    * MEMORY BOUND: see [[sortedGroup]] — one array per (key, batch),
+    * MEMORY BOUND: see [[foldByKey]] — one array per (key, batch),
     * envelope = the hottest key's per-batch arrival volume. Size
     * triggers so hot-key-per-batch stays in task memory.
     */
   def gapsStateful(ds: Dataset[TransEvent]): Dataset[EventGap] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(r => (r.user, r.etype))
-      .flatMapGroupsWithState[GapState, EventGap](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case ((user, etype), rows, state: GroupState[GapState]) =>
-          var last = state.getOption.map(_.tsUs)
-          val out = Seq.newBuilder[EventGap]
-          sortedGroup(rows)(r => (r.tsUs, r.eid)).foreach { r =>
-            last.foreach(l => out += EventGap(user, etype, r.tsUs - l))
-            last = Some(r.tsUs)
-          }
-          last.foreach(t => state.update(GapState(t)))
-          out.result().iterator
-      }
+    foldByKey(ds, (r: TransEvent) => (r.user, r.etype), eventOrder) {
+      (userType, st: Option[GapState], r, emit: EventGap => Unit) =>
+        st.foreach(l =>
+          emit(EventGap(userType._1, userType._2, r.tsUs - l.tsUs)))
+        Some(GapState(r.tsUs))
+    }
   }
 
   /** STREAMING twin of [[graft.operators.EventAnalytics
@@ -298,20 +316,13 @@ object StreamingOps {
   def attributionStateful(ds: Dataset[TransEvent],
       convType: String): Dataset[Attribution] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.user)
-      .flatMapGroupsWithState[AttrState, Attribution](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user, rows, state: GroupState[AttrState]) =>
-          var ch = state.getOption.map(_.channel)
-          val out = Seq.newBuilder[Attribution]
-          sortedGroup(rows)(r => (r.tsUs, r.eid)).foreach { r =>
-            if (r.etype == convType)
-              out += Attribution(user, ch.getOrElse("(none)"), r.tsUs)
-            else ch = Some(r.etype)
-          }
-          ch.foreach(c => state.update(AttrState(c)))
-          out.result().iterator
-      }
+    foldByKey(ds, (_: TransEvent).user, eventOrder) {
+      (user, st: Option[AttrState], r, emit: Attribution => Unit) =>
+        if (r.etype == convType) {
+          emit(Attribution(user, st.fold("(none)")(_.channel), r.tsUs))
+          st
+        } else Some(AttrState(r.etype))
+    }
   }
 
   /** STREAMING face of [[graft.operators.EventAnalytics
@@ -334,27 +345,7 @@ object StreamingOps {
       gapMicros: Long): Dataset[SessionSummary] = {
     require(gapMicros > 0, s"gapMicros must be positive: $gapMicros")
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.user)
-      .flatMapGroupsWithState[EntryExitState, SessionSummary](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user, rows, state: GroupState[EntryExitState]) =>
-          var st = state.getOption
-          val out = Seq.newBuilder[SessionSummary]
-          sortedGroup(rows)(r => (r.tsUs, r.eid)).foreach { r =>
-            st match {
-              case Some(s) if r.tsUs - s.lastTs > gapMicros =>
-                out += SessionSummary(user, s.entry, s.lastType, s.n)
-                st = Some(EntryExitState(r.etype, r.tsUs, r.etype, 1L))
-              case Some(s) =>
-                st = Some(s.copy(lastTs = r.tsUs, lastType = r.etype,
-                  n = s.n + 1L))
-              case None =>
-                st = Some(EntryExitState(r.etype, r.tsUs, r.etype, 1L))
-            }
-          }
-          st.foreach(state.update)
-          out.result().iterator
-      }
+    foldByKey(ds, (_: TransEvent).user, eventOrder)(sessionStep(gapMicros))
   }
 
   /** [[entryExitStateful]] with an EVENT-TIME TIMEOUT flush (VERDICT
@@ -381,51 +372,38 @@ object StreamingOps {
       grace: String = "0 seconds"): Dataset[SessionSummary] = {
     require(gapMicros > 0, s"gapMicros must be positive: $gapMicros")
     import ds.sparkSession.implicits._
-    ds.withColumn("__et", timestamp_micros(col("tsUs")))
-      .withWatermark("__et", grace)
-      .as[TransEvent]
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[EntryExitState, SessionSummary](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user, rows, state: GroupState[EntryExitState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(SessionSummary(user, s.entry, s.lastType, s.n))
-          } else {
-            var st = state.getOption
-            val out = Seq.newBuilder[SessionSummary]
-            sortedGroup(rows)(r => (r.tsUs, r.eid)).foreach { r =>
-              st match {
-                case Some(s) if r.tsUs - s.lastTs > gapMicros =>
-                  out += SessionSummary(user, s.entry, s.lastType, s.n)
-                  st = Some(EntryExitState(r.etype, r.tsUs, r.etype, 1L))
-                case Some(s) =>
-                  st = Some(s.copy(lastTs = r.tsUs, lastType = r.etype,
-                    n = s.n + 1L))
-                case None =>
-                  st = Some(EntryExitState(r.etype, r.tsUs, r.etype, 1L))
-              }
-            }
-            st.foreach { s =>
-              state.update(s)
-              // a single micro-batch can span MORE event time than the
-              // gap (hot backfill batches), leaving the desired flush
-              // time already behind the current watermark — Spark
-              // rejects that registration. Clamp forward one ms: the
-              // overdue timeout fires at the next micro-batch, which is
-              // exactly when the watermark contract says the session is
-              // closable anyway (the watermark has passed lastTs+gap).
-              // (Try: batch execution has no watermark to read; there
-              // timeouts never fire and the raw registration is fine.)
-              val wm = scala.util.Try(state.getCurrentWatermarkMs())
-                .getOrElse(-1L)
-              state.setTimeoutTimestamp(
-                math.max((s.lastTs + gapMicros) / 1000L, wm + 1L))
-            }
-            out.result().iterator
-          }
-      }
+    foldByKey(
+      ds.withColumn("__et", timestamp_micros(col("tsUs")))
+        .withWatermark("__et", grace)
+        .as[TransEvent],
+      (_: TransEvent).user, eventOrder,
+      Some(Flush[Long, EntryExitState, SessionSummary](
+        s => (s.lastTs + gapMicros) / 1000L, closedSession)))(
+      sessionStep(gapMicros))
+  }
+
+  /** The (tsUs, eid) fold order of the [[TransEvent]] twins — the
+    * batch operators' window order.
+    */
+  private val eventOrder: TransEvent => (Long, Long) = r => (r.tsUs, r.eid)
+
+  private def closedSession(user: Long, s: EntryExitState): SessionSummary =
+    SessionSummary(user, s.entry, s.lastType, s.n)
+
+  /** One row of the entry/exit session machine: a row more than
+    * `gapMicros` after the open session's last event closes it and
+    * opens the next; otherwise it extends the open session.
+    */
+  private def sessionStep(gapMicros: Long)(user: Long,
+      st: Option[EntryExitState], r: TransEvent,
+      emit: SessionSummary => Unit): Option[EntryExitState] = st match {
+    case Some(s) if r.tsUs - s.lastTs > gapMicros =>
+      emit(closedSession(user, s))
+      Some(EntryExitState(r.etype, r.tsUs, r.etype, 1L))
+    case Some(s) =>
+      Some(s.copy(lastTs = r.tsUs, lastType = r.etype, n = s.n + 1L))
+    case None =>
+      Some(EntryExitState(r.etype, r.tsUs, r.etype, 1L))
   }
 
   /** STREAMING twin of [[graft.operators.Curation.packShards]]: the
@@ -441,55 +419,12 @@ object StreamingOps {
   def packShardsStateful(ds: Dataset[ShardDoc], budget: Long): Dataset[ShardAssigned] = {
     require(budget > 0, s"budget must be positive: $budget")
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.source)
-      .flatMapGroupsWithState[ShardState, ShardAssigned](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_, rows, state: GroupState[ShardState]) =>
-          var cum = state.getOption.map(_.cumTokens).getOrElse(0L)
-          val out = sortedGroup(rows)(_.docId).map { d =>
-            val shard = cum / budget
-            cum += d.nTok
-            ShardAssigned(d.source, d.docId, d.nTok, shard)
-          }
-          state.update(ShardState(cum))
-          out.iterator
-      }
-  }
-
-  /** The same per-key lag metrics on Spark 4's `transformWithState` —
-    * the modern stateful-processor API (typed ValueState handles, TTL
-    * support, timers) that supersedes flatMapGroupsWithState. Both
-    * variants are kept: [[lagMetricsStateful]] for the classic API,
-    * this for TWS-based pipelines.
-    */
-  def lagMetricsTws(ds: Dataset[LagPoint]): Dataset[LagMetrics] = {
-    import ds.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-    class LagProcessor extends StatefulProcessor[String, LagPoint, LagMetrics] {
-      @transient private var state: ValueState[LagState] = _
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-        // session-free encoder: anything session-bound in this closure
-        // would be invoked on the executor (SPARK-28702)
-        state = getHandle.getValueState[LagState]("lag",
-          org.apache.spark.sql.Encoders.product[LagState], TTLConfig.NONE)
-      override def handleInputRows(key: String, rows: Iterator[LagPoint],
-                                   timerValues: TimerValues): Iterator[LagMetrics] = {
-        var st = if (state.exists()) Some(state.get()) else None
-        val out = sortedGroup(rows)(r => (r.tsUs, r.value)).map { r =>
-          val m = LagMetrics(key, r.tsUs, r.value,
-            st.flatMap(s =>
-              if (s.lastValue == 0.0) None
-              else Some((r.value - s.lastValue) / s.lastValue * 100.0)),
-            st.map(r.tsUs - _.lastTs))
-          st = Some(LagState(r.tsUs, r.value))
-          m
-        }
-        st.foreach(state.update)
-        out.iterator
-      }
+    foldByKey(ds, (_: ShardDoc).source, (_: ShardDoc).docId) {
+      (_, st: Option[ShardState], d, emit: ShardAssigned => Unit) =>
+        val cum = st.fold(0L)(_.cumTokens)
+        emit(ShardAssigned(d.source, d.docId, d.nTok, cum / budget))
+        Some(ShardState(cum + d.nTok))
     }
-    ds.groupByKey(_.key)
-      .transformWithState(new LagProcessor, TimeMode.None(), OutputMode.Append())
   }
 
   /** File/console sink wiring with checkpointing (K1/K3 analog; the

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import graft.operators.Catalog
 import graft.operators.Catalog._
 
@@ -187,11 +188,12 @@ class CatalogSpec extends SparkSpec {
         depth += 1
       }
       // BOTH physical strategies must produce the identical min-depth
-      // closure — the Auto choice is pure cost
-      for (st <- Seq(Catalog.LineageStrategy.Doubling,
-                     Catalog.LineageStrategy.LevelBfs)) {
-        val got = Catalog.ancestors(dim.toDF("streamId", "parents"),
-            "streamId", "parents", maxDepth = 64, strategy = st)
+      // closure — the edge-count choice is pure cost
+      for ((st, closure) <- Seq[(String, (DataFrame, Int) => DataFrame)](
+             "doubling" -> Catalog.doublingClosure,
+             "levelBfs" -> Catalog.levelBfsClosure)) {
+        val got = Catalog.withLineageEdges(dim.toDF("streamId", "parents"),
+            "streamId", "parents")(closure(_, 64))
           .collect().map(r => (r.getString(0), r.getString(1)) -> r.getInt(2)).toMap
         withClue(s"seed=$seed strategy=$st: ") { got shouldBe expected.toMap }
       }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -167,14 +168,15 @@ class DedupSpec extends SparkSpec {
         acc :+ (id -> (if (w == null) acc.last._2 else w))
       }.toDF("doc_id", "text")
       for (t <- Seq(0.3, 0.5)) {
-        def rows(st: Dedup.JaccardStrategy) =
-          Dedup.jaccardSimilarityJoin(corpus, "doc_id", "text", 3, t,
-              strategy = st)
+        def rows(join: (DataFrame, DataFrame) => DataFrame) = {
+          val (sh, dfreq) = Dedup.shingleIndex(corpus, "doc_id", "text", 3)
+          join(sh, dfreq)
             .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
               r.getLong(3), r.getDouble(4))).toSet
+        }
         withClue(s"seed=$seed t=$t: ") {
-          rows(Dedup.JaccardStrategy.PostingCount) shouldBe
-            rows(Dedup.JaccardStrategy.PrefixIndex)
+          rows((sh, _) => Dedup.postingCountJoin(sh, t)) shouldBe
+            rows(Dedup.prefixIndexJoin(_, _, t, None))
         }
       }
     }

@@ -168,4 +168,41 @@ class FunctionsSpec extends SparkSpec {
     got(1) shouldBe 0.0 +- 1e-12
     got(2) shouldBe -1.0 +- 1e-12
   }
+
+  test("cosineSim: a zero-norm side yields NULL, not NaN, under codegen and NO_CODEGEN") {
+    // NaN would sort above every score and pass every `>= t` filter;
+    // NULL is never ranked and fails the filter. The repartition keeps
+    // the projection out of the optimizer's local-relation folding, so
+    // the executed path is the one the session's codegen mode picks.
+    val df = Seq(
+      (Array(0f, 0f), Array(1f, 0f)),
+      (Array(1f, 0f), Array(0f, 0f)),
+      (Array(0f, 0f), Array(0f, 0f)),
+      (Array(2f, 0f), Array(1f, 0f))
+    ).toDF("a", "b").repartition(1)
+    def run(): (Seq[Option[Double]], Long) = {
+      val scored = df.select(cosineSim($"a", $"b").as("c"),
+        cosineSim($"a".cast("array<double>"), $"b").as("d"))
+      val rows = scored.collect().map { r =>
+        r.isNullAt(0) shouldBe r.isNullAt(1)
+        if (r.isNullAt(0)) None else Some(r.getDouble(0))
+      }.toSeq
+      (rows.sortBy(_.isDefined), scored.filter($"c" >= 0.5).count())
+    }
+    val expected = (Seq(None, None, None, Some(1.0)), 1L)
+    // generated code only (no silent fallback), then interpreted only
+    val factoryKey = "spark.sql.codegen.factoryMode"
+    for (confs <- Seq(
+        Seq("spark.sql.codegen.wholeStage" -> "true", factoryKey -> "CODEGEN_ONLY",
+          "spark.sql.codegen.fallback" -> "false"),
+        Seq("spark.sql.codegen.wholeStage" -> "false", factoryKey -> "NO_CODEGEN")))
+      withClue(s"$confs: ") {
+        val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        try run() shouldBe expected
+        finally prior.foreach { case (k, v) =>
+          v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+        }
+      }
+  }
 }

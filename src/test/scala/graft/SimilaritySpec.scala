@@ -703,7 +703,8 @@ class SimilaritySpec extends SparkSpec {
   test("lshCandidates semantics: every LSH wrapper equals a plain-Scala bucket model, both probe modes") {
     // 300 × 8-d clustered fuzz corpus: ids 290-297 repeat the vectors of
     // ids 0-7 (exact cosine ties), 298 is null (no buckets), 299 is the
-    // zero vector (every sign bit set; its cosines are NaN)
+    // zero vector (every sign bit set; its cosines are NULL, so it is
+    // never ranked and never a near-dup)
     val r = new java.util.SplittableRandom(7L)
     val centers = Array.fill(30)(Array.fill(8)(r.nextGaussian()))
     val base = (0 until 290).map(i =>
@@ -717,8 +718,8 @@ class SimilaritySpec extends SparkSpec {
       (0 until n).map(i => r.get(i)) :+ java.lang.Double.doubleToLongBits(r.getDouble(n))
     def modelRank(pairs: Set[(Long, Long)], k: Int) =
       pairs.groupBy(_._1).toSeq.flatMap { case (q, ps) =>
-        val scored = ps.toSeq.map { case (_, b) =>
-          (b, LshModel.cos(vecs(q.toInt), vecs(b.toInt))) }
+        val scored = ps.toSeq.flatMap { case (_, b) =>
+          LshModel.cos(vecs(q.toInt), vecs(b.toInt)).map(b -> _) }
         LshModel.topK(scored, k)
           .zipWithIndex.map { case ((b, c), i) =>
             Seq[Any](q, (i + 1).toLong, b, java.lang.Double.doubleToLongBits(c)) }
@@ -740,14 +741,12 @@ class SimilaritySpec extends SparkSpec {
           .collect().map(key(_, 3)).toSet
         knn shouldBe modelRank(cands(id => coin.isEmpty || sampled(id), _ != _), 5)
       }
-      // Spark orders NaN above every double, so the zero vector's NaN
-      // cosines pass the `>= t` verify
       val nearDup = Similarity.cosineNearDup(emb, "vec_id", "embedding", 0.8,
           tables, planes, dim, multiProbe = multiProbe)
         .collect().map(key(_, 2)).toSet
-      nearDup shouldBe cands(_ => true, _ < _).toSeq.map { case (a, b) =>
-          (a, b, LshModel.cos(vecs(a.toInt), vecs(b.toInt))) }
-        .filter(p => p._3.isNaN || p._3 >= 0.8)
+      nearDup shouldBe cands(_ => true, _ < _).toSeq.flatMap { case (a, b) =>
+          LshModel.cos(vecs(a.toInt), vecs(b.toInt)).map((a, b, _)) }
+        .filter(_._3 >= 0.8)
         .map(p => Seq[Any](p._1, p._2, java.lang.Double.doubleToLongBits(p._3))).toSet
       nearDup.size should be > 0
     }
@@ -771,7 +770,7 @@ class SimilaritySpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
       val exact = for {
         a <- vecs.indices; b <- a + 1 until vecs.length
-        if LshModel.cos(vecs(a), vecs(b)) >= t
+        if LshModel.cos(vecs(a), vecs(b)).exists(_ >= t)
       } yield (a.toLong, b.toLong)
       approx.values.foreach(_ should be >= t)
       val hits = exact.count(approx.contains)
@@ -818,14 +817,16 @@ private object LshModel {
     } yield (p, i)).toSet
   }
 
-  /** [[graft.expressions.CosineSimilarity]]'s arithmetic. */
-  def cos(a: Array[Float], b: Array[Float]): Double = {
+  /** [[graft.expressions.CosineSimilarity]]'s arithmetic; None where it
+    * returns NULL (either norm 0). */
+  def cos(a: Array[Float], b: Array[Float]): Option[Double] = {
     var dot = 0.0; var na = 0.0; var nb = 0.0
     for (i <- 0 until math.min(a.length, b.length)) {
       val x = a(i).toDouble; val y = b(i).toDouble
       dot += x * y; na += x * x; nb += y * y
     }
-    dot / (math.sqrt(na) * math.sqrt(nb))
+    if (na == 0.0 || nb == 0.0) None
+    else Some(dot / (math.sqrt(na) * math.sqrt(nb)))
   }
 
   /** Top-k by (score DESC with NaN highest, id ASC) — the rankTopK order. */

@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Timestamp
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -887,36 +889,6 @@ class StreamingSpec extends SparkSpec {
     row.getAs[Double]("sum_v") shouldBe 3.0
   }
 
-  test("lagMetricsTws (transformWithState) matches the flatMapGroupsWithState variant across batches") {
-    import graft.streaming.{LagPoint, LagMetrics}
-    // transformWithState needs a column-family-capable state store
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[LagPoint](spark)
-    val out = StreamingOps.lagMetricsTws(input.toDS())
-    val ckpt = Files.createTempDirectory("ckpt_tws").toString
-    val q = out.writeStream.format("memory").queryName("tws_out")
-      .outputMode("append").option("checkpointLocation", ckpt).start()
-    try {
-      input.addData(LagPoint("a", 1000L, 100.0))
-      q.processAllAvailable()
-      input.addData(LagPoint("a", 3000L, 150.0)) // state from batch 1
-      q.processAllAvailable()
-      val rows = spark.table("tws_out").as[LagMetrics].collect().sortBy(_.tsUs)
-      rows.map(r => (r.tsUs, r.pctGap, r.stalenessUs)).toSeq shouldBe Seq(
-        (1000L, None, None),
-        (3000L, Some(50.0), Some(2000L)))
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None    => spark.conf.unset(providerKey)
-      }
-    }
-  }
-
   test("§2.11 user reducer runs inside a STREAMING windowed aggregation") {
     import graft.operators.Reduce
     val input = MemoryStream[Ev](spark)
@@ -986,5 +958,132 @@ class StreamingSpec extends SparkSpec {
       .orderBy($"session_start")
       .collect().map(r => (r.getAs[Double]("s"), r.getAs[Long]("n")))
     out.toSeq shouldBe Seq((3.0, 2L), (3.0, 1L))
+  }
+
+  // ---- restart with OPEN state ----
+
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  private val ChangelogKey =
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+  /** The two state stores a checkpoint can hold: the HDFS-backed
+    * default, and RocksDB with changelog checkpointing as the cluster
+    * defaults set it.
+    */
+  private val stateStores: Seq[(String, Map[String, String])] = Seq(
+    "hdfs_default" -> Map.empty,
+    "rocksdb_changelog" -> Seq(ProviderKey, ChangelogKey)
+      .map(k => k -> GraftConf.clusterDefaults(k)).toMap)
+
+  /** Publishes `batches` as one parquet topic file each (strictly
+    * increasing mtimes, so a one-file-per-trigger source reads them in
+    * order) and, on each state store: drains the first `stopAfter`
+    * files on a checkpoint and stops with state still open, publishes
+    * the rest and restarts on the same checkpoint, then requires the
+    * sink to equal one uninterrupted drain of every file.
+    */
+  private def assertRestartParity(name: String, batches: Seq[DataFrame],
+      stopAfter: Int)(query: DataFrame => DataFrame): Unit = {
+    require(0 < stopAfter && stopAfter < batches.size)
+    for ((store, confs) <- stateStores) withClue(s"$name on $store: ") {
+      val prior = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val dir = Files.createTempDirectory(s"restart_${name}_$store")
+        val topic = dir.resolve("topic")
+        Files.createDirectories(topic)
+        val mtime0 = System.currentTimeMillis() - 3600000L
+        def publish(from: Int, until: Int): Unit = (from until until).foreach { i =>
+          val stage = dir.resolve(s"stage_$i")
+          batches(i).coalesce(1).write.parquet(stage.toString)
+          val part = Files.list(stage).iterator().asScala
+            .find(_.getFileName.toString.endsWith(".parquet")).get
+          val file = Files.move(part, topic.resolve(f"f$i%03d.parquet"))
+          file.toFile.setLastModified(mtime0 + i * 1000L) shouldBe true
+        }
+        def drain(tag: String): org.apache.spark.sql.streaming.StreamingQuery = {
+          val src = spark.readStream.schema(batches.head.schema)
+            .option("maxFilesPerTrigger", "1").parquet(topic.toString)
+          val q = StreamingOps.sink(query(src), "parquet",
+            Some(s"$dir/out_$tag"), s"$dir/ckpt_$tag").start()
+          q.awaitTermination()
+          q
+        }
+        def sinkRows(tag: String): Seq[String] =
+          spark.read.parquet(s"$dir/out_$tag").collect()
+            .map(_.toSeq.mkString("|")).toSeq.sorted
+
+        publish(0, stopAfter)
+        val stopped = drain("restarted")
+        stopped.recentProgress.count(_.numInputRows > 0) shouldBe stopAfter
+        // the store really is the one named: only RocksDB reports
+        // rocksdb* custom metrics
+        stopped.recentProgress.flatMap(_.stateOperators)
+          .exists(_.customMetrics.keySet().asScala.exists(_.startsWith("rocksdb"))) shouldBe
+          confs.nonEmpty
+        // the stop leaves state behind: the restart must read it back
+        stopped.recentProgress.last.stateOperators.map(_.numRowsTotal).sum should be > 0L
+        publish(stopAfter, batches.size)
+        drain("restarted")
+        drain("whole")
+        sinkRows("whole") should not be empty
+        sinkRows("restarted") shouldBe sinkRows("whole")
+      } finally prior.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+      }
+    }
+  }
+
+  test("restart with open windows: windowedAgg with the 24 option measures equals an uninterrupted run, on both state stores") {
+    import graft.operators.OptionAgg
+    val rnd = new scala.util.Random(11)
+    val t0 = ts("2024-01-01 10:00:00").getTime
+    // four event-ordered batches of two minutes each; the 1-minute grace
+    // keeps the last windows of every batch open across the stop
+    val batches = (0 until 4).map { b =>
+      (0 until 40).map { i =>
+        (new Timestamp(t0 + b * 120000L + i * 3000L + rnd.nextInt(3000)),
+          s"SYM${rnd.nextInt(3)}", Seq("buy", "sell", "no_side")(rnd.nextInt(3)),
+          Seq("put", "call")(rnd.nextInt(2)), 1L + rnd.nextInt(20),
+          Seq(100.0, 5000.25, 260000.5, 400000.0)(rnd.nextInt(4)))
+      }.toDF("ts", "osym", "side", "otype", "qty", "premium")
+    }
+    assertRestartParity("window", batches, stopAfter = 2) { src =>
+      StreamingOps.windowedAgg(src, "ts", "osym", "1 minute", "1 minute",
+        count(lit(1)).as("count") +: OptionAgg.measures())
+    }
+  }
+
+  test("restart with open dedup state: dedupWithinWatermark equals an uninterrupted run, on both state stores") {
+    val t0 = ts("2024-01-01 10:00:00").getTime
+    // batch b carries keys k<b>..k<b+2> once each, so every key recurs in
+    // the next two batches within the 30 s watermark and the first
+    // batch's row must win across the stop
+    val batches = (0 until 4).map { b =>
+      (0 until 3).map { j =>
+        Keyed(new Timestamp(t0 + (b * 10 + j) * 1000L), s"k${b + j}", s"b$b")
+      }.toDF()
+    }
+    assertRestartParity("dedup", batches, stopAfter = 2) { src =>
+      StreamingOps.dedupWithinWatermark(src, "ts", "30 seconds", Seq("k"))
+    }
+  }
+
+  test("restart with open sessions and armed timeouts: entryExitStatefulTimeout equals an uninterrupted run, on both state stores") {
+    import graft.streaming.TransEvent
+    val us = 1000000L
+    val rnd = new scala.util.Random(5)
+    // four batches 100 s apart, 90 s of events each over six users; the
+    // 60 s gap closes sessions by successor, by timeout, and across the
+    // stop
+    val batches = (0 until 4).map { b =>
+      (0 until 18).map { i =>
+        TransEvent(1L + rnd.nextInt(6), (b * 100 + i * 5) * us,
+          b * 100L + i, Seq("view", "click", "cart", "purchase")(rnd.nextInt(4)))
+      }.toDF()
+    }
+    assertRestartParity("sessions", batches, stopAfter = 2) { src =>
+      StreamingOps.entryExitStatefulTimeout(src.as[TransEvent], 60 * us).toDF()
+    }
   }
 }
