@@ -16,6 +16,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *  - per-query `passes`: ALL pass times, not just the min — a query
   *    whose passes read [16.1, 16.0] regressed; [13.3, 3.6] hit a
   *    transient (GC storm, load burst, codegen compile) on pass 1.
+  *    Each pass is one [[Instruments.noopPass]]; a failed pass reads
+  *    -1.0 here and -1 in every per-pass counter below.
   *  - per-query `gc_ms` / `gc_pause_ms` / `codegen_compiles` per
   *    pass: `gc_ms` is the summed task jvmGCTime — concurrent
   *    tasks each count the same collection, so it over-reads real
@@ -54,8 +56,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * silently replace the committed round record in the working tree.
   */
 object Bench {
-  import Instruments.{codegenCompiles, delta, flushListenerBus, gcPauseMs,
-    hostSnapshot, stealJiffies}
+  import Instruments.{delta, hostSnapshot, stealJiffies}
 
   def main(args: Array[String]): Unit = {
     // ---- explicit promotion mode: the ONLY writer of bench_out.json
@@ -97,19 +98,6 @@ object Bench {
     val spark = GraftConf.localSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
-    // ---- per-query GC attribution: one listener accumulating task
-    // jvmGCTime; snapshot deltas around each query, with the async
-    // listener bus flushed first (Instruments.flushListenerBus)
-    val gcAccum = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) { gcAccum.addAndGet(m.jvmGCTime); () }
-        }
-      })
-
     // Warmup: run the flagship once untimed so JVM/codegen/session setup
     // is not attributed to the first timed query (r2's q01 showed 17 s of
     // suite warmup vs ~3 s steady-state).
@@ -118,11 +106,6 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] warmup failed: ${e.getMessage}")
     }
-    // per-query failure COUNT, not a flat set: a query that fails one
-    // pass but succeeds another is "flaky" (valid min time, listed
-    // separately), only all-pass failures are "failed" — r6's flat set
-    // reported both a failure and a valid time for the same query
-    var failCounts = Map.empty[String, Int].withDefaultValue(0)
     // Host-load attribution (r9 verdict item 4: the driver read +31%
     // over the builder's recorded total, uniformly — environment, not
     // regression, but unprovable without data): one
@@ -140,53 +123,24 @@ object Bench {
         SparkEntry.queries.filter { case (k, _) => !benchExcluded.contains(k) }
       else SparkEntry.queries.filter { case (k, _) => args.contains(k) }
     val order = selected.keys.toSeq.sorted
-    // per-query, per-pass instrument arrays (a failed pass records
-    // elapsed -1.0 — self-documenting in the detail, excluded from min)
-    val passTimes = scala.collection.mutable.Map.empty[String,
-      scala.collection.mutable.ArrayBuffer[Double]]
-    val passGc = scala.collection.mutable.Map.empty[String,
-      scala.collection.mutable.ArrayBuffer[Long]]
-    val passGcPause = scala.collection.mutable.Map.empty[String,
-      scala.collection.mutable.ArrayBuffer[Long]]
-    val passSteal = scala.collection.mutable.Map.empty[String,
-      scala.collection.mutable.ArrayBuffer[Long]]
-    val passCodegen = scala.collection.mutable.Map.empty[String,
-      scala.collection.mutable.ArrayBuffer[Long]]
-    def buf[T](m: scala.collection.mutable.Map[String,
-        scala.collection.mutable.ArrayBuffer[T]], k: String) =
-      m.getOrElseUpdate(k, scala.collection.mutable.ArrayBuffer.empty[T])
+    // per-query passes in run order; a failed pass is None (its wall
+    // reads -1.0 and its counters -1 in the detail, excluded from min)
+    val runs = order.map(_ ->
+      scala.collection.mutable.ArrayBuffer.empty[Option[Instruments.Pass]]).toMap
+    // Each query is one Instruments.noopPass: the cache is cleared and
+    // prior garbage drained BEFORE it (so no query is timed under the
+    // accumulated heap pressure of the suite — observed 4x run-to-run
+    // swings on the dedup self-joins without — and localCheckpoint
+    // blocks, which only the ContextCleaner frees after their RDD is
+    // GC'd, do not sit in the block manager across later queries).
     def runPass(): Unit =
       order.foreach { name =>
-        val fn = selected(name)
-        flushListenerBus(spark)
-        val gc0 = gcAccum.get(); val cg0 = codegenCompiles()
-        val gp0 = gcPauseMs(); val st0 = stealJiffies()
-        val t0 = System.nanoTime()
-        var ok = true
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          failCounts += name -> (failCounts(name) + 1)
-          ok = false
-        }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        flushListenerBus(spark)
-        buf(passTimes, name) += (if (ok) elapsed else -1.0)
-        buf(passGc, name) += gcAccum.get() - gc0
-        buf(passGcPause, name) += gcPauseMs() - gp0
-        buf(passSteal, name) += delta(st0, stealJiffies())
-        buf(passCodegen, name) += delta(cg0, codegenCompiles())
-        // drop this query's persisted tables so later queries aren't
-        // timed under the accumulated heap pressure of the whole suite
-        // (observed 4x run-to-run swings on the dedup self-joins without)
-        spark.sqlContext.clearCache()
-        // clearCache only covers CacheManager entries; localCheckpoint
-        // blocks (the q26/q32 parse boundary) are freed by the
-        // ContextCleaner only after their RDD is GC'd — nudge it so the
-        // blocks don't sit in the block manager across later queries
-        // (this explicit collection runs AFTER the gc_pause snapshot,
-        // so it is attributed to no query)
-        System.gc()
+        runs(name) += (
+          try Some(Instruments.noopPass(spark)(selected(name)(spark, sfDir)))
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            None
+          })
       }
     // Per-query MIN over all full-suite passes (r6; base default 2).
     // One cold pass mixes JIT/codegen compilation into whichever
@@ -230,7 +184,7 @@ object Bench {
     // a query that failed EVERY pass has no real time — report 0 and
     // rely on the `failed` array (a sentinel would wreck the total)
     val results = order.map { name =>
-      val good = passTimes(name).filter(_ >= 0)
+      val good = runs(name).flatten.map(_.wallS)
       name -> (if (good.isEmpty) 0.0 else good.min)
     }
     // 3-decimal rounding: at 86+ queries, full-precision doubles push
@@ -241,17 +195,22 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
     val detail = order.map { name =>
+      def per(f: Instruments.Pass => Long) =
+        runs(name).map(_.fold(-1L)(f)).mkString("[", ",", "]")
       "\"" + name + "\":{\"passes\":" +
-        passTimes(name).map(r3).mkString("[", ",", "]") +
-        ",\"gc_ms\":" + passGc(name).mkString("[", ",", "]") +
-        ",\"gc_pause_ms\":" + passGcPause(name).mkString("[", ",", "]") +
-        ",\"steal\":" + passSteal(name).mkString("[", ",", "]") +
-        ",\"codegen_compiles\":" + passCodegen(name).mkString("[", ",", "]") +
+        runs(name).map(p => r3(p.fold(-1.0)(_.wallS))).mkString("[", ",", "]") +
+        ",\"gc_ms\":" + per(_.taskGcMs) +
+        ",\"gc_pause_ms\":" + per(_.gcPauseMs) +
+        ",\"steal\":" + per(_.steal) +
+        ",\"codegen_compiles\":" + per(_.compiles) +
         "}"
     }.mkString("{", ",", "}")
-    def names(p: Int => Boolean) = failCounts.toSeq.collect {
-      case (k, c) if p(c) => k
-    }.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // a query that fails one pass but succeeds another is "flaky"
+    // (valid min time, listed separately); only all-pass failures are
+    // "failed" — r6's flat set reported both a failure and a valid
+    // time for the same query
+    def names(p: Int => Boolean) = order.filter(k => p(runs(k).count(_.isEmpty)))
+      .map("\"" + _ + "\"").mkString("[", ",", "]")
     val failedJson = names(_ == totalPasses) // no pass succeeded: time is 0.0
     val flakyJson = names(c => c > 0 && c < totalPasses) // timed, not clean
     val total = results.map(_._2).sum

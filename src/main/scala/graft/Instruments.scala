@@ -6,14 +6,17 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
   SparkListenerSQLExecutionStart}
 
 /** The harnesses' instruments, in one place: host and JVM counters
   * (steal, GC pause, codegen compiles, allocation), the host snapshot,
-  * and a capture of every SQL execution an action runs. Bench,
-  * TimeQuery, StressBench and the test-scope experiments all measure
-  * through here.
+  * and a capture of every SQL execution an action runs, with each
+  * execution's final-plan census. Bench, TimeQuery, PlanAudit,
+  * StressBench and the test-scope experiments all measure through
+  * here.
   */
 object Instruments {
 
@@ -129,16 +132,73 @@ object Instruments {
 
   /** One SQL execution: the action that started it (`count`, `collect`,
     * the write's command name; empty when Spark names none), its wall,
-    * the jobs and tasks it ran, summed task wall, and the final
+    * the jobs and tasks it ran, summed task wall, the final
     * executed-plan string (AQE's final plan, `skew=true` joins
-    * included).
+    * included), that plan's node census ([[censusWithFinal]]) and
+    * whether every adaptive plan in it was final.
     */
   final case class Execution(action: String, wallS: Double, jobs: Int,
-      tasks: Int, taskS: Double, plan: String)
+      tasks: Int, taskS: Double, plan: String, census: Map[String, Int],
+      finalized: Boolean)
+
+  /** Per-class node counts over the FINALIZED tree: every
+    * AdaptiveSparkPlanExec contributes its executedPlan (the final
+    * plan), never its initial one; expression subqueries (scalar /
+    * IN-subquery plans) are walked too. The second element is the
+    * finalized flag, derived from the SAME adaptive nodes the walk
+    * visits (ADVICE r12): a `root.collect` traverses only `children`,
+    * so an un-finalized adaptive plan nested inside a cached
+    * relation's plan or an expression subquery — exactly the trees
+    * this walk deliberately descends — could never flip a
+    * collect-based flag to false, letting it read true vacuously.
+    *
+    * Counts come from walking the tree, not from a substring census of
+    * the printed plan: the printed form emits the '== Initial Plan =='
+    * subtree next to the final one, so a string census sums
+    * final+initial and reports operators that exist only in the
+    * discarded initial plan.
+    */
+  private[graft] def censusWithFinal(
+      root: SparkPlan): (Map[String, Int], Boolean) = {
+    val counts = scala.collection.mutable.Map.empty[String, Int]
+      .withDefaultValue(0)
+    var allFinal = true
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    def walk(p: SparkPlan): Unit = {
+      if (!seen.add(p)) return // reused subtrees count once
+      val q = p match {
+        case a: AdaptiveSparkPlanExec =>
+          if (!a.toString.linesIterator.next().contains("isFinalPlan=true"))
+            allFinal = false
+          a.executedPlan
+        case other => other
+      }
+      if (!(q eq p) && !seen.add(q)) return
+      counts(q.getClass.getSimpleName) += 1
+      q.subqueries.foreach(walk)
+      q.children.foreach(walk)
+      // query stages are LeafExecNodes holding their materialized
+      // plan OUTSIDE `children` — descend explicitly or an AQE plan's
+      // census would see only the stage wrappers
+      q match {
+        case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+          walk(qs.plan)
+        // queries whose builders persist their result (the
+        // materializeAndRelease discipline) execute as a cache scan —
+        // the real operator tree lives in the relation's cached plan
+        case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+          walk(im.relation.cachedPlan)
+        case _ => ()
+      }
+    }
+    walk(root)
+    (counts.toMap, allFinal)
+  }
 
   private final class Acc(val startMs: Long) {
     var action = ""; var wallS = 0.0; var jobs = 0; var tasks = 0
-    var taskMs = 0L; var plan = ""
+    var taskMs = 0L; var qe: QueryExecution = null
   }
 
   // the end event's executionName and qe are private[sql] vars with
@@ -149,11 +209,15 @@ object Instruments {
 
   /** Listener half of [[executions]]: executions are keyed by id in
     * start order, and jobs/tasks are attributed through the job's
-    * `spark.sql.execution.id` property.
+    * `spark.sql.execution.id` property. Every ended task's `jvmGCTime`
+    * is summed whether or not an execution claims it. The bus thread
+    * only keeps each execution's QueryExecution; its plan string and
+    * census are computed in [[result]], after the measured action.
     */
   private final class Capture extends SparkListener {
     private val byId = mutable.LinkedHashMap.empty[Long, Acc]
     private val stageExec = mutable.Map.empty[Int, Acc]
+    private var gcMs = 0L
 
     override def onOtherEvent(e: SparkListenerEvent): Unit = synchronized {
       e match {
@@ -166,10 +230,9 @@ object Instruments {
               case Some(n: String) => n
               case _ => ""
             }
-            a.plan = endField(d, "qe") match {
-              case qe: org.apache.spark.sql.execution.QueryExecution =>
-                try qe.executedPlan.toString catch { case _: Throwable => "" }
-              case _ => ""
+            a.qe = endField(d, "qe") match {
+              case qe: QueryExecution => qe
+              case _ => null
             }
           }
         case _ =>
@@ -187,26 +250,35 @@ object Instruments {
     }
 
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      if (e.taskMetrics != null) gcMs += e.taskMetrics.jvmGCTime
       stageExec.get(e.stageId).foreach { a =>
         a.tasks += 1
         a.taskMs += e.taskInfo.duration
       }
     }
 
+    /** Summed `jvmGCTime` of every task that ended in the window. */
+    def taskGcMs: Long = synchronized(gcMs)
+
     def result: Seq[Execution] = synchronized {
-      byId.values.map(a =>
-        Execution(a.action, a.wallS, a.jobs, a.tasks, a.taskMs / 1e3, a.plan))
-        .toSeq
+      byId.values.map { a =>
+        val (plan, census, finalized) =
+          try { // a null qe (the end event's field moved) lands in catch
+            val p = a.qe.executedPlan
+            val (c, f) = censusWithFinal(p)
+            (p.toString, c, f)
+          } catch { case _: Throwable => ("", Map.empty[String, Int], false) }
+        Execution(a.action, a.wallS, a.jobs, a.tasks, a.taskMs / 1e3, plan,
+          census, finalized)
+      }.toSeq
     }
   }
 
-  /** Run `action` and capture every SQL execution that starts inside
-    * it — builder-side `count()`s, checkpoints and the final write
-    * alike — in start order. The bus is flushed before the window opens
-    * (an earlier action's late events stay out) and after it closes
-    * (this action's own events are all delivered).
+  /** Open a capture around `action`. The bus is flushed before the
+    * window opens (an earlier action's late events stay out) and after
+    * it closes (this action's own events are all delivered).
     */
-  def executions[T](spark: SparkSession)(action: => T): (T, Seq[Execution]) = {
+  private def window[T](spark: SparkSession)(action: => T): (T, Capture) = {
     val sc = spark.sparkContext
     flushListenerBus(spark)
     val capture = new Capture
@@ -214,13 +286,27 @@ object Instruments {
     try {
       val result = action
       flushListenerBus(spark)
-      (result, capture.result)
+      (result, capture)
     } finally sc.removeSparkListener(capture)
   }
 
-  /** One isolated noop-sink pass: wall, counter deltas and executions. */
-  final case class Pass(wallS: Double, gcPauseMs: Long, allocMb: Double,
-      steal: Long, compiles: Long, executions: Seq[Execution]) {
+  /** Run `action` and capture every SQL execution that starts inside
+    * it — builder-side `count()`s, checkpoints and the final write
+    * alike — in start order.
+    */
+  def executions[T](spark: SparkSession)(action: => T): (T, Seq[Execution]) = {
+    val (result, capture) = window(spark)(action)
+    (result, capture.result)
+  }
+
+  /** One isolated noop-sink pass: wall, counter deltas, the summed
+    * task `jvmGCTime` (concurrent tasks each count the same collection,
+    * so it over-reads pause time by up to the task-slot count; it is an
+    * allocation-pressure signal) and the executions.
+    */
+  final case class Pass(wallS: Double, gcPauseMs: Long, taskGcMs: Long,
+      allocMb: Double, steal: Long, compiles: Long,
+      executions: Seq[Execution]) {
 
     /** Pass wall outside every SQL execution: plan building, driver-side
       * work and the waits between jobs.
@@ -236,14 +322,15 @@ object Instruments {
   def noopPass(spark: SparkSession)(build: => DataFrame): Pass = {
     spark.catalog.clearCache()
     System.gc()
-    val (pass, execs) = executions(spark) {
+    val (pass, capture) = window(spark) {
       val g0 = gcPauseMs(); val a0 = allocMb(); val s0 = stealJiffies()
       val c0 = codegenCompiles()
       val t0 = System.nanoTime()
       build.write.format("noop").mode("overwrite").save()
-      Pass((System.nanoTime() - t0) / 1e9, gcPauseMs() - g0, allocMb() - a0,
-        delta(s0, stealJiffies()), delta(c0, codegenCompiles()), Nil)
+      Pass((System.nanoTime() - t0) / 1e9, gcPauseMs() - g0, 0L,
+        allocMb() - a0, delta(s0, stealJiffies()),
+        delta(c0, codegenCompiles()), Nil)
     }
-    pass.copy(executions = execs)
+    pass.copy(taskGcMs = capture.taskGcMs, executions = capture.result)
   }
 }

@@ -173,7 +173,7 @@ object StreamBench {
     require(nf % 4 == 0,
       s"SPARK_GRAFT_STREAM_FACE_ROWS must be divisible by 4: $nf")
     val faceGapUs = 1000000L // 1 s session gap: cold entities churn
-    def writeFaceTopic(rows: Long, path: String): Unit =
+    def writeFaceTopic(rows: Long, path: String): Unit = {
       spark.range(rows).select(
           when(col("id") % 10 < 9, lit(0L))
             .otherwise(col("id") % 10000).as("user"),
@@ -184,6 +184,18 @@ object StreamBench {
             (col("id") % 4 + 1).cast("int")).as("etype"))
         .repartitionByRange(16, col("tsUs")).sortWithinPartitions(col("tsUs"))
         .write.mode("overwrite").parquet(path)
+      // FileStreamSource takes files in mtime order, and the parallel
+      // write tasks leave racing mtimes: stamp the range files in part
+      // (= tsUs) order so the micro-batches, and the watermark-driven
+      // timeout flushes, are the same on every run
+      val parts = new java.io.File(path).listFiles()
+        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+      val mtime0 = System.currentTimeMillis() - parts.length * 1000L
+      parts.zipWithIndex.foreach { case (p, i) =>
+        require(p.setLastModified(mtime0 + i * 1000L),
+          s"cannot set the mtime of $p")
+      }
+    }
     val faceTopic = s"$dir/face_topic"
     writeFaceTopic(nf, faceTopic)
 
@@ -212,10 +224,9 @@ object StreamBench {
             // The grace deliberately covers the whole topic span
             // (rows ms of event time + slack, SCALED with the row knob —
             // a fixed grace would silently re-break past span > grace):
-            // FileStreamSource's pickup order is not time order (mtime
-            // ties across the range-partitioned files — observed 25%
-            // late-dropped under a 10 s grace, breaking the closed
-            // form), and the face's job is throughput + the
+            // the closed form must hold on any FileStreamSource pickup
+            // order (with racing file mtimes a 10 s grace late-dropped
+            // 25%), and the face's job is throughput + the
             // exactly-once closed form; watermark EVICTION mechanics
             // are pinned by StreamingSpec's dedup spec. State is
             // key-count-bounded (nf/4), 4x below input.

@@ -9,10 +9,9 @@ object Verify {
     // subset (local iteration); the driver passes exactly two args.
     val sfDir = args(0); val outDir = args(1)
     val subset = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // the shared harness session (GraftConf) so the correctness gate
     // runs the same optimizer configuration as Bench and the specs
-    val spark = GraftConf.localSession(cpus)
+    val spark = GraftConf.localSession(GraftConf.hostCpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Preflight: one line per table with the PHYSICAL schema Spark sees,

@@ -33,6 +33,24 @@ object Scale {
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
 
+  /** The bloom joins' predicate: `xxhash64(factKey)` might be among
+    * `keys`' `xxhash64(keyCol)` (see [[bloomPrunedSemiJoin]]).
+    */
+  private def bloomMightContain(factKey: String, keys: DataFrame,
+                                keyCol: String, expectedKeys: Long,
+                                fpp: Double): Column = {
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+    import org.apache.spark.sql.GraftColumnBridge
+    val bf = keys.select(xxhash64(col(keyCol)).as("__h"))
+      .stat.bloomFilter("__h", expectedKeys, fpp)
+    val bos = new java.io.ByteArrayOutputStream()
+    bf.writeTo(bos)
+    GraftColumnBridge.column(BloomFilterMightContain(
+      Literal(bos.toByteArray,
+        org.apache.spark.sql.types.BinaryType),
+      GraftColumnBridge.expression(xxhash64(col(factKey)))))
+  }
+
   /** Bloom-pruned semi-join — the 100 TB shape for "keep fact rows
     * whose key appears in a key set" when the key set is too large to
     * make its hash-join cheap but its BLOOM FILTER fits in memory
@@ -57,17 +75,7 @@ object Scale {
                           keys: DataFrame, keyCol: String,
                           expectedKeys: Long,
                           fpp: Double = 0.01): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.GraftColumnBridge
-    val bf = keys.select(xxhash64(col(keyCol)).as("__h"))
-      .stat.bloomFilter("__h", expectedKeys, fpp)
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    val might = GraftColumnBridge.column(BloomFilterMightContain(
-      Literal(bos.toByteArray,
-        org.apache.spark.sql.types.BinaryType),
-      GraftColumnBridge.expression(xxhash64(col(factKey)))))
-    fact.filter(might)
+    fact.filter(bloomMightContain(factKey, keys, keyCol, expectedKeys, fpp))
       .join(keys.select(col(keyCol).as(factKey)).distinct(),
         Seq(factKey), "left_semi")
   }
@@ -115,16 +123,7 @@ object Scale {
                           keys: DataFrame, keyCol: String,
                           expectedKeys: Long,
                           fpp: Double = 0.01): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.GraftColumnBridge
-    val bf = keys.select(xxhash64(col(keyCol)).as("__h"))
-      .stat.bloomFilter("__h", expectedKeys, fpp)
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    val might = GraftColumnBridge.column(BloomFilterMightContain(
-      Literal(bos.toByteArray,
-        org.apache.spark.sql.types.BinaryType),
-      GraftColumnBridge.expression(xxhash64(col(factKey)))))
+    val might = bloomMightContain(factKey, keys, keyCol, expectedKeys, fpp)
     val definitelyNew = fact.filter(!might)
     val maybe = fact.filter(might)
       .join(keys.select(col(keyCol).as(factKey)).distinct(),

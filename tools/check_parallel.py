@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
 """Resumable, parallel DuckDB oracle gate (VERDICT r10 item 1).
 
-Same compare semantics as tools/check.py, restructured so the (formerly multi-hour, now ~11-minute: blocked twins + per-query clearCache) full
-sf0.1 run survives being killed:
+The compare is tools/check.py's own `check_query`, run so that the
+(formerly multi-hour, now ~11-minute: blocked twins + per-query
+clearCache) full sf0.1 run survives being killed:
 
   - every completed query appends ONE JSONL line (fsync'd) to
     <outDir>/check_progress.jsonl — a relaunch skips recorded queries,
@@ -20,8 +21,13 @@ sf0.1 run survives being killed:
 Usage:
   python3 tools/check_parallel.py <sfDir> <verifyOutDir> <artifact>
       [--workers N] [--threads T] [--only q1 q2 ...]
+
+--workers/--threads default to the host's cores: up to 6 workers, and
+workers x threads <= cores.
 """
 import sys, json, glob, os, argparse, hashlib, multiprocessing as mp
+
+import check
 
 # DuckDB-side cost class, from observed sf0.1 runs: all-pairs /
 # recursive twins run minutes-to-an-hour; everything else runs seconds.
@@ -32,18 +38,12 @@ HEAVY_FIRST = [
     "q102", "q121", "q12", "q13", "q24", "q25", "q37", "q206",
 ]
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
-
 _worker_state = {}
 
 
 def _init_worker(sf_dir, out_dir, threads):
-    import duckdb
-    con = duckdb.connect()
+    con = check.connect(sf_dir)
     con.sql(f"SET threads TO {threads}")
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         _worker_state["oracles"] = json.load(f)
     _worker_state["con"] = con
@@ -52,61 +52,14 @@ def _init_worker(sf_dir, out_dir, threads):
 
 def _check_one(name):
     import time
-    import pyarrow.parquet as pq
-    import pandas as pd
-    con = _worker_state["con"]
-    oracles = _worker_state["oracles"]
-    out_dir = _worker_state["out_dir"]
     t0 = time.time()
     try:
-        files = glob.glob(os.path.join(out_dir, name, "*.parquet"))
-        spark_df = pd.concat([pq.read_table(f).to_pandas() for f in files])
-        if name not in oracles:
-            entry = {"rows": len(spark_df), "check": "rows-only",
-                     "ok": len(spark_df) > 0}
-            return name, entry, time.time() - t0
-        try:
-            oracle_df = con.sql(oracles[name]).df()
-        except Exception as e:
-            return name, {"ok": False, "err": f"oracle: {e}"}, time.time() - t0
-        s = spark_df[sorted(spark_df.columns)].reset_index(drop=True)
-        o = oracle_df[sorted(oracle_df.columns)].reset_index(drop=True)
-        entry = {"spark_rows": len(s), "oracle_rows": len(o),
-                 "cols_match": list(s.columns) == list(o.columns)}
-        if not entry["cols_match"]:
-            entry["spark_cols"] = list(s.columns)
-            entry["oracle_cols"] = list(o.columns)
-            entry["ok"] = False
-        elif len(s) != len(o):
-            entry["ok"] = False
-        else:
-            mismatches = {}
-            for c in s.columns:
-                a, b = s[c], o[c]
-                try:
-                    # normalize timestamp unit (Spark parquet read gives
-                    # ns, DuckDB us) — the driver's compare does the same
-                    if str(a.dtype).startswith("datetime64"):
-                        a = a.astype("datetime64[us]")
-                    if str(b.dtype).startswith("datetime64"):
-                        b = b.astype("datetime64[us]")
-                    if a.dtype != b.dtype:
-                        mismatches[c] = f"dtype {a.dtype} vs {b.dtype}"
-                        continue
-                    eq = (a == b) | (a.isna() & b.isna())
-                    if not eq.all():
-                        idx = (~eq).idxmax()
-                        mismatches[c] = (
-                            f"{int((~eq).sum())} diffs, first@{idx}: "
-                            f"{a[idx]!r} vs {b[idx]!r}")
-                except Exception as e:
-                    mismatches[c] = f"cmp error: {e}"
-            entry["ok"] = not mismatches
-            if mismatches:
-                entry["mismatches"] = mismatches
-        return name, entry, time.time() - t0
+        entry = check.check_query(_worker_state["con"],
+                                  _worker_state["oracles"],
+                                  _worker_state["out_dir"], name)
     except Exception as e:
-        return name, {"ok": False, "err": f"worker: {e}"}, time.time() - t0
+        entry = {"ok": False, "err": f"worker: {e}"}
+    return name, entry, time.time() - t0
 
 
 def _oracle_md5(oracles, name):
@@ -141,10 +94,15 @@ def main():
     ap.add_argument("sf_dir")
     ap.add_argument("out_dir")
     ap.add_argument("artifact")
-    ap.add_argument("--workers", type=int, default=6)
-    ap.add_argument("--threads", type=int, default=5)
+    ap.add_argument("--workers", type=int, default=None)
+    ap.add_argument("--threads", type=int, default=None)
     ap.add_argument("--only", nargs="*", default=None)
     args = ap.parse_args()
+    # unset sizes come from the host: up to 6 workers, two cores each
+    # where the host has them (6 x 5 on 32 cores, 2 x 2 on 4)
+    cores = len(os.sched_getaffinity(0))
+    args.workers = args.workers or max(1, min(6, cores // 2))
+    args.threads = args.threads or max(1, cores // args.workers)
 
     names = sorted(n for n in os.listdir(args.out_dir)
                    if os.path.isdir(os.path.join(args.out_dir, n)))

@@ -7,7 +7,7 @@
 #
 # Artifact lineage: CHECK_SF01_100q/129q/145q/173q.json are historical
 # prefixes of the growing suite; each full-suite artifact supersedes
-# the previous. The current artifact is CHECK_SF01_217q_r12.json.
+# the previous. The current artifact is CHECK_SF01_217q.json.
 #
 # Staleness (ADVICE r11): check_parallel.py stamps every progress line
 # with the twin SQL's md5 AND the query dump's newest parquet mtime —
@@ -17,11 +17,12 @@
 # the same outDir) BEFORE resuming, or the stale dump itself — not the
 # verdict — is what gets re-checked.
 set -u
-cd /root/repo
-ART=${1:-/root/repo/CHECK_SF01_217q_r12.json}
+cd "$(dirname "$0")/.."
+ART=${1:-$PWD/CHECK_SF01_217q.json}
 OUT=${2:-/tmp/verify_sf01_r12}
-WORKERS=${3:-6}
-THREADS=${4:-5}
+# DuckDB pool: check_parallel.py sizes unset workers/threads from the
+# host's cores (workers x threads <= cores)
+POOL="${3:+--workers $3} ${4:+--threads $4}"
 # Reuse an existing dump (resume case: the Spark phase is cheap but
 # re-dumping would orphan the progress JSONL's row counts).
 # Cores and heap come from the host, as in the tier-1 test command:
@@ -39,5 +40,5 @@ if [ ! -f "$OUT/oracle_sql.json" ]; then
   fi
 fi
 python3 tools/check_parallel.py /root/testdata/sf0.1 "$OUT" "$ART" \
-  --workers "$WORKERS" --threads "$THREADS" 2>/tmp/sf01_check.err
+  $POOL 2>/tmp/sf01_check.err
 tail -1 "$ART" 2>/dev/null
