@@ -849,11 +849,9 @@ object StressBench {
     * named the q204/q209/q216 shapes): a power-law CUSTKEY on the
     * orders⋈customer join — the q209 (TPC-H Q10) sub-shape, INNER, so
     * AQE's skew split applies to the fat orders side. One hot
-    * customer owns `copies−1` cloned orders whose orderkeys are
-    * xxhash-scrambled (COUNT semantics don't need them unique, and
-    * random 64-bit keys make the shuffle bytes incompressible — the
-    * fact_join_skew_aqe lesson). Closed form: per-customer order
-    * counts = base, plus (copies−1)·hotOrders on the hot key.
+    * customer owns `copies−1` cloned orders with offset-unique
+    * orderkeys ([[hotKeySkewAqe]]). Closed form: per-segment order
+    * counts and key sums = base, plus the clones on the hot segment.
     *
     * Two deliberate non-goals, both structural lessons the engine's
     * queries already encode: (a) the OUTER q204 (Q13) shape is not
@@ -870,64 +868,12 @@ object StressBench {
     * different-key rollup stressed here is the shape where AQE is
     * the escape, and it must engage.
     */
-  private def custkeySkewAqe(s: SparkSession, sfDir: String): String = {
-    val copies = sys.env.getOrElse("SPARK_GRAFT_STRESS_CUST_COPIES",
-      "8000").toInt
-    val o = Tables.orders(s, sfDir).select("o_custkey", "o_orderkey")
-    val c = Tables.customer(s, sfDir).select("c_custkey", "c_mktsegment")
-    val hotKey = o.groupBy("o_custkey").count()
-      .orderBy(col("count").desc, col("o_custkey")).head().getLong(0)
-    val hotOrders = o.filter(col("o_custkey") === hotKey)
-    // clone orderkeys are offset-unique (key + (k+1)·keyOffset): the
-    // aggregate SUMS them (exact decimal), which (a) keeps the
-    // orderkey column alive through column pruning so the join
-    // shuffle ships varied bytes — a constant-custkey-only row
-    // compresses to nothing and the byte-based detector never fires
-    // (the fact_join_skew_aqe lesson, repeated by the pruner) — and
-    // (b) stays driver-computable in closed form.
-    val keyOffset =
-      o.agg(max("o_orderkey")).head().getLong(0) + 1L
-    val skewed = o.unionByName(
-      hotOrders.crossJoin(s.range(copies - 1).select(col("id").as("__k")))
-        .withColumn("o_orderkey",
-          col("o_orderkey") + (col("__k") + lit(1L)) * lit(keyOffset))
-        .drop("__k"))
-
-    def counts(ords: org.apache.spark.sql.DataFrame) = ords
-      .join(c, col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(col("o_orderkey").cast("decimal(38,0)")).as("sum_keys"))
-    def collectMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getString(0) ->
-        (r.getLong(1), BigInt(r.getDecimal(2).toBigInteger))).toMap
-
-    val base = collectMap(counts(o))
-    val hotSeg = c.filter(col("c_custkey") === hotKey)
-      .head().getString(1)
-    val hotAgg = hotOrders.agg(count(lit(1)),
-      sum(col("o_orderkey").cast("decimal(38,0)"))).head()
-    val nHot = hotAgg.getLong(0)
-    val hotSum = BigInt(hotAgg.getDecimal(1).toBigInteger)
-    // Σ_clones key = (copies−1)·hotSum + nHot·keyOffset·Σ_{j=1}^{copies−1} j
-    val cloneSum = hotSum * (copies - 1) +
-      BigInt(nHot) * BigInt(keyOffset) *
-        (BigInt(copies - 1) * BigInt(copies) / 2)
-    val (bn, bs) = base.getOrElse(hotSeg, (0L, BigInt(0)))
-    val expected = base +
-      (hotSeg -> (bn + (copies - 1L) * nHot, bs + cloneSum))
-
-    val ((resOff, secsOff, skewOff), (resOn, secsOn, skewOn)) =
-      skewProbe(s)(collectMap(counts(skewed)))
-    val ok = resOn == resOff && resOn == expected && skewOn && !skewOff
-    s""""custkey_skew_aqe":{"hot_custkey":$hotKey,"copies":$copies,""" +
-      s""""hot_orders":$nHot,"customers":${expected.size},""" +
-      s""""secs_skew_off":${r3(secsOff)},"secs_skew_on":${r3(secsOn)},""" +
-      s""""results_match_off":${resOff == expected},""" +
-      s""""results_match_on":${resOn == expected},""" +
-      s""""skew_split_seen_off":$skewOff,"skew_split_seen_on":$skewOn,""" +
-      s""""ok":$ok}"""
-  }
+  private def custkeySkewAqe(s: SparkSession, sfDir: String): String =
+    hotKeySkewAqe(s, "custkey_skew_aqe",
+      sys.env.getOrElse("SPARK_GRAFT_STRESS_CUST_COPIES", "8000").toInt,
+      Tables.orders(s, sfDir).select("o_custkey", "o_orderkey"),
+      Tables.customer(s, sfDir).select("c_custkey", "c_mktsegment"),
+      ("hot_custkey", "hot_orders", "customers"))
 
   /** Third face of the fact×fact skew family: a power-law SUPPKEY on
     * the lineitem⋈supplier join — the q208 (TPC-H Q9) sub-shape, the
@@ -937,60 +883,75 @@ object StressBench {
     * on suppkey, and one whale supplier serializes a reducer unless
     * AQE's splitter engages. The rollup key is the NATION (25 values
     * ≠ the join key) — the fat-join-then-different-key shape where
-    * the splitter is the legitimate escape. Both column-level lessons
-    * from custkey_skew_aqe apply verbatim: the aggregate SUMS the
-    * orderkey column (exact decimal) so column pruning leaves varied,
-    * incompressible shuffle bytes for the byte-based detector, and
-    * clone orderkeys are offset-unique so Σ keys has a
-    * driver-computable closed form. Assertions: skew=true present
-    * with skew-join ON and absent OFF, per-nation results identical
-    * across both runs, and both equal the closed form
-    * base + (copies−1)·hot over counts AND exact key sums.
+    * the splitter is the legitimate escape. Same face as
+    * custkey_skew_aqe ([[hotKeySkewAqe]]): skew=true present with
+    * skew-join ON and absent OFF, per-nation results identical across
+    * both runs, and both equal the closed form.
     */
-  private def suppkeySkewAqe(s: SparkSession, sfDir: String): String = {
-    val copies = sys.env.getOrElse("SPARK_GRAFT_STRESS_SUPP_COPIES",
-      "1000").toInt
-    val li = Tables.lineitem(s, sfDir).select("l_suppkey", "l_orderkey")
-    val supp = Tables.supplier(s, sfDir).select("s_suppkey", "s_nationkey")
-    val hotKey = li.groupBy("l_suppkey").count()
-      .orderBy(col("count").desc, col("l_suppkey")).head().getLong(0)
-    val hotLines = li.filter(col("l_suppkey") === hotKey)
-    val keyOffset = li.agg(max("l_orderkey")).head().getLong(0) + 1L
-    val skewed = li.unionByName(
-      hotLines.crossJoin(s.range(copies - 1).select(col("id").as("__k")))
-        .withColumn("l_orderkey",
-          col("l_orderkey") + (col("__k") + lit(1L)) * lit(keyOffset))
+  private def suppkeySkewAqe(s: SparkSession, sfDir: String): String =
+    hotKeySkewAqe(s, "suppkey_skew_aqe",
+      sys.env.getOrElse("SPARK_GRAFT_STRESS_SUPP_COPIES", "1000").toInt,
+      Tables.lineitem(s, sfDir).select("l_suppkey", "l_orderkey"),
+      Tables.supplier(s, sfDir).select("s_suppkey", "s_nationkey"),
+      ("hot_suppkey", "hot_lines", "nations"))
+
+  /** The hot-key skew face under custkey_skew_aqe and suppkey_skew_aqe:
+    * `fact` is (join key, orderkey), `dim` is (join key, rollup key).
+    * The busiest fact key's rows get `copies−1` clones whose orderkeys
+    * are offset-unique (key + (k+1)·keyOffset): the aggregate SUMS them
+    * (exact decimal), which (a) keeps the orderkey column alive through
+    * column pruning so the join shuffle ships varied bytes — a
+    * constant-key-only row compresses to nothing and the byte-based
+    * detector never fires (the fact_join_skew_aqe lesson, repeated by
+    * the pruner) — and (b) stays driver-computable in closed form. The
+    * skewed fact joins `dim` and rolls up by the rollup key; both
+    * skewProbe runs must equal base + (copies−1)·hot over counts and
+    * exact key sums. `fields` names the JSON's hot-key, hot-row and
+    * group-count members, in that order.
+    */
+  private def hotKeySkewAqe(s: SparkSession, name: String, copies: Int,
+      fact: DataFrame, dim: DataFrame, fields: (String, String, String)): String = {
+    val Array(factKey, orderKey) = fact.columns
+    val Array(dimKey, groupKey) = dim.columns
+    val hotKey = fact.groupBy(factKey).count()
+      .orderBy(col("count").desc, col(factKey)).head().getLong(0)
+    val hotRows = fact.filter(col(factKey) === hotKey)
+    val keyOffset = fact.agg(max(orderKey)).head().getLong(0) + 1L
+    val skewed = fact.unionByName(
+      hotRows.crossJoin(s.range(copies - 1).select(col("id").as("__k")))
+        .withColumn(orderKey,
+          col(orderKey) + (col("__k") + lit(1L)) * lit(keyOffset))
         .drop("__k"))
 
-    def rollup(lines: DataFrame) = lines
-      .join(supp, col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("s_nationkey"))
-      .agg(count(lit(1)).as("n_lines"),
-        sum(col("l_orderkey").cast("decimal(38,0)")).as("sum_keys"))
+    def rollup(rows: DataFrame) = rows
+      .join(dim, col(factKey) === col(dimKey))
+      .groupBy(col(groupKey))
+      .agg(count(lit(1)).as("n_rows"),
+        sum(col(orderKey).cast("decimal(38,0)")).as("sum_keys"))
     def collectMap(df: DataFrame) =
-      df.collect().map(r => r.getInt(0) ->
+      df.collect().map(r => r.get(0) ->
         (r.getLong(1), BigInt(r.getDecimal(2).toBigInteger))).toMap
 
-    val base = collectMap(rollup(li))
-    val hotNation = supp.filter(col("s_suppkey") === hotKey)
-      .head().getInt(1)
-    val hotAgg = hotLines.agg(count(lit(1)),
-      sum(col("l_orderkey").cast("decimal(38,0)"))).head()
+    val base = collectMap(rollup(fact))
+    val hotGroup = dim.filter(col(dimKey) === hotKey).head().get(1)
+    val hotAgg = hotRows.agg(count(lit(1)),
+      sum(col(orderKey).cast("decimal(38,0)"))).head()
     val nHot = hotAgg.getLong(0)
     val hotSum = BigInt(hotAgg.getDecimal(1).toBigInteger)
     // Σ_clones key = (copies−1)·hotSum + nHot·keyOffset·Σ_{j=1}^{copies−1} j
     val cloneSum = hotSum * (copies - 1) +
       BigInt(nHot) * BigInt(keyOffset) *
         (BigInt(copies - 1) * BigInt(copies) / 2)
-    val (bn, bs) = base.getOrElse(hotNation, (0L, BigInt(0)))
+    val (bn, bs) = base.getOrElse(hotGroup, (0L, BigInt(0)))
     val expected = base +
-      (hotNation -> (bn + (copies - 1L) * nHot, bs + cloneSum))
+      (hotGroup -> (bn + (copies - 1L) * nHot, bs + cloneSum))
 
     val ((resOff, secsOff, skewOff), (resOn, secsOn, skewOn)) =
       skewProbe(s)(collectMap(rollup(skewed)))
     val ok = resOn == resOff && resOn == expected && skewOn && !skewOff
-    s""""suppkey_skew_aqe":{"hot_suppkey":$hotKey,"copies":$copies,""" +
-      s""""hot_lines":$nHot,"nations":${expected.size},""" +
+    val (hotKeyField, hotRowsField, groupsField) = fields
+    s""""$name":{"$hotKeyField":$hotKey,"copies":$copies,""" +
+      s""""$hotRowsField":$nHot,"$groupsField":${expected.size},""" +
       s""""secs_skew_off":${r3(secsOff)},"secs_skew_on":${r3(secsOn)},""" +
       s""""results_match_off":${resOff == expected},""" +
       s""""results_match_on":${resOn == expected},""" +

@@ -1,7 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.InternalRow
@@ -21,8 +21,8 @@ import org.apache.spark.sql.types._
   * out ×k and then pays TWO exchanges (the (vec_id, cluster) aggregate
   * and the per-vec argmin window, the latter with a sort) per Lloyd
   * iteration. Here the centroid matrix is a `references[]` constant
-  * (k·dim longs — 4 KB at q121's k=8, dim=64), each vector element is
-  * read once per cluster inside whole-stage codegen, and assignment
+  * (k·dim longs — 4 KB at q121's k=8, dim=64) passed to one kernel
+  * call, each vector element is read once per cluster, and assignment
   * needs NO shuffle at all — the 100 TB shape: corpus rows never fan
   * out and never land in a sorter.
   *
@@ -30,9 +30,10 @@ import org.apache.spark.sql.types._
   *
   *  - arithmetic is [[SumSqDiffAgg]]'s: one long subtract, exact
   *    128-bit square via Math.multiplyHigh, the same carry add held
-  *    in two local longs (generated code has no buffer object); `d2`
-  *    is emitted through the same [[WideSums.decimal38]] conversion,
-  *    one Decimal per row, the only allocation on the path.
+  *    in two local longs (the kernel has no buffer object); `d2` is
+  *    emitted through the same [[WideSums.decimal38]] conversion, one
+  *    Decimal per row; with the result row, the only allocation on
+  *    the path.
   *  - a null vector element, or a null centroid coordinate, skips that
   *    term (null xi or ci made sumSqDiff skip the row).
   *  - a cluster is a CANDIDATE iff min(len(vec), dims(cluster)) ≥ 1 —
@@ -68,8 +69,46 @@ case class KMeansAssignExpr(
       s"$prettyName requires array<bigint> (quantized coordinates), got ${other.sql}")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val vec = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    KMeansAssignExpr.assign(input.asInstanceOf[ArrayData], cent, centNull)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val centRef = ctx.addReferenceObj("kmCent", cent, "long[][]")
+    val nullRef = ctx.addReferenceObj("kmCentNull", centNull, "boolean[][]")
+    nullSafeCodeGen(ctx, ev, vec =>
+      s"""${ev.value} = ${moduleRef(KMeansAssignExpr)}.assign($vec, $centRef, $nullRef);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): KMeansAssignExpr =
+    copy(child = newChild)
+
+  // case-class equality over Array fields is reference identity, which
+  // would make two contents-identical instances never semanticEquals
+  // (defeating canonicalization/subexpression elimination). Compare by
+  // contents instead — the arrays are never mutated after construction
+  // (the Lloyd loop builds fresh arrays each round). (ADVICE r15)
+  override def equals(other: Any): Boolean = other match {
+    case o: KMeansAssignExpr =>
+      child == o.child &&
+        java.util.Arrays.deepEquals(
+          cent.asInstanceOf[Array[AnyRef]], o.cent.asInstanceOf[Array[AnyRef]]) &&
+        java.util.Arrays.deepEquals(
+          centNull.asInstanceOf[Array[AnyRef]], o.centNull.asInstanceOf[Array[AnyRef]])
+    case _ => false
+  }
+  override def hashCode(): Int =
+    31 * (31 * child.hashCode() +
+      java.util.Arrays.deepHashCode(cent.asInstanceOf[Array[AnyRef]])) +
+      java.util.Arrays.deepHashCode(centNull.asInstanceOf[Array[AnyRef]])
+}
+
+object KMeansAssignExpr {
+
+  /** The one assignment loop: interpreted evaluation and generated
+    * code both call it. Null when the vector has no candidate cluster. */
+  def assign(
+      vec: ArrayData, cent: Array[Array[Long]], centNull: Array[Array[Boolean]]): InternalRow = {
     val len = vec.numElements()
     var any = false
     var bc = 0L
@@ -115,102 +154,7 @@ case class KMeansAssignExpr(
       val fields = new Array[Any](2)
       fields(0) = bc
       fields(1) = if (bNull) null else WideSums.decimal38(bHi, bLo)
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(fields)
+      new GenericInternalRow(fields)
     }
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centRef = ctx.addReferenceObj("kmCent", cent, "long[][]")
-    val nullRef = ctx.addReferenceObj("kmCentNull", centNull, "boolean[][]")
-    val helper = WideSums.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, vec => {
-      val cm = ctx.freshName("cm")
-      val nm = ctx.freshName("nm")
-      val len = ctx.freshName("len")
-      val any = ctx.freshName("any")
-      val bc = ctx.freshName("bc")
-      val bNull = ctx.freshName("bNull")
-      val bHi = ctx.freshName("bHi")
-      val bLo = ctx.freshName("bLo")
-      val c = ctx.freshName("c")
-      val cv = ctx.freshName("cv")
-      val cn = ctx.freshName("cn")
-      val n = ctx.freshName("n")
-      val seen = ctx.freshName("seen")
-      val hi = ctx.freshName("hi")
-      val lo = ctx.freshName("lo")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      val pLo = ctx.freshName("pLo")
-      val nl = ctx.freshName("nl")
-      val carry = ctx.freshName("carry")
-      val better = ctx.freshName("better")
-      val fields = ctx.freshName("fields")
-      s"""
-         |final long[][] $cm = $centRef;
-         |final boolean[][] $nm = $nullRef;
-         |final int $len = $vec.numElements();
-         |boolean $any = false;
-         |long $bc = 0L; boolean $bNull = true; long $bHi = 0L; long $bLo = 0L;
-         |for (int $c = 0; $c < $cm.length; $c++) {
-         |  final long[] $cv = $cm[$c];
-         |  final boolean[] $cn = $nm[$c];
-         |  final int $n = java.lang.Math.min($len, $cv.length);
-         |  if ($n < 1) continue;
-         |  boolean $seen = false; long $hi = 0L; long $lo = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($vec.isNullAt($i) || $cn[$i]) continue;
-         |    final long $d = $vec.getLong($i) - $cv[$i];
-         |    final long $pLo = $d * $d;
-         |    final long $nl = $lo + $pLo;
-         |    final long $carry = (($lo & $pLo) | (($lo | $pLo) & ~$nl)) >>> 63;
-         |    $hi += java.lang.Math.multiplyHigh($d, $d) + $carry;
-         |    $lo = $nl;
-         |    $seen = true;
-         |  }
-         |  final boolean $better = !$any
-         |    ? true
-         |    : (!$seen
-         |        ? !$bNull
-         |        : ($bNull
-         |            ? false
-         |            : ($hi < $bHi || ($hi == $bHi
-         |                && java.lang.Long.compareUnsigned($lo, $bLo) < 0))));
-         |  if ($better) {
-         |    $any = true; $bc = (long) $c; $bNull = !$seen; $bHi = $hi; $bLo = $lo;
-         |  }
-         |}
-         |if (!$any) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  final Object[] $fields = new Object[2];
-         |  $fields[0] = (Long) $bc;
-         |  $fields[1] = $bNull ? null : $helper.decimal38($bHi, $bLo);
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow($fields);
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): KMeansAssignExpr =
-    copy(child = newChild)
-
-  // case-class equality over Array fields is reference identity, which
-  // would make two contents-identical instances never semanticEquals
-  // (defeating canonicalization/subexpression elimination). Compare by
-  // contents instead — the arrays are never mutated after construction
-  // (the Lloyd loop builds fresh arrays each round). (ADVICE r15)
-  override def equals(other: Any): Boolean = other match {
-    case o: KMeansAssignExpr =>
-      child == o.child &&
-        java.util.Arrays.deepEquals(
-          cent.asInstanceOf[Array[AnyRef]], o.cent.asInstanceOf[Array[AnyRef]]) &&
-        java.util.Arrays.deepEquals(
-          centNull.asInstanceOf[Array[AnyRef]], o.centNull.asInstanceOf[Array[AnyRef]])
-    case _ => false
-  }
-  override def hashCode(): Int =
-    31 * (31 * child.hashCode() +
-      java.util.Arrays.deepHashCode(cent.asInstanceOf[Array[AnyRef]])) +
-      java.util.Arrays.deepHashCode(centNull.asInstanceOf[Array[AnyRef]])
 }

@@ -19,8 +19,8 @@ import org.apache.spark.sql.types._
   * Janino compilation dominated the whole query at small scale
   * (measured ~6.5 s for a 2 000-row corpus) and whose generated code
   * re-reads the vector 96 times. Here the plane matrix is ONE
-  * `references[]` constant, the generated loop reads each vector
-  * element once per plane, and codegen size is independent of
+  * `references[]` constant passed to one kernel call, the loop reads
+  * each vector element once per plane, and codegen size is independent of
   * tables × planes.
   *
   * Null-ELEMENT semantics match the column formulation: a null element
@@ -53,9 +53,24 @@ case class LshBucketHashes(child: Expression, planes: Array[Array[Array[Double]]
   private def elemIsFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(input: Any): Any = {
-    val vec = input.asInstanceOf[ArrayData]
-    val isFloat = elemIsFloat
+  override def nullSafeEval(input: Any): Any =
+    LshBucketHashes.hashes(input.asInstanceOf[ArrayData], planes, elemIsFloat)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val planesRef = ctx.addReferenceObj("lshPlanes", planes, "double[][][]")
+    nullSafeCodeGen(ctx, ev, vec =>
+      s"${ev.value} = ${moduleRef(LshBucketHashes)}.hashes($vec, $planesRef, $elemIsFloat);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): LshBucketHashes =
+    copy(child = newChild)
+}
+
+object LshBucketHashes {
+
+  /** The one bucketing loop: interpreted evaluation and generated code
+    * both call it. `isFloat` is fixed when the plan is built. */
+  def hashes(vec: ArrayData, planes: Array[Array[Array[Double]]], isFloat: Boolean): ArrayData = {
     val out = new Array[Long](planes.length)
     var t = 0
     while (t < planes.length) {
@@ -67,15 +82,12 @@ case class LshBucketHashes(child: Expression, planes: Array[Array[Array[Double]]
         val n = math.min(vec.numElements(), plane.length)
         var dot = 0.0
         var i = 0
-        var nullElem = false
-        while (i < n && !nullElem) {
-          if (vec.isNullAt(i)) nullElem = true
-          else {
-            dot += (if (isFloat) vec.getFloat(i).toDouble else vec.getDouble(i)) * plane(i)
-            i += 1
-          }
+        while (i < n && !vec.isNullAt(i)) {
+          dot += (if (isFloat) vec.getFloat(i).toDouble else vec.getDouble(i)) * plane(i)
+          i += 1
         }
-        if (!nullElem && dot >= 0) acc |= (1L << p)
+        // i < n: a null element, whose bit stays unset
+        if (i == n && dot >= 0) acc |= (1L << p)
         p += 1
       }
       out(t) = acc
@@ -83,48 +95,4 @@ case class LshBucketHashes(child: Expression, planes: Array[Array[Array[Double]]
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val gad = classOf[GenericArrayData].getName
-    val planesRef = ctx.addReferenceObj("lshPlanes", planes, "double[][][]")
-    nullSafeCodeGen(ctx, ev, vec => {
-      val pm = ctx.freshName("planeMatrix")
-      val out = ctx.freshName("out")
-      val tbl = ctx.freshName("tbl")
-      val plane = ctx.freshName("plane")
-      val acc = ctx.freshName("acc")
-      val dot = ctx.freshName("dot")
-      val nullElem = ctx.freshName("nullElem")
-      val n = ctx.freshName("n")
-      val t = ctx.freshName("t")
-      val p = ctx.freshName("p")
-      val i = ctx.freshName("i")
-      val getElem =
-        if (elemIsFloat) s"((double) $vec.getFloat($i))" else s"$vec.getDouble($i)"
-      s"""
-         |final double[][][] $pm = $planesRef;
-         |final long[] $out = new long[$pm.length];
-         |for (int $t = 0; $t < $pm.length; $t++) {
-         |  final double[][] $tbl = $pm[$t];
-         |  long $acc = 0L;
-         |  for (int $p = 0; $p < $tbl.length; $p++) {
-         |    final double[] $plane = $tbl[$p];
-         |    final int $n = java.lang.Math.min($vec.numElements(), $plane.length);
-         |    double $dot = 0.0;
-         |    boolean $nullElem = false;
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      if ($vec.isNullAt($i)) { $nullElem = true; break; }
-         |      $dot += $getElem * $plane[$i];
-         |    }
-         |    if (!$nullElem && $dot >= 0) $acc |= (1L << $p);
-         |  }
-         |  $out[$t] = $acc;
-         |}
-         |${ev.value} = new $gad($out);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LshBucketHashes =
-    copy(child = newChild)
 }

@@ -10,9 +10,9 @@ import org.apache.spark.sql.types._
   * `min over s of xxhash64(i, s)` — BIT-IDENTICAL to the HOF
   * formulation `transform(sequence(0, k-1), i => array_min(transform(
   * sh, s => xxhash64(i, s))))` (DedupSpec pins the parity), but a
-  * native codegen'd k×n primitive loop instead of nested interpreted
-  * lambdas. Spark's `xxhash64(a, b)` chains seeds: h = 42, then
-  * hashInt(i, h), then hashLong(s, h) — replicated here via the same
+  * native k×n primitive loop instead of nested interpreted lambdas.
+  * Spark's `xxhash64(a, b)` chains seeds: h = 42, then hashInt(i, h),
+  * then hashLong(s, h) — replicated here via the same
   * [[XXH64]] static helpers, so signatures (and therefore LSH bucket
   * assignments) are unchanged to the bit.
   *
@@ -38,11 +38,24 @@ case class MinHashSignature(child: Expression, k: Int) extends UnaryExpression {
   private def elemIsString: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == StringType
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    MinHashSignature.signature(input.asInstanceOf[ArrayData], k, elemIsString)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, arr =>
+      s"${ev.value} = ${moduleRef(MinHashSignature)}.signature($arr, $k, $elemIsString);")
+
+  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
+    copy(child = newChild)
+}
+
+object MinHashSignature {
+
+  /** The one MinHash loop: interpreted evaluation and generated code
+    * both call it. `isString` is fixed when the plan is built. */
+  def signature(arr: ArrayData, k: Int, isString: Boolean): ArrayData = {
     val n = arr.numElements()
-    if (n == 0) return new GenericArrayData(Array.fill[Any](k)(null))
-    val str = elemIsString
+    if (n == 0) return new GenericArrayData(new Array[Any](k))
     val out = new Array[Long](k)
     var i = 0
     while (i < k) {
@@ -52,9 +65,9 @@ case class MinHashSignature(child: Expression, k: Int) extends UnaryExpression {
       while (j < n) {
         if (arr.isNullAt(j))
           throw new IllegalArgumentException(
-            s"$prettyName: null shingle at index $j")
+            s"minhash_signature: null shingle at index $j")
         val h =
-          if (str) XXH64.hashUTF8String(arr.getUTF8String(j), seed)
+          if (isString) XXH64.hashUTF8String(arr.getUTF8String(j), seed)
           else XXH64.hashLong(arr.getLong(j), seed)
         if (h < min) min = h
         j += 1
@@ -64,46 +77,4 @@ case class MinHashSignature(child: Expression, k: Int) extends UnaryExpression {
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val xxh = classOf[XXH64].getName
-    val gad = classOf[GenericArrayData].getName
-    val getHash = (arr: String, j: String, seed: String) =>
-      if (elemIsString) s"$xxh.hashUTF8String($arr.getUTF8String($j), $seed)"
-      else s"$xxh.hashLong($arr.getLong($j), $seed)"
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val seed = ctx.freshName("seed")
-      val min = ctx.freshName("min")
-      val h = ctx.freshName("h")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      s"""
-         |final int $n = $arr.numElements();
-         |if ($n == 0) {
-         |  ${ev.value} = new $gad(new Object[$k]);
-         |} else {
-         |  final long[] $out = new long[$k];
-         |  for (int $i = 0; $i < $k; $i++) {
-         |    final long $seed = $xxh.hashInt($i, 42L);
-         |    long $min = Long.MAX_VALUE;
-         |    for (int $j = 0; $j < $n; $j++) {
-         |      if ($arr.isNullAt($j)) {
-         |        throw new IllegalArgumentException(
-         |          "minhash_signature: null shingle at index " + $j);
-         |      }
-         |      final long $h = ${getHash(arr, j, seed)};
-         |      if ($h < $min) $min = $h;
-         |    }
-         |    $out[$i] = $min;
-         |  }
-         |  ${ev.value} = new $gad($out);
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
-    copy(child = newChild)
 }

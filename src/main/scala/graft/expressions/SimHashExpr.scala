@@ -39,10 +39,8 @@ case class SimHashPortable64(child: Expression) extends UnaryExpression {
     SimHashPortable64.hash(arr)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val helper = SimHashPortable64.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, arr => s"${ev.value} = $helper.hash($arr);")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, arr => s"${ev.value} = ${moduleRef(SimHashPortable64)}.hash($arr);")
 
   override protected def withNewChildInternal(newChild: Expression): SimHashPortable64 =
     copy(child = newChild)
@@ -69,10 +67,8 @@ case class SimHashXx64(child: Expression) extends UnaryExpression {
   override def nullSafeEval(input: Any): Any =
     SimHashPortable64.hashXx(input.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val helper = SimHashPortable64.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, arr => s"${ev.value} = $helper.hashXx($arr);")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, arr => s"${ev.value} = ${moduleRef(SimHashPortable64)}.hashXx($arr);")
 
   override protected def withNewChildInternal(newChild: Expression): SimHashXx64 =
     copy(child = newChild)
@@ -115,13 +111,7 @@ object SimHashPortable64 {
       }
       t += 1
     }
-    var fp = 0L
-    var i = 0
-    while (i < 64) {
-      if (votes(i) > 0) fp |= 1L << i
-      i += 1
-    }
-    fp
+    fingerprint(votes)
   }
 
   /** xxhash64-based voting twin (see [[SimHashXx64]]). */
@@ -141,6 +131,11 @@ object SimHashPortable64 {
       }
       t += 1
     }
+    fingerprint(votes)
+  }
+
+  /** Bit i is set iff vote i is positive. */
+  private def fingerprint(votes: Array[Int]): Long = {
     var fp = 0L
     var i = 0
     while (i < 64) {

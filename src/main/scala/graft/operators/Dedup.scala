@@ -559,6 +559,33 @@ object Dedup {
       .select("id_a", "id_b", "hamming")
   }
 
+  /** The canonical undirected edge set of a pair graph: one
+    * (least, greatest) row per edge, self-loops dropped. */
+  private def canonicalEdges(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    pairs.select(
+        least(col(aCol), col(bCol)).as("a"),
+        greatest(col(aCol), col(bCol)).as("b"))
+      .filter(col("a") =!= col("b")).distinct()
+
+  /** (v, d): the degree of every node of canonical edges `e`. */
+  private def degrees(e: DataFrame): DataFrame =
+    e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
+      .groupBy("v").agg(count(lit(1)).as("d"))
+
+  /** `e` oriented from its lower (degree, id) endpoint to the higher,
+    * as (src, dst): the degree-ordered node-iterator's edge table,
+    * under [[triangleCount]] and [[localClustering]]. */
+  private def oriented(e: DataFrame, deg: DataFrame): DataFrame = {
+    val withDeg = e
+      .join(deg.select(col("v").as("a"), col("d").as("da")), Seq("a"))
+      .join(deg.select(col("v").as("b"), col("d").as("db")), Seq("b"))
+    val aFirst = (col("da") < col("db")) ||
+      (col("da") === col("db") && col("a") < col("b"))
+    withDeg.select(
+        when(aFirst, col("a")).otherwise(col("b")).as("src"),
+        when(aFirst, col("b")).otherwise(col("a")).as("dst"))
+  }
+
   /** Triangle census of an undirected pair graph — the cluster-density
     * diagnostic read next to [[connectedComponents]]: near-dup pairs
     * that close into triangles indicate tight clusters (template
@@ -578,21 +605,8 @@ object Dedup {
     */
   def triangleCount(pairs: DataFrame, aCol: String = "id_a",
                     bCol: String = "id_b"): DataFrame = {
-    val e = pairs.select(
-        least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct().persist()
-    val deg = e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("d"))
-    val withDeg = e
-      .join(deg.select(col("v").as("a"), col("d").as("da")), Seq("a"))
-      .join(deg.select(col("v").as("b"), col("d").as("db")), Seq("b"))
-    val aFirst = (col("da") < col("db")) ||
-      (col("da") === col("db") && col("a") < col("b"))
-    val o = withDeg.select(
-        when(aFirst, col("a")).otherwise(col("b")).as("src"),
-        when(aFirst, col("b")).otherwise(col("a")).as("dst"))
-      .persist()
+    val e = canonicalEdges(pairs, aCol, bCol).persist()
+    val o = oriented(e, degrees(e)).persist()
     val w = o.as("o1")
       .join(o.as("o2"), col("o1.src") === col("o2.src") &&
         col("o1.dst") < col("o2.dst"))
@@ -625,21 +639,9 @@ object Dedup {
     */
   def localClustering(pairs: DataFrame, aCol: String = "id_a",
                       bCol: String = "id_b"): DataFrame = {
-    val e = pairs.select(
-        least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct().persist()
-    val deg = e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("d"))
-    val withDeg = e
-      .join(deg.select(col("v").as("a"), col("d").as("da")), Seq("a"))
-      .join(deg.select(col("v").as("b"), col("d").as("db")), Seq("b"))
-    val aFirst = (col("da") < col("db")) ||
-      (col("da") === col("db") && col("a") < col("b"))
-    val o = withDeg.select(
-        when(aFirst, col("a")).otherwise(col("b")).as("src"),
-        when(aFirst, col("b")).otherwise(col("a")).as("dst"))
-      .persist()
+    val e = canonicalEdges(pairs, aCol, bCol).persist()
+    val deg = degrees(e)
+    val o = oriented(e, deg).persist()
     val tri = o.as("o1")
       .join(o.as("o2"), col("o1.src") === col("o2.src") &&
         col("o1.dst") < col("o2.dst"))
@@ -679,12 +681,8 @@ object Dedup {
     */
   def degreeAssortativity(pairs: DataFrame, aCol: String = "id_a",
                           bCol: String = "id_b"): DataFrame = {
-    val e = pairs.select(
-        least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct().persist()
-    val deg = e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("d"))
+    val e = canonicalEdges(pairs, aCol, bCol).persist()
+    val deg = degrees(e)
     val stubs = e.select(col("a").as("x"), col("b").as("y"))
       .unionAll(e.select(col("b").as("x"), col("a").as("y")))
     val dd = stubs
@@ -728,10 +726,7 @@ object Dedup {
   def bfsDistances(pairs: DataFrame, aCol: String = "id_a",
                    bCol: String = "id_b", maxDepth: Int = 6): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1: $maxDepth")
-    val e = pairs.select(
-        least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    val e = canonicalEdges(pairs, aCol, bCol)
     val adj = e.select(col("a").as("s"), col("b").as("t"))
       .unionAll(e.select(col("b").as("s"), col("a").as("t")))
       .localCheckpoint(true)

@@ -159,13 +159,11 @@ object AvroBinary {
 
   /** Encode a typed trade Dataset to Confluent-framed Kafka values:
     * Avro body + the 5-byte registry header (composes [[encode]] with
-    * [[ConfluentFraming.frame]]'s byte layout). One row in, one framed
+    * [[ConfluentFraming.header]]). One row in, one framed
     * binary value out. */
   def encodeFramed(ds: Dataset[DarkpoolTrade], schemaId: Int): Dataset[Array[Byte]] = {
     import ds.sparkSession.implicits._
-    val header = Array(ConfluentFraming.MagicByte.toByte,
-      ((schemaId >> 24) & 0xff).toByte, ((schemaId >> 16) & 0xff).toByte,
-      ((schemaId >> 8) & 0xff).toByte, (schemaId & 0xff).toByte)
+    val header = ConfluentFraming.header(schemaId)
     ds.map(t => header ++ encode(t))
   }
 
@@ -174,8 +172,7 @@ object AvroBinary {
   def decodeFramed(spark: SparkSession, framed: Dataset[Array[Byte]]): Dataset[DarkpoolTrade] = {
     import spark.implicits._
     framed.map { bytes =>
-      require(bytes.length >= 5 && bytes(0) == 0x00,
-        "not a Confluent-framed value")
+      ConfluentFraming.parseHeader(bytes)
       decode(bytes.drop(5))
     }
   }

@@ -18,14 +18,26 @@ object ConfluentFraming {
 
   val MagicByte: Int = 0x00
 
-  /** int32 big-endian as 4 binary bytes, from a literal schema id. */
-  private def int32be(id: Int): Array[Byte] =
-    Array(((id >> 24) & 0xff).toByte, ((id >> 16) & 0xff).toByte,
-      ((id >> 8) & 0xff).toByte, (id & 0xff).toByte)
+  /** The 5-byte registry header: the magic byte, then the schema id as
+    * int32 big-endian. */
+  def header(schemaId: Int): Array[Byte] =
+    Array(MagicByte.toByte, ((schemaId >> 24) & 0xff).toByte,
+      ((schemaId >> 16) & 0xff).toByte, ((schemaId >> 8) & 0xff).toByte,
+      (schemaId & 0xff).toByte)
+
+  /** The schema id in a framed value's header; throws when the value
+    * is shorter than the header or lacks the magic byte. The payload
+    * is `bytes.drop(5)`. */
+  def parseHeader(bytes: Array[Byte]): Int = {
+    require(bytes.length >= 5 && bytes(0) == MagicByte,
+      "not a Confluent-framed value")
+    ((bytes(1) & 0xff) << 24) | ((bytes(2) & 0xff) << 16) |
+      ((bytes(3) & 0xff) << 8) | (bytes(4) & 0xff)
+  }
 
   /** Frame a binary payload column with the 5-byte registry header. */
   def frame(payload: Column, schemaId: Int): Column =
-    concat(lit(Array(MagicByte.toByte) ++ int32be(schemaId)), payload)
+    concat(lit(header(schemaId)), payload)
 
   /** Parse a framed value back: (schema_id, payload). The inverse is
     * what a registry-aware consumer does before deserializing

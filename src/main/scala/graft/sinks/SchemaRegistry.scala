@@ -96,10 +96,7 @@ object SchemaRegistry {
     import spark.implicits._
     val known = registry.knownIds // resolved ONCE, driver-side
     framed.map { bytes =>
-      require(bytes.length >= 5 && bytes(0) == 0x00,
-        "not a Confluent-framed value")
-      val id = ((bytes(1) & 0xff) << 24) | ((bytes(2) & 0xff) << 16) |
-        ((bytes(3) & 0xff) << 8) | (bytes(4) & 0xff)
+      val id = ConfluentFraming.parseHeader(bytes)
       if (!known.contains(id))
         throw new NoSuchElementException(s"Unknown schema id: $id")
       AvroBinary.decode(bytes.drop(5))

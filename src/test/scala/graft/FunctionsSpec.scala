@@ -190,19 +190,67 @@ class FunctionsSpec extends SparkSpec {
       (rows.sortBy(_.isDefined), scored.filter($"c" >= 0.5).count())
     }
     val expected = (Seq(None, None, None, Some(1.0)), 1L)
-    // generated code only (no silent fallback), then interpreted only
-    val factoryKey = "spark.sql.codegen.factoryMode"
-    for (confs <- Seq(
-        Seq("spark.sql.codegen.wholeStage" -> "true", factoryKey -> "CODEGEN_ONLY",
-          "spark.sql.codegen.fallback" -> "false"),
-        Seq("spark.sql.codegen.wholeStage" -> "false", factoryKey -> "NO_CODEGEN")))
-      withClue(s"$confs: ") {
-        val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-        confs.foreach { case (k, v) => spark.conf.set(k, v) }
-        try run() shouldBe expected
-        finally prior.foreach { case (k, v) =>
-          v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-        }
+    inBothCodegenModes(run()) shouldBe ((expected, expected))
+  }
+
+  test("native row expressions: generated code equals interpreted evaluation on edge inputs") {
+    import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.expressions._
+    val (nan, inf) = (Double.NaN, Double.PositiveInfinity)
+    // (a, b): vectors; q: quantized vector (k-means); sh: shingles, whose
+    // null ELEMENTS the MinHash and SimHash kernels reject by design
+    val cases = Seq[(Seq[Any], Seq[Any], Seq[Any], Seq[Any])](
+      (null, Seq(1.0, 2.0), null, null),
+      (Seq(1.0, 2.0), null, Seq(3L, null, 5L), Seq()),
+      (Seq(1.0, null), Seq(1.0, 2.0), Seq(null, null), Seq(7L)),
+      (Seq(nan, 1.0), Seq(1.0, 1.0), Seq(), Seq(1L, 2L, 3L)),
+      (Seq(0.0, -0.0), Seq(1.0, 1.0), Seq(1L, 2L, 3L, 4L), Seq(-5L, 7L, -5L)),
+      (Seq(-0.0, 1.0), Seq(0.0, -1.0), Seq(-4000000000L), Seq(Long.MaxValue)),
+      (Seq(inf, 1.0), Seq(1.0, 1.0), Seq(Long.MaxValue, Long.MinValue), Seq(0L)),
+      (Seq(-inf, 1.0), Seq(inf, 1.0), Seq(2L, 1L), Seq(3L, 2L, 1L)),
+      (Seq(), Seq(), Seq(9L, 9L, 9L), Seq(11L, 12L)),
+      (Seq(), Seq(1.0), Seq(0L, 0L), Seq(1L)),
+      (Seq(0.0, 0.0), Seq(0.0, 0.0), Seq(1L, 2L), Seq(2L)),
+      (Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0), Seq(5L), Seq(4L, 4L)),
+      (Seq(0.1, -0.2, 0.3), Seq(-0.3, 0.2, 0.1), Seq(1L, null, 3L), Seq(8L, 9L)),
+      (Seq(1e300, 1e300), Seq(1e300, 1.0), Seq(-1L, -2L, -3L), Seq(10L)))
+    val vec = ArrayType(DoubleType, containsNull = true)
+    val longs = ArrayType(LongType, containsNull = true)
+    val rows = cases.zipWithIndex.map { case ((a, b, q, sh), i) => Row(i, a, b, q, sh) }
+    // the repartition keeps the projection out of local-relation folding
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+      StructType(Seq(StructField("i", IntegerType), StructField("a", vec),
+        StructField("b", vec), StructField("q", longs), StructField("sh", longs))))
+      .repartition(1)
+    val (a, b) = (toExpr($"a"), toExpr($"b"))
+    val (af, bf) = (toExpr($"a".cast("array<float>")), toExpr($"b".cast("array<float>")))
+    val (sh, tokens) = (toExpr($"sh"), toExpr($"sh".cast("array<string>")))
+    val planes = Array(Array(Array(1.0, -1.0, 0.5), Array(-0.25, 0.0, 2.0)),
+      Array(Array(0.0, 1.0), Array(1.0, 1.0, 1.0, 1.0)))
+    val table = Seq(
+      "dot" -> DotProduct(a, b), "dot_fd" -> DotProduct(af, b),
+      "dot_ff" -> DotProduct(af, bf), "cos" -> CosineSimilarity(a, b),
+      "cos_df" -> CosineSimilarity(a, bf), "cos_ff" -> CosineSimilarity(af, bf),
+      "lsh" -> LshBucketHashes(a, planes), "lsh_f" -> LshBucketHashes(af, planes),
+      "kmeans" -> KMeansAssignExpr(toExpr($"q"),
+        Array(Array(1L, 2L, 3L), Array(-1L, 5L), Array()),
+        Array(Array(false, true, false), Array(false, false), Array())),
+      "minhash" -> MinHashSignature(sh, 3), "minhash_s" -> MinHashSignature(tokens, 3),
+      "simhash_p" -> SimHashPortable64(tokens), "simhash_xx" -> SimHashXx64(tokens))
+    def frame = df.select($"i" +: table.map { case (name, e) => toCol(e).as(name) }: _*)
+    val (generated, interpreted) =
+      inBothCodegenModes(frame.collect().sortBy(_.getInt(0)).toSeq)
+    // Row.toString keeps -0.0, NaN and the element order of nested values
+    generated.map(_.toString) shouldBe interpreted.map(_.toString)
+    generated should have size cases.size.toLong
+    // every column holds both NULLs and values, so neither side is vacuous
+    table.zipWithIndex.foreach { case ((name, _), c) =>
+      withClue(name) {
+        generated.exists(_.isNullAt(c + 1)) shouldBe true
+        generated.exists(!_.isNullAt(c + 1)) shouldBe true
       }
+    }
   }
 }

@@ -215,21 +215,10 @@ class KMeansAssignSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1),
           if (r.isNullAt(2)) "null" else r.getDecimal(2).toPlainString))
         .sortBy(_._1).toSeq
-    val codegen = run()
     // wholeStage=false alone still expression-compiles doGenCode via
-    // GenerateUnsafeProjection; factoryMode=NO_CODEGEN forces the
-    // interpreted projection so nullSafeEval is genuinely exercised
-    // (ADVICE r15)
-    val prevWS = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    val factoryKey = "spark.sql.codegen.factoryMode"
-    val prevFM = spark.conf.get(factoryKey, "FALLBACK")
-    try {
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      spark.conf.set(factoryKey, "NO_CODEGEN")
-      run() shouldBe codegen
-    } finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", prevWS)
-      spark.conf.set(factoryKey, prevFM)
-    }
+    // GenerateUnsafeProjection; NO_CODEGEN forces the interpreted
+    // projection so nullSafeEval is genuinely exercised (ADVICE r15)
+    val (generated, interpreted) = inBothCodegenModes(run())
+    interpreted shouldBe generated
   }
 }
