@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   *  - [[clusterDefaults]] — what a 1000-executor production session
   *    should set. Documented per key; values are the ones the
   *    operators here assume (AQE on with skew-join, RocksDB streaming
-  *    state, size-bounded scan partitions).
+  *    state, size-bounded scan partitions, the engine's own `file:`
+  *    file system).
   *  - [[localSession]] — the test/bench harness shape (local[n],
   *    shuffle partitions = n, UTC, UI off) with every cluster default
   *    that is meaningful in one JVM applied on top, so local plans
@@ -95,7 +96,17 @@ object GraftConf {
     // ---- session determinism: every timestamp operator in this repo
     // is defined in UTC; a session in any other zone would silently
     // shift day buckets (Telemetry dt handshake, timeBucket)
-    "spark.sql.session.timeZone" -> "UTC")
+    "spark.sql.session.timeZone" -> "UTC",
+    // ---- local files: without libhadoop, Hadoop's `file:` file system
+    // starts a chmod process per created file and a readlink process
+    // per FileContext rename, ~128 per micro-batch of the option
+    // aggregation's state, WAL and offset commits; the engine's
+    // subclass sets the same mode bits through java.nio and skips
+    // readlink for non-links (GraftLocalFileSystem.scala). One key for
+    // the FileSystem API, one for FileContext; other schemes untouched.
+    "spark.hadoop.fs.file.impl" -> classOf[GraftLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[GraftLocalFs].getName)
 
   /** The subset of [[clusterDefaults]] that is meaningful (and
     * identical in effect) inside one local JVM — applied to local
@@ -110,15 +121,19 @@ object GraftConf {
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
     "spark.sql.autoBroadcastJoinThreshold",
     "spark.sql.codegen.cache.maxEntries",
-    "spark.sql.session.timeZone")
+    "spark.sql.session.timeZone",
+    "spark.hadoop.fs.file.impl",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl")
 
   /** Keys that are STATIC (builder-time only) — re-`conf.set` on a
-    * live session throws for these; they take effect only when this
+    * live session throws for these, or (`spark.hadoop.*`) never reaches
+    * the context's Hadoop configuration; they take effect only when this
     * process created the session (true for the harness mains, each
     * the first session in its JVM).
     */
   private val staticKeys: Set[String] =
-    Set("spark.ui.enabled", "spark.sql.codegen.cache.maxEntries")
+    Set("spark.ui.enabled", "spark.sql.codegen.cache.maxEntries",
+      "spark.hadoop.fs.file.impl", "spark.hadoop.fs.AbstractFileSystem.file.impl")
 
   /** The exact config map a local harness session applies: shuffle
     * partitions = cpus (not the 200 default, not the cluster 2000),
@@ -138,15 +153,16 @@ object GraftConf {
   def hostCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  /** The harness session: local[cpus] + [[localConfigs]]. Verify and
-    * Bench both build here, so the correctness gate and the bench run
-    * the same optimizer configuration.
+  /** The harness session: local[cpus] + [[localConfigs]]. Verify,
+    * Bench, StreamBench and perfbench build here, so the correctness
+    * gate and the benches run the same optimizer configuration and the
+    * same `file:` file system.
     *
     * If a SparkSession already exists in the JVM, getOrCreate returns
     * it and silently ignores builder options — so the runtime-settable
     * configs are re-applied through `conf.set` afterwards, making the
     * documented contract hold either way. Only `master` and the
-    * static `spark.ui.enabled` cannot be changed on a live session
+    * [[staticKeys]] cannot be changed on a live session
     * (first creator wins — acceptable for the harness mains, which
     * are each the first and only session in their JVM).
     */

@@ -32,7 +32,10 @@ import graft.streaming.StreamingOps
   * Rows default to 200k (SPARK_GRAFT_STREAM_ROWS overrides): enough
   * that per-batch fixed costs do not dominate, small enough to run in
   * seconds locally. Throughput = input rows / wall seconds across the
-  * whole query (setup + all batches + final commit).
+  * whole query (setup + all batches + final commit). Each provider
+  * fragment also carries the per-trigger floor read from
+  * `recentProgress`: the median trigger, WAL-commit and offset-commit
+  * durations and the median summed state-store commit time.
   */
 object StreamBench {
   private val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
@@ -40,10 +43,27 @@ object StreamBench {
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
   /** One drain's measurements: input rows, wall seconds, micro-batches
-    * with data, the peak state-store row count, and the rows in the sink.
+    * with data, the peak state-store row count, the rows in the sink,
+    * and the per-trigger floor: the median over the batches it ran of
+    * `triggerExecution`, `walCommit`, `commitOffsets` and the summed
+    * state-store `commitTimeMs`.
     */
   private case class Drained(inputRows: Long, secs: Double, batches: Int,
-                             stateRows: Long, outRows: Long)
+                             stateRows: Long, outRows: Long, triggerMs: Double,
+                             walCommitMs: Double, commitOffsetsMs: Double,
+                             stateCommitMs: Double) {
+    /** The floor as JSON fields, appended to a provider fragment. */
+    def floorFields: String =
+      s""""trigger_execution_ms_p50":$triggerMs,"wal_commit_ms_p50":$walCommitMs,""" +
+        s""""commit_offsets_ms_p50":$commitOffsetsMs,"state_commit_ms_p50":$stateCommitMs"""
+  }
+
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.isEmpty) 0.0
+    else if (s.size % 2 == 1) s(s.size / 2)
+    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
 
   def main(args: Array[String]): Unit = {
     val cpus = GraftConf.hostCpus
@@ -100,6 +120,11 @@ object StreamBench {
       require(rocksDbMetrics == expectRocksDb,
         s"state-store provider mismatch for '$tag': rocksdb metrics " +
           s"present=$rocksDbMetrics, expected=$expectRocksDb")
+      // the batches it ran, with or without data: an idle trigger
+      // commits no WAL entry
+      val ran = progress.filter(_.durationMs.containsKey("walCommit"))
+      def floor(phase: String): Double =
+        median(ran.flatMap(p => Option(p.durationMs.get(phase)).map(_.doubleValue)))
       // explicit schema: a tiny run (rows' event time all inside the
       // watermark grace) finalizes ZERO windows, and a schema-inferring
       // read of the empty sink dir would throw AFTER the bench succeeded
@@ -107,7 +132,9 @@ object StreamBench {
         progress.count(_.numInputRows > 0),
         progress.flatMap(_.stateOperators).map(_.numRowsTotal)
           .foldLeft(0L)(math.max),
-        spark.read.schema(outDf.schema).parquet(out).count())
+        spark.read.schema(outDf.schema).parquet(out).count(),
+        floor("triggerExecution"), floor("walCommit"), floor("commitOffsets"),
+        median(ran.map(_.stateOperators.map(_.commitTimeMs).sum.toDouble)))
     }
 
     /** One full pipeline run, against a fresh sink + checkpoint. */
@@ -143,7 +170,8 @@ object StreamBench {
       (s""""$tag":{"rows_per_sec":$rps,"secs":${best.secs},""" +
         s""""secs_pass1":${p1.secs},"secs_pass2":${p2.secs},""" +
         s""""input_rows":${best.inputRows},"batches":${best.batches},""" +
-        s""""out_windows":${best.outRows},"rocksdb_engaged":$expectRocksDb}""",
+        s""""out_windows":${best.outRows},"rocksdb_engaged":$expectRocksDb,""" +
+        s"""${best.floorFields}}""",
         rps)
     }
 
@@ -259,7 +287,8 @@ object StreamBench {
       val best = runs.minBy(_.secs)
       s""""$provTag":{"rows_per_sec":${best.inputRows / best.secs},"secs":${best.secs},""" +
         s""""input_rows":${best.inputRows},"out_rows":${best.outRows},""" +
-        s""""state_rows":${best.stateRows},"rocksdb_engaged":$expectRocksDb}"""
+        s""""state_rows":${best.stateRows},"rocksdb_engaged":$expectRocksDb,""" +
+        s"""${best.floorFields}}"""
     }
 
     val faceNames =

@@ -342,6 +342,13 @@ class ScaleSpec extends SparkSpec {
     c("spark.sql.codegen.cache.maxEntries").toInt should be >= 1024
     l("spark.sql.codegen.cache.maxEntries") shouldBe
       c("spark.sql.codegen.cache.maxEntries")
+    // the engine's `file:` file system: both classes must resolve on
+    // this build, and the local harness registers what the cluster does
+    for (k <- Seq("spark.hadoop.fs.file.impl",
+        "spark.hadoop.fs.AbstractFileSystem.file.impl")) {
+      noException should be thrownBy Class.forName(c(k))
+      l(k) shouldBe c(k)
+    }
     // cluster-width and scan-size knobs must NOT leak into local runs
     l.get("spark.sql.files.maxPartitionBytes") shouldBe None
     l("spark.sql.shuffle.partitions") should not be

@@ -10,12 +10,17 @@ import org.scalatest.matchers.should.Matchers
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val b = SparkSession.builder()
       .master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the engine's `file:` file system, as every harness session has it,
+    // so checkpoints and sinks in the specs run over the same classes
+    GraftConf.clusterDefaults.foreach { case (k, v) =>
+      if (k.startsWith("spark.hadoop.fs.")) b.config(k, v)
+    }
+    val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
